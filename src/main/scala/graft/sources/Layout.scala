@@ -2,7 +2,9 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types.{BooleanType, ByteType, IntegerType,
   LongType, ShortType, StringType, StructType}
 
@@ -65,16 +67,22 @@ object Layout {
     }.reduce(_.bitwiseOR(_))
   }
 
-  /** Write `df` Z-ordered on `zCols` into `files` output files.
+  /** Write `df` Z-ordered on `zCols` into `files` output files. */
+  def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
+                    bits: Int = 8, files: Int = 16): Unit =
+    zOrdered(df, zCols, bits, files).write.mode(SaveMode.Overwrite).parquet(path)
+
+  /** `df` placed for a Z-ordered write: range-partitioned on the Z-value of
+    * `zCols` into `files` tasks, each sorted by it.
     *
     * Degenerate inputs degrade gracefully instead of failing the write job:
     * an all-null (or empty-input) dimension is dropped from the Z-value —
     * there is nothing to cluster on — and a constant dimension (lo == hi)
     * gets a widened range so `width_bucket` stays well-defined. If no
-    * dimension survives, the data is written un-clustered.
+    * dimension survives, the data is placed un-clustered.
     */
-  def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-                    bits: Int = 8, files: Int = 16): Unit = {
+  private def zOrdered(df: DataFrame, zCols: Seq[String], bits: Int,
+                       files: Int): DataFrame = {
     val stats = df.select(zCols.flatMap(c =>
       Seq(min(col(c).cast("double")), max(col(c).cast("double")))): _*).head()
     val usable = zCols.indices.flatMap { i =>
@@ -85,15 +93,13 @@ object Layout {
         Some((zCols(i), (lo, if (hi > lo) hi else lo + 1.0)))
       }
     }
-    if (usable.isEmpty) {
-      df.repartition(files).write.mode(SaveMode.Overwrite).parquet(path)
-    } else {
+    if (usable.isEmpty) df.repartition(files)
+    else {
       val z = zValue(usable.map(u => col(u._1)), usable.map(_._2), bits)
       df.withColumn("__z", z)
         .repartitionByRange(files, col("__z"))
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(SaveMode.Overwrite).parquet(path)
     }
   }
 
@@ -891,18 +897,15 @@ object Layout {
         StructType(df.schema.filterNot(f => pcols.contains(f.name))))
     val spark = df.sparkSession
     val v0 = versionName(0)
-    leafSized(df, pcols).write.mode(SaveMode.Overwrite)
-      .partitionBy(pcols: _*).parquet(s"$root/$v0")
+    // marker and bloom declaration first: the write-time stats read the
+    // declaration, and a root without `_current` is still re-initializable
     ManifestIndex.writeFormatMarker(spark, root)
     if (bloomCols.nonEmpty) ManifestIndex.setBloomColumns(spark, root, bloomCols)
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dataSchema = StructType(df.schema.filterNot(f => pcols.contains(f.name)))
     ManifestIndex.write(spark, root, v0, ManifestIndex.TableManifest(
       dataSchema,
       StructType(pcols.map(c => df.schema(c))),
-      ManifestIndex.attachStats(spark, root, v0,
-        ManifestIndex.listVersionFiles(fs, root, v0), dataSchema,
-        ManifestIndex.bloomColumns(spark, root)),
+      writeEntries(spark, root, v0, dataSchema, pcols, leafSized(df, pcols)),
       initProperties.getOrElse(Map(ManifestIndex.OperationKey -> "CREATE"))))
     writePointer(spark, root, v0)
     s"$root/$v0"
@@ -1129,13 +1132,12 @@ object Layout {
           // scan: review fix) but still BEFORE any version is claimed
           requireConstraints(images, man.writerChecks, "updated rows")
           val (next, nextPath) = nextVersion(spark, root, cur)
-          // updated images first (SaveMode.Overwrite targets the version
-          // dir; the sidecar lands inside it afterwards)
-          ManifestIndex.toPhysical(leafSized(images, pcols), man.dataSchema)
-            .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(nextPath)
+          // updated images first (the write replaces the version dir; the
+          // sidecar lands inside it afterwards)
+          val fresh = writeEntries(spark, root, next, man.dataSchema, pcols,
+            leafSized(images, pcols))
           val carried = writeDvSidecar(spark, man, counts, allPos, next, nextPath)
-          commitManifest(spark, root, next, man.copy(entries =
-            ManifestIndex.listVersionFiles(fsOf(spark, root), root, next) ++ carried),
+          commitManifest(spark, root, next, man.copy(entries = fresh ++ carried),
             "UPDATE ROWS")
           nextPath
       }
@@ -1262,8 +1264,8 @@ object Layout {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val (next, nextPath) = nextVersion(spark, root, cur)
-      // images first with Overwrite (a stale partial dir from a crashed
-      // claimer is wiped, not inventoried), sidecar into it afterwards —
+      // images first, replacing the version dir (a stale partial dir from
+      // a crashed claimer is wiped), sidecar into it afterwards —
       // same ordering as updateVersionedRows. The writer emits PHYSICAL
       // names so new footers agree with old ones across renames. DECLARED
       // clustering (S80) places the appended image like every other write
@@ -1272,8 +1274,8 @@ object Layout {
       val placedUpdates =
         if (zCols.isEmpty) leafSized(updates, pcols)
         else clusterForWrite(updates, pcols, zCols, "upsertVersionedRows")
-      ManifestIndex.toPhysical(placedUpdates, man.dataSchema)
-        .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(nextPath)
+      val fresh = writeEntries(spark, root, next, man.dataSchema, pcols,
+        placedUpdates)
       val carried = rowLevelPlan(spark, root, man, matched) match {
         case None => man.entries
         case Some((counts, allPos)) =>
@@ -1282,8 +1284,7 @@ object Layout {
       commitManifest(spark, root, next, man.copy(
         properties = man.properties ++ txn.map { case (app, batch) =>
           ManifestIndex.TxnPrefix + app -> batch.toString },
-        entries =
-          ManifestIndex.listVersionFiles(fsOf(spark, root), root, next) ++ carried),
+        entries = fresh ++ carried),
         "UPSERT ROWS")
       nextPath
     } finally matched.unpersist(false)
@@ -1413,7 +1414,7 @@ object Layout {
           if (carryForward) Some(ManifestIndex.dataFrame(spark, root, man))
           else None, s"$op rows")
       val (next, nextPath) = nextVersion(spark, root, cur)
-      if (!empty) {
+      val fresh = if (empty) Seq.empty else {
         // write-time clustering happens on the LOGICAL frame (zOrderCols
         // are logical names; toPhysical is a narrow projection, so the
         // range partitioning and in-partition order survive it). An
@@ -1426,12 +1427,8 @@ object Layout {
         val placed =
           if (zCols.isEmpty) leafSized(rows, pcols)
           else clusterForWrite(rows, pcols, zCols, what)
-        ManifestIndex.toPhysical(placed, man.dataSchema)
-          .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(nextPath)
+        writeEntries(spark, root, next, man.dataSchema, pcols, placed)
       }
-      val fresh =
-        if (empty) Seq.empty
-        else ManifestIndex.listVersionFiles(fsOf(spark, root), root, next)
       commitManifest(spark, root, next, man.copy(
         properties = man.properties ++ txn.map { case (app, batch) =>
           ManifestIndex.TxnPrefix + app -> batch.toString } ++ extraProps,
@@ -1701,7 +1698,7 @@ object Layout {
               if (haveImages)
                 requireConstraints(images.get, man.writerChecks, "merged rows")
               val (next, nextPath) = nextVersion(spark, root, cur)
-              if (haveImages) {
+              val fresh = if (!haveImages) Seq.empty else {
                 // DECLARED clustering (S80) on the merge's appended image
                 // — update + insert images land z-placed like appends do
                 val zCols = ManifestIndex.clusterColumns(spark, root)
@@ -1709,19 +1706,14 @@ object Layout {
                   if (zCols.isEmpty) leafSized(images.get, pcols)
                   else clusterForWrite(images.get, pcols, zCols,
                     "mergeIntoVersionedRows")
-                ManifestIndex.toPhysical(placedImages, man.dataSchema)
-                  .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*)
-                  .parquet(nextPath)
+                writeEntries(spark, root, next, man.dataSchema, pcols,
+                  placedImages)
               }
               val carried = plan match {
                 case Some((counts, allPos)) =>
                   writeDvSidecar(spark, man, counts, allPos, next, nextPath)
                 case None => man.entries
               }
-              val fresh =
-                if (haveImages)
-                  ManifestIndex.listVersionFiles(fsOf(spark, root), root, next)
-                else Seq.empty
               commitManifest(spark, root, next,
                 man.copy(entries = fresh ++ carried,
                   properties = man.properties ++ txn.map { case (app, batch) =>
@@ -1762,8 +1754,8 @@ object Layout {
       .select(col(ManifestIndex.FileCol), col(ManifestIndex.PosCol))
       .join(broadcast(mapDf), col(ManifestIndex.FileCol) === col("__abs"))
       .select(col("__key").as("path"), col(ManifestIndex.PosCol).as("pos"))
-    // one row per TOUCHED file — O(metadata) driver data, streamed like
-    // attachStats's per-file stats rows rather than collect()ed
+    // one row per TOUCHED file — O(metadata) driver data, streamed rather
+    // than collect()ed
     val newCounts: Map[String, Long] = {
       val it = newPos.groupBy("path").count().toLocalIterator()
       val b = Map.newBuilder[String, Long]
@@ -2894,40 +2886,85 @@ object Layout {
   }
 
   /** Shared maintenance rewrite: materialize `leaves` of the live manifest
-    * into the next version (DV-applied read, physically-named write,
-    * ~targetBytes files per leaf), carry every other entry, commit as
-    * `operation`. Purge and re-home differ only in leaf selection;
-    * compaction keeps its own loop for the z-order option.
+    * into the next version ([[rewriteEntries]]: one scan, one write),
+    * carry every other entry, commit as `operation`. Purge and re-home
+    * differ only in leaf selection.
     */
   private def rewriteLeaves(spark: SparkSession, root: String, cur: String,
                             man: ManifestIndex.TableManifest,
-                            leaves: Map[String, Seq[ManifestIndex.Entry]],
+                            leaves: Set[String],
                             targetBytes: Long, operation: String): String = {
     val (next, nextPath) = nextVersion(spark, root, cur)
-    val currentSpec = man.partitionSchema.fieldNames.toSeq
-    // leaves written under an EARLIER partition spec must re-land via
-    // partitionBy on the current spec: the leaf-to-leaf shape below drops
-    // the current partition columns, which for an old-spec file live in
-    // its PAYLOAD (not its dir names) — dropping them would null the
-    // column for every row on the next read (review fix; same re-spec
-    // convergence as compactManifest)
-    val (samespec, oldspec) = leaves.partition { case (l, _) =>
-      ManifestIndex.leafSpec(l) == currentSpec
-    }
-    samespec.toSeq.sortBy(_._1).foreach { case (leaf, es) =>
-      val files = math.max(1L,
-        math.ceil(es.map(_.size).sum.toDouble / targetBytes).toLong).toInt
-      ManifestIndex.toPhysical(
-          ManifestIndex.dataFrame(spark, root, man, Some(Set(leaf)))
-            .drop(man.partitionSchema.fieldNames: _*), man.dataSchema)
-        .coalesce(files)
-        .write.mode(SaveMode.Overwrite).parquet(s"$nextPath/$leaf")
-    }
-    respecAppend(spark, root, man, oldspec.keySet, nextPath)
     commitManifest(spark, root, next, man.copy(
-      entries = ManifestIndex.listVersionFiles(fsOf(spark, root), root, next) ++
+      entries = rewriteEntries(spark, root, next, man, leaves, targetBytes) ++
         man.entries.filterNot(e => leaves.contains(e.leaf))), operation)
     nextPath
+  }
+
+  /** The ONE rewrite job behind purge, re-home and compaction: every leaf
+    * in `leaves` is read in one scan (one DV anti-join; leaves written
+    * under an earlier partition spec ride the mixed-spec read) and written
+    * in one partitioned write into `version`. Rows re-land via the CURRENT
+    * spec — for an old-spec leaf the current partition columns live in its
+    * payload, so only partitioning the write puts them back in dir names.
+    * Each current-spec leaf gets exactly ceil(live bytes / `targetBytes`)
+    * shuffle buckets — one file each — through a direct partition id
+    * (`leafSized`'s row-content salt over the leaf's own bucket range);
+    * old-spec rows fan out one file per target leaf. Live bytes discount
+    * the rows a leaf's deletion vectors drop, so a mostly-deleted leaf
+    * lands as one file instead of slivers the next compaction would
+    * rewrite again. Returns the new entries.
+    */
+  private def rewriteEntries(spark: SparkSession, root: String, version: String,
+                             man: ManifestIndex.TableManifest,
+                             leaves: Set[String],
+                             targetBytes: Long): Seq[ManifestIndex.Entry] = {
+    val pspec = man.partitionSchema
+    val pcols = pspec.fieldNames.toSeq
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    def liveBytes(e: ManifestIndex.Entry): Double = (e.stats, e.dv) match {
+      case (Some(st), Some(dv)) if st.rows > 0 =>
+        e.size.toDouble * (st.rows - dv.rows) / st.rows
+      case _ => e.size.toDouble
+    }
+    val sized = man.byLeaf.toSeq
+      .filter { case (l, _) =>
+        leaves.contains(l) && ManifestIndex.leafSpec(l) == pcols }
+      .sortBy(_._1)
+      .map { case (l, es) =>
+        l -> math.max(1, math.ceil(es.map(liveBytes).sum / targetBytes).toInt) }
+    val offsets = sized.scanLeft(0)(_ + _._2)
+    val respecTasks =
+      if (sized.size == leaves.size) 0
+      else spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
+    val data = ManifestIndex.dataFrame(spark, root, man, Some(leaves))
+    def quoted(c: String) = col(s"`$c`")
+    // map-typed values cannot be hashed; they add nothing to the salt
+    def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+      case _: org.apache.spark.sql.types.MapType => true
+      case a: org.apache.spark.sql.types.ArrayType => hasMap(a.elementType)
+      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    val salt = hash(struct(data.schema.fields.filterNot(f => hasMap(f.dataType))
+      .map(f => quoted(f.name)).toSeq: _*))
+    val rest: Column =
+      if (respecTasks == 0) lit(0)
+      else lit(offsets.last) + pmod(hash(pcols.map(quoted): _*), lit(respecTasks))
+    val bucket = sized.zip(offsets).map { case ((leaf, files), off) =>
+      val values = ManifestIndex.parseLeaf(leaf, pspec, zone)
+      val here = pspec.fields.zipWithIndex.map { case (f, i) =>
+        quoted(f.name) <=> Shim.column(Literal(values.get(i, f.dataType), f.dataType))
+      }.reduce(_ && _)
+      here -> (if (files == 1) lit(off) else lit(off) + pmod(salt, lit(files)))
+    } match {
+      case Seq() => rest
+      case (c0, v0) +: more =>
+        more.foldLeft(when(c0, v0)) { case (w, (c, v)) => w.when(c, v) }
+          .otherwise(rest)
+    }
+    writeEntries(spark, root, version, man.dataSchema, pcols,
+      data.repartitionById(offsets.last + respecTasks, bucket))
   }
 
   /** Re-home a SHALLOW CLONE: rewrite exactly the leaves that still
@@ -2950,7 +2987,7 @@ object Layout {
     val alien = man.byLeaf.filter(_._2.exists(e =>
       foreign(e.path) || e.dv.exists(d => foreign(d.path))))
     if (alien.isEmpty) return (cur, 0)
-    (rewriteLeaves(spark, root, cur, man, alien, targetBytes, "REHOME"),
+    (rewriteLeaves(spark, root, cur, man, alien.keySet, targetBytes, "REHOME"),
       alien.size)
   }
 
@@ -2972,7 +3009,7 @@ object Layout {
     val (cur, _, man) = currentManifest(spark, root)
     val dvLeaves = man.byLeaf.filter(_._2.exists(_.dv.isDefined))
     if (dvLeaves.isEmpty) return (cur, 0)
-    (rewriteLeaves(spark, root, cur, man, dvLeaves, targetBytes, "PURGE"),
+    (rewriteLeaves(spark, root, cur, man, dvLeaves.keySet, targetBytes, "PURGE"),
       dvLeaves.size)
   }
 
@@ -3001,14 +3038,15 @@ object Layout {
     *
     *  1. PURGE ([[purgeDeletedRows]], manifest roots): outstanding
     *     deletion vectors materialize — DV-bearing leaves rewrite without
-    *     their dead rows, so later steps (and every reader) stop paying
-    *     the anti-join and the pre-delete stats skew.
+    *     their dead rows (one write job, files sized by live bytes), so
+    *     later steps (and every reader) stop paying the anti-join and the
+    *     pre-delete stats skew.
     *  2. COMPACT ([[compactVersionedPartitioned]]): fragmented leaves
     *     coalesce toward `targetBytes` (optionally z-ordered), and leaves
     *     written under EARLIER partition specs re-land under the current
     *     spec — this is also where per-file stats and bloom filters
-    *     SELF-HEAL: every rewritten file gets fresh envelopes/blooms at
-    *     commit ([[ManifestIndex.attachStats]]), so blooms dropped by a
+    *     SELF-HEAL: every rewritten file gets fresh envelopes/blooms from
+    *     its write ([[FileStatsTracker]]), so blooms dropped by a
     *     type widening and stats lost to evolution regrow here.
     *  3. VACUUM ([[vacuumVersions]], `keepVersions`): reclaimable version
     *     dirs drain, reference-counted so files shared via carry-forward
@@ -3131,12 +3169,10 @@ object Layout {
         s"(${physNames.mkString(",")}): an added column may not reuse a " +
         "renamed column's physical name")
     val (next, nextPath) = nextVersion(spark, root, cur)
-    ManifestIndex.toPhysical(leafSized(merged, pcols), newDataSchema)
-      .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(nextPath)
     commitManifest(spark, root, next, man.copy(
       dataSchema = newDataSchema,
-      entries = ManifestIndex.listVersionFiles(
-        fsOf(spark, root), root, next) ++
+      entries = writeEntries(spark, root, next, newDataSchema, pcols,
+        leafSized(merged, pcols)) ++
         man.entries.filterNot(e => affected.contains(e.leaf))), "MERGE")
     nextPath
   }
@@ -3162,40 +3198,13 @@ object Layout {
     // path must not churn retention with byte-identical versions)
     if (affected.isEmpty) return cur
     val (next, nextPath) = nextVersion(spark, root, cur)
-    if (affected.nonEmpty)
-      ManifestIndex.toPhysical(
-          ManifestIndex.dataFrame(spark, root, man, Some(affected))
-            .filter(!coalesce(predicate, lit(false))), man.dataSchema)
-        .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(nextPath)
     commitManifest(spark, root, next, man.copy(
-      entries = ManifestIndex.listVersionFiles(fsOf(spark, root), root, next) ++
+      entries = writeEntries(spark, root, next, man.dataSchema, pcols,
+        ManifestIndex.dataFrame(spark, root, man, Some(affected))
+          .filter(!coalesce(predicate, lit(false)))) ++
         man.entries.filterNot(e => affected.contains(e.leaf))), "DELETE")
     nextPath
   }
-
-  /** Compaction on a manifest root: fragmentation is diagnosed FROM the
-    * manifest (no directory listing at all), only fragmented leaves are
-    * rewritten, healthy leaves carry as entries. Rewriting also re-homes a
-    * clone's absolute-path references into this root, one leaf at a time.
-    */
-  /** Re-land the given OLD-SPEC leaves' rows under the CURRENT partition
-    * spec, APPENDED into the next version dir — Append because one old
-    * leaf may fan into many new ones, and a target leaf may already be
-    * owned by a same-commit rewrite or a carried entry (multiple files
-    * per leaf are normal manifest state). SHARED by compaction and the
-    * maintenance rewrites (purge, re-home): the convergence semantics
-    * must never diverge between them. No-op on an empty set.
-    */
-  private def respecAppend(spark: SparkSession, root: String,
-                           man: ManifestIndex.TableManifest,
-                           leaves: Set[String], nextPath: String): Unit =
-    if (leaves.nonEmpty)
-      ManifestIndex.toPhysical(
-          ManifestIndex.dataFrame(spark, root, man, Some(leaves)),
-          man.dataSchema)
-        .write.mode(SaveMode.Append)
-        .partitionBy(man.partitionSchema.fieldNames.toSeq: _*)
-        .parquet(nextPath)
 
   /** The leaf-pruned copy-on-write writers cannot reason across two
     * partition specs (their affected-leaf sets are computed in the CURRENT
@@ -3213,6 +3222,11 @@ object Layout {
         "compactVersionedPartitioned to re-spec old leaves first")
   }
 
+  /** Compaction on a manifest root: fragmentation is diagnosed FROM the
+    * manifest (no directory listing at all), only fragmented leaves are
+    * rewritten — all of them in one write job ([[rewriteEntries]]) unless
+    * z-ordered — and healthy leaves carry as entries.
+    */
   private def compactManifest(spark: SparkSession, root: String,
                               targetBytes: Long, maxFiles: Int,
                               zOrderCols: Seq[String]): (String, Int) = {
@@ -3242,28 +3256,29 @@ object Layout {
     // nothing fragmented → NO-OP, no version claimed (review fix)
     if (fragmented.isEmpty && respec.isEmpty) return (cur, 0)
     val (next, nextPath) = nextVersion(spark, root, cur)
-    // callers name z-order columns LOGICALLY; the rewrite runs on the
-    // physically-named frame, so translate through the mapping
-    val zPhys = zOrderCols.map(n =>
-      man.dataSchema.find(_.name == n).map(ManifestIndex.physicalName)
-        .getOrElse(n))
-    fragmented.toSeq.sortBy(_._1).foreach { case (leaf, bytes) =>
-      val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val data = ManifestIndex.toPhysical(
-        ManifestIndex.dataFrame(spark, root, man, Some(Set(leaf)))
-          .drop(man.partitionSchema.fieldNames: _*), man.dataSchema)
-      if (zOrderCols.nonEmpty)
-        writeZOrdered(data, s"$nextPath/$leaf", zPhys, files = files)
-      else
-        data.coalesce(files)
-          .write.mode(SaveMode.Overwrite).parquet(s"$nextPath/$leaf")
-    }
-    // zOrderCols do not apply to respec'd rows (they fan across leaves
-    // via partitionBy; cluster them on the NEXT compaction, once they
-    // live in current-spec leaves)
-    respecAppend(spark, root, man, respec, nextPath)
+    val fresh =
+      if (zOrderCols.isEmpty)
+        rewriteEntries(spark, root, next, man, fragmented.keySet ++ respec,
+          targetBytes)
+      else {
+        // z-order keeps a per-leaf range sort; it does not apply to
+        // respec'd rows (they fan across leaves — cluster them on the
+        // NEXT compaction, once they live in current-spec leaves). The
+        // respec write replaces the version dir, so it goes first; each
+        // leaf's z-write then adds its files beside any respec'd ones.
+        val respecd =
+          if (respec.isEmpty) Nil
+          else rewriteEntries(spark, root, next, man, respec, targetBytes)
+        respecd ++ fragmented.toSeq.sortBy(_._1).flatMap { case (leaf, bytes) =>
+          val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+          writeEntries(spark, root, next, man.dataSchema, Nil,
+            zOrdered(ManifestIndex.dataFrame(spark, root, man, Some(Set(leaf)))
+              .drop(man.partitionSchema.fieldNames: _*), zOrderCols, 8, files),
+            leaf = Some(leaf))
+        }
+      }
     commitManifest(spark, root, next, man.copy(
-      entries = ManifestIndex.listVersionFiles(fsOf(spark, root), root, next) ++
+      entries = fresh ++
         man.entries.filterNot(e =>
           fragmented.contains(e.leaf) || respec.contains(e.leaf))), "COMPACT")
     (nextPath, fragmented.size + respec.size)
@@ -3278,18 +3293,41 @@ object Layout {
                              m: ManifestIndex.TableManifest,
                              operation: String): Unit = {
     fsOf(spark, root).mkdirs(new Path(root, version))
-    // data-skipping stats for the files THIS commit wrote (carried entries
-    // keep theirs — stats cost tracks rewritten data, never table size)
-    // bloom declarations arrive in logical names; stats speak physical
-    val bloomPhys = ManifestIndex.bloomColumns(spark, root).map(n =>
-      m.dataSchema.find(_.name == n).map(ManifestIndex.physicalName).getOrElse(n))
     ManifestIndex.write(spark, root, version, m.copy(
       // every commit overwrites the key, so each version's manifest names
       // ITS operation (the DESCRIBE HISTORY surface)
-      properties = m.properties + (ManifestIndex.OperationKey -> operation),
-      entries = ManifestIndex.attachStats(spark, root, version, m.entries,
-        m.dataSchema, bloomPhys)))
+      properties = m.properties + (ManifestIndex.OperationKey -> operation)))
     writePointer(spark, root, version)
+  }
+
+  /** Write one commit's data files: `rows` (logical column names, the
+    * partition columns `pcols` included) land as hive leaves under
+    * `root/version` in ONE Spark write whose tasks also collect every
+    * file's stats ([[FileStatsTracker]]) — a commit pays no second job
+    * and no re-read of the files it just wrote. Returns the new entries,
+    * stats attached. With `leaf`, `rows` (partition columns dropped) are
+    * added into that one leaf dir instead of replacing the version dir
+    * (the z-ordered compaction's per-leaf range sort). Every manifest
+    * data writer funnels through here, so physical naming and stats
+    * never fork.
+    */
+  private def writeEntries(spark: SparkSession, root: String, version: String,
+                           dataSchema: StructType, pcols: Seq[String],
+                           rows: DataFrame,
+                           leaf: Option[String] = None): Seq[ManifestIndex.Entry] = {
+    val physical = ManifestIndex.toPhysical(rows, dataSchema)
+    val tracker = ManifestIndex.statsTracker(spark, dataSchema,
+      ManifestIndex.bloomColumns(spark, root),
+      StructType(physical.schema.filterNot(f => pcols.contains(f.name))),
+      pcols.size)
+    Shim.writeParquet(physical,
+      leaf.fold(s"$root/$version")(l => s"$root/$version/$l"), pcols,
+      Seq(tracker), replace = leaf.isEmpty)
+    tracker.files.map { f =>
+      val rel = leaf.fold(f.rel)(l => s"$l/${f.rel}")
+      ManifestIndex.Entry(rel.substring(0, math.max(0, rel.lastIndexOf('/'))),
+        s"$version/$rel", f.size, Some(f.stats))
+    }.sortBy(_.path)
   }
 
   private def fsOf(spark: SparkSession, root: String) =

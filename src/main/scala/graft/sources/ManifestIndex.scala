@@ -1,14 +1,14 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, EqualNullSafe, EqualTo, Expression, GenericInternalRow, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or, Predicate, StartsWith}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{array, broadcast, col, collect_set, count, hll_sketch_agg, length, lit, max, min, percentile_approx, pmod, shiftrightunsigned, unix_date, unix_micros, when, xxhash64}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, NumericType, ShortType, StringType, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.json4s.{JArray, JInt, JLong, JObject, JString, JValue}
@@ -90,7 +90,7 @@ object ManifestIndex {
     if (i < 0) path else segs.drop(i).mkString("/")
   }
 
-  /** `min`/`max` are string-encoded bounds (see [[attachStats]] for the
+  /** `min`/`max` are string-encoded bounds (see [[FileStatsTracker]] for the
     * per-type encoding); ABSENT means unknown (over-long string, or a
     * column added after this file was written), NOT all-null — all-null is
     * `nulls == FileStats.rows`. Skipping must treat a missing bound as
@@ -125,9 +125,10 @@ object ManifestIndex {
     */
   private[sources] val NdvLgK = 8
 
-  /** Equi-height histogram bins per NUMERIC column (S82): the per-file
-    * stats pass records `HistBins + 1` quantile fences (percentile_approx
-    * over the same one-aggregate scan min/max/NDV already ride), and
+  /** Equi-height histogram bins per NUMERIC column (S82): the write-time
+    * stats ([[FileStatsTracker]]) record `HistBins + 1` quantile fences
+    * per file (a percentile_approx digest beside the min/max/NDV
+    * accumulators), and
     * [[planStatsTable]] merges them into the table-level
     * `CatalogColumnStat.histogram` by summing the per-file piecewise-
     * linear CDFs (row-count weighted) and inverting at the global
@@ -137,6 +138,11 @@ object ManifestIndex {
     * `spark.graft.stats.histogramBins` (write-time; 0 disables) overrides.
     */
   private[sources] val HistBins = 16
+
+  /** percentile_approx accuracy of the per-file fences (relative error
+    * 1/2500).
+    */
+  private[sources] val HistAccuracy = 2500
 
   case class FileStats(rows: Long, cols: Map[String, ColStats])
 
@@ -385,34 +391,6 @@ object ManifestIndex {
     try out.write(FormatTag.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Inventory a freshly-written version dir as root-relative entries —
-    * called once per commit on the files the writer just produced (exact
-    * lengths from the listing; the manifest is the last listing this
-    * version will ever need).
-    */
-  def listVersionFiles(fs: FileSystem, root: String,
-                       version: String): Seq[Entry] = {
-    val vdir = new Path(root, version)
-    if (!fs.exists(vdir)) return Nil
-    val acc = Seq.newBuilder[Entry]
-    def rec(p: Path, leaf: String): Unit =
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        val hidden = n.startsWith("_") || n.startsWith(".")
-        if (st.isDirectory) {
-          // sidecar dirs (_dv) are metadata and skipped — but a HIVE LEAF
-          // always contains '=', so a partition column named '_date' still
-          // lists (Spark's own hidden-path filter makes the same exception)
-          if (!hidden || n.contains('='))
-            rec(st.getPath, if (leaf.isEmpty) n else s"$leaf/$n")
-        } else if (!hidden)
-          acc += Entry(leaf, s"$version/${if (leaf.isEmpty) n else s"$leaf/$n"}",
-            st.getLen)
-      }
-    rec(vdir, "")
-    acc.result().sortBy(_.path)
-  }
-
   // -------------------------------------------------------- per-file stats
 
   /** Stats are collected for at most this many leading eligible data
@@ -463,7 +441,7 @@ object ManifestIndex {
 
   /** Every declared bloom column must be stats-indexed: exist (actively),
     * carry an eligible type, and fall within the first [[MaxStatsCols]]
-    * eligible columns — otherwise [[attachStats]] could never record its
+    * eligible columns — otherwise the write-time stats could never record its
     * bloom and the declaration would be a silent no-op.
     */
   def validateBloomColumns(cols: Seq[String], dataSchema: StructType): Unit = {
@@ -558,8 +536,8 @@ object ManifestIndex {
   }
 
   /** Kirsch–Mitzenmacher positions of one xxhash64 value — MUST stay in
-    * lockstep with the Column-side arithmetic in [[attachStats]] (same
-    * longs, same pmod) or literal-side checks diverge from the stored bits.
+    * the ONE definition both the writer ([[FileStatsTracker]]) and the
+    * literal-side checks use, or they would diverge from the stored bits.
     */
   private[sources] def bloomPositions(h: Long, k: Int, m: Int): Seq[Int] = {
     val h1 = h >>> 32
@@ -575,7 +553,7 @@ object ManifestIndex {
     * shortest-round-trip for float/double, `Infinity`/`NaN` specials
     * included).
     */
-  private def statsEligible(dt: DataType): Boolean = dt match {
+  private[sources] def statsEligible(dt: DataType): Boolean = dt match {
     case _: NumericType | StringType | DateType | TimestampType | BooleanType => true
     case _ => false
   }
@@ -586,7 +564,7 @@ object ManifestIndex {
     * lossy-above-2⁵³ long corner is acceptable for an ESTIMATOR (bounds
     * and NDV stay exact-typed).
     */
-  private def histEligible(dt: DataType): Boolean = dt match {
+  private[sources] def histEligible(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType |
          FloatType | DoubleType | _: DecimalType => true
     case _ => false
@@ -642,122 +620,54 @@ object ManifestIndex {
     FileStats(jLong(j \ "rows"), cols)
   }
 
-  /** Compute [[FileStats]] for the entries this commit just wrote (path
-    * under `version/`, no stats yet) with ONE aggregate over ONLY those
-    * files, grouped by `_metadata.file_path` — carried entries keep the
-    * stats they were born with (carry-forward copies the whole entry, so
-    * at any table size the per-commit stats cost is proportional to the
-    * data actually rewritten, never to the table). The result is
-    * O(#new files × #stat columns) of metadata — the same driver-side
-    * class as the manifest itself.
+  /** Histogram bins for the stats of a write: `spark.graft.stats.histogramBins`
+    * when set (0 disables the fences), else [[HistBins]]. A malformed value
+    * fails the write loudly instead of silently falling back to the
+    * default.
     */
-  def attachStats(spark: SparkSession, root: String, version: String,
-                  entries: Seq[Entry], dataSchema: StructType,
-                  bloomCols: Seq[String] = Nil): Seq[Entry] = {
-    val fresh = entries.filter(e =>
-      e.stats.isEmpty && e.path.startsWith(version + "/"))
+  private[sources] def histogramBins(spark: SparkSession): Int =
+    spark.conf.getOption("spark.graft.stats.histogramBins") match {
+      case None => HistBins
+      case Some(s) =>
+        val n = scala.util.Try(s.trim.toInt).toOption
+        require(n.exists(_ >= 0),
+          s"spark.graft.stats.histogramBins must be a non-negative integer, got '$s'")
+        n.get
+    }
+
+  /** The write-time collector of [[FileStats]] for one manifest write
+    * ([[FileStatsTracker]]): stats cover the first [[MaxStatsCols]]
+    * eligible ACTIVE columns of `dataSchema`, recorded under their
+    * PHYSICAL names (what the files and every later reader speak); bloom
+    * bits for the declared `bloomCols` (logical names) among them;
+    * histogram fences for the numeric ones. `written` is the data schema
+    * the write emits (physical names, partition columns excluded) and
+    * `depth` the number of partition directories above each file.
+    * Carried entries keep the stats they were born with, so the stats
+    * cost of a commit tracks the data it writes, never the table.
+    */
+  private[sources] def statsTracker(spark: SparkSession, dataSchema: StructType,
+                                    bloomCols: Seq[String], written: StructType,
+                                    depth: Int): FileStatsTracker = {
     val statCols = activeSchema(dataSchema).fields
       .filter(f => statsEligible(f.dataType)).take(MaxStatsCols)
-    if (fresh.isEmpty || statCols.isEmpty) return entries
-    // bloom columns must be within the stats-indexed set (eligible type,
-    // first MaxStatsCols) — matched by PHYSICAL name, the stable identity
-    // renames never touch; the per-hash positions share the rows-scan the
-    // envelope aggregates already pay
-    val blooms = bloomCols.flatMap(n => statCols.find(f => physicalName(f) == n))
-    // write-time override for the per-file histogram fences; 0 disables
-    val histBins = scala.util.Try(spark.conf
-      .get("spark.graft.stats.histogramBins", HistBins.toString).toInt)
-      .getOrElse(HistBins)
-    val paths = fresh.map(e => new Path(root, e.path).toString)
-    // fresh files are read (and stats recorded) under PHYSICAL names
-    val df = spark.read.schema(physicalSchema(activeSchema(dataSchema)))
-      .parquet(paths: _*)
-    val aggs: Seq[Column] = (count(lit(1L)).as("__rows") +:
-      (statCols.toSeq.zipWithIndex.flatMap { case (f, i) =>
-        val c = col(s"`${physicalName(f)}`")
-        def enc(x: Column): Column = f.dataType match {
-          case StringType => when(length(x) <= MaxStringStatLen, x)
-          case TimestampType => unix_micros(x).cast(StringType)
-          case DateType => unix_date(x).cast(StringType)
-          case _ => x.cast(StringType)
-        }
-        Seq(enc(min(c)).as(s"__min$i"), enc(max(c)).as(s"__max$i"),
-          count(c).as(s"__cnt$i"),
-          // per-file NDV sketch (S79): hll over ONE xxhash64 of the value
-          // (the sketch aggregate takes int/long/string/binary only; a
-          // 64-bit hash loses nothing at file cardinalities). The isNotNull
-          // guard keeps nulls out — xxhash64(null) would otherwise fold the
-          // seed constant in as a phantom distinct value.
-          hll_sketch_agg(when(c.isNotNull, xxhash64(c)), lit(NdvLgK))
-            .as(s"__ndv$i")) ++
-          // per-file equi-height fences (S82): histBins+1 quantiles of the
-          // double view, riding the SAME grouped scan (percentile_approx
-          // is a per-group sketch, so the cost is one more accumulator,
-          // not another pass). All-null files yield a NULL array → no
-          // fences, which planStatsTable treats as "no rows to histogram".
-          (if (histBins > 0 && histEligible(f.dataType))
-            Seq(percentile_approx(c.cast("double"),
-              array((0 to histBins).map(j =>
-                lit(j.toDouble / histBins)): _*),
-              lit(2500)).as(s"__hist$i"))
-          else Nil)
-      } ++
-      blooms.zipWithIndex.flatMap { case (f, j) =>
-        // Kirsch–Mitzenmacher on one xxhash64 — the literal side replays
-        // this exact arithmetic in bloomPositions
-        val h = xxhash64(col(s"`${physicalName(f)}`"))
-        val h1 = shiftrightunsigned(h, 32)
-        val h2 = h.bitwiseAND(lit(0xffffffffL)).bitwiseOR(lit(1L))
-        (0 until BloomHashes).map(i =>
-          collect_set(pmod(h1 + lit(i.toLong) * h2, lit(BloomBits.toLong)))
-            .as(s"__bloom${j}_$i"))
-      }))
-    val agg = df.groupBy(col("_metadata.file_path").as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-    // one row per NEW file — O(metadata), not row data (same contract as
-    // the scratch-dir leaf listing in Layout.affectedLeaves)
-    val it = agg.toLocalIterator()
-    val byName = scala.collection.mutable.Map.empty[String, FileStats]
-    while (it.hasNext) {
-      val r = it.next()
-      val rows = r.getAs[Long]("__rows")
-      val bloomByName = blooms.zipWithIndex.map { case (f, j) =>
-        val bytes = new Array[Byte](BloomBits / 8)
-        (0 until BloomHashes).foreach { i =>
-          r.getSeq[Long](r.fieldIndex(s"__bloom${j}_$i")).foreach { p =>
-            bytes(p.toInt >> 3) = (bytes(p.toInt >> 3) | (1 << (p.toInt & 7))).toByte
-          }
-        }
-        physicalName(f) -> BloomStat(BloomHashes,
-          java.util.Base64.getEncoder.encodeToString(bytes))
-      }.toMap
-      val cols = statCols.toSeq.zipWithIndex.map { case (f, i) =>
-        val mn = Option(r.getAs[String](s"__min$i"))
-        val mx = Option(r.getAs[String](s"__max$i"))
-        val ndv = Option(r.getAs[Array[Byte]](s"__ndv$i"))
-          .map(java.util.Base64.getEncoder.encodeToString)
-        val hist =
-          if (histBins > 0 && histEligible(f.dataType))
-            Option(r.getAs[scala.collection.Seq[Double]](s"__hist$i"))
-              .map(_.toSeq.map(_.toString))
-          else None
-        physicalName(f) -> ColStats(mn, mx, rows - r.getAs[Long](s"__cnt$i"),
-          bloomByName.get(physicalName(f)), ndv, hist)
-      }.toMap
-      // key by the path RELATIVE to the version dir — one write task emits
-      // the same basename into every leaf it touches, so the filename alone
-      // collides across leaves
-      // _metadata.file_path is URL-encoded; entry paths are literal —
-      // decode before keying or space-bearing leaves silently lose stats
-      val file = literalScanPath(r.getAs[String]("__file"))
-      val marker = s"/$version/"
-      byName(file.substring(file.lastIndexOf(marker) + marker.length)) =
-        FileStats(rows, cols)
+    // bloom columns must be within the stats-indexed set — matched by
+    // PHYSICAL name, the stable identity renames never touch
+    val bloomPhys = bloomCols.map(n =>
+      dataSchema.find(_.name == n).map(physicalName).getOrElse(n)).toSet
+    val histBins = histogramBins(spark)
+    val cols = statCols.toSeq.map { f =>
+      val p = physicalName(f)
+      val exact = written.fieldNames.indexOf(p)
+      val ord =
+        if (exact >= 0) exact else written.fieldNames.indexWhere(_.equalsIgnoreCase(p))
+      StatCol(p, f.dataType, ord,
+        if (ord < 0) f.dataType else written(ord).dataType,
+        histBins > 0 && histEligible(f.dataType), bloomPhys.contains(p))
     }
-    entries.map { e =>
-      if (e.stats.isDefined || !e.path.startsWith(version + "/")) e
-      else e.copy(stats = byName.get(e.path.substring(version.length + 1)))
-    }
+    new FileStatsTracker(cols, histBins, depth,
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sessionState.newHadoopConf()))
   }
 
   /** Decoded, directly-comparable form of [[ColStats]]: Catalyst-internal
@@ -798,7 +708,7 @@ object ManifestIndex {
 
   /** Re-encode a stats bound across a widening: decode under the NARROW
     * type the file was profiled with, widen the VALUE, re-encode under the
-    * wide type — the same Catalyst casts [[attachStats]] encodes with, so
+    * wide type — the same Catalyst casts [[FileStatsTracker]] encodes with, so
     * the round trip is bit-exact. This is not cosmetic: a float bound
     * "0.1" re-read as double would be 0.1d, but the file's actual values
     * widen to 0.10000000149…d — ABOVE the envelope — and skipping would

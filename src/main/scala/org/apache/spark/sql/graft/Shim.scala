@@ -85,4 +85,51 @@ object Shim {
     spark.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
+
+  /** Write `df` as parquet under `path` — hive leaves on `partitionColumns`,
+    * the same files `df.write.partitionBy(...).parquet(path)` lays out —
+    * through Spark's one file-format write path (`FileFormatWriter`, what
+    * `DataFrameWriter` lowers to) with extra `statsTrackers` riding the
+    * write tasks. `replace` clears `path` first (`SaveMode.Overwrite`);
+    * otherwise the files are added beside what is there
+    * (`SaveMode.Append`). One SQL execution, one write job.
+    */
+  def writeParquet(df: DataFrame, path: String, partitionColumns: Seq[String],
+                   statsTrackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker],
+                   replace: Boolean): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, PartitioningUtils}
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val spark = ds.sparkSession
+    val conf = spark.sessionState.conf
+    PartitioningUtils.validatePartitionColumn(df.schema, partitionColumns,
+      conf.caseSensitiveAnalysis)
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val out = new Path(path)
+    val fs = out.getFileSystem(hadoopConf)
+    val qualified = out.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    if (replace && fs.exists(qualified) && !fs.delete(qualified, true))
+      throw new java.io.IOException(s"cannot clear write target $qualified")
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      conf.fileCommitProtocolClass, java.util.UUID.randomUUID().toString,
+      qualified.toString)
+    // the basic tracker keeps task output metrics (records/bytes written)
+    // identical to a DataFrameWriter write
+    val basic = new BasicWriteJobStatsTracker(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+      BasicWriteJobStatsTracker.metrics)
+    val qe = ds.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+      Some("write parquet")) {
+      val plan = qe.executedPlan
+      val output = plan.output
+      FileFormatWriter.write(spark, plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        committer,
+        FileFormatWriter.OutputSpec(qualified.toString, Map.empty, output),
+        hadoopConf,
+        partitionColumns.map(c => output.find(a => conf.resolver(a.name, c)).get),
+        None, basic +: statsTrackers, Map.empty)
+    }
+  }
 }

@@ -161,4 +161,69 @@ class MaintenanceSpec extends SparkSpec {
     assert(r2.compactedLeaves == 0)
     assert(Layout.currentVersionNumber(spark, root) == v)
   }
+
+  /** (result of `body`, number of Spark jobs in which some task wrote
+    * rows) — write jobs read off task output metrics.
+    */
+  private def writeJobs[T](body: => T): (T, Int) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val jobOf = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val writing = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageIds.foreach(s => jobOf.put(s, e.jobId))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writing.add(e.stageId)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.graft.ListenerBusSync.drain(spark.sparkContext)
+      (r, writing.asScala.map(s => jobOf.get(s)).toSet.size)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("purge rewrites every DV leaf in ONE write job, sized by live bytes") {
+    val root = Files.createTempDirectory("graft_maint_purge").toString + "/t"
+    Layout.initVersionedManifest(spark.range(10000).select($"id",
+      concat(lit("p"), ($"id" % 5).cast("string")).as("part"),
+      ($"id" * 1.5).as("v"), concat(lit("pad-"), $"id".cast("string")).as("s")),
+      root, Seq("part"))
+    // p0 is mostly deleted; the other four leaves lose a few rows each
+    Layout.deleteVersionedRows(spark, root,
+      ($"part" === "p0" && $"id" % 50 =!= 0) || $"id" % 9 === 0)
+    val man = ManifestIndex.read(spark, root,
+      f"v${Layout.currentVersionNumber(spark, root)}%05d")
+    assert(man.byLeaf.size == 5 && man.byLeaf.values.forall(_.exists(_.dv.isDefined)))
+    def live(es: Seq[ManifestIndex.Entry]): Double = es.map { e =>
+      val rows = e.stats.get.rows
+      e.size.toDouble * (rows - e.dv.map(_.rows).getOrElse(0L)) / rows
+    }.sum
+    // the healthy leaves need exactly 3 files each, p0's few live rows 1
+    val target = math.ceil(live(man.byLeaf("part=p1")) / 2.5).toLong
+    val want = man.byLeaf.map { case (l, es) =>
+      l -> math.max(1, math.ceil(live(es) / target).toInt) }
+    assert(want("part=p0") == 1 && want("part=p1") == 3, want.toString)
+    val before = Layout.readCurrent(spark, root).collect().toSet
+    val ((_, purged), jobs) = writeJobs(Layout.purgeDeletedRows(spark, root, target))
+    assert(purged == 5)
+    assert(jobs == 1, s"purge of 5 DV leaves ran $jobs write jobs")
+    val after = ManifestIndex.read(spark, root,
+      f"v${Layout.currentVersionNumber(spark, root)}%05d")
+    assert(after.entries.forall(_.dv.isEmpty))
+    assert(after.byLeaf.map { case (l, es) => l -> es.size } == want)
+    assert(Layout.readCurrent(spark, root).collect().toSet == before)
+    // the purge output is already healthy: compaction leaves it alone and
+    // a second maintenance run is an all-zero no-op
+    val policy = Layout.MaintenancePolicy(targetBytes = target, maxFiles = 3)
+    val r1 = Layout.maintain(spark, root, policy)
+    assert(r1.purgedLeaves == 0 && r1.compactedLeaves == 0, r1.toString)
+    val v = Layout.currentVersionNumber(spark, root)
+    val r2 = Layout.maintain(spark, root, policy)
+    assert(r2 == Layout.MaintenanceReport(0, 0, 0, r2.livePath), r2.toString)
+    assert(Layout.currentVersionNumber(spark, root) == v)
+    assert(Layout.readCurrent(spark, root).collect().toSet == before)
+  }
 }

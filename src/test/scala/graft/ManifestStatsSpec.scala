@@ -634,4 +634,120 @@ class ManifestStatsSpec extends SparkSpec {
     val off = Layout.readCurrent(spark, root).queryExecution.optimizedPlan.stats
     assert(off.rowCount.isEmpty)
   }
+
+  /** Every file the live version's commit wrote carries exactly the stats
+    * the old re-read aggregate ([[graft.sources.ReferenceStats]]) records
+    * for it: rows, nulls, min, max and bloom bits bit-equal; NDV estimates
+    * and histogram fences equal (every file here is a single split, so the
+    * aggregate folds its rows in write order, as the write task did).
+    */
+  private def assertStatsMatchReference(root: String, what: String): Unit = {
+    val v = f"v${Layout.currentVersionNumber(spark, root)}%05d"
+    val m = ManifestIndex.read(spark, root, v)
+    val fresh = m.entries.filter(_.path.startsWith(v + "/"))
+    assert(fresh.nonEmpty, s"$what wrote no files")
+    val bloomPhys = ManifestIndex.bloomColumns(spark, root).map(n =>
+      m.dataSchema.find(_.name == n).map(ManifestIndex.physicalName).getOrElse(n))
+    val ref = graft.sources.ReferenceStats(spark, root, v, fresh,
+      m.dataSchema, bloomPhys)
+    def est(b64: String): Double =
+      org.apache.datasketches.hll.HllSketch.heapify(
+        java.util.Base64.getDecoder.decode(b64)).getEstimate
+    fresh.foreach { e =>
+      val got = e.stats.getOrElse(fail(s"$what: ${e.path} has no stats"))
+      val want = ref.getOrElse(e.path, fail(s"$what: no reference row for ${e.path}"))
+      assert(got.rows == want.rows, s"$what ${e.path}")
+      assert(got.cols.keySet == want.cols.keySet, s"$what ${e.path}")
+      want.cols.foreach { case (c, w) =>
+        val g = got.cols(c)
+        assert((g.min, g.max, g.nulls) == (w.min, w.max, w.nulls),
+          s"$what ${e.path} $c")
+        assert(g.bloom == w.bloom, s"$what ${e.path} $c bloom")
+        assert(g.ndv.map(est) == w.ndv.map(est), s"$what ${e.path} $c ndv")
+        assert(g.hist == w.hist, s"$what ${e.path} $c hist")
+      }
+    }
+  }
+
+  /** Rows exercising every encoding: long-over-cap and null strings, NaN
+    * and signed zeros, dates, timestamps, decimals, booleans, ints,
+    * floats; partitioned on `_pri`, whose `4-NOT SPECIFIED` leaf is
+    * URL-encoded in scan paths.
+    */
+  private def statRows(from: Long, n: Long): DataFrame =
+    spark.range(from, from + n).select($"id",
+      when($"id" % 5 === 0, lit(null).cast("string"))
+        .when($"id" % 13 === 0, concat(lit("x" * 70), $"id".cast("string")))
+        .otherwise(concat(lit("n-"), $"id".cast("string"))).as("name"),
+      when($"id" % 4 === 0, lit(null).cast("double"))
+        .when($"id" % 17 === 0, lit(Double.NaN))
+        .when($"id" % 19 === 0, lit(-0.0))
+        .when($"id" % 23 === 0, lit(0.0))
+        .otherwise($"id" * 1.5 - 100).as("score"),
+      date_add(lit("2026-01-01").cast("date"), ($"id" % 40).cast("int")).as("d"),
+      timestamp_micros($"id" * 1000003L).as("ts"),
+      ($"id" / 7).cast("decimal(10,2)").as("amt"),
+      ($"id" % 3 === 0).as("flag"),
+      ($"id" % 50).cast("int").as("small"),
+      ($"id" * 0.25).cast("float").as("f"),
+      when($"id" % 2 === 0, lit("4-NOT SPECIFIED")).otherwise(lit("1-URGENT"))
+        .as("_pri"))
+
+  test("differential: write-time stats equal the re-read aggregate on every commit kind") {
+    val root = Files.createTempDirectory("graft_stats_diff").toString + "/t"
+    Layout.initVersionedManifest(statRows(0, 800).repartition(2), root,
+      Seq("_pri"), Seq("id"))
+    assertStatsMatchReference(root, "init")
+    Layout.appendVersionedRows(spark, root, statRows(800, 150))
+    assertStatsMatchReference(root, "append")
+    Layout.mergeVersionedPartitioned(spark, root,
+      statRows(900, 100).withColumn("score", $"score" + 1), Seq("id"), Seq("_pri"))
+    assertStatsMatchReference(root, "merge")
+    Layout.deleteVersionedPartitioned(spark, root, $"id" % 7 === 0, Seq("_pri"))
+    assertStatsMatchReference(root, "delete")
+    Layout.deleteVersionedRows(spark, root, $"id" % 11 === 0)
+    Layout.purgeDeletedRows(spark, root)
+    assertStatsMatchReference(root, "purge")
+    (0 until 3).foreach(k =>
+      Layout.appendVersionedRows(spark, root, statRows(1000 + 40 * k, 40)))
+    Layout.compactVersionedPartitioned(spark, root, targetBytes = 1L << 26,
+      maxFiles = 1)
+    assertStatsMatchReference(root, "compact")
+    (0 until 3).foreach(k =>
+      Layout.appendVersionedRows(spark, root, statRows(1200 + 40 * k, 40)))
+    Layout.compactVersionedPartitioned(spark, root, targetBytes = 1L << 26,
+      maxFiles = 1, zOrderCols = Seq("score", "small"))
+    assertStatsMatchReference(root, "z-order compact")
+    Layout.widenColumn(spark, root, "small", org.apache.spark.sql.types.LongType)
+    Layout.appendVersionedRows(spark, root,
+      statRows(1400, 40).withColumn("small", $"small".cast("long")))
+    Layout.compactVersionedPartitioned(spark, root, targetBytes = 1L << 26,
+      maxFiles = 1)
+    assertStatsMatchReference(root, "post-widening compact")
+    // the comparison covered the URL-encoded leaf
+    assert(ManifestIndex.read(spark, root,
+      f"v${Layout.currentVersionNumber(spark, root)}%05d")
+      .leaves.contains("_pri=4-NOT SPECIFIED"))
+  }
+
+  test("a malformed spark.graft.stats.histogramBins fails the write loudly") {
+    val key = "spark.graft.stats.histogramBins"
+    val df = Seq((1L, "p1", 1.0)).toDF("id", "part", "v")
+    try {
+      Seq("sixteen", "-1", "").foreach { bad =>
+        spark.conf.set(key, bad)
+        val root = Files.createTempDirectory("graft_hist_conf").toString + "/t"
+        val e = intercept[IllegalArgumentException] {
+          Layout.initVersionedManifest(df, root, Seq("part"))
+        }
+        assert(e.getMessage.contains(key), e.getMessage)
+      }
+      // a well-formed value still applies: 0 disables the fences
+      spark.conf.set(key, "0")
+      val root = Files.createTempDirectory("graft_hist_conf").toString + "/t"
+      Layout.initVersionedManifest(df, root, Seq("part"))
+      assert(ManifestIndex.read(spark, root, "v00000").entries
+        .forall(_.stats.exists(_.cols("v").hist.isEmpty)))
+    } finally spark.conf.unset(key)
+  }
 }
