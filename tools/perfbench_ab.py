@@ -71,6 +71,14 @@ def run_one(wt, workload, seed, seconds):
     return r
 
 
+def metric(r, name):
+    """A metric's value from a result line, or None when absent or failed."""
+    if "error" in r:
+        return None
+    m = r["metrics"].get(name)
+    return m.get("value") if isinstance(m, dict) else m
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return (xs[0], xs[0], xs[0]) if xs else (float("nan"),) * 3
@@ -124,8 +132,7 @@ def main():
                                               "side": side, "result": r}) + "\n")
                         log.flush()
                         status = r.get("error") or " ".join(
-                            f"{m['name']}={r['metrics'].get(m['name'], float('nan')):.4g}"
-                            for m in metrics)
+                            f"{m['name']}={metric(r, m['name'])}" for m in metrics)
                         print(f"  {w} pair {i} seed {seed} {side:6s} {status}", flush=True)
 
         print()
@@ -140,8 +147,7 @@ def main():
                 won = {s: 0 for s in ("parent", "change")}
                 for i in range(a.pairs):
                     rp, rc = results[(w, i, "parent")], results[(w, i, "change")]
-                    vp = None if "error" in rp else rp["metrics"].get(name)
-                    vc = None if "error" in rc else rc["metrics"].get(name)
+                    vp, vc = metric(rp, name), metric(rc, name)
                     if vp is not None:
                         vals["parent"].append(vp)
                     if vc is not None:
