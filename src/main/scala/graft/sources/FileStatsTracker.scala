@@ -29,7 +29,8 @@ private[sources] final case class StatCol(name: String, dataType: DataType,
 /** One data file a write task produced: its path relative to the write's
   * output directory (`leaf/part-….parquet`), its length and its stats.
   */
-final case class WrittenFile(rel: String, size: Long, stats: FileStats)
+private[sources] final case class WrittenFile(rel: String, size: Long,
+                                              stats: FileStats)
 
 private final case class WrittenFiles(files: Seq[WrittenFile]) extends WriteTaskStats
 
@@ -46,9 +47,9 @@ private final case class WrittenFiles(files: Seq[WrittenFile]) extends WriteTask
   * [[ManifestIndex.statsTracker]] for how the columns are chosen.
   * `depth` is the number of partition directories above each file.
   */
-final class FileStatsTracker private[sources] (cols: Seq[StatCol], histBins: Int,
-                                               depth: Int,
-                                               conf: SerializableConfiguration)
+private[sources] final class FileStatsTracker(cols: Seq[StatCol], histBins: Int,
+                                              depth: Int,
+                                              conf: SerializableConfiguration)
     extends WriteJobStatsTracker {
 
   @transient private lazy val written = mutable.ArrayBuffer.empty[WrittenFile]
@@ -204,8 +205,6 @@ private final class FileStatsTaskTracker(cols: Seq[StatCol], histBins: Int,
         p.getFileSystem(conf).getFileStatus(p).getLen, acc.result())
     }
 
-  override def getFinalStats(taskCommitTime: Long): WriteTaskStats = {
-    open.keys.toList.foreach(closeFile)
+  override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
     WrittenFiles(done.toList)
-  }
 }

@@ -819,8 +819,23 @@ object Layout {
       // one task per leaf and undo the requested fan-out
       val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
       df.repartition(math.max(n, files), pcols.map(quoted) :+
-        pmod(hash(struct(df.columns.map(quoted): _*)), lit(files)): _*)
+        pmod(rowHash(df), lit(files)): _*)
     }
+  }
+
+  /** Row-content hash — the salt that splits one leaf's rows
+    * deterministically across several files. Map-typed values cannot be
+    * hashed and add nothing to the split, so they are left out.
+    */
+  private def rowHash(df: DataFrame): Column = {
+    def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
+      case _: org.apache.spark.sql.types.MapType => true
+      case a: org.apache.spark.sql.types.ArrayType => hasMap(a.elementType)
+      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
+      case _ => false
+    }
+    hash(struct(df.schema.fields.toSeq.filterNot(f => hasMap(f.dataType))
+      .map(f => col(s"`${f.name}`")): _*))
   }
 
   def initVersionedPartitioned(df: DataFrame, root: String,
@@ -2908,9 +2923,9 @@ object Layout {
     * spec — for an old-spec leaf the current partition columns live in its
     * payload, so only partitioning the write puts them back in dir names.
     * Each current-spec leaf gets exactly ceil(live bytes / `targetBytes`)
-    * shuffle buckets — one file each — through a direct partition id
-    * (`leafSized`'s row-content salt over the leaf's own bucket range);
-    * old-spec rows fan out one file per target leaf. Live bytes discount
+    * shuffle buckets, one file each, through a direct partition id: its
+    * own bucket range, split by the [[rowHash]] salt `leafSized` uses.
+    * Old-spec rows fan out one file per target leaf. Live bytes discount
     * the rows a leaf's deletion vectors drop, so a mostly-deleted leaf
     * lands as one file instead of slivers the next compaction would
     * rewrite again. Returns the new entries.
@@ -2939,15 +2954,7 @@ object Layout {
       else spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
     val data = ManifestIndex.dataFrame(spark, root, man, Some(leaves))
     def quoted(c: String) = col(s"`$c`")
-    // map-typed values cannot be hashed; they add nothing to the salt
-    def hasMap(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.MapType => true
-      case a: org.apache.spark.sql.types.ArrayType => hasMap(a.elementType)
-      case st: StructType => st.fields.exists(f => hasMap(f.dataType))
-      case _ => false
-    }
-    val salt = hash(struct(data.schema.fields.filterNot(f => hasMap(f.dataType))
-      .map(f => quoted(f.name)).toSeq: _*))
+    val salt = rowHash(data)
     val rest: Column =
       if (respecTasks == 0) lit(0)
       else lit(offsets.last) + pmod(hash(pcols.map(quoted): _*), lit(respecTasks))
