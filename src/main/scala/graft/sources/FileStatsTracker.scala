@@ -113,6 +113,8 @@ private final class FileStatsTaskTracker(cols: Seq[StatCol], histBins: Int,
           // one seen stays, as in Catalyst's least/greatest fold
           if (mins(i) == null || orderings(i).lt(v, mins(i))) mins(i) = own(v)
           if (maxs(i) == null || orderings(i).gt(v, maxs(i))) maxs(i) = own(v)
+          // nulls stay out of the sketch: their hash (the seed) would
+          // count as a phantom distinct value
           ndv(i).update(h)
         }
         if (bloomed(i))
@@ -140,6 +142,7 @@ private final class FileStatsTaskTracker(cols: Seq[StatCol], histBins: Int,
         val fences =
           if (h < 0) None
           else {
+            // an all-null file has no rows to histogram: no fences
             val q = digests(h).getPercentiles(percentages)
             if (q.isEmpty) None else Some(q.map(_.toString))
           }

@@ -128,8 +128,7 @@ object ManifestIndex {
   /** Equi-height histogram bins per NUMERIC column (S82): the write-time
     * stats ([[FileStatsTracker]]) record `HistBins + 1` quantile fences
     * per file (a percentile_approx digest beside the min/max/NDV
-    * accumulators), and
-    * [[planStatsTable]] merges them into the table-level
+    * accumulators), and [[planStatsTable]] merges them into the table-level
     * `CatalogColumnStat.histogram` by summing the per-file piecewise-
     * linear CDFs (row-count weighted) and inverting at the global
     * equi-height targets — the selectivity half of the CBO feed S79's NDV
@@ -441,8 +440,8 @@ object ManifestIndex {
 
   /** Every declared bloom column must be stats-indexed: exist (actively),
     * carry an eligible type, and fall within the first [[MaxStatsCols]]
-    * eligible columns — otherwise the write-time stats could never record its
-    * bloom and the declaration would be a silent no-op.
+    * eligible columns — otherwise the write-time stats could never record
+    * its bloom and the declaration would be a silent no-op.
     */
   def validateBloomColumns(cols: Seq[String], dataSchema: StructType): Unit = {
     val eligible = activeSchema(dataSchema).fields
@@ -535,9 +534,9 @@ object ManifestIndex {
     text.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  /** Kirsch–Mitzenmacher positions of one xxhash64 value — MUST stay in
-    * the ONE definition both the writer ([[FileStatsTracker]]) and the
-    * literal-side checks use, or they would diverge from the stored bits.
+  /** Kirsch–Mitzenmacher positions of one xxhash64 value — the ONE
+    * definition both the writer ([[FileStatsTracker]]) and the literal-side
+    * checks use, so a check probes exactly the bits the writer set.
     */
   private[sources] def bloomPositions(h: Long, k: Int, m: Int): Seq[Int] = {
     val h1 = h >>> 32
