@@ -665,8 +665,8 @@ object Layout {
 
   /** Advance the version counter under OPTIMISTIC CONCURRENCY CONTROL:
     * the writer atomically claims `vN+1` by creating `root/vNNNNN.claim`
-    * with `FileSystem.createNewFile` (an atomic create-if-absent on local
-    * and HDFS-like filesystems). Two writers that both resolved the same
+    * with an exclusive create (`FileSystem.createNewFile`; on the local
+    * filesystem the OS's create-if-absent). Two writers that both resolved the same
     * base version race for the same claim — exactly one wins; the loser
     * gets a `ConcurrentModificationException` instead of silently
     * overwriting the winner's version dir or flipping the pointer over a
@@ -690,10 +690,19 @@ object Layout {
     // retryable signal, or withCommitRetry propagates the raced loss as
     // a hard failure (observed under load; also the object-store
     // behavior, where conditional creates throw rather than return).
+    // On the local filesystem even the create is check-then-open (no
+    // O_EXCL), so two racers can BOTH "create" the claim and both write
+    // the same version dir; the OS's exclusive create closes that window.
     val created =
-      try fs.createNewFile(claim)
-      catch {
+      try {
+        if (fs.getScheme == "file") {
+          java.nio.file.Files.createFile(
+            java.nio.file.Paths.get(fs.makeQualified(claim).toUri))
+          true
+        } else fs.createNewFile(claim)
+      } catch {
         case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+        case _: java.nio.file.FileAlreadyExistsException => false
         case e: java.io.IOException
             if e.getMessage != null &&
               e.getMessage.contains("already exists") => false
