@@ -16,10 +16,10 @@ import graft.sources.{Layout, ManifestIndex}
   * next version: time-travelable, crash-safe (pointer flips after data +
   * metadata land), and vacuumable.
   *
-  *  - CODEBOOKS: m×k centroid rows `(subspace, centroid, center)` plus an
-  *    `_ann_index.json` metadata file (underscore-prefixed — parquet
-  *    readers skip it) carried INTO the version directory — bounded driver
-  *    metadata by contract (m·k rows at any corpus size, the
+  *  - CODEBOOKS: m×k centroid rows `(subspace, centroid, center)` plus
+  *    their metadata (shape, caller extras) in the published version's
+  *    manifest properties — bounded driver metadata by contract (m·k
+  *    rows at any corpus size, the
   *    [[graft.ops.Pca.topDirection]] class), so serving loads them with
   *    one bounded collect and inlines them as plan literals — the exact
   *    shape the q160-family oracles replay.
@@ -33,8 +33,8 @@ import graft.sources.{Layout, ManifestIndex}
   *    column never appears.
   *
   * VERSION-SKEW REFUSAL (r17): every codes publish records which
-  * books/rotation/bounds version encoded it (flat roots: the
-  * `_ann_index.json` metadata file; manifest roots: `ann.*` manifest
+  * books/rotation/bounds version encoded it (published roots: the
+  * publish metadata, [[readMeta]]; cell-partitioned roots: `ann.*`
   * properties, carried through every commit), and every serve path
   * REFUSES to score codes against a different artifact version — a stale
   * codes table silently served against retrained books would return
@@ -46,112 +46,28 @@ import graft.sources.{Layout, ManifestIndex}
   */
 object AnnIndex {
 
-  private val MetaFile = "_ann_index.json"
-
-  // JSON string escaping for metadata keys/values — a quote, backslash or
-  // ANY control character (U+0000–U+001F, all invalid raw in JSON strings)
-  // in caller extras must not corrupt the artifact file (ADVICE r16: the
-  // named-escape list alone left \b, \f and the rest of C0 unescaped)
-  private def esc(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '"'  => sb.append("\\\"")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
-
-  private def metaJson(meta: Map[String, String]): String =
-    meta.toSeq.sortBy(_._1)
-      .map { case (a, b) => s""""${esc(a)}":"${esc(b)}"""" }
-      .mkString("{", ",", "}")
-
-  /** Parse the flat `{"k":"v",…}` JSON [[metaJson]] writes — the exact
-    * inverse of [[esc]] (named escapes + `\u00XX`); anything else in the
-    * file is a corruption and fails loudly.
-    */
-  private[graft] def parseFlatJson(s: String): Map[String, String] = {
-    val t = s.trim
-    require(t.startsWith("{") && t.endsWith("}"),
-      s"parseFlatJson: not a flat JSON object: $t")
-    val body = t.substring(1, t.length - 1)
-    if (body.trim.isEmpty) return Map.empty
-    val out = scala.collection.mutable.Map.empty[String, String]
-    var i = 0
-    def readString(): String = {
-      require(i < body.length && body.charAt(i) == '"',
-        s"parseFlatJson: expected '\"' at $i in $t")
-      i += 1
-      val sb = new StringBuilder
-      while (body.charAt(i) != '"') {
-        body.charAt(i) match {
-          case '\\' =>
-            i += 1
-            body.charAt(i) match {
-              case '\\' => sb.append('\\'); i += 1
-              case '"'  => sb.append('"'); i += 1
-              case 'n'  => sb.append('\n'); i += 1
-              case 'r'  => sb.append('\r'); i += 1
-              case 't'  => sb.append('\t'); i += 1
-              case 'u'  =>
-                sb.append(Integer.parseInt(
-                  body.substring(i + 1, i + 5), 16).toChar)
-                i += 5
-              case c => throw new IllegalArgumentException(
-                s"parseFlatJson: unknown escape \\$c in $t")
-            }
-          case c => sb.append(c); i += 1
-        }
-      }
-      i += 1 // closing quote
-      sb.toString
-    }
-    while (i < body.length) {
-      val k = readString()
-      require(body.charAt(i) == ':', s"parseFlatJson: expected ':' in $t")
-      i += 1
-      val v = readString()
-      out(k) = v
-      if (i < body.length) {
-        require(body.charAt(i) == ',', s"parseFlatJson: expected ',' in $t")
-        i += 1
-      }
-    }
-    out.toMap
-  }
-
-  /** Read a flat artifact root's `_ann_index.json` back (the LIVE
-    * version's). This is the metadata channel serve paths enforce the
-    * version-skew contract through.
+  /** The published metadata of `root`'s LIVE version ([[Layout.publishVersion]]'s
+    * `meta`, read back from the manifest properties). This is the metadata
+    * channel serve paths enforce the version-skew contract through.
     */
   def readMeta(spark: SparkSession, root: String): Map[String, String] = {
-    val cur = Layout.resolveCurrent(spark, root)
-    val p = new org.apache.hadoop.fs.Path(cur, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"readMeta: no $MetaFile under $cur — not an " +
-      "AnnIndex artifact root (or published before the metadata contract)")
-    val in = fs.open(p)
-    val raw =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    parseFlatJson(raw)
+    val meta = liveProps(spark, root, ManifestIndex.PublishPrefix)
+    require(meta.nonEmpty, s"readMeta: $root's live version records no " +
+      "published metadata — not an AnnIndex artifact root")
+    meta
   }
 
-  /** `ann.*` properties of a MANIFEST codes root's live version — the
-    * metadata channel for cell-partitioned indexes (properties ride every
-    * manifest commit, so append/replace retains them).
+  /** Live-version manifest properties under `prefix`, prefix stripped —
+    * `ann.*` is the metadata channel for cell-partitioned indexes
+    * (properties ride every manifest commit, so append/replace retains
+    * them).
     */
-  private def manifestAnnProps(spark: SparkSession,
-                               root: String): Map[String, String] = {
+  private def liveProps(spark: SparkSession, root: String,
+                        prefix: String): Map[String, String] = {
     val cur = Layout.currentVersionNumber(spark, root)
     ManifestIndex.read(spark, root, f"v$cur%05d").properties
-      .collect { case (k, v) if k.startsWith("ann.") =>
-        k.stripPrefix("ann.") -> v }
+      .collect { case (k, v) if k.startsWith(prefix) =>
+        k.stripPrefix(prefix) -> v }
   }
 
   private def requireVersion(meta: Map[String, String], key: String,
@@ -197,7 +113,7 @@ object AnnIndex {
     val df = rows.toSeq.toDF("subspace", "centroid", "center")
     val meta = Map("kind" -> "pq_codebooks", "m" -> m.toString,
       "k" -> k.toString, "subDim" -> subDim.toString) ++ extraMeta
-    Layout.publishVersion(spark, root, df, Map(MetaFile -> metaJson(meta)))
+    Layout.publishVersion(spark, root, df, meta)
   }
 
   /** Load the LIVE codebook version back into the literal array form the
@@ -250,7 +166,7 @@ object AnnIndex {
       .map { case (row, i) => (i, row.toSeq) }.toSeq
       .toDF("row_idx", "vals")
     val meta = Map("kind" -> "opq_rotation", "dim" -> d.toString) ++ extraMeta
-    Layout.publishVersion(spark, root, df, Map(MetaFile -> metaJson(meta)))
+    Layout.publishVersion(spark, root, df, meta)
   }
 
   /** Load the LIVE rotation back (ONE bounded collect of d rows). */
@@ -283,7 +199,7 @@ object AnnIndex {
       "dim_idx", "mn", "mx")
     val meta = Map("kind" -> "sq8_bounds",
       "dim" -> mins.length.toString) ++ extraMeta
-    Layout.publishVersion(spark, root, df, Map(MetaFile -> metaJson(meta)))
+    Layout.publishVersion(spark, root, df, meta)
   }
 
   /** Load the LIVE SQ8 bounds back (ONE bounded collect of d rows). */
@@ -319,7 +235,7 @@ object AnnIndex {
     val df = coded.select(col(idCol), col("code"))
     val meta = Map("kind" -> "pq_codes",
       "books_version" -> booksVersion.toString) ++ extraMeta
-    Layout.publishVersion(spark, root, df, Map(MetaFile -> metaJson(meta)))
+    Layout.publishVersion(spark, root, df, meta)
   }
 
   /** Publish an SQ8-coded corpus `(idCol, code)`; `boundsVersion` is the
@@ -333,7 +249,7 @@ object AnnIndex {
     val df = coded.select(col(idCol), col("code"))
     val meta = Map("kind" -> "sq8_codes",
       "bounds_version" -> boundsVersion.toString) ++ extraMeta
-    Layout.publishVersion(spark, root, df, Map(MetaFile -> metaJson(meta)))
+    Layout.publishVersion(spark, root, df, meta)
   }
 
   // ------------------------------------------------ IVF centroids (r17)
@@ -352,7 +268,7 @@ object AnnIndex {
     val df = centroids.select(col("vec_id"),
       col("embedding").cast("array<double>").as("embedding"))
     val meta = Map("kind" -> "ivf_centroids") ++ extraMeta
-    Layout.publishVersion(spark, root, df, Map(MetaFile -> metaJson(meta)))
+    Layout.publishVersion(spark, root, df, meta)
   }
 
   /** The LIVE centroid table back as a DataFrame (nlist rows — small,
@@ -464,7 +380,7 @@ object AnnIndex {
                        booksRoot: String, centroidsRoot: String,
                        batch: DataFrame,
                        rotationRoot: Option[String] = None): String = {
-    val meta = manifestAnnProps(spark, codesRoot)
+    val meta = liveProps(spark, codesRoot, "ann.")
     requireVersion(meta, "books_version",
       Layout.currentVersionNumber(spark, booksRoot),
       "appendIvfPqCodes", "codebook")
@@ -695,7 +611,7 @@ object AnnIndex {
                            booksRoot: String, centroidsRoot: String,
                            residual: Boolean,
                            what: String): Map[String, String] = {
-    val meta = manifestAnnProps(spark, codesRoot)
+    val meta = liveProps(spark, codesRoot, "ann.")
     require(meta.get("kind").contains("ivfpq_codes"),
       s"$what: $codesRoot is not an ivfpq_codes artifact root " +
         s"(ann.kind = ${meta.getOrElse("kind", "<absent>")})")

@@ -400,11 +400,9 @@ case class GraftTable(ident: String, root: String,
 
   override lazy val schema: StructType = readPlan().schema
 
-  private lazy val manifestState
-      : Option[graft.sources.ManifestIndex.TableManifest] =
-    if (!graft.sources.ManifestIndex.isManifestRoot(spark, root)) None
-    else Some(graft.sources.ManifestIndex.read(spark, root,
-      f"v${Layout.currentVersionNumber(spark, root)}%05d"))
+  private lazy val manifestState: graft.sources.ManifestIndex.TableManifest =
+    graft.sources.ManifestIndex.read(spark, root,
+      f"v${Layout.currentVersionNumber(spark, root)}%05d")
 
   /** Column DEFAULTs surface as v2 column metadata (capability
     * `SUPPORT_COLUMN_DEFAULT_VALUE` on the catalog), so Spark's OWN
@@ -415,7 +413,7 @@ case class GraftTable(ident: String, root: String,
     * fold).
     */
   override def columns(): Array[org.apache.spark.sql.connector.catalog.Column] = {
-    val dfts = manifestState.map(_.defaults).getOrElse(Map.empty)
+    val dfts = manifestState.defaults
     schema.fields.map { f =>
       dfts.get(f.name) match {
         case Some(sql) =>
@@ -442,14 +440,9 @@ case class GraftTable(ident: String, root: String,
       TableCatalog.PROP_PROVIDER -> "graft").asJava
 
   override def constraints(): Array[Constraint] =
-    if (!graft.sources.ManifestIndex.isManifestRoot(spark, root)) Array.empty
-    else {
-      val man = graft.sources.ManifestIndex.read(spark, root,
-        f"v${Layout.currentVersionNumber(spark, root)}%05d")
-      man.constraints.toSeq.sortBy(_._1).map { case (n, sql) =>
-        Constraint.check(n).predicateSql(sql).build(): Constraint
-      }.toArray
-    }
+    manifestState.constraints.toSeq.sortBy(_._1).map { case (n, sql) =>
+      Constraint.check(n).predicateSql(sql).build(): Constraint
+    }.toArray
 
   override def capabilities(): util.Set[TableCapability] =
     // NO AUTOMATIC_SCHEMA_EVOLUTION: Spark's ResolveMergeIntoSchemaEvolution
@@ -474,7 +467,7 @@ case class GraftTable(ident: String, root: String,
     // writer's replay-safety gate must refuse it — fail HERE with the
     // actionable message instead (review fix: the gate's message talks
     // about completeInsertColumns, which a catalog SQL user cannot reach)
-    manifestState.flatMap(_.identity).foreach { case (c, _) =>
+    manifestState.identity.foreach { case (c, _) =>
       throw new IllegalArgumentException(
         s"graft catalog: '$c' is a GENERATED identity column — catalog-" +
           "mode INSERT cannot omit it (Spark fills every target column); " +

@@ -190,8 +190,8 @@ object GraftPaths {
   *
   * Surface limits, refused loudly: partitioning must be identity columns
   * (the layout's leaves are literal partition dirs); `CREATE TABLE`
-  * requires `PARTITIONED BY` (manifest mode is for partitioned roots —
-  * `initVersionedManifest` documents why carry-forward needs leaves);
+  * requires `PARTITIONED BY` (an unpartitioned table is ONE leaf, which
+  * every key-pruned commit would rewrite whole);
   * table properties / options / serde / collation / EXTERNAL are not
   * supported; `ALTER COLUMN` supports TYPE widening only (nullability,
   * comments, positions and defaults are not table state here);
@@ -564,8 +564,8 @@ object GraftDdl {
       }
       require(pcols.nonEmpty,
         "graft SQL DDL: CREATE TABLE graft.` ` requires PARTITIONED BY — " +
-          "manifest tables are partitioned (carry-forward commits rewrite " +
-          "only touched leaves; an unpartitioned table has no leaves)")
+          "key-pruned commits rewrite only touched leaves, and an " +
+          "unpartitioned table is one leaf every commit would rewrite")
       val df = query.map(q => Shim.ofRows(session, q)).getOrElse(
         session.createDataFrame(
           session.sparkContext.emptyRDD[Row], declared))
@@ -809,10 +809,9 @@ object GraftDdl {
   }
 
   /** `DESCRIBE DETAIL graft.`x`` (parser-injected): one row of live-state
-    * metadata — layout mode, resolved location, current version, file and
+    * metadata — format tag, resolved location, current version, file and
     * byte counts, partition columns and declared CHECK constraints. All
-    * driver metadata (one manifest read / one history row), never a data
-    * scan.
+    * driver metadata (one manifest read), never a data scan.
     */
   case class GraftDescribeDetailCommand(ident: String)
       extends LeafRunnableCommand {
@@ -832,33 +831,13 @@ object GraftDdl {
       val cur = Layout.currentVersionNumber(session, root)
       // S80 observability: the declared write-time clustering, "" if none
       val cluster = ManifestIndex.clusterColumns(session, root).mkString(",")
-      if (graft.sources.ManifestIndex.isManifestRoot(session, root)) {
-        val man = graft.sources.ManifestIndex.read(session, root, f"v$cur%05d")
-        Seq(Row("graft-manifest", root, cur,
-          man.entries.length.toLong, man.entries.map(_.size).sum,
-          man.partitionSchema.fieldNames.mkString(","),
-          man.constraints.toSeq.sortBy(_._1)
-            .map { case (n, sql) => s"$n CHECK ($sql)" }.mkString("; "),
-          cluster))
-      } else {
-        // list ONLY the live version dir — history() would recursively
-        // list EVERY retained version for the one row we need (review fix)
-        val live = new org.apache.hadoop.fs.Path(
-          Layout.resolveCurrent(session, root))
-        val fs = live.getFileSystem(session.sparkContext.hadoopConfiguration)
-        var files = 0L
-        var bytes = 0L
-        val it = fs.listFiles(live, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getPath.getName
-          if (!n.startsWith("_") && !n.startsWith(".")) {
-            files += 1; bytes += f.getLen
-          }
-        }
-        Seq(Row("graft-hardlink", root, cur, files, bytes,
-          Layout.partitionColumns(session, root).mkString(","), "", cluster))
-      }
+      val man = graft.sources.ManifestIndex.read(session, root, f"v$cur%05d")
+      Seq(Row("graft-manifest", root, cur,
+        man.entries.length.toLong, man.entries.map(_.size).sum,
+        man.partitionSchema.fieldNames.mkString(","),
+        man.constraints.toSeq.sortBy(_._1)
+          .map { case (n, sql) => s"$n CHECK ($sql)" }.mkString("; "),
+        cluster))
     }
   }
 

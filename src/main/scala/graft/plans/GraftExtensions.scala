@@ -176,7 +176,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => graft.functions.expressions
         .PerceptualHash(children(0), dMode = true)))
     // graft_table('/root'[, version | 'timestamp']) — table-valued access
-    // to a versioned layout (manifest or hardlink mode) for pure-SQL
+    // to a versioned layout for pure-SQL
     // pipelines:
     //   SELECT * FROM graft_table('/data/orders')            -- live
     //   SELECT * FROM graft_table('/data/orders', 3)         -- version

@@ -28,19 +28,28 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, IntegerType,
   * COMPACTION: streaming ingests and fine-grained partitions leave thousands
   * of KB-sized files; at 100 TB the scan's task-per-file scheduling and
   * footer reads dominate. Two shapes:
-  *  - [[compact]] rewrites IN PLACE via rename-aside swap. Renames are
-  *    checked and the original is restored on failure (no data-loss path),
-  *    but a reader BETWEEN the two renames still sees a missing directory,
-  *    and directory rename is copy-not-atomic on object stores — use it
-  *    only for single-writer, no-concurrent-reader maintenance windows.
-  *  - [[compactVersioned]] is the reader-safe shape: data lives in
-  *    immutable `v=NNNNN` subdirectories and a tiny `_current` manifest
-  *    names the live one. Compaction writes a NEW version dir completely,
-  *    then flips the pointer with one atomic file rename — a concurrent
-  *    reader resolves either the old or the new version, never a missing or
-  *    half-written directory (this is the manifest-flip idea Delta/Iceberg
-  *    build on, reduced to one pointer). Old versions persist until
-  *    [[vacuumVersions]], giving in-flight readers a grace window.
+  *  - [[compact]] rewrites a plain parquet directory IN PLACE via
+  *    rename-aside swap. Renames are checked and the original is restored
+  *    on failure (no data-loss path), but a reader BETWEEN the two renames
+  *    still sees a missing directory, and directory rename is
+  *    copy-not-atomic on object stores — use it only for single-writer,
+  *    no-concurrent-reader maintenance windows.
+  *  - [[compactVersionedPartitioned]] is the reader-safe shape for a
+  *    VERSIONED ROOT: each version is a manifest (`vNNNNN.manifest`, a file
+  *    list) and a tiny `_current` pointer names the live one. Compaction
+  *    writes the rewritten files and a NEW manifest completely, then flips
+  *    the pointer with one atomic file rename — a concurrent reader
+  *    resolves either the old or the new version, never a half-written
+  *    one. Old versions persist until [[vacuumVersions]], giving in-flight
+  *    readers a grace window.
+  *
+  * VERSIONED ROOTS have one format: `root/_current` names the live
+  * version, `root/vNNNNN.manifest` lists that version's data files (with
+  * schemas, per-file stats, deletion vectors and table properties), and
+  * the files themselves live under `root/vNNNNN/` dirs — a file written by
+  * one version stays referenced by later manifests until a rewrite drops
+  * it. An unpartitioned root is a manifest with an empty partition schema
+  * whose entries all sit in the leaf `""`.
   */
 object Layout {
 
@@ -108,13 +117,14 @@ object Layout {
     * the new file count. Every rename result is checked; a failed forward
     * swap restores the original, so no outcome loses data — but readers
     * between the two renames see a MISSING directory. For concurrent
-    * readers use [[compactVersioned]]. Partition-directory trees should
+    * readers keep the data in a versioned root and use
+    * [[compactVersionedPartitioned]]. Partition-directory trees should
     * compact per leaf directory (embarrassingly parallel across partitions
     * at 100 TB).
     */
   @deprecated("readers between the two renames see a missing directory; use " +
-    "compactVersioned (reader-safe, atomic pointer flip) unless you own an " +
-    "exclusive maintenance window", "round 9")
+    "a versioned root's compactVersionedPartitioned (reader-safe, atomic " +
+    "pointer flip) unless you own an exclusive maintenance window", "round 9")
   def compact(spark: SparkSession, path: String, targetBytes: Long): Int = {
     val hadoopPath = new Path(path)
     val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -189,63 +199,42 @@ object Layout {
         .rename(tmp, dst, Options.Rename.OVERWRITE)
   }
 
-  /** Time travel: path of a SPECIFIC version under a versioned root —
-    * every version dir is immutable once written, so any un-vacuumed
-    * version is a complete, consistent snapshot readable forever (audits,
+  /** Time travel: path of a SPECIFIC version's dir under a versioned root.
+    * A committed manifest is immutable, so any un-vacuumed version is a
+    * complete, consistent snapshot readable forever (audits,
     * reproductions, diffing a merge). Fails fast if the version was
-    * vacuumed or never existed.
+    * vacuumed or never existed. The dir holds only the files that version
+    * WROTE; read the snapshot with [[readVersion]].
     */
   def resolveVersion(spark: SparkSession, root: String, version: Int): String = {
-    val p = new Path(root, versionName(version))
-    if (ManifestIndex.isManifestRoot(spark, root)) {
-      // a manifest IS the version; its data may live in other version dirs
-      require(ManifestIndex.exists(spark, root, versionName(version)),
-        s"version $version does not exist under $root " +
-          "(never committed, or already vacuumed)")
-      return p.toString
-    }
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"version $version does not exist under $root " +
-      "(never written, or already vacuumed)")
-    p.toString
+    require(ManifestIndex.exists(spark, root, versionName(version)),
+      s"version $version does not exist under $root " +
+        "(never committed, or already vacuumed)")
+    new Path(root, versionName(version)).toString
   }
 
-  /** Read a specific version resolving MIXED LEAF SCHEMAS: after a schema-
-    * evolving [[mergeVersionedPartitioned]], rewritten leaves carry the new
-    * columns while hardlink-carried leaves keep the old footer, so a plain
-    * `spark.read.parquet` would resolve whichever footer it samples first.
-    * `mergeSchema` unions the footers — old leaves null-fill the added
-    * columns, the exact semantics the merge declared. Schema-stable
-    * histories can keep using plain reads on [[resolveVersion]] paths.
-    *
-    * A version that legitimately holds NO data files (a delete whose
-    * predicate matched every row writes only `_SUCCESS`) reads as an empty
-    * DataFrame with the schema of the nearest earlier version that has data
-    * — not a schema-inference AnalysisException (ADVICE r9).
+  /** Read a specific version. The manifest's data schema is authoritative:
+    * files written before a schema-evolving merge null-fill the added
+    * columns by name, and a version that holds NO data files (a delete
+    * whose predicate matched every row, an empty publish) reads as an
+    * empty DataFrame of the manifest's schema.
     */
-  def readVersion(spark: SparkSession, root: String, version: Int): DataFrame = {
-    val p = resolveVersion(spark, root, version)
-    readVersionDir(spark, root, p)
-  }
+  def readVersion(spark: SparkSession, root: String, version: Int): DataFrame =
+    ManifestIndex.dataFrame(spark, root,
+      ManifestIndex.read(spark, root, versionName(version)))
 
   /** [[readVersion]] for the live version. */
-  def readCurrent(spark: SparkSession, root: String): DataFrame = {
-    val p = resolveCurrent(spark, root)
-    readVersionDir(spark, root, p)
-  }
+  def readCurrent(spark: SparkSession, root: String): DataFrame =
+    ManifestIndex.dataFrame(spark, root, currentManifest(spark, root)._3)
 
-  /** Timestamp time travel (`AS OF <ts>`) on a MANIFEST root: the newest
-    * version committed at or before `tsMillis`. The commit instant is the
-    * manifest file's mtime — written once at commit and never touched
-    * again, so the mapping is exact and stable (hardlink-mode version DIRS
-    * get later writes and vacuums into their subtree, which is why this is
-    * manifest-only). Fails loudly when `tsMillis` predates the oldest
+  /** Timestamp time travel (`AS OF <ts>`): the newest version committed at
+    * or before `tsMillis`. The commit instant is the manifest file's mtime
+    * — written once at commit and never touched again, so the mapping is
+    * exact and stable. Fails loudly when `tsMillis` predates the oldest
     * retained version (vacuum may have dropped the one that was live then
     * — answering with a newer version would silently lie).
     */
   def versionAsOf(spark: SparkSession, root: String, tsMillis: Long): Int = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"versionAsOf requires a manifest root: $root")
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // only manifests AT OR BEHIND the live pointer are commits — a writer
@@ -253,14 +242,15 @@ object Layout {
     // flip must never be served as committed data (review fix: a crashed
     // v4 would otherwise answer AS OF queries until recoverStaleClaims
     // deletes it, and the same query would then change its answer)
-    val curN = committedVersionNumber(spark, root)
+    val curN = currentVersionNumber(spark, root)
     val commits = fs.listStatus(rootPath).filter(_.isFile)
       .filter(_.getPath.getName.matches("v\\d{5}\\.manifest"))
       .map(st => (st.getPath.getName.stripSuffix(".manifest").substring(1).toInt,
         st.getModificationTime))
       .filter(_._1 <= curN)
       .sortBy(_._1)
-    require(commits.nonEmpty, s"no versions under $root")
+    require(commits.nonEmpty,
+      s"$root holds no committed manifest — not a manifest root")
     val atOrBefore = commits.filter(_._2 <= tsMillis)
     require(atOrBefore.nonEmpty,
       s"no version of $root existed at or before $tsMillis " +
@@ -273,115 +263,43 @@ object Layout {
   def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame =
     readVersion(spark, root, versionAsOf(spark, root, tsMillis))
 
-  /** Metadata-only EXACT `COUNT(*)` of a manifest root's live version —
-    * O(#files) driver work, zero data read; `None` when some file
-    * predates stats collection (then count the data). See
-    * [[ManifestIndex.rowCount]].
+  /** Metadata-only EXACT `COUNT(*)` of the live version — O(#files)
+    * driver work, zero data read; `None` when some file predates stats
+    * collection (then count the data). See [[ManifestIndex.rowCount]].
     */
-  def countRows(spark: SparkSession, root: String): Option[Long] = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"countRows requires a manifest root: $root")
-    val cur = resolveCurrent(spark, root)
-    ManifestIndex.rowCount(ManifestIndex.read(spark, root,
-      cur.substring(cur.lastIndexOf('/') + 1)))
-  }
+  def countRows(spark: SparkSession, root: String): Option[Long] =
+    ManifestIndex.rowCount(currentManifest(spark, root)._3)
 
   /** Metadata-only per-column profile (nulls/min/max) of the live
     * version, folded from the manifest's file envelopes; see
     * [[ManifestIndex.columnProfile]] for the exactness contract.
     */
-  def columnStats(spark: SparkSession, root: String): DataFrame = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"columnStats requires a manifest root: $root")
-    val cur = resolveCurrent(spark, root)
-    ManifestIndex.columnProfile(spark, ManifestIndex.read(spark, root,
-      cur.substring(cur.lastIndexOf('/') + 1)))
-  }
+  def columnStats(spark: SparkSession, root: String): DataFrame =
+    ManifestIndex.columnProfile(spark, currentManifest(spark, root)._3)
 
-  private def readVersionDir(spark: SparkSession, root: String,
-                             versionPath: String): DataFrame = {
-    if (ManifestIndex.isManifestRoot(spark, root)) {
-      val ver = versionPath.substring(versionPath.lastIndexOf('/') + 1)
-      val m = ManifestIndex.read(spark, root, ver)
-      return ManifestIndex.dataFrame(spark, root, m)
-    }
-    val p = new Path(versionPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hasDataFiles(fs, p))
-      spark.read.option("basePath", versionPath)
-        .option("mergeSchema", "true").parquet(versionPath)
-    else
-      emptyWithDonorSchema(spark, root, versionPath)
-  }
-
-  /** Any non-hidden file anywhere under `dir`? (Hive leaf dirs and `v=`-less
-    * flat layouts both reduce to this — schema inference needs one footer.)
+  /** Path of the live version dir under a versioned root. A root without
+    * a `_current` pointer is not a table (or an init that never reached
+    * its pointer flip) and fails loudly, naming the root.
     */
-  private def hasDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: Path): Boolean = {
-    if (!fs.exists(dir)) return false
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) return true
-    }
-    false
-  }
-
-  /** Empty DataFrame carrying the schema of the NEWEST other version under
-    * `root` that still has data files — the only place a file-less
-    * version's schema can come from. Fails loudly when no version has data
-    * (an all-empty history has no defined schema).
-    */
-  private def emptyWithDonorSchema(spark: SparkSession, root: String,
-                                   versionPath: String): DataFrame = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val donor = fs.listStatus(rootPath).map(_.getPath)
-      .filter(p => p.getName.matches("v\\d{5}") && p.toString != versionPath)
-      .sortBy(_.getName).reverse
-      .find(hasDataFiles(fs, _))
-    donor match {
-      case Some(d) =>
-        spark.read.option("basePath", d.toString).option("mergeSchema", "true")
-          .parquet(d.toString).filter(lit(false))
-      case None => throw new IllegalArgumentException(
-        s"$versionPath holds no data files and no other version under $root " +
-          "does either — the schema of an all-empty history is undefined")
-    }
-  }
-
-  /** Version NUMBER the live pointer commits to — the boundary between
-    * table history (≤ this) and in-flight/crashed claims (> this), which
-    * time travel, history and vacuum must all respect.
-    */
-  private def committedVersionNumber(spark: SparkSession, root: String): Int = {
-    val cur = resolveCurrent(spark, root)
-    cur.substring(cur.lastIndexOf("/v") + 2).toInt
-  }
-
-  /** Path of the live version dir under a versioned root. */
   def resolveCurrent(spark: SparkSession, root: String): String = {
     val fc = fileContext(spark)
-    val in = fc.open(new Path(root, CurrentFile))
+    val in =
+      try fc.open(new Path(root, CurrentFile))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(
+            s"$root is not a manifest root: it has no $CurrentFile pointer")
+      }
     val version =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
       finally in.close()
     s"$root/$version"
   }
 
-  /** Create a versioned layout at `root` with `df` as version 0; returns the
-    * live version path. Readers from here on resolve via [[resolveCurrent]].
+  /** Version number the live pointer resolves to — the boundary between
+    * table history (≤ this) and in-flight/crashed claims (> this), which
+    * time travel, history and vacuum all respect.
     */
-  def initVersioned(df: DataFrame, root: String): String = graft.util.DmlTimer.timed {
-    val v0 = versionName(0)
-    df.write.mode(SaveMode.Overwrite).parquet(s"$root/$v0")
-    writePointer(df.sparkSession, root, v0)
-    s"$root/$v0"
-  }
-
-  /** Version number the live pointer resolves to. */
   def currentVersionNumber(spark: SparkSession, root: String): Int = {
     val cur = resolveCurrent(spark, root)
     cur.substring(cur.lastIndexOf("/v") + 2).toInt
@@ -389,30 +307,32 @@ object Layout {
 
   /** PUBLISH `df` wholesale as the next version of `root` (creating the
     * root at v0 when no pointer exists yet), with optional small metadata
-    * files (`name` → UTF-8 content) written INTO the version dir before the
-    * pointer flip — so a reader that resolves the new version always finds
-    * its metadata, and a crash before the flip leaves both state and
-    * metadata at the previous version together. This is the
-    * snapshot-publish primitive incremental view maintenance commits
-    * through: the view's rows and its "derived from table version N"
-    * watermark must move atomically or a crashed refresh double-applies a
-    * feed ([[graft.ops.Incremental.refreshFollowingView]]).
+    * (`name` → value) stored in that version's manifest properties under
+    * [[ManifestIndex.PublishPrefix]] — so the rows and their metadata flip
+    * together with the one pointer rename, and a crash before the flip
+    * leaves both at the previous version. This is the snapshot-publish
+    * primitive incremental view maintenance commits through: the view's
+    * rows and its "derived from table version N" watermark must move
+    * atomically or a crashed refresh double-applies a feed
+    * ([[graft.ops.Incremental.refreshFollowingView]]).
+    *
+    * One manifest commit with an empty partition spec: the frame's
+    * partitions are written as they arrive, and the manifest names ONLY
+    * the new files under the frame's own schema — nothing carries, no
+    * schema is pinned, and each publish's metadata replaces the previous
+    * publish's wholesale (a key left out is absent at that version).
     */
   def publishVersion(spark: SparkSession, root: String, df: DataFrame,
                      meta: Map[String, String] = Map.empty): String = graft.util.DmlTimer.timed {
-    requireNotManifest(spark, root, "publishVersion",
-      "a directory-committed version would be invisible to manifest readers")
-    val fs = fsOf(spark, root)
-    val fresh = !fs.exists(new Path(root, CurrentFile))
+    val fresh = !isVersionedRoot(spark, root)
     val (next, nextPath) =
       if (fresh) (versionName(0), s"$root/${versionName(0)}")
       else nextVersion(spark, root, resolveCurrent(spark, root))
-    df.write.mode(SaveMode.Overwrite).parquet(nextPath)
-    meta.foreach { case (name, content) =>
-      val out = fs.create(new Path(nextPath, name), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-    writePointer(spark, root, next)
+    if (fresh) ManifestIndex.writeFormatMarker(spark, root)
+    commitManifest(spark, root, next, ManifestIndex.TableManifest(df.schema,
+      new StructType(), writeEntries(spark, root, next, df.schema, Nil, df),
+      meta.map { case (k, v) => (ManifestIndex.PublishPrefix + k) -> v }),
+      "PUBLISH")
     nextPath
   }
 
@@ -436,8 +356,6 @@ object Layout {
     * @return number of data files listed
     */
   def exportFileList(spark: SparkSession, root: String, outFile: String): Int = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"exportFileList requires a manifest root: $root")
     val (_, _, man) = currentManifest(spark, root)
     require(man.entries.forall(_.dv.isEmpty),
       "exportFileList: live entries carry deletion vectors — an external " +
@@ -475,72 +393,46 @@ object Layout {
     paths.size
   }
 
-  /** Partition column names of a manifest root's live version — what a
-    * caller composing row-level DML needs to know which assignments move
-    * rows across leaves ([[mergeIntoVersionedRows]] supports that;
-    * [[updateVersionedRows]] refuses it).
+  /** Partition column names of a root's live version — what a caller
+    * composing row-level DML needs to know which assignments move rows
+    * across leaves ([[mergeIntoVersionedRows]] supports that;
+    * [[updateVersionedRows]] refuses it). Empty for an unpartitioned root.
     */
-  def partitionColumns(spark: SparkSession, root: String): Seq[String] = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"partitionColumns requires a manifest root: $root")
-    val (_, _, man) = currentManifest(spark, root)
-    man.partitionSchema.fieldNames.toSeq
-  }
+  def partitionColumns(spark: SparkSession, root: String): Seq[String] =
+    currentManifest(spark, root)._3.partitionSchema.fieldNames.toSeq
 
-  /** Read a metadata file written by [[publishVersion]], if present. */
+  /** Metadata value `name` that version `version`'s [[publishVersion]]
+    * recorded, if that publish wrote it.
+    */
   def versionMeta(spark: SparkSession, root: String, version: Int,
-                  name: String): Option[String] = {
-    val p = new Path(s"$root/${versionName(version)}", name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
+                  name: String): Option[String] =
+    ManifestIndex.read(spark, root, versionName(version)).properties
+      .get(ManifestIndex.PublishPrefix + name)
 
-  /** Reader-safe compaction: rewrite the live version into ~`targetBytes`
-    * files as a NEW fully-written version dir, then flip `_current` in one
-    * atomic rename. Returns the new live path. The old version dir is left
-    * in place (in-flight readers keep a consistent snapshot); reclaim space
-    * later with [[vacuumVersions]] after a grace period longer than any
-    * reader's job.
-    */
-  def compactVersioned(spark: SparkSession, root: String, targetBytes: Long): String = graft.util.DmlTimer.timed {
-    requireNotManifest(spark, root, "compactVersioned",
-      "use compactVersionedPartitioned (manifest roots are partitioned, and a " +
-        "flat rewrite would read only the version dir's physical files, " +
-        "missing carried entries)")
-    val cur = resolveCurrent(spark, root)
-    val fs = new Path(cur).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(leafNames(fs, new Path(cur)).isEmpty,
-      s"$root is a PARTITIONED versioned root — use compactVersionedPartitioned " +
-        "(a flat rewrite would drop the hive layout the key-pruned merge needs)")
-    val totalBytes = fs.getContentSummary(new Path(cur)).getLength
-    val files = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    writeNextVersion(spark, root, cur, spark.read.parquet(cur).coalesce(files))
-  }
-
-  /** Reader-safe compaction for a PARTITIONED versioned root — the
-    * maintenance pass that pays down the small files a streaming upsert
+  /** Reader-safe compaction — the maintenance pass that pays down the
+    * small files a streaming upsert
     * ([[graft.streaming.StreamingOps.streamMergeVersioned]]) accretes:
     * every micro-batch rewrites its touched leaves, so a hot partition
-    * ends up with one small file per batch. Only leaves with more than
+    * ends up with one small file per batch. Fragmentation is diagnosed
+    * FROM the manifest (no directory listing): only leaves with more than
     * `maxFiles` data files (or an average file under `targetBytes/2`) are
-    * rewritten, each coalesced to ~`targetBytes` files; every healthy
-    * leaf carries forward as hardlinks, unread — compaction cost tracks
-    * the FRAGMENTED partitions, not the table. Same atomic pointer flip;
-    * old snapshots stay readable until [[vacuumVersions]].
+    * rewritten — all of them in one write job ([[rewriteEntries]]) unless
+    * z-ordered — each to ~`targetBytes` files; every healthy leaf carries
+    * as a manifest entry, unread — compaction cost tracks the FRAGMENTED
+    * partitions, not the table. Leaves written under an EARLIER partition
+    * spec are always rewritten (re-specced under the current one). Same
+    * atomic pointer flip; old snapshots stay readable until
+    * [[vacuumVersions]]. An unpartitioned root is one leaf.
+    *
+    * Optional `zOrderCols`: cluster each rewritten leaf with
+    * [[writeZOrdered]]'s placement while it is being compacted anyway —
+    * the rewrite is already paid for, so multi-dimensional data skipping
+    * inside hot partitions comes at shuffle-of-one-leaf cost (the standard
+    * OPTIMIZE ZORDER maintenance pairing). Healthy leaves keep their
+    * existing clustering (they are not rewritten). Without an explicit
+    * list the table's DECLARED clustering applies.
     *
     * @return (new live path, number of leaves rewritten)
-    */
-  /** Optional `zOrderCols`: cluster each rewritten leaf with
-    * [[writeZOrdered]] while it is being compacted anyway — the rewrite
-    * is already paid for, so multi-dimensional data skipping inside hot
-    * partitions comes at shuffle-of-one-leaf cost (the standard OPTIMIZE
-    * ZORDER maintenance pairing). Healthy leaves keep their existing
-    * clustering (they are not rewritten).
     */
   def compactVersionedPartitioned(spark: SparkSession, root: String,
                                   targetBytes: Long,
@@ -552,72 +444,58 @@ object Layout {
     val zCols =
       if (zOrderCols.nonEmpty) zOrderCols
       else ManifestIndex.clusterColumns(spark, root)
-    if (ManifestIndex.isManifestRoot(spark, root))
-      return compactManifest(spark, root, targetBytes, maxFiles, zCols)
-    val cur = resolveCurrent(spark, root)
-    val curPath = new Path(cur)
-    val fs = curPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fragmented = leafNames(fs, curPath).toSeq.flatMap { leaf =>
-        val data = fs.listStatus(new Path(curPath, leaf)).filter(f => f.isFile &&
-          !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
-        val bytes = data.map(_.getLen).sum
-        // converge, never oscillate: see the manifest branch (review fix)
+    val (cur, _, man) = currentManifest(spark, root)
+    val currentSpec = man.partitionSchema.fieldNames.toSeq
+    // leaves written under an EARLIER partition spec are always selected:
+    // compaction is where a metadata-only repartitionTable converges to a
+    // uniform physical layout (their rows re-land via partitionBy on the
+    // current spec — one old leaf may fan out into many new ones)
+    val respec = man.leaves.filter(l =>
+      ManifestIndex.leafSpec(l) != currentSpec)
+    val fragmented = man.byLeaf.flatMap { case (leaf, es) =>
+      if (respec.contains(leaf)) None
+      else {
+        val bytes = es.map(_.size).sum
+        // a leaf whose data genuinely needs ceil(bytes/target) > maxFiles
+        // files is HEALTHY at that count — flagging it by maxFiles alone
+        // made every maintenance run rewrite it forever (review fix:
+        // maintain ∘ maintain ≡ maintain requires the gate to accept the
+        // rewrite's own output)
         val want = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong)
-        val tooMany = data.length > math.max(maxFiles.toLong, want)
-        val tooSmall = data.length > 1 && bytes / data.length < targetBytes / 2
+        val tooMany = es.length > math.max(maxFiles.toLong, want)
+        val tooSmall = es.length > 1 && bytes / es.length < targetBytes / 2
         if (tooMany || tooSmall) Some(leaf -> bytes) else None
-      }.toMap
-    // nothing fragmented → NO-OP, no version claimed (mirrors the manifest
-    // branch's review fix; maintain()'s idempotence relies on it)
-    if (fragmented.isEmpty) return (cur, 0)
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    // one coalesced write per fragmented leaf (hive data files don't
-    // contain pcol — it lives in the dir name — so a direct leaf-to-leaf
-    // rewrite preserves the layout exactly). The driver loop is
-    // O(fragmented leaves) — metadata scale, same class as the listing —
-    // and each leaf's job is independent, so a maintenance fleet can
-    // shard leaves across sessions at 100 TB.
-    fragmented.toSeq.sortBy(_._1).foreach { case (leaf, bytes) =>
-      val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-      val data = spark.read.parquet(s"$cur/$leaf")
-      if (zCols.nonEmpty)
-        writeZOrdered(data, s"$nextPath/$leaf", zCols, files = files)
-      else
-        data.coalesce(files)
-          .write.mode(SaveMode.Overwrite).parquet(s"$nextPath/$leaf")
+      }
     }
-    carryForward(fs, curPath, new Path(nextPath), fragmented.keySet,
-      spark.sparkContext.hadoopConfiguration)
-    writePointer(spark, root, next)
-    (nextPath, fragmented.size)
-  }
-
-  /** Storage-layer MERGE (upsert) on a versioned root: rows of `updates`
-    * replace live rows with the same key, new keys append — written as a
-    * complete NEW version dir, then the `_current` pointer flips atomically,
-    * so readers see the pre-merge or post-merge snapshot, never a mix. This
-    * is the production shape [[graft.ops.Dedup.newRows]]' scaladoc points
-    * at for true incremental loads: the anti-join runs inside the rewrite,
-    * one Catalyst plan, no read-modify-write race with readers.
-    *
-    * Scale shape: one anti-join shuffle (or broadcast, when the update
-    * batch is small — the common case) + the rewrite. Copy-on-write
-    * semantics; at 100 TB drive it per partition directory, like
-    * [[compactVersioned]].
-    *
-    * @return the new live version path
-    */
-  def mergeVersioned(spark: SparkSession, root: String, updates: DataFrame,
-                     keys: Seq[String]): String = graft.util.DmlTimer.timed {
-    requireNotManifest(spark, root, "mergeVersioned",
-      "use mergeVersionedPartitioned (manifest roots are partitioned)")
-    val cur = resolveCurrent(spark, root)
-    val current = spark.read.parquet(cur)
-    requireEvolvable(current, updates)
-    val merged = updates.unionByName(
-      current.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti"),
-      allowMissingColumns = true)
-    writeNextVersion(spark, root, cur, merged)
+    // nothing fragmented → NO-OP, no version claimed (review fix)
+    if (fragmented.isEmpty && respec.isEmpty) return (cur, 0)
+    val (next, nextPath) = nextVersion(spark, root, cur)
+    val fresh =
+      if (zCols.isEmpty)
+        rewriteEntries(spark, root, next, man, fragmented.keySet ++ respec,
+          targetBytes)
+      else {
+        // z-order keeps a per-leaf range sort; it does not apply to
+        // respec'd rows (they fan across leaves — cluster them on the
+        // NEXT compaction, once they live in current-spec leaves). The
+        // respec write replaces the version dir, so it goes first; each
+        // leaf's z-write then adds its files beside any respec'd ones.
+        val respecd =
+          if (respec.isEmpty) Nil
+          else rewriteEntries(spark, root, next, man, respec, targetBytes)
+        respecd ++ fragmented.toSeq.sortBy(_._1).flatMap { case (leaf, bytes) =>
+          val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+          writeEntries(spark, root, next, man.dataSchema, Nil,
+            zOrdered(ManifestIndex.dataFrame(spark, root, man, Some(Set(leaf)))
+              .drop(man.partitionSchema.fieldNames: _*), zCols, 8, files),
+            leaf = Some(leaf))
+        }
+      }
+    commitManifest(spark, root, next, man.copy(
+      entries = fresh ++
+        man.entries.filterNot(e =>
+          fragmented.contains(e.leaf) || respec.contains(e.leaf))), "COMPACT")
+    (nextPath, fragmented.size + respec.size)
   }
 
   /** Schema evolution contract for merges: `updates` must keep every live
@@ -626,9 +504,6 @@ object Layout {
     * rejected loudly; silently nulling existing data is the one thing a
     * lakehouse merge must never do.
     */
-  private def requireEvolvable(current: DataFrame, updates: DataFrame): Unit =
-    requireEvolvable(current.schema, updates.schema)
-
   private def requireEvolvable(current: StructType, updates: StructType): Unit = {
     val up = updates.map(f => f.name -> f.dataType).toMap
     current.foreach { f =>
@@ -637,30 +512,6 @@ object Layout {
       require(up(f.name) == f.dataType,
         s"merge: column ${f.name} retyped ${f.dataType} -> ${up(f.name)}")
     }
-  }
-
-  /** Storage-layer DELETE on a versioned root: drop rows matching
-    * `predicate`, as a new version + atomic pointer flip (the GDPR/right-
-    * to-be-forgotten shape — the old version holds the rows until
-    * [[vacuumVersions]], which IS the compliance deletion point).
-    *
-    * @return the new live version path
-    */
-  def deleteVersioned(spark: SparkSession, root: String,
-                      predicate: Column): String = {
-    requireNotManifest(spark, root, "deleteVersioned",
-      "use deleteVersionedPartitioned (manifest roots are partitioned)")
-    val cur = resolveCurrent(spark, root)
-    val remaining = spark.read.parquet(cur).filter(!coalesce(predicate, lit(false)))
-    writeNextVersion(spark, root, cur, remaining)
-  }
-
-  private def writeNextVersion(spark: SparkSession, root: String,
-                               currentPath: String, df: DataFrame): String = {
-    val (next, nextPath) = nextVersion(spark, root, currentPath)
-    df.write.mode(SaveMode.Overwrite).parquet(nextPath)
-    writePointer(spark, root, next)
-    nextPath
   }
 
   /** Advance the version counter under OPTIMISTIC CONCURRENCY CONTROL:
@@ -674,7 +525,7 @@ object Layout {
     * resolves AFTER the winner's flip claims the next number and
     * serializes cleanly behind it. Claim files are tiny tombstones of
     * committed version numbers; [[vacuumVersions]] sweeps them with their
-    * version dirs.
+    * manifests.
     */
   private def nextVersion(spark: SparkSession, root: String,
                           currentPath: String): (String, String) = {
@@ -719,8 +570,8 @@ object Layout {
     * [[nextVersion]]), re-run it after a bounded, jittered backoff — up to
     * `maxAttempts` total attempts, then rethrow.
     *
-    * This is correct because every Layout writer ([[mergeVersioned]],
-    * [[deleteVersioned]], the partitioned variants, [[compactVersioned]])
+    * This is correct because every Layout writer (merge, delete, the
+    * row-level writers, [[compactVersionedPartitioned]], [[publishVersion]])
     * re-resolves `_current` at the TOP of each call: the retry is a genuine
     * re-read of the new base, a re-run of the merge/delete against it, and
     * a fresh claim — serialized behind the winner, never a blind re-flip of
@@ -754,29 +605,13 @@ object Layout {
 
   // ------------------------------------------------- partitioned + key-pruned
 
-  /** Create a versioned layout whose version dirs are hive-partitioned on
-    * `pcol` (`root/vNNNNN/pcol=value/part-*.parquet`). This is the layout
-    * [[mergeVersionedPartitioned]] / [[deleteVersionedPartitioned]] prune
-    * against: a merge or delete rewrites ONLY the leaf directories whose
-    * partition value is touched and carries every other leaf forward as a
-    * hardlink — a 1-row upsert into a 100 TB table costs one partition's
-    * rewrite plus O(#partitions) metadata ops, not a 100 TB copy.
-    */
-  def initVersionedPartitioned(df: DataFrame, root: String, pcol: String): String =
-    initVersionedPartitioned(df, root, Seq(pcol))
-
-  /** Multi-level variant: `root/vNNNNN/a=1/b=2/part-*.parquet` — the
-    * date+region layout production tables actually use. Every pruning,
-    * carry-forward, change-feed and compaction path works on terminal
-    * leaves at any depth.
-    */
   /** Right-size a PARTITIONED write: one shuffle by the partition columns
     * so each touched hive leaf is written by `graft.write.filesPerLeaf`
     * tasks (default 1) instead of by EVERY upstream task. Without it,
     * `partitionBy` fans a write out to (upstream partitions × touched
     * leaves) files — a small batch arriving on a 32-split scan lands
     * ~160 sliver files per version that every later listing, scan and
-    * carry-forward pays for (q171's setup carried 160-path listings and
+    * manifest pays for (q171's setup carried 160-path listings and
     * 101-task probe scans of tiny versions). One file per touched leaf
     * per commit is the standard optimized-write policy for incremental
     * DML — batches are O(batch), compaction owns long-term sizing — and
@@ -847,25 +682,13 @@ object Layout {
       .map(f => col(s"`${f.name}`")): _*))
   }
 
-  def initVersionedPartitioned(df: DataFrame, root: String,
-                               pcols: Seq[String]): String = graft.util.DmlTimer.timed {
-    val v0 = versionName(0)
-    leafSized(df, pcols).write.mode(SaveMode.Overwrite)
-      .partitionBy(pcols: _*).parquet(s"$root/$v0")
-    writePointer(df.sparkSession, root, v0)
-    s"$root/$v0"
-  }
-
-  /** Create a MANIFEST-MODE partitioned versioned root: same layout and
-    * pointer contract as [[initVersionedPartitioned]], but each version is
-    * additionally described by `root/vNNNNN.manifest` — a file list with
-    * the table's schemas — and every subsequent merge/delete/compact
-    * carries untouched partitions forward as MANIFEST ENTRIES instead of
-    * hardlinks. This is the mode for object stores, where a hardlink
-    * degrades to a physical copy of every untouched leaf
-    * ([[mergeVersionedPartitioned]]'s documented gap); a manifest commit
-    * is O(metadata) there too. All Layout operations auto-detect the mode
-    * from the `_format` marker; callers use the same partitioned API.
+  /** Create a versioned root at `root` with `df` as version 0, partitioned
+    * on `pcols` (`root/v00000/a=1/b=2/part-*.parquet` for multi-level
+    * specs; empty for an unpartitioned root). The version is described by
+    * `root/v00000.manifest` — a file list with the table's schemas — and
+    * every subsequent merge/delete/compact carries untouched partitions
+    * forward as MANIFEST ENTRIES: a 1-row upsert into a 100 TB table costs
+    * one partition's rewrite plus O(metadata), on object stores too.
     */
   def initVersionedManifest(df: DataFrame, root: String,
                             pcols: Seq[String]): String =
@@ -903,14 +726,11 @@ object Layout {
                             pcols: Seq[String],
                             bloomCols: Seq[String],
                             initProperties: Option[Map[String, String]]): String = graft.util.DmlTimer.timed {
-    require(pcols.nonEmpty,
-      "manifest mode is for partitioned roots (carry-forward has no meaning " +
-        "unpartitioned — use initVersioned)")
     // re-init of a live root is REFUSED, not overwritten: rewriting v00000
     // would destroy data files newer manifests still reference via
-    // carry-forward — unrecoverable corruption, unlike hardlink mode where
-    // links keep the bytes alive (review fix; same guard as cloneVersion)
-    require(!fsOf(df.sparkSession, root).exists(new Path(root, CurrentFile)),
+    // carry-forward — unrecoverable corruption (review fix; same guard as
+    // cloneVersion)
+    require(!isVersionedRoot(df.sparkSession, root),
       s"initVersionedManifest: $root is already a versioned root " +
         "(re-initializing would orphan every newer version's " +
         "carry-forward references) — write to a fresh root, or merge")
@@ -935,34 +755,28 @@ object Layout {
     s"$root/$v0"
   }
 
-  /** Key-pruned MERGE (upsert) on a partitioned versioned root: only leaf
-    * dirs whose `pcol` value appears in `updates` are rewritten (read with
-    * partition pruning, anti-joined on `keys`, unioned with the updates);
-    * every untouched leaf is carried into the new version dir as a HARDLINK
-    * to the live version's files, so the new version is still a complete,
-    * self-contained snapshot readable with a plain `spark.read.parquet` —
-    * and [[vacuumVersions]] stays safe, because deleting an old version dir
-    * only drops link counts, never bytes a newer version still references.
-    * The pointer flip is the same single atomic rename as
-    * [[mergeVersioned]], so concurrent readers see pre- or post-merge,
-    * never a mix.
+  /** Key-pruned MERGE (upsert): only leaves whose `pcol` value appears in
+    * `updates` are rewritten (read with partition pruning, anti-joined on
+    * `keys`, unioned with the updates); every untouched leaf carries into
+    * the new manifest as a copied entry — zero filesystem operations per
+    * untouched partition. The pointer flip is a single atomic rename, so
+    * concurrent readers see pre- or post-merge, never a mix. An
+    * unpartitioned root (`pcols` empty) is one leaf, rewritten whole.
     *
-    * The affected-partition set is derived WITHOUT collecting row data: the
-    * distinct `pcol` values of `updates` are written hive-partitioned to a
-    * scratch dir and the leaf names are listed back — O(#touched
-    * partitions) driver metadata, same class as a directory listing.
+    * Schema evolution is checked against the MANIFEST schema even when no
+    * existing leaf is rewritten (a pure-new-partition merge must not
+    * narrow the table), and the committed manifest's data schema is the
+    * evolved union, so carried old files null-fill added columns by name.
     *
     * Contract: `pcol` and the join `keys` must be NON-NULL (a null key
     * never matches its live row under join equality, and a null partition
     * value falls into the hive default-partition leaf), and `pcol` must be
     * stable under updates for a given key (it is effectively part of the
-    * key). A key whose update arrives with a
-    * different partition value than its live row is treated as a new row in
-    * the new partition; the stale row in the old partition is NOT removed —
-    * exactly the failure mode every partition-pruned lakehouse MERGE
-    * documents. On filesystems without hardlinks (object stores) the
-    * carry-forward degrades to a per-file server-side copy; a manifest
-    * layout is the production answer there.
+    * key). A key whose update arrives with a different partition value
+    * than its live row is treated as a new row in the new partition; the
+    * stale row in the old partition is NOT removed — exactly the failure
+    * mode every partition-pruned lakehouse MERGE documents
+    * ([[mergeIntoVersionedRows]] matches by key alone).
     *
     * @return the new live version path
     */
@@ -975,48 +789,76 @@ object Layout {
     * contract (which applies per partition COLUMN TUPLE here).
     */
   def mergeVersionedPartitioned(spark: SparkSession, root: String,
-                                updates: DataFrame, keys: Seq[String],
+                                updates0: DataFrame, keys: Seq[String],
                                 pcols: Seq[String]): String = graft.util.DmlTimer.timed {
-    if (ManifestIndex.isManifestRoot(spark, root))
-      return mergeManifest(spark, root, updates, keys, pcols)
-    val cur = resolveCurrent(spark, root)
-    val curPath = new Path(cur)
-    val fs = curPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val affected = affectedLeaves(
-      updates.select(pcols.map(col): _*), pcols, root)
-    val existingAffected = leafNames(fs, curPath).intersect(affected).toSeq.sorted
+    val (cur, _, man) = currentManifest(spark, root)
+    requireSpec(root, man, pcols, "mergeVersionedPartitioned")
+    // a producer that still sends the NARROW type after a widenColumn is
+    // upcast at the door (lossless by isWidening) — the schema contract
+    // a type widening must not break is the incoming-writer's
+    val updates = upcastToActive(man, updates0)
+    requireEvolvable(
+      StructType(ManifestIndex.activeSchema(man.dataSchema) ++
+        man.partitionSchema), updates.schema)
+    // writer-enforced CHECK constraints: incoming rows only — carried rows
+    // satisfied them when they were written (induction), so validation
+    // cost tracks the merge, not the table. Validation and the
+    // affected-leaf derivation ride ONE groupBy aggregate (r18 perf).
+    val affected = affectedLeavesChecked(updates, pcols, man.writerChecks,
+      "merge updates", root)
+    val existingAffected = man.leaves.intersect(affected)
+    // UNIQUE: replace-by-key is leaf-confined here, so an incoming key
+    // that lives in an UNAFFECTED leaf would survive alongside its new
+    // image — probe those leaves too (key envelopes prune the scan)
+    if (man.uniqueConstraints.nonEmpty) {
+      requireUniqueKeysMatch(spark, man, keys, "mergeVersionedPartitioned")
+      val unaffected = man.leaves.diff(affected)
+      requireUniqueBatch(man, updates,
+        if (unaffected.isEmpty) None
+        else Some(ManifestIndex.dataFrame(spark, root, man, Some(unaffected))),
+        "merge updates")
+    }
     val merged =
       if (existingAffected.isEmpty) updates
       else {
-        // basePath keeps pcols as columns; only the touched leaves are read.
-        val existing0 = spark.read.option("basePath", cur)
-          .option("mergeSchema", "true")
-          .parquet(existingAffected.map(n => s"$cur/$n"): _*)
-        // partition-value inference may narrow the type (long -> int);
-        // align with the caller's schema so unionByName stays exact
-        val existing = pcols.foldLeft(existing0)((d, c) =>
-          d.withColumn(c, col(c).cast(updates.schema(c).dataType)))
-        requireEvolvable(existing, updates)
+        val existing = ManifestIndex.dataFrame(spark, root, man,
+          Some(existingAffected))
         updates.unionByName(
           existing.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti"),
           allowMissingColumns = true)
       }
+    // the evolved schema keeps each surviving column's PHYSICAL name; new
+    // files are written under physical names so they agree with old footers
+    // tombstoned (dropped) fields ride along unchanged: they keep their
+    // physical names claimed so a re-add can never resurrect old footers
+    val newDataSchema = StructType(ManifestIndex.carryPhysical(
+      StructType(merged.schema.filterNot(f => pcols.contains(f.name))),
+      man.dataSchema) ++ man.dataSchema.filter(ManifestIndex.isDropped))
+    val physNames = newDataSchema.map(ManifestIndex.physicalName)
+    // validate BEFORE claiming the next version — a rejected merge must
+    // not leave an orphaned claim blocking every later writer
+    require(physNames.distinct.length == physNames.length,
+      s"schema evolution would duplicate a PHYSICAL column name " +
+        s"(${physNames.mkString(",")}): an added column may not reuse a " +
+        "renamed column's physical name")
     val (next, nextPath) = nextVersion(spark, root, cur)
-    leafSized(merged, pcols).write.mode(SaveMode.Overwrite)
-      .partitionBy(pcols: _*).parquet(nextPath)
-    carryForward(fs, curPath, new Path(nextPath), affected,
-      spark.sparkContext.hadoopConfiguration)
-    writePointer(spark, root, next)
+    commitManifest(spark, root, next, man.copy(
+      dataSchema = newDataSchema,
+      entries = writeEntries(spark, root, next, newDataSchema, pcols,
+        leafSized(merged, pcols)) ++
+        man.entries.filterNot(e => affected.contains(e.leaf))), "MERGE")
     nextPath
   }
 
-  /** Key-pruned DELETE on a partitioned versioned root: leaf dirs containing
-    * at least one row matching `predicate` are rewritten without those rows;
-    * all other leaves are hardlinked forward unread. When `predicate`
-    * references `pcol`, Catalyst partition-prunes the match scan too, so a
-    * partition-scoped delete never reads the rest of the table.
+  /** Key-pruned DELETE: leaves containing at least one row matching
+    * `predicate` are rewritten without those rows; all other leaves carry
+    * as manifest entries, unread. When `predicate` references `pcol`,
+    * Catalyst partition-prunes the match scan too, so a partition-scoped
+    * delete never reads the rest of the table. A leaf whose every row
+    * matches simply has no entries in the new manifest (its schema lives
+    * in the manifest). A predicate matching nothing is a NO-OP.
     *
-    * @return the new live version path
+    * @return the new live version path (or the current one on no-op)
     */
   def deleteVersionedPartitioned(spark: SparkSession, root: String,
                                  predicate: Column, pcol: String): String =
@@ -1025,28 +867,22 @@ object Layout {
   /** Multi-level variant of the key-pruned DELETE. */
   def deleteVersionedPartitioned(spark: SparkSession, root: String,
                                  predicate: Column, pcols: Seq[String]): String = graft.util.DmlTimer.timed {
-    if (ManifestIndex.isManifestRoot(spark, root))
-      return deleteManifest(spark, root, predicate, pcols)
-    val cur = resolveCurrent(spark, root)
-    val curPath = new Path(cur)
-    val fs = curPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (cur, _, man) = currentManifest(spark, root)
+    requireSpec(root, man, pcols, "deleteVersionedPartitioned")
+    val full = ManifestIndex.dataFrame(spark, root, man)
     val affected = affectedLeaves(
-      spark.read.parquet(cur).filter(predicate)
-        .select(pcols.map(col): _*), pcols, root)
-    val existingAffected = leafNames(fs, curPath).intersect(affected).toSeq.sorted
-    // no existing leaf holds a matching row → NO-OP (review fix; see
-    // deleteManifest)
-    if (existingAffected.isEmpty) return cur
+      full.filter(predicate).select(pcols.map(col): _*), pcols, root)
+      .intersect(man.leaves)
+    // no leaf holds a matching row → NO-OP, no version claimed (review
+    // fix: the row-level delete documents this; the partition-pruned
+    // path must not churn retention with byte-identical versions)
+    if (affected.isEmpty) return cur
     val (next, nextPath) = nextVersion(spark, root, cur)
-    if (existingAffected.nonEmpty) {
-      leafSized(spark.read.option("basePath", cur)
-          .parquet(existingAffected.map(n => s"$cur/$n"): _*)
-          .filter(!coalesce(predicate, lit(false))), pcols)
-        .write.mode(SaveMode.Overwrite).partitionBy(pcols: _*).parquet(nextPath)
-    }
-    carryForward(fs, curPath, new Path(nextPath), affected,
-      spark.sparkContext.hadoopConfiguration)
-    writePointer(spark, root, next)
+    commitManifest(spark, root, next, man.copy(
+      entries = writeEntries(spark, root, next, man.dataSchema, pcols,
+        ManifestIndex.dataFrame(spark, root, man, Some(affected))
+          .filter(!coalesce(predicate, lit(false)))) ++
+        man.entries.filterNot(e => affected.contains(e.leaf))), "DELETE")
     nextPath
   }
 
@@ -1081,9 +917,6 @@ object Layout {
     */
   def deleteVersionedRows(spark: SparkSession, root: String,
                           predicate: Column): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      "deleteVersionedRows (deletion vectors) requires a manifest root — " +
-        "hardlink-mode roots delete copy-on-write via deleteVersionedPartitioned")
     val (cur, _, man) = currentManifest(spark, root)
     // current snapshot (existing DVs applied — already-deleted rows can't
     // re-match) with the file/position coordinates each row lives at.
@@ -1125,9 +958,6 @@ object Layout {
     */
   def updateVersionedRows(spark: SparkSession, root: String,
                           predicate: Column, set: Map[String, Column]): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      "updateVersionedRows (deletion vectors) requires a manifest root — " +
-        "hardlink-mode roots update copy-on-write via mergeVersionedPartitioned")
     require(set.nonEmpty, "updateVersionedRows: empty assignment set")
     val (cur, _, man) = currentManifest(spark, root)
     val pcols = man.partitionSchema.fieldNames.toSeq
@@ -1228,9 +1058,6 @@ object Layout {
   def upsertVersionedRows(spark: SparkSession, root: String,
                           updates0: DataFrame, keys: Seq[String],
                           txn: Option[(String, Long)] = None): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      "upsertVersionedRows (deletion vectors) requires a manifest root — " +
-        "hardlink-mode roots upsert copy-on-write via mergeVersionedPartitioned")
     require(keys.nonEmpty, "upsertVersionedRows: empty key set")
     val (cur, _, man) = currentManifest(spark, root)
     txn.foreach { case (app, batch) =>
@@ -1333,9 +1160,8 @@ object Layout {
     * @return the new live version path (or the current one on no-op)
     */
   /** REPLACE the whole table's content in one commit — the SQL
-    * `INSERT OVERWRITE` / `TRUNCATE` lowering for manifest roots (the
-    * hardlink twin is [[publishVersion]]): the next manifest carries ONLY
-    * the fresh files (no carry-forward), so the snapshot IS `rows`, while
+    * `INSERT OVERWRITE` / `TRUNCATE` lowering: the next manifest carries
+    * ONLY the fresh files (no carry-forward), so the snapshot IS `rows`, while
     * every previous version stays time-travelable/RESTOREable until
     * vacuumed. Schema is PINNED (the declared table schema must match
     * exactly — evolution stays a separate, explicit op), CHECK
@@ -1350,7 +1176,7 @@ object Layout {
                            zOrderCols: Seq[String] = Nil): String =
     graft.util.DmlTimer.timed {
       commitFreshRows(spark, root, rows0, txn, "REPLACE",
-        carryForward = false, what = "replaceVersionedRows",
+        keepEntries = false, what = "replaceVersionedRows",
         evolveHint = "schema evolution is a separate, explicit op",
         extraProps = extraProps, zOrderCols = zOrderCols)
     }
@@ -1370,7 +1196,7 @@ object Layout {
                           zOrderCols: Seq[String] = Nil): String =
     graft.util.DmlTimer.timed {
       commitFreshRows(spark, root, rows0, txn, "APPEND",
-        carryForward = true, what = "appendVersionedRows",
+        keepEntries = true, what = "appendVersionedRows",
         evolveHint = "schema evolution is mergeVersionedPartitioned's job",
         extraProps = extraProps, zOrderCols = zOrderCols)
     }
@@ -1384,14 +1210,10 @@ object Layout {
     */
   private def commitFreshRows(spark: SparkSession, root: String,
                               rows0: DataFrame, txn: Option[(String, Long)],
-                              op: String, carryForward: Boolean,
+                              op: String, keepEntries: Boolean,
                               what: String, evolveHint: String,
                               extraProps: Map[String, String] = Map.empty,
                               zOrderCols: Seq[String] = Nil): String = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"$what requires a manifest root — hardlink-mode roots use " +
-        (if (carryForward) "mergeVersionedPartitioned with fresh keys"
-         else "publishVersion"))
     val (cur, _, man) = currentManifest(spark, root)
     txn.foreach { case (app, batch) =>
       val applied = man.properties.get(ManifestIndex.TxnPrefix + app)
@@ -1417,7 +1239,7 @@ object Layout {
         checks.map { case (name, sql) => count(when(!expr(sql), 1)).as(name) }
       val probe = rows.agg(probeAggs.head, probeAggs.tail: _*).head()
       val empty = probe.getLong(0) == 0L
-      if (empty && carryForward) return cur // append of nothing: no-op
+      if (empty && keepEntries) return cur // append of nothing: no-op
       // GENERATED identity: values are assigned by completeInsertColumns
       // (which stamps the advanced high-water into extraProps) — a batch
       // arriving with the column but WITHOUT the watermark bypassed
@@ -1435,7 +1257,7 @@ object Layout {
       // APPEND (REPLACE keeps nothing to collide with)
       if (!empty && man.uniqueConstraints.nonEmpty)
         requireUniqueBatch(man, rows,
-          if (carryForward) Some(ManifestIndex.dataFrame(spark, root, man))
+          if (keepEntries) Some(ManifestIndex.dataFrame(spark, root, man))
           else None, s"$op rows")
       val (next, nextPath) = nextVersion(spark, root, cur)
       val fresh = if (empty) Seq.empty else {
@@ -1456,7 +1278,7 @@ object Layout {
       commitManifest(spark, root, next, man.copy(
         properties = man.properties ++ txn.map { case (app, batch) =>
           ManifestIndex.TxnPrefix + app -> batch.toString } ++ extraProps,
-        entries = fresh ++ (if (carryForward) man.entries else Seq.empty)),
+        entries = fresh ++ (if (keepEntries) man.entries else Seq.empty)),
         op)
       nextPath
     } finally rows.unpersist(false)
@@ -1536,9 +1358,6 @@ object Layout {
                              txn: Option[(String, Long)] = None,
                              whenNotMatchedBySourceDelete: Option[Column] = None,
                              whenNotMatchedBySourceUpdate: Option[(Column, Map[String, Column])] = None): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      "mergeIntoVersionedRows requires a manifest root — hardlink-mode " +
-        "roots merge copy-on-write via mergeVersionedPartitioned")
     require(keys.nonEmpty, "mergeIntoVersionedRows: empty key set")
     val hasBySource = whenNotMatchedBySourceDelete.isDefined ||
       whenNotMatchedBySourceUpdate.isDefined
@@ -1848,8 +1667,6 @@ object Layout {
     */
   def renameColumn(spark: SparkSession, root: String,
                    oldName: String, newName: String): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"renameColumn requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     require(!man.partitionSchema.fieldNames.contains(oldName),
       s"renameColumn: '$oldName' is a partition column — its name is baked " +
@@ -1907,8 +1724,6 @@ object Layout {
     */
   def addColumn(spark: SparkSession, root: String,
                 name: String, dataType: org.apache.spark.sql.types.DataType): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"addColumn requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     // case-INSENSITIVE guards: Spark resolves case-insensitively by
     // default, so committing both 'v' and 'V' would brick every read
@@ -1972,8 +1787,6 @@ object Layout {
     */
   def widenColumn(spark: SparkSession, root: String,
                   name: String, to: org.apache.spark.sql.types.DataType): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"widenColumn requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     require(!man.partitionSchema.fieldNames.contains(name),
       s"widenColumn: '$name' is a partition column — its encoded values " +
@@ -2059,8 +1872,6 @@ object Layout {
     */
   def repartitionTable(spark: SparkSession, root: String,
                        newPcols: Seq[String]): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"repartitionTable requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     val active = ManifestIndex.activeSchema(man.dataSchema)
     val fieldBy = (active ++ man.partitionSchema).map(f => f.name -> f).toMap
@@ -2106,8 +1917,6 @@ object Layout {
   }
 
   def dropColumn(spark: SparkSession, root: String, name: String): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"dropColumn requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     require(!man.partitionSchema.fieldNames.contains(name),
       s"dropColumn: '$name' is a partition column — repartitioning is a " +
@@ -2158,8 +1967,6 @@ object Layout {
     */
   def addCheckConstraint(spark: SparkSession, root: String,
                          name: String, sql: String): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"addCheckConstraint requires a manifest root: $root")
     require(name.matches("[A-Za-z0-9_.-]+"),
       s"constraint name '$name' must be [A-Za-z0-9_.-]+")
     val (cur, _, man) = currentManifest(spark, root)
@@ -2179,13 +1986,12 @@ object Layout {
   /** Whether `name` is a declared CHECK constraint on the live version. */
   def hasCheckConstraint(spark: SparkSession, root: String,
                          name: String): Boolean = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"hasCheckConstraint requires a manifest root: $root")
     currentManifest(spark, root)._3.constraints.contains(name)
   }
 
-  /** Whether `root` is a graft versioned root (hardlink OR manifest mode):
-    * the `_current` pointer is the layout's identity marker.
+  /** Whether `root` is a graft versioned root: the `_current` pointer is
+    * the layout's identity marker (written last, so an init that failed
+    * before its pointer flip leaves a root this still reports as absent).
     */
   def isVersionedRoot(spark: SparkSession, root: String): Boolean = {
     val p = new Path(root, CurrentFile)
@@ -2217,8 +2023,6 @@ object Layout {
   /** Remove a CHECK constraint; later writers stop validating it. */
   def dropCheckConstraint(spark: SparkSession, root: String,
                           name: String): String = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"dropCheckConstraint requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     require(man.constraints.contains(name),
       s"no constraint '$name' (have: ${man.constraints.keys.mkString(",")})")
@@ -2236,8 +2040,6 @@ object Layout {
     */
   def setNotNull(spark: SparkSession, root: String, col: String): String =
     graft.util.DmlTimer.timed {
-      require(ManifestIndex.isManifestRoot(spark, root),
-        s"setNotNull requires a manifest root: $root")
       val (cur, _, man) = currentManifest(spark, root)
       requireTableColumn(spark, man, col, "setNotNull")
       require(!man.notNullCols.contains(col),
@@ -2255,8 +2057,6 @@ object Layout {
 
   /** Remove a NOT NULL marker; later writers stop validating it. */
   def dropNotNull(spark: SparkSession, root: String, col: String): String = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"dropNotNull requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     require(man.notNullCols.contains(col),
       s"column '$col' is not declared NOT NULL " +
@@ -2277,8 +2077,6 @@ object Layout {
     */
   def setColumnDefault(spark: SparkSession, root: String, col: String,
                        defaultSql: String): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"setColumnDefault requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     requireTableColumn(spark, man, col, "setColumnDefault")
     require(!man.identity.exists(_._1 == col),
@@ -2302,8 +2100,6 @@ object Layout {
   /** Remove a column DEFAULT; later inserts fill NULL again. */
   def dropColumnDefault(spark: SparkSession, root: String,
                         col: String): String = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"dropColumnDefault requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     require(man.defaults.contains(col),
       s"column '$col' has no DEFAULT " +
@@ -2331,8 +2127,6 @@ object Layout {
     */
   def setIdentityColumn(spark: SparkSession, root: String,
                         col: String): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"setIdentityColumn requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     requireTableColumn(spark, man, col, "setIdentityColumn")
     require(man.identity.isEmpty,
@@ -2375,8 +2169,6 @@ object Layout {
     */
   def setGeneratedColumn(spark: SparkSession, root: String, col: String,
                          exprSql: String): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"setGeneratedColumn requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     requireTableColumn(spark, man, col, "setGeneratedColumn")
     val resolver = spark.sessionState.analyzer.resolver
@@ -2436,8 +2228,6 @@ object Layout {
     */
   def dropGeneratedColumn(spark: SparkSession, root: String,
                           col: String): String = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"dropGeneratedColumn requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     require(man.generatedCols.contains(col),
       s"column '$col' is not generated " +
@@ -2475,8 +2265,6 @@ object Layout {
     */
   def addUniqueConstraint(spark: SparkSession, root: String, name: String,
                           cols: Seq[String]): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"addUniqueConstraint requires a manifest root: $root")
     require(cols.nonEmpty, "addUniqueConstraint: empty column list")
     require(cols.distinct.size == cols.size,
       s"addUniqueConstraint: duplicate columns in (${cols.mkString(",")})")
@@ -2503,14 +2291,11 @@ object Layout {
   /** Whether the table declares a UNIQUE constraint named `name`. */
   def hasUniqueConstraint(spark: SparkSession, root: String,
                           name: String): Boolean =
-    ManifestIndex.isManifestRoot(spark, root) &&
-      currentManifest(spark, root)._3.uniqueConstraints.contains(name)
+    currentManifest(spark, root)._3.uniqueConstraints.contains(name)
 
   /** Remove a UNIQUE constraint; later writes stop paying its probes. */
   def dropUniqueConstraint(spark: SparkSession, root: String,
                            name: String): String = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"dropUniqueConstraint requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     require(man.uniqueConstraints.contains(name),
       s"no UNIQUE constraint '$name' " +
@@ -2605,8 +2390,6 @@ object Layout {
     */
   def completeInsertColumns(spark: SparkSession, root: String,
                             df: DataFrame): (DataFrame, Map[String, String]) = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"completeInsertColumns requires a manifest root: $root")
     val man = currentManifest(spark, root)._3
     val resolver = spark.sessionState.analyzer.resolver
     val tableCols = (ManifestIndex.activeSchema(man.dataSchema) ++
@@ -2686,8 +2469,6 @@ object Layout {
                format: String = "parquet",
                options: Map[String, String] = Map.empty): (String, Int) =
     graft.util.DmlTimer.timed {
-      require(ManifestIndex.isManifestRoot(spark, root),
-        s"copyInto requires a manifest root: $root")
       require(Set("parquet", "csv", "json").contains(format.toLowerCase),
         s"copyInto: unsupported FILEFORMAT '$format' (parquet|csv|json)")
       val man = currentManifest(spark, root)._3
@@ -2886,8 +2667,6 @@ object Layout {
     * @return the new live version path
     */
   def restoreVersion(spark: SparkSession, root: String, version: Int): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"restoreVersion requires a manifest root: $root")
     val old = ManifestIndex.read(spark, root, versionName(version))
     val (cur, _, _) = currentManifest(spark, root)
     require(cur != s"$root/${versionName(version)}",
@@ -2899,8 +2678,11 @@ object Layout {
     nextPath
   }
 
-  /** (live version path, version name, manifest) of a manifest root —
-    * the preamble every manifest-mode writer shares.
+  /** (live version path, version name, manifest) of a versioned root —
+    * the preamble every reader and writer shares, and the ONE check that
+    * `root` is a table: a root without a pointer, or whose live version
+    * has no manifest, fails here with an IllegalArgumentException naming
+    * it ([[resolveCurrent]], [[ManifestIndex.read]]).
     */
   private def currentManifest(spark: SparkSession, root: String)
       : (String, String, ManifestIndex.TableManifest) = {
@@ -2969,9 +2751,10 @@ object Layout {
       else lit(offsets.last) + pmod(hash(pcols.map(quoted): _*), lit(respecTasks))
     val bucket = sized.zip(offsets).map { case ((leaf, files), off) =>
       val values = ManifestIndex.parseLeaf(leaf, pspec, zone)
+      // the unpartitioned leaf "" holds every row
       val here = pspec.fields.zipWithIndex.map { case (f, i) =>
         quoted(f.name) <=> Shim.column(Literal(values.get(i, f.dataType), f.dataType))
-      }.reduce(_ && _)
+      }.reduceOption(_ && _).getOrElse(lit(true))
       here -> (if (files == 1) lit(off) else lit(off) + pmod(salt, lit(files)))
     } match {
       case Seq() => rest
@@ -2996,8 +2779,6 @@ object Layout {
     */
   def rehomeClone(spark: SparkSession, root: String,
                   targetBytes: Long = 128L << 20): (String, Int) = {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"rehomeClone requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     def foreign(p: String) = p.startsWith("/") || p.contains("://")
     val alien = man.byLeaf.filter(_._2.exists(e =>
@@ -3020,8 +2801,6 @@ object Layout {
     */
   def purgeDeletedRows(spark: SparkSession, root: String,
                        targetBytes: Long = 128L << 20): (String, Int) = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"purgeDeletedRows requires a manifest root: $root")
     val (cur, _, man) = currentManifest(spark, root)
     val dvLeaves = man.byLeaf.filter(_._2.exists(_.dv.isDefined))
     if (dvLeaves.isEmpty) return (cur, 0)
@@ -3052,7 +2831,7 @@ object Layout {
     * individual primitives spread across five calls, composed in the
     * order that converges a worked-over table in a single run:
     *
-    *  1. PURGE ([[purgeDeletedRows]], manifest roots): outstanding
+    *  1. PURGE ([[purgeDeletedRows]]): outstanding
     *     deletion vectors materialize — DV-bearing leaves rewrite without
     *     their dead rows (one write job, files sized by live bytes), so
     *     later steps (and every reader) stop paying the anti-join and the
@@ -3082,34 +2861,14 @@ object Layout {
     */
   def maintain(spark: SparkSession, root: String,
                policy: MaintenancePolicy = MaintenancePolicy()): MaintenanceReport = {
-    val manifest = ManifestIndex.isManifestRoot(spark, root)
     val purged =
-      if (policy.purge && manifest)
+      if (policy.purge)
         withCommitRetry() { purgeDeletedRows(spark, root, policy.targetBytes)._2 }
       else 0
     val compacted =
       if (policy.compact) withCommitRetry() {
-        // FLAT (unpartitioned hardlink) roots have no leaves for the
-        // partitioned compactor to find — dispatch to the flat rewrite,
-        // gated by the same fragmentation test so an idle run stays a
-        // no-op (review fix: maintain silently never compacted flat roots)
-        val curPath = new Path(resolveCurrent(spark, root))
-        val fs = curPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val flat = !manifest && leafNames(fs, curPath).isEmpty
-        if (flat) {
-          val data = fs.listStatus(curPath).filter(f => f.isFile &&
-            !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          val bytes = data.map(_.getLen).sum
-          val want = math.max(1,
-            math.ceil(bytes.toDouble / policy.targetBytes).toInt)
-          if (data.length > math.max(want, policy.maxFiles) ||
-              (data.length > 1 && bytes / data.length < policy.targetBytes / 2)) {
-            compactVersioned(spark, root, policy.targetBytes); 1
-          } else 0
-        } else
-          compactVersionedPartitioned(spark, root, policy.targetBytes,
-            policy.maxFiles, policy.zOrderCols)._2
+        compactVersionedPartitioned(spark, root, policy.targetBytes,
+          policy.maxFiles, policy.zOrderCols)._2
       }
       else 0
     val vacuumed =
@@ -3117,117 +2876,22 @@ object Layout {
     MaintenanceReport(purged, compacted, vacuumed, resolveCurrent(spark, root))
   }
 
-  // ------------------------------------------------------ manifest-mode impls
-
-  /** MERGE on a manifest root: identical key-pruned semantics to the
-    * hardlink path, but carry-forward of every untouched leaf is a copied
-    * manifest entry — zero filesystem operations per untouched partition
-    * (vs one link/copy per FILE), which is what survives an object store.
-    * Schema evolution is checked against the MANIFEST schema even when no
-    * existing leaf is rewritten (a pure-new-partition merge must not
-    * narrow the table), and the committed manifest's data schema is the
-    * evolved union, so carried old files null-fill added columns by name.
+  /** The leaf-pruned copy-on-write writers name the table's partition
+    * columns (`pcols`, empty for an unpartitioned root) and cannot reason
+    * across two partition specs (their affected-leaf sets are computed in
+    * the CURRENT spec's value space); after a [[repartitionTable]] they
+    * are refused until compaction converges the layout. Row-level DML
+    * stays available throughout — it matches by key, not by leaf.
     */
-  private def mergeManifest(spark: SparkSession, root: String,
-                            updates0: DataFrame, keys: Seq[String],
-                            pcols: Seq[String]): String = {
-    val (cur, _, man) = currentManifest(spark, root)
+  private def requireSpec(root: String, man: ManifestIndex.TableManifest,
+                          pcols: Seq[String], op: String): Unit = {
     require(man.partitionSchema.fieldNames.toSeq == pcols,
-      s"manifest root $root is partitioned on " +
-        s"${man.partitionSchema.fieldNames.mkString(",")}, not ${pcols.mkString(",")}")
-    requireUniformSpec(man, "mergeVersionedPartitioned")
-    // a producer that still sends the NARROW type after a widenColumn is
-    // upcast at the door (lossless by isWidening) — the schema contract
-    // a type widening must not break is the incoming-writer's
-    val updates = upcastToActive(man, updates0)
-    requireEvolvable(
-      StructType(ManifestIndex.activeSchema(man.dataSchema) ++
-        man.partitionSchema), updates.schema)
-    // writer-enforced CHECK constraints: incoming rows only — carried rows
-    // satisfied them when they were written (induction), so validation
-    // cost tracks the merge, not the table. Validation and the
-    // affected-leaf derivation ride ONE groupBy aggregate (r18 perf).
-    val affected = affectedLeavesChecked(updates, pcols, man.writerChecks,
-      "merge updates", root)
-    val existingAffected = man.leaves.intersect(affected)
-    // UNIQUE: replace-by-key is leaf-confined here, so an incoming key
-    // that lives in an UNAFFECTED leaf would survive alongside its new
-    // image — probe those leaves too (key envelopes prune the scan)
-    if (man.uniqueConstraints.nonEmpty) {
-      requireUniqueKeysMatch(spark, man, keys, "mergeVersionedPartitioned")
-      val unaffected = man.leaves.diff(affected)
-      requireUniqueBatch(man, updates,
-        if (unaffected.isEmpty) None
-        else Some(ManifestIndex.dataFrame(spark, root, man, Some(unaffected))),
-        "merge updates")
-    }
-    val merged =
-      if (existingAffected.isEmpty) updates
-      else {
-        val existing = ManifestIndex.dataFrame(spark, root, man,
-          Some(existingAffected))
-        updates.unionByName(
-          existing.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti"),
-          allowMissingColumns = true)
-      }
-    // the evolved schema keeps each surviving column's PHYSICAL name; new
-    // files are written under physical names so they agree with old footers
-    // tombstoned (dropped) fields ride along unchanged: they keep their
-    // physical names claimed so a re-add can never resurrect old footers
-    val newDataSchema = StructType(ManifestIndex.carryPhysical(
-      StructType(merged.schema.filterNot(f => pcols.contains(f.name))),
-      man.dataSchema) ++ man.dataSchema.filter(ManifestIndex.isDropped))
-    val physNames = newDataSchema.map(ManifestIndex.physicalName)
-    // validate BEFORE claiming the next version — a rejected merge must
-    // not leave an orphaned claim blocking every later writer
-    require(physNames.distinct.length == physNames.length,
-      s"schema evolution would duplicate a PHYSICAL column name " +
-        s"(${physNames.mkString(",")}): an added column may not reuse a " +
-        "renamed column's physical name")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(
-      dataSchema = newDataSchema,
-      entries = writeEntries(spark, root, next, newDataSchema, pcols,
-        leafSized(merged, pcols)) ++
-        man.entries.filterNot(e => affected.contains(e.leaf))), "MERGE")
-    nextPath
+      s"$op: $root is partitioned on " +
+        s"(${man.partitionSchema.fieldNames.mkString(",")}), not " +
+        s"(${pcols.mkString(",")})")
+    requireUniformSpec(man, op)
   }
 
-  /** DELETE on a manifest root; see [[mergeManifest]] for the carry shape.
-    * A leaf whose every row matches simply has no entries in the new
-    * manifest — the empty-version read needs no schema donor, the manifest
-    * carries the schema.
-    */
-  private def deleteManifest(spark: SparkSession, root: String,
-                             predicate: Column, pcols: Seq[String]): String = {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(man.partitionSchema.fieldNames.toSeq == pcols,
-      s"manifest root $root is partitioned on " +
-        s"${man.partitionSchema.fieldNames.mkString(",")}, not ${pcols.mkString(",")}")
-    requireUniformSpec(man, "deleteVersionedPartitioned")
-    val full = ManifestIndex.dataFrame(spark, root, man)
-    val affected = affectedLeaves(
-      full.filter(predicate).select(pcols.map(col): _*), pcols, root)
-      .intersect(man.leaves)
-    // no leaf holds a matching row → NO-OP, no version claimed (review
-    // fix: the row-level delete documents this; the partition-pruned
-    // path must not churn retention with byte-identical versions)
-    if (affected.isEmpty) return cur
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(
-      entries = writeEntries(spark, root, next, man.dataSchema, pcols,
-        ManifestIndex.dataFrame(spark, root, man, Some(affected))
-          .filter(!coalesce(predicate, lit(false)))) ++
-        man.entries.filterNot(e => affected.contains(e.leaf))), "DELETE")
-    nextPath
-  }
-
-  /** The leaf-pruned copy-on-write writers cannot reason across two
-    * partition specs (their affected-leaf sets are computed in the CURRENT
-    * spec's value space); after a [[repartitionTable]] they are refused
-    * until compaction converges the layout. Row-level DML stays available
-    * throughout — it matches by key, not by leaf.
-    */
   private def requireUniformSpec(man: ManifestIndex.TableManifest,
                                  op: String): Unit = {
     val spec = man.partitionSchema.fieldNames.toSeq
@@ -3236,68 +2900,6 @@ object Layout {
         s"(repartitionTable) — use row-level DML (upsertVersionedRows / " +
         "mergeIntoVersionedRows / deleteVersionedRows) or run " +
         "compactVersionedPartitioned to re-spec old leaves first")
-  }
-
-  /** Compaction on a manifest root: fragmentation is diagnosed FROM the
-    * manifest (no directory listing at all), only fragmented leaves are
-    * rewritten — all of them in one write job ([[rewriteEntries]]) unless
-    * z-ordered — and healthy leaves carry as entries.
-    */
-  private def compactManifest(spark: SparkSession, root: String,
-                              targetBytes: Long, maxFiles: Int,
-                              zOrderCols: Seq[String]): (String, Int) = {
-    val (cur, _, man) = currentManifest(spark, root)
-    val currentSpec = man.partitionSchema.fieldNames.toSeq
-    // leaves written under an EARLIER partition spec are always selected:
-    // compaction is where a metadata-only repartitionTable converges to a
-    // uniform physical layout (their rows re-land via partitionBy on the
-    // current spec — one old leaf may fan out into many new ones)
-    val respec = man.leaves.filter(l =>
-      ManifestIndex.leafSpec(l) != currentSpec)
-    val fragmented = man.byLeaf.flatMap { case (leaf, es) =>
-      if (respec.contains(leaf)) None
-      else {
-        val bytes = es.map(_.size).sum
-        // a leaf whose data genuinely needs ceil(bytes/target) > maxFiles
-        // files is HEALTHY at that count — flagging it by maxFiles alone
-        // made every maintenance run rewrite it forever (review fix:
-        // maintain ∘ maintain ≡ maintain requires the gate to accept the
-        // rewrite's own output)
-        val want = math.max(1L, math.ceil(bytes.toDouble / targetBytes).toLong)
-        val tooMany = es.length > math.max(maxFiles.toLong, want)
-        val tooSmall = es.length > 1 && bytes / es.length < targetBytes / 2
-        if (tooMany || tooSmall) Some(leaf -> bytes) else None
-      }
-    }
-    // nothing fragmented → NO-OP, no version claimed (review fix)
-    if (fragmented.isEmpty && respec.isEmpty) return (cur, 0)
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    val fresh =
-      if (zOrderCols.isEmpty)
-        rewriteEntries(spark, root, next, man, fragmented.keySet ++ respec,
-          targetBytes)
-      else {
-        // z-order keeps a per-leaf range sort; it does not apply to
-        // respec'd rows (they fan across leaves — cluster them on the
-        // NEXT compaction, once they live in current-spec leaves). The
-        // respec write replaces the version dir, so it goes first; each
-        // leaf's z-write then adds its files beside any respec'd ones.
-        val respecd =
-          if (respec.isEmpty) Nil
-          else rewriteEntries(spark, root, next, man, respec, targetBytes)
-        respecd ++ fragmented.toSeq.sortBy(_._1).flatMap { case (leaf, bytes) =>
-          val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-          writeEntries(spark, root, next, man.dataSchema, Nil,
-            zOrdered(ManifestIndex.dataFrame(spark, root, man, Some(Set(leaf)))
-              .drop(man.partitionSchema.fieldNames: _*), zOrderCols, 8, files),
-            leaf = Some(leaf))
-        }
-      }
-    commitManifest(spark, root, next, man.copy(
-      entries = fresh ++
-        man.entries.filterNot(e =>
-          fragmented.contains(e.leaf) || respec.contains(e.leaf))), "COMPACT")
-    (nextPath, fragmented.size + respec.size)
   }
 
   /** Shared manifest-commit tail: version dir always exists (so
@@ -3323,9 +2925,10 @@ object Layout {
     * and no re-read of the files it just wrote. Returns the new entries,
     * stats attached. With `leaf`, `rows` (partition columns dropped) are
     * added into that one leaf dir instead of replacing the version dir
-    * (the z-ordered compaction's per-leaf range sort). Every manifest
-    * data writer funnels through here, so physical naming and stats
-    * never fork.
+    * (the z-ordered compaction's per-leaf range sort; the unpartitioned
+    * leaf `""` is the version dir itself). Every manifest data writer —
+    * [[publishVersion]] included — funnels through here, so physical
+    * naming and stats never fork.
     */
   private def writeEntries(spark: SparkSession, root: String, version: String,
                            dataSchema: StructType, pcols: Seq[String],
@@ -3336,11 +2939,12 @@ object Layout {
       ManifestIndex.bloomColumns(spark, root),
       StructType(physical.schema.filterNot(f => pcols.contains(f.name))),
       pcols.size)
+    val sub = leaf.filter(_.nonEmpty)
     Shim.writeParquet(physical,
-      leaf.fold(s"$root/$version")(l => s"$root/$version/$l"), pcols,
+      sub.fold(s"$root/$version")(l => s"$root/$version/$l"), pcols,
       Seq(tracker), replace = leaf.isEmpty)
     tracker.files.map { f =>
-      val rel = leaf.fold(f.rel)(l => s"$l/${f.rel}")
+      val rel = sub.fold(f.rel)(l => s"$l/${f.rel}")
       ManifestIndex.Entry(rel.substring(0, math.max(0, rel.lastIndexOf('/'))),
         s"$version/$rel", f.size, Some(f.stats))
     }.sortBy(_.path)
@@ -3349,22 +2953,6 @@ object Layout {
   private def fsOf(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The unpartitioned/flat writers commit bare version DIRS; on a manifest
-    * root that version would miss every carried entry on read (or be
-    * invisible to manifest readers entirely). Reject loudly at the write,
-    * not confusingly at the next read.
-    */
-  private def requireNotManifest(spark: SparkSession, root: String,
-                                 op: String, hint: String): Unit =
-    require(!ManifestIndex.isManifestRoot(spark, root),
-      s"$op: $root is a MANIFEST-mode versioned root — $hint")
-
-  /** Distinct `pcol` values of `df` as hive-encoded leaf names
-    * (`pcol=value`), derived distributed-side: the values are written
-    * hive-partitioned to a scratch dir under `root` and the dir names listed
-    * back. No row data ever reaches the driver — only partition metadata,
-    * O(#distinct values).
-    */
   /** [[affectedLeaves]] + CHECK validation in ONE job (r18 perf): the
     * distinct partition tuples and the per-check violation counts ride a
     * single groupBy aggregate over the updates frame (violation totals
@@ -3393,7 +2981,8 @@ object Layout {
         .agg(aggs.head, aggs.tail: _*).collect()
       raiseCheckViolations(checks,
         i => rows.iterator.map(_.getLong(pcols.length + 1 + i)).sum, what)
-      rows.map { row =>
+      // an unpartitioned batch groups globally: one row even when empty
+      rows.filter(_.getLong(pcols.length) > 0).map { row =>
         pcols.indices.map { i =>
           val v = if (row.isNullAt(i)) null else row.getString(i)
           ExternalCatalogUtils.getPartitionPathString(pcols(i), v)
@@ -3402,8 +2991,14 @@ object Layout {
     }
   }
 
+  /** Distinct `pcols` tuples of `df` as hive-encoded leaf names
+    * (`a=1/b=2`; the one leaf `""` of an unpartitioned root when `df` has
+    * any row). Only partition metadata reaches the driver, O(#distinct
+    * values).
+    */
   private def affectedLeaves(df: DataFrame, pcols: Seq[String],
                              root: String): Set[String] = {
+    if (pcols.isEmpty) return if (df.isEmpty) Set.empty else Set("")
     // Fast path (r18 perf): the distinct partition tuples are O(#leaves)
     // metadata either way — collect them directly and build the hive leaf
     // names with Spark's OWN escaping (ExternalCatalogUtils, the code the
@@ -3444,10 +3039,7 @@ object Layout {
 
   /** Relative paths of the TERMINAL hive partition dirs under `dir`:
     * `pcol=v` for single-level layouts, `a=1/b=2/...` for multi-level —
-    * a dir is a leaf when it has no `=`-named subdirectories. Depth-1
-    * layouts get exactly the old single-segment names, so every caller
-    * (merge pruning, carry-forward, change-feed identity, compaction)
-    * generalizes to multi-column partitioning through this one function.
+    * a dir is a leaf when it has no `=`-named subdirectories.
     */
   private def leafNames(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Set[String] = {
     val acc = scala.collection.mutable.Set[String]()
@@ -3461,34 +3053,6 @@ object Layout {
     }
     if (fs.exists(dir)) rec(dir, "")
     acc.toSet
-  }
-
-  /** Link (or copy, off local/HDFS-like filesystems) every data file of
-    * `cur`'s leaf dirs NOT in `skip` into `next`. Hardlinks mean the bytes
-    * exist once no matter how many versions reference them, and vacuuming an
-    * old version dir can never orphan a newer snapshot.
-    */
-  private def carryForward(fs: org.apache.hadoop.fs.FileSystem, cur: Path,
-                           next: Path, skip: Set[String],
-                           conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val local = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    (leafNames(fs, cur) -- skip).foreach { leaf =>
-      val dstDir = new Path(next, leaf)
-      fs.mkdirs(dstDir)
-      fs.listStatus(new Path(cur, leaf)).foreach { f =>
-        val fn = f.getPath.getName
-        if (f.isFile && !fn.startsWith("_") && !fn.startsWith(".")) {
-          val dst = new Path(dstDir, fn)
-          if (local)
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(dst.toUri.getPath),
-              java.nio.file.Paths.get(f.getPath.toUri.getPath))
-          else
-            org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs, dst, false, conf)
-        }
-      }
-    }
   }
 
   // ------------------------------------------------------------- change feed
@@ -3505,135 +3069,67 @@ object Layout {
     * once. Identical rows drop out on a null-safe struct compare (NaN
     * equals NaN, null equals null — change detection, not arithmetic).
     *
-    * Scale: on a PARTITIONED versioned root ([[initVersionedPartitioned]]),
-    * leaves whose files are identical in both versions — the hardlink
-    * carry-forward of [[mergeVersionedPartitioned]] guarantees this for
-    * every untouched partition — are pruned by FILE IDENTITY (inode on a
-    * local filesystem, length+mtime elsewhere) before any row is read: the
-    * diff of a 1-partition merge on a 100 TB table scans one partition, not
-    * the table. Unpartitioned roots diff in full (one shuffle each side).
+    * Scale: leaves whose manifest entries are identical in both versions —
+    * every partition a key-pruned merge or delete left untouched — are
+    * pruned by MANIFEST COMPARE before any row is read: data files are
+    * immutable once written, so equal (path, size, DV) entry sets prove a
+    * leaf's rows are identical, with no stat call (object stores too). The
+    * diff of a 1-partition merge on a 100 TB table scans one partition,
+    * not the table; an unpartitioned root is one leaf and diffs in full.
     *
     * Contract: `keys` are unique and non-null within each snapshot (the
-    * invariant [[mergeVersioned]]/[[mergeVersionedPartitioned]] maintain);
-    * shared column names must keep the same type across versions; columns
-    * added by schema evolution read as null on the older side.
+    * invariant [[mergeVersionedPartitioned]] and the row-level writers
+    * maintain); shared column names must keep the same type across
+    * versions; columns added by schema evolution read as null on the
+    * older side.
     */
   def changeFeed(spark: SparkSession, root: String, fromVersion: Int,
                  toVersion: Int, keys: Seq[String]): DataFrame = {
     require(fromVersion != toVersion, "changeFeed: versions must differ")
-    if (ManifestIndex.isManifestRoot(spark, root)) {
-      // pruning by MANIFEST compare: data files are immutable once written,
-      // so equal (path, size) entry sets prove a leaf's bytes are identical
-      // across the two versions — no stat calls, no inode reads, works on
-      // object stores where there is nothing to hardlink
-      val mf = ManifestIndex.read(spark, root, versionName(fromVersion))
-      val mt = ManifestIndex.read(spark, root, versionName(toVersion))
-      // the DV reference is part of the identity: a row-delete rewrites no
-      // file, but its leaf must still read as changed or the feed misses
-      // the deletions
-      def sig(m: ManifestIndex.TableManifest) =
-        m.byLeaf.view.mapValues(_.map(e => (e.path, e.size, e.dv)).toSet).toMap
-      val (fb, tb) = (sig(mf), sig(mt))
-      val changed = (fb.keySet ++ tb.keySet).filter(l => fb.get(l) != tb.get(l))
-      // RENAMES and DROPS between the versions are metadata-only: align
-      // the from-side to the to-side's logical names by PHYSICAL identity
-      // in ONE aliasing projection — a fold of withColumnRenamed would
-      // corrupt chained/swapped renames (renaming a into b while another
-      // column still holds b renames BOTH) — and columns the to-side no
-      // longer carries (drops) simply vanish from the projection
-      // the to-side's column universe includes its PARTITION spec: a
-      // repartitionTable between the versions moves a column from
-      // dataSchema into partitionSchema (or back), and aligning against
-      // dataSchema alone silently dropped the moved column from the
-      // from-side projection — every unchanged row in a changed leaf then
-      // diffed as a spurious update pair with a null pre-image for that
-      // column (ADVICE r10, high). Spec columns are physical-identity by
-      // construction (repartitionTable refuses renamed columns), so ONE
-      // physical-name map serves both, and from-side partition columns
-      // route through the same alignment instead of passing raw.
-      val toByPhys = (ManifestIndex.activeSchema(mt.dataSchema) ++
-        mt.partitionSchema).map(f => ManifestIndex.physicalName(f) -> f).toMap
-      val fromAligned = ManifestIndex.dataFrame(spark, root, mf, Some(changed))
-        .select(
-          (ManifestIndex.activeSchema(mf.dataSchema) ++ mf.partitionSchema)
-            .flatMap(f =>
-            toByPhys.get(ManifestIndex.physicalName(f)).map { tf =>
-              // a widenColumn between the versions leaves the from-side
-              // narrow; cast UP so the null-safe struct compare sees one
-              // type (lossless — any other mismatch keeps both types and
-              // fails loudly in the diff, as it should)
-              val c = col(s"`${f.name}`")
-              (if (tf.dataType != f.dataType &&
-                   ManifestIndex.isWidening(f.dataType, tf.dataType))
-                 c.cast(tf.dataType)
-               else c).as(tf.name)
-            }): _*)
-      return diff(fromAligned,
-        ManifestIndex.dataFrame(spark, root, mt, Some(changed)), keys)
-    }
-    val fromPath = new Path(resolveVersion(spark, root, fromVersion))
-    val toPath = new Path(resolveVersion(spark, root, toVersion))
-    val fs = fromPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (fromLeaves, toLeaves) = (leafNames(fs, fromPath), leafNames(fs, toPath))
-    val (a, b) =
-      if (fromLeaves.nonEmpty && toLeaves.nonEmpty) {
-        val changed = changedLeaves(spark, fs, fromPath, toPath)
-        (readLeaves(spark, fromPath.toString, fromLeaves.intersect(changed)),
-          readLeaves(spark, toPath.toString, toLeaves.intersect(changed)))
-      } else
-        // a side may legitimately hold no data files at all (a delete that
-        // matched every row) — readVersionDir derives its schema from a
-        // sibling version instead of failing schema inference (ADVICE r9)
-        (readVersionDir(spark, root, fromPath.toString),
-          readVersionDir(spark, root, toPath.toString))
-    diff(a, b, keys)
-  }
-
-  /** Leaf dirs that can hold differing rows: present on one side only, or
-    * present on both with a different file inventory. A leaf carried
-    * forward by hardlink has the same file names AND identities (inode
-    * locally; length+mtime on other filesystems) and is skipped — its
-    * bytes are provably those of the other version.
-    */
-  private[graft] def changedLeaves(spark: SparkSession,
-                                   fs: org.apache.hadoop.fs.FileSystem,
-                                   from: Path, to: Path): Set[String] = {
-    val (fl, tl) = (leafNames(fs, from), leafNames(fs, to))
-    val both = fl.intersect(tl)
-    val oneSided = fl.union(tl) -- both
-    oneSided ++ both.filter(n =>
-      leafSignature(fs, new Path(from, n)) != leafSignature(fs, new Path(to, n)))
-  }
-
-  /** Identity of a leaf dir's data files: name → (inode | length+mtime). */
-  private def leafSignature(fs: org.apache.hadoop.fs.FileSystem,
-                            leaf: Path): Map[String, Any] = {
-    val local = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    fs.listStatus(leaf).iterator.filter(st => st.isFile &&
-        !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
-      .map { st =>
-        val id: Any =
-          if (local)
-            java.nio.file.Files.readAttributes(
-              java.nio.file.Paths.get(st.getPath.toUri.getPath),
-              classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
-          else (st.getLen, st.getModificationTime)
-        st.getPath.getName -> id
-      }.toMap
-  }
-
-  /** Read a subset of a version dir's hive leaves, keeping the partition
-    * column (`basePath`) and resolving mixed schemas after evolution
-    * (`mergeSchema`). An empty subset folds to an empty relation of the
-    * full schema — no files are opened at runtime.
-    */
-  private def readLeaves(spark: SparkSession, versionPath: String,
-                         leaves: Set[String]): DataFrame = {
-    val reader = spark.read.option("basePath", versionPath)
-      .option("mergeSchema", "true")
-    if (leaves.isEmpty) reader.parquet(versionPath).filter(lit(false))
-    else reader.parquet(leaves.toSeq.sorted.map(n => s"$versionPath/$n"): _*)
+    val mf = ManifestIndex.read(spark, root, versionName(fromVersion))
+    val mt = ManifestIndex.read(spark, root, versionName(toVersion))
+    // the DV reference is part of the identity: a row-delete rewrites no
+    // file, but its leaf must still read as changed or the feed misses
+    // the deletions
+    def sig(m: ManifestIndex.TableManifest) =
+      m.byLeaf.view.mapValues(_.map(e => (e.path, e.size, e.dv)).toSet).toMap
+    val (fb, tb) = (sig(mf), sig(mt))
+    val changed = (fb.keySet ++ tb.keySet).filter(l => fb.get(l) != tb.get(l))
+    // RENAMES and DROPS between the versions are metadata-only: align
+    // the from-side to the to-side's logical names by PHYSICAL identity
+    // in ONE aliasing projection — a fold of withColumnRenamed would
+    // corrupt chained/swapped renames (renaming a into b while another
+    // column still holds b renames BOTH) — and columns the to-side no
+    // longer carries (drops) simply vanish from the projection
+    // the to-side's column universe includes its PARTITION spec: a
+    // repartitionTable between the versions moves a column from
+    // dataSchema into partitionSchema (or back), and aligning against
+    // dataSchema alone silently dropped the moved column from the
+    // from-side projection — every unchanged row in a changed leaf then
+    // diffed as a spurious update pair with a null pre-image for that
+    // column (ADVICE r10, high). Spec columns are physical-identity by
+    // construction (repartitionTable refuses renamed columns), so ONE
+    // physical-name map serves both, and from-side partition columns
+    // route through the same alignment instead of passing raw.
+    val toByPhys = (ManifestIndex.activeSchema(mt.dataSchema) ++
+      mt.partitionSchema).map(f => ManifestIndex.physicalName(f) -> f).toMap
+    val fromAligned = ManifestIndex.dataFrame(spark, root, mf, Some(changed))
+      .select(
+        (ManifestIndex.activeSchema(mf.dataSchema) ++ mf.partitionSchema)
+          .flatMap(f =>
+          toByPhys.get(ManifestIndex.physicalName(f)).map { tf =>
+            // a widenColumn between the versions leaves the from-side
+            // narrow; cast UP so the null-safe struct compare sees one
+            // type (lossless — any other mismatch keeps both types and
+            // fails loudly in the diff, as it should)
+            val c = col(s"`${f.name}`")
+            (if (tf.dataType != f.dataType &&
+                 ManifestIndex.isWidening(f.dataType, tf.dataType))
+               c.cast(tf.dataType)
+             else c).as(tf.name)
+          }): _*)
+    diff(fromAligned,
+      ManifestIndex.dataFrame(spark, root, mt, Some(changed)), keys)
   }
 
   /** Full-outer diff of two same-keyed DataFrames; see [[changeFeed]]. */
@@ -3697,11 +3193,7 @@ object Layout {
     */
   def deepClone(spark: SparkSession, root: String, newRoot: String,
                 version: Option[Int] = None): String = graft.util.DmlTimer.timed {
-    require(ManifestIndex.isManifestRoot(spark, root),
-      "deepClone requires a manifest root — hardlink roots already " +
-        "deep-copy via cloneVersion on non-local filesystems")
-    val fs = fsOf(spark, root)
-    require(!fs.exists(new Path(newRoot, CurrentFile)),
+    require(!isVersionedRoot(spark, newRoot),
       s"deepClone: $newRoot is already a versioned root")
     val v = version.getOrElse(currentVersionNumber(spark, root))
     val man = ManifestIndex.read(spark, root, versionName(v))
@@ -3723,113 +3215,61 @@ object Layout {
     resolveCurrent(spark, newRoot)
   }
 
-  /** Zero-copy clone: materialize `version` of `root` as version 0 of a
-    * NEW versioned root — every data file hardlinked (copied off local/
-    * HDFS-like filesystems), no bytes duplicated. The dev-branch shape:
-    * experiment with merges/deletes/compaction on the clone while the
-    * source stays untouched, at metadata cost even for a 100 TB table.
-    * Links mean the clone stays readable after the SOURCE vacuums the
-    * cloned version (the filesystem keeps bytes until the last link
-    * drops) — and vice versa.
+  /** Zero-copy (SHALLOW) clone: materialize `version` of `root` as version
+    * 0 of a NEW versioned root whose manifest entries point (absolutely)
+    * into the source — zero data ops even on object stores. The
+    * dev-branch shape: experiment with merges/deletes/compaction on the
+    * clone while the source stays untouched, at metadata cost even for a
+    * 100 TB table. The bytes stay owned by the SOURCE: vacuuming the
+    * source can invalidate the clone until [[rehomeClone]] (or a
+    * compaction) rewrites the referenced leaves into the clone's own root;
+    * [[deepClone]] is the self-contained copy.
     */
   def cloneVersion(spark: SparkSession, root: String, version: Int,
                    newRoot: String): String = graft.util.DmlTimer.timed {
-    val src = new Path(resolveVersion(spark, root, version))
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v0 = versionName(0)
-    val dst = new Path(newRoot, v0)
-    require(!fs.exists(new Path(newRoot, CurrentFile)),
+    val m = ManifestIndex.read(spark, root, versionName(version))
+    require(!isVersionedRoot(spark, newRoot),
       s"cloneVersion: $newRoot is already a versioned root")
-    if (ManifestIndex.isManifestRoot(spark, root)) {
-      // Manifest clone = a manifest whose entries point (absolutely) into
-      // the source root — zero data ops even on object stores. Unlike the
-      // hardlink clone, the bytes stay owned by the SOURCE: vacuuming the
-      // source can invalidate the clone (shallow-clone semantics; compact
-      // the clone to re-home its data before vacuuming the source).
-      val m = ManifestIndex.read(spark, root, versionName(version))
-      def absolutize(p: String) =
-        if (p.startsWith("/") || p.contains("://")) p else s"$root/$p"
-      val abs = m.copy(entries = m.entries.map(e => e.copy(
-        path = absolutize(e.path),
-        dv = e.dv.map(d => d.copy(path = absolutize(d.path))))))
-      ManifestIndex.writeFormatMarker(spark, newRoot)
-      fs.mkdirs(dst)
-      ManifestIndex.write(spark, newRoot, v0, abs)
-      writePointer(spark, newRoot, v0)
-      return dst.toString
-    }
-    val local = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem] ||
-      fs.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem]
-    def linkTree(from: Path, to: Path): Unit = {
-      fs.mkdirs(to)
-      fs.listStatus(from).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) linkTree(st.getPath, new Path(to, n))
-        else if (!n.startsWith("_") && !n.startsWith(".")) {
-          if (local)
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(new Path(to, n).toUri.getPath),
-              java.nio.file.Paths.get(st.getPath.toUri.getPath))
-          else
-            org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-              new Path(to, n), false, spark.sparkContext.hadoopConfiguration)
-        }
-      }
-    }
-    linkTree(src, dst)
+    def absolutize(p: String) =
+      if (p.startsWith("/") || p.contains("://")) p else s"$root/$p"
+    val abs = m.copy(entries = m.entries.map(e => e.copy(
+      path = absolutize(e.path),
+      dv = e.dv.map(d => d.copy(path = absolutize(d.path))))))
+    val v0 = versionName(0)
+    ManifestIndex.writeFormatMarker(spark, newRoot)
+    fsOf(spark, newRoot).mkdirs(new Path(newRoot, v0))
+    ManifestIndex.write(spark, newRoot, v0, abs)
     writePointer(spark, newRoot, v0)
-    dst.toString
+    s"$newRoot/$v0"
   }
 
   /** Version log of a versioned root (the `DESCRIBE HISTORY` surface):
-    * one row per un-vacuumed version dir with its file count, total
-    * bytes, latest file mtime, and whether `_current` points at it.
-    * Driver-side listing only — O(#versions + #files) metadata, no data
-    * read; built as a LocalRelation so it composes with any query.
+    * one row per retained committed manifest with its file count, total
+    * bytes, commit instant (the manifest's own mtime), whether `_current`
+    * points at it, and the operation that produced it. Manifests AHEAD of
+    * the pointer are in-flight or crashed claims, not history — the ledger
+    * shows no phantom versions (review fix, same boundary as
+    * versionAsOf/vacuum). Driver-side metadata only — O(#versions), no
+    * data read; built as a LocalRelation so it composes with any query.
     */
   def history(spark: SparkSession, root: String): DataFrame = {
     import scala.jdk.CollectionConverters._
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val current = resolveCurrent(spark, root)
-      .substring(root.length).dropWhile(_ == '/')
-    val rows = if (ManifestIndex.isManifestRoot(spark, root)) {
-      // versions ARE manifests: file counts/bytes come from the entries
-      // (no recursive listing), modified = the manifest's own commit mtime.
-      // Manifests AHEAD of the pointer are in-flight or crashed claims,
-      // not history — the ledger must not show phantom versions (review
-      // fix, same boundary as versionAsOf/vacuum)
-      val curN = committedVersionNumber(spark, root)
-      fs.listStatus(rootPath).filter(_.isFile)
-        .filter(_.getPath.getName.matches("v\\d{5}\\.manifest"))
-        .filter(_.getPath.getName.stripSuffix(".manifest")
-          .substring(1).toInt <= curN)
-        .sortBy(_.getPath.getName)
-        .map { st =>
-          val v = st.getPath.getName.stripSuffix(".manifest")
-          val m = ManifestIndex.read(spark, root, v)
-          org.apache.spark.sql.Row(v.substring(1).toInt,
-            m.entries.length.toLong, m.entries.map(_.size).sum,
-            new java.sql.Timestamp(st.getModificationTime), v == current,
-            m.properties.get(ManifestIndex.OperationKey).orNull)
-        }
-    } else fs.listStatus(rootPath).filter(_.isDirectory)
-      .filter(_.getPath.getName.matches("v\\d{5}")).sortBy(_.getPath.getName)
-      .map { v =>
-        var files = 0L; var bytes = 0L; var mtime = 0L
-        val it = fs.listFiles(v.getPath, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getPath.getName
-          if (!n.startsWith("_") && !n.startsWith(".")) {
-            files += 1; bytes += f.getLen
-            mtime = math.max(mtime, f.getModificationTime)
-          }
-        }
-        org.apache.spark.sql.Row(v.getPath.getName.substring(1).toInt,
-          files, bytes, new java.sql.Timestamp(mtime),
-          v.getPath.getName == current,
-          null) // hardlink mode records no per-commit operation
+    val curN = currentVersionNumber(spark, root)
+    val rows = fs.listStatus(rootPath).filter(_.isFile)
+      .filter(_.getPath.getName.matches("v\\d{5}\\.manifest"))
+      .filter(_.getPath.getName.stripSuffix(".manifest")
+        .substring(1).toInt <= curN)
+      .sortBy(_.getPath.getName)
+      .map { st =>
+        val v = st.getPath.getName.stripSuffix(".manifest")
+        val m = ManifestIndex.read(spark, root, v)
+        org.apache.spark.sql.Row(v.substring(1).toInt,
+          m.entries.length.toLong, m.entries.map(_.size).sum,
+          new java.sql.Timestamp(st.getModificationTime),
+          v.substring(1).toInt == curN,
+          m.properties.get(ManifestIndex.OperationKey).orNull)
       }
     spark.createDataFrame(rows.toSeq.asJava,
       org.apache.spark.sql.types.StructType(Seq(
@@ -3847,10 +3287,10 @@ object Layout {
           org.apache.spark.sql.types.StringType, nullable = true))))
   }
 
-  /** Delete all version dirs except the newest `keep` (the live one is
-    * always within the newest `keep` ≥ 1). Run this on a schedule with a
-    * grace period, not inline with the flip — an in-flight reader may still
-    * be scanning an old version.
+  /** Delete all versions except the newest `keep` (the live one is always
+    * within the newest `keep` ≥ 1). Run this on a schedule with a grace
+    * period, not inline with the flip — an in-flight reader may still be
+    * scanning an old version.
     */
   def vacuumVersions(spark: SparkSession, root: String, keep: Int = 2): Int =
     vacuumRetain(spark, root, Retention.Versions(keep))
@@ -3865,38 +3305,17 @@ object Layout {
                         hours: Double): Int =
     vacuumRetain(spark, root, Retention.Hours(hours))
 
+  /** Vacuum under `ret`. A version dir can hold files still REFERENCED by
+    * newer manifests (carry-forward points backward), so vacuuming version
+    * N deletes N's manifest and claim tombstone and then only the files
+    * under `root/vNNNNN/` that no retained manifest references — a carried
+    * data file OUTLIVES its origin version dir, and the dir itself goes
+    * only when emptied.
+    *
+    * @return number of versions vacuumed
+    */
   def vacuumRetain(spark: SparkSession, root: String,
                    ret: Retention): Int = graft.util.DmlTimer.timed {
-    if (ManifestIndex.isManifestRoot(spark, root))
-      return vacuumManifest(spark, root, ret)
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions = fs.listStatus(rootPath).map(_.getPath)
-      .filter(p => p.getName.matches("v\\d{5}"))
-      .sortBy(_.getName)
-    // hardlink-mode commit instants are the version DIRS' mtimes (there
-    // is no manifest file; the dir is written once and never touched)
-    val byName = versions.map(p => p.getName -> p).toMap
-    val (doomedNames, _) = splitByRetention(versions.map(_.getName).toSeq,
-      ret, n => fs.getFileStatus(byName(n)).getModificationTime)
-    doomedNames.foreach { n =>
-      fs.delete(byName(n), true)
-      // sweep the OCC claim tombstone with its version dir
-      fs.delete(new Path(root, s"$n.claim"), false)
-    }
-    doomedNames.length
-  }
-
-  /** Manifest-mode vacuum: a version dir can hold files still REFERENCED by
-    * newer manifests (carry-forward points backward in manifest mode, the
-    * mirror of hardlinks pointing forward), so vacuuming version N deletes
-    * N's manifest and then only the files under `root/vNNNNN/` that no
-    * retained manifest references — a carried data file OUTLIVES its origin
-    * version dir, and the dir itself goes only when emptied. Claim
-    * tombstones sweep with their manifests, as in the hardlink mode.
-    */
-  private def vacuumManifest(spark: SparkSession, root: String,
-                             ret: Retention): Int = {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (doomed, kept) = vacuumSplit(spark, fs, root, ret)
@@ -3965,7 +3384,7 @@ object Layout {
     }
   }
 
-  /** The retention split both [[vacuumManifest]] and [[vacuumPlan]] use:
+  /** The retention split both [[vacuumRetain]] and [[vacuumPlan]] use:
     * only manifests AT OR BEHIND the live pointer participate (a crashed
     * writer's manifest ahead of the pointer is recoverStaleClaims' job —
     * counting it once pushed the LIVE manifest into the doomed set and
@@ -3976,7 +3395,7 @@ object Layout {
   private def vacuumSplit(spark: SparkSession,
                           fs: org.apache.hadoop.fs.FileSystem, root: String,
                           ret: Retention): (Seq[String], Seq[String]) = {
-    val curN = committedVersionNumber(spark, root)
+    val curN = currentVersionNumber(spark, root)
     val versions = fs.listStatus(new Path(root)).map(_.getPath.getName)
       .filter(_.matches("v\\d{5}\\.manifest")).sorted
       .map(_.stripSuffix(".manifest"))
@@ -4039,8 +3458,6 @@ object Layout {
   def vacuumPlan(spark: SparkSession, root: String,
                  ret: Retention): DataFrame = {
     import scala.jdk.CollectionConverters._
-    require(ManifestIndex.isManifestRoot(spark, root),
-      s"vacuumPlan requires a manifest root: $root")
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (doomed, kept) = vacuumSplit(spark, fs, root, ret)
@@ -4111,8 +3528,8 @@ object Layout {
     stale.foreach { st =>
       val version = st.getPath.getName.stripSuffix(".claim")
       fs.delete(new Path(root, version), true) // partial dir, if any
-      // manifest-mode debris: a writer that crashed between manifest
-      // commit and pointer flip leaves an orphaned (or torn .tmp) manifest
+      // a writer that crashed between manifest commit and pointer flip
+      // leaves an orphaned (or torn .tmp) manifest
       fs.delete(ManifestIndex.manifestPath(root, version), false)
       fs.delete(new Path(root, s"$version.manifest.tmp"), false)
       fs.delete(st.getPath, false)

@@ -14,19 +14,18 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.json4s.{JArray, JInt, JLong, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
-/** Manifest-mode storage for [[Layout]]'s versioned roots: a version is a
-  * FILE LIST, not a directory tree.
+/** Storage for [[Layout]]'s versioned roots: a version is a FILE LIST,
+  * not a directory tree.
   *
   * `root/vNNNNN.manifest` records, for version N, the table's data schema,
-  * partition schema, and one (leaf, path, size) entry per data file — where
-  * `path` is either relative to `root` (normal case) or absolute (zero-copy
-  * clones referencing another root). Carry-forward of an untouched
-  * partition is a MANIFEST ENTRY COPY: zero filesystem operations, which is
-  * the shape that works on object stores, where the hardlink mode's
-  * fallback physically copies every untouched leaf of a 100 TB table
-  * (`Layout.carryForward`). Change-feed pruning compares manifests — file
-  * paths are immutable once written, so equal entry sets prove equal bytes
-  * without stat-ing anything.
+  * partition schema (empty for an unpartitioned root, whose entries all
+  * sit in the leaf `""`), table properties, and one (leaf, path, size)
+  * entry per data file — where `path` is either relative to `root`
+  * (normal case) or absolute (zero-copy clones referencing another root).
+  * Carry-forward of an untouched partition is a MANIFEST ENTRY COPY: zero
+  * filesystem operations, on object stores too. Change-feed pruning
+  * compares manifests — file paths are immutable once written, so equal
+  * entry sets prove equal bytes without stat-ing anything.
   *
   * The read path is a custom [[FileIndex]] over the manifest (the
   * Delta/Iceberg integration shape): ONE parquet scan node for the whole
@@ -272,6 +271,11 @@ object ManifestIndex {
     */
   val OperationKey = "commit.operation"
 
+  /** Property-key prefix of the metadata a `Layout.publishVersion` commit
+    * records (`publish.<name>` -> value) — replaced wholesale by every
+    * publish, so a key holds exactly what that version's publish wrote.
+    */
+  val PublishPrefix = "publish."
 
   // ------------------------------------------------------------- file format
 
@@ -326,8 +330,11 @@ object ManifestIndex {
   def read(spark: SparkSession, root: String, version: String): TableManifest = {
     val p = manifestPath(root, version)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no manifest for $version under $root " +
-      "(never committed, or already vacuumed)")
+    // the one check that a root is a table: every reader and writer
+    // resolves its manifest through here
+    require(fs.exists(p), s"$root holds no manifest for $version — not a " +
+      "manifest root, or the version was never committed or is already " +
+      "vacuumed")
     val in = fs.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                finally in.close()
@@ -374,15 +381,9 @@ object ManifestIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Is `root` a manifest-mode versioned root? (Marker written at init —
-    * every Layout writer/reader branches on this, so call sites never
-    * thread a mode flag.)
+  /** Tag the root's format (`_format`, written at init before anything
+    * else) for tools that inspect a root without opening a manifest.
     */
-  def isManifestRoot(spark: SparkSession, root: String): Boolean = {
-    val p = new Path(root, FormatFile)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   def writeFormatMarker(spark: SparkSession, root: String): Unit = {
     val p = new Path(root, FormatFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -476,20 +477,15 @@ object ManifestIndex {
   def setClusterColumns(spark: SparkSession, root: String,
                         cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "setClusterColumns: empty column list")
-    // clustering only steers the MANIFEST write paths — declaring it on a
-    // hardlink root (or a path that is no table at all) would silently do
-    // nothing forever, and skip validation entirely; refuse loudly
-    require(isManifestRoot(spark, root),
-      s"setClusterColumns: $root is not a manifest root — declared " +
-        "clustering steers the manifest write paths only")
     val p = new Path(root, ClusterFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // validate against the newest manifest — same loud-at-declaration
-    // contract as setBloomColumns
+    // contract as setBloomColumns; a path that is no table at all refuses
+    // (the declaration would silently do nothing forever)
     val mf = fs.listStatus(new Path(root)).map(_.getPath.getName)
       .filter(_.matches("v\\d{5}\\.manifest")).sorted.lastOption
       .getOrElse(throw new IllegalArgumentException(
-        s"setClusterColumns: no manifest found under $root"))
+        s"setClusterColumns: $root holds no manifest — not a manifest root"))
     val m = read(spark, root, mf.stripSuffix(".manifest"))
     validateClusterColumns(cols, m.dataSchema, m.partitionSchema)
     val out = fs.create(p, true)
@@ -910,7 +906,7 @@ object ManifestIndex {
   /** Snapshot DataFrame over a manifest (optionally restricted to a leaf
     * subset): one [[HadoopFsRelation]] scan with partition values decoded
     * from leaf names. Output columns = data schema ++ partition schema,
-    * the same shape as a hive-discovered read of the hardlink mode.
+    * the same shape as a hive-discovered read of the leaf dirs.
     *
     * Entries carrying a deletion-vector reference get their deleted
     * positions dropped by ONE broadcast anti-join against the referenced DV

@@ -262,7 +262,10 @@ object StreamingOps {
                           checkpoint: String, emptyAlerts: DataFrame,
                           score: DataFrame => DataFrame): StreamingQuery = {
     val spark = stream.sparkSession
-    if (!graft.sources.ManifestIndex.isManifestRoot(spark, alertRoot))
+    // the pointer, not the `_format` marker: init writes the marker first
+    // and the pointer last, so a first init that died in between left a
+    // marker-only root that must be re-initialized, not appended to
+    if (!graft.sources.Layout.isVersionedRoot(spark, alertRoot))
       graft.sources.Layout.initVersionedManifest(
         emptyAlerts.withColumn("batch_id", lit(0L)), alertRoot,
         Seq("batch_id"))

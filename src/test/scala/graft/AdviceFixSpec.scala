@@ -85,14 +85,13 @@ class AdviceFixSpec extends SparkSpec {
   }
 
   test("startingTimestamp on a non-manifest root fails loudly, not silently") {
-    // hardlink-mode roots have no manifest mtime ledger: versionAsOf
+    // a plain parquet directory has no manifest mtime ledger: versionAsOf
     // cannot answer. Before the fix the broad catch degraded this to
     // snapshot-then-follow and deferred the real error; now the stream
     // fails at start with the manifest-root message
     val base = tmp("tsloud")
     val root = base + "/t"
-    Layout.initVersionedPartitioned(
-      Seq((1L, "a", 10L)).toDF("id", "g", "v"), root, "g")
+    Seq((1L, "a", 10L)).toDF("id", "g", "v").write.parquet(root)
     val e = intercept[Exception] {
       StreamingOps.drainToParquet(
         spark.readStream.format("graft-changes")

@@ -26,10 +26,12 @@ class AnnArtifactSpec extends SparkSpec {
     for (j <- cb.indices; c <- cb(j).indices)
       assert(back(j)(c).sameElements(cb(j)(c)),
         s"centroid ($j, $c) did not roundtrip")
-    val meta = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(vdir, "_ann_index.json")), "UTF-8")
-    assert(meta.contains("\"kind\":\"pq_codebooks\"") &&
-      meta.contains("\"m\":\"3\"") && meta.contains("\"seed\":\"11\""))
+    // the metadata is committed WITH the version it describes: it lives
+    // in that version's manifest
+    assert(vdir.endsWith("/v00000"))
+    def meta(k: String) = graft.sources.Layout.versionMeta(spark, root, 0, k)
+    assert(meta("kind").contains("pq_codebooks") && meta("m").contains("3") &&
+      meta("seed").contains("11"))
     intercept[IllegalArgumentException] {
       AnnIndex.publishCodebooks(spark, freshRoot() + "/bad",
         Array(Array(Array(1.0, 2.0)), Array(Array(1.0))))

@@ -1,10 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sources.Layout
+import graft.sources.{Layout, ManifestIndex}
 
 /** Change data feed between layout versions and schema evolution on merge
   * (round 9: the incremental-consumer leg of the versioned layout).
@@ -25,21 +23,21 @@ class ChangeFeedSpec extends SparkSpec {
     // partitions is not caller placement — projections would be walked
     // through, a filter is not) lands one file per leaf, not 8 x 3 slivers
     val r1 = Files.createTempDirectory("graft_ow_default").toString
-    val v1 = Layout.initVersionedPartitioned(
-      many.repartition(8).filter($"id" >= 0), r1, "part")
+    val v1 = Layout.initVersionedManifest(
+      many.repartition(8).filter($"id" >= 0), r1, Seq("part"))
     (0 to 2).foreach(p => assert(leafFiles(v1, s"part=p$p") == 1))
     // a caller-PLACED frame (plan rooted at the repartition) is respected:
     // the 4 range splits each carry every part value
     val r2 = Files.createTempDirectory("graft_ow_placed").toString
-    val v2 = Layout.initVersionedPartitioned(
-      many.repartitionByRange(4, $"id"), r2, "part")
+    val v2 = Layout.initVersionedManifest(
+      many.repartitionByRange(4, $"id"), r2, Seq("part"))
     (0 to 2).foreach(p => assert(leafFiles(v2, s"part=p$p") > 1))
     // the knob fans a non-placed write out to n salted files per leaf
     spark.conf.set("graft.write.filesPerLeaf", "2")
     try {
       val r3 = Files.createTempDirectory("graft_ow_knob").toString
-      val v3 = Layout.initVersionedPartitioned(
-        many.repartition(8).filter($"id" >= 0), r3, "part")
+      val v3 = Layout.initVersionedManifest(
+        many.repartition(8).filter($"id" >= 0), r3, Seq("part"))
       (0 to 2).foreach(p => assert(leafFiles(v3, s"part=p$p") == 2))
     } finally spark.conf.unset("graft.write.filesPerLeaf")
   }
@@ -49,9 +47,9 @@ class ChangeFeedSpec extends SparkSpec {
     */
   private def history(): String = {
     val root = Files.createTempDirectory("graft_cdf").toString
-    Layout.initVersionedPartitioned(
+    Layout.initVersionedManifest(
       rows((1L, "p1", 10.0), (2L, "p1", 20.0), (3L, "p2", 30.0), (6L, "p3", 60.0)),
-      root, "part")
+      root, Seq("part"))
     Layout.mergeVersionedPartitioned(spark, root,
       rows((2L, "p1", 99.0), (4L, "p1", 40.0)), Seq("id"), "part")
     Layout.deleteVersionedPartitioned(spark, root, col("id") === 3, "part")
@@ -78,18 +76,6 @@ class ChangeFeedSpec extends SparkSpec {
       (3L, 30.0, "p2", "delete")))
   }
 
-  test("changeFeed prunes hardlink-carried leaves by file identity") {
-    val root = history()
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def leaves(a: Int, b: Int) = Layout.changedLeaves(spark, fs,
-      new Path(Layout.resolveVersion(spark, root, a)),
-      new Path(Layout.resolveVersion(spark, root, b)))
-    // v0->v1 touched only p1; p2 and p3 were hardlinked forward
-    assert(leaves(0, 1) == Set("part=p1"))
-    assert(leaves(1, 2) == Set("part=p2"))
-    assert(leaves(0, 2) == Set("part=p1", "part=p2"))
-  }
-
   test("applying the feed to the old snapshot reproduces the new one") {
     val root = history()
     val cdf = Layout.changeFeed(spark, root, 0, 2, Seq("id"))
@@ -107,9 +93,10 @@ class ChangeFeedSpec extends SparkSpec {
   }
 
   test("changeFeed on an unpartitioned versioned root") {
-    val root = Files.createTempDirectory("graft_cdf_flat").toString
-    Layout.initVersioned(rows((1L, "a", 1.0), (2L, "b", 2.0)), root)
-    Layout.mergeVersioned(spark, root, rows((2L, "b", 5.0), (3L, "c", 3.0)), Seq("id"))
+    val root = Files.createTempDirectory("graft_cdf_flat").toString + "/t"
+    Layout.initVersionedManifest(rows((1L, "a", 1.0), (2L, "b", 2.0)), root, Nil)
+    Layout.mergeVersionedPartitioned(spark, root,
+      rows((2L, "b", 5.0), (3L, "c", 3.0)), Seq("id"), Nil)
     assert(feed(root, 0, 1) == Set(
       (3L, 3.0, "c", "insert"),
       (2L, 2.0, "b", "update_pre"),
@@ -118,9 +105,9 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("schema evolution: merge may add columns; carried rows null-fill") {
     val root = Files.createTempDirectory("graft_cdf_evo").toString
-    Layout.initVersionedPartitioned(
-      rows((1L, "p1", 10.0), (3L, "p2", 30.0)), root, "part")
-    // updates add column w; only p1 is rewritten, p2 hardlinks forward
+    Layout.initVersionedManifest(
+      rows((1L, "p1", 10.0), (3L, "p2", 30.0)), root, Seq("part"))
+    // updates add column w; only p1 is rewritten, p2 carries forward
     val up = Seq((2L, "p1", 20.0, "new")).toDF("id", "part", "v", "w")
     Layout.mergeVersionedPartitioned(spark, root, up, Seq("id"), "part")
     val cur = Layout.readCurrent(spark, root)
@@ -138,7 +125,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("schema evolution rejects dropped and retyped columns loudly") {
     val root = Files.createTempDirectory("graft_cdf_evo2").toString
-    Layout.initVersionedPartitioned(rows((1L, "p1", 10.0)), root, "part")
+    Layout.initVersionedManifest(rows((1L, "p1", 10.0)), root, Seq("part"))
     val dropped = Seq((2L, "p1")).toDF("id", "part")
     val ex1 = intercept[IllegalArgumentException] {
       Layout.mergeVersionedPartitioned(spark, root, dropped, Seq("id"), "part")
@@ -151,49 +138,6 @@ class ChangeFeedSpec extends SparkSpec {
     assert(ex2.getMessage.contains("retyped"))
   }
 
-  test("compactVersionedPartitioned heals only fragmented leaves; links the rest") {
-    import java.nio.file.{Files => JFiles, Paths}
-    val root = Files.createTempDirectory("graft_cvp").toString
-    // each merge rewrites the touched leaf whole, and the optimized-write
-    // default is ONE file per leaf per commit — fragmentation is opted
-    // into via the writer's files-per-leaf knob
-    spark.conf.set("graft.write.filesPerLeaf", "4")
-    try {
-      Layout.initVersionedPartitioned(
-        rows((1L, "p1", 1.0), (100L, "p2", 5.0)), root, "part")
-      (2L to 11L).foreach(i => Layout.mergeVersionedPartitioned(spark, root,
-        rows((i, "p1", i.toDouble)), Seq("id"), "part"))
-    } finally spark.conf.unset("graft.write.filesPerLeaf")
-    def leafFiles(v: String, leaf: String) =
-      new java.io.File(s"$v/$leaf").listFiles()
-        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    val before = Layout.resolveCurrent(spark, root)
-    assert(leafFiles(before, "part=p1").length > 1,
-      "merges should leave p1 with multiple tiny files")
-    val (after, rewritten) =
-      Layout.compactVersionedPartitioned(spark, root, targetBytes = 1L << 30)
-    assert(rewritten == 1, "only p1 is fragmented")
-    assert(leafFiles(after, "part=p1").length == 1, "p1 collapses to one file")
-    // p2 carried forward as the SAME inode
-    def inode(f: java.io.File) =
-      JFiles.readAttributes(Paths.get(f.getPath),
-        classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
-    val p2b = leafFiles(before, "part=p2").map(inode).toSet
-    val p2a = leafFiles(after, "part=p2").map(inode).toSet
-    assert(p2a == p2b, "healthy leaf must hardlink forward, not copy")
-    // content identical across the flip; pre-compaction snapshot intact
-    val want = (1L to 11L).map(i => (i, "p1", i.toDouble)).toSet + ((100L, "p2", 5.0))
-    assert(Layout.readCurrent(spark, root)
-      .select($"id", $"part", $"v").as[(Long, String, Double)].collect().toSet == want)
-    assert(spark.read.parquet(before).count() == 12)
-    // the change feed across a pure compaction is EMPTY (files moved,
-    // content didn't) — file-identity pruning sees the rewritten leaf,
-    // the row diff then proves it equal
-    assert(Layout.changeFeed(spark, root, 10, 11, Seq("id")).isEmpty)
-    // and a re-run finds nothing left to do
-    assert(Layout.compactVersionedPartitioned(spark, root, 1L << 30)._2 == 0)
-  }
-
   test("compaction with zOrderCols clusters the rewritten leaf, same content") {
     val root = Files.createTempDirectory("graft_cvpz").toString
     val rnd = new scala.util.Random(7)
@@ -203,7 +147,7 @@ class ChangeFeedSpec extends SparkSpec {
     // then compact with z-ordering on (id, v)
     spark.conf.set("graft.write.filesPerLeaf", "6")
     try {
-      Layout.initVersionedPartitioned(init, root, "part")
+      Layout.initVersionedManifest(init, root, Seq("part"))
       (401L to 404L).foreach(i => Layout.mergeVersionedPartitioned(spark, root,
         Seq((i, "p1", rnd.nextInt(1000).toDouble)).toDF("id", "part", "v"),
         Seq("id"), "part"))
@@ -219,7 +163,7 @@ class ChangeFeedSpec extends SparkSpec {
     // content preserved exactly
     assert(Layout.readCurrent(spark, root)
       .select($"id", $"v").as[(Long, Double)].collect().toSet ==
-      spark.read.parquet(Layout.resolveVersion(spark, root, 4))
+      Layout.readVersion(spark, root, 4)
         .select($"id", $"v").as[(Long, Double)].collect().toSet)
     // clustering held: a small 2-D box query's (id, v) bounds intersect
     // only SOME files' bounding boxes (unclustered writes scatter every
@@ -236,21 +180,11 @@ class ChangeFeedSpec extends SparkSpec {
       s"a corner box should skip at least one clustered file: $boxes")
   }
 
-  test("compactVersioned refuses a partitioned root (layout would be lost)") {
-    val root = Files.createTempDirectory("graft_cvp2").toString
-    Layout.initVersionedPartitioned(rows((1L, "p1", 1.0)), root, "part")
-    val ex = intercept[IllegalArgumentException] {
-      Layout.compactVersioned(spark, root, 1L << 20)
-    }
-    assert(ex.getMessage.contains("compactVersionedPartitioned"))
-  }
-
   test("multi-level partitioning: pruning, change feed and compaction work at depth 2") {
-    import java.nio.file.{Files => JFiles, Paths}
     val root = Files.createTempDirectory("graft_ml").toString
     def rows2(rs: (Long, String, String, Double)*) =
       rs.toDF("id", "day", "region", "v")
-    Layout.initVersionedPartitioned(rows2(
+    Layout.initVersionedManifest(rows2(
       (1L, "d1", "eu", 1.0), (2L, "d1", "us", 2.0),
       (3L, "d2", "eu", 3.0), (4L, "d2", "us", 4.0)),
       root, Seq("day", "region"))
@@ -258,23 +192,18 @@ class ChangeFeedSpec extends SparkSpec {
     Layout.mergeVersionedPartitioned(spark, root,
       rows2((2L, "d1", "us", 99.0), (5L, "d1", "us", 5.0)),
       Seq("id"), Seq("day", "region"))
-    val v0 = Layout.resolveVersion(spark, root, 0)
-    val v1 = Layout.resolveVersion(spark, root, 1)
-    def inodes(v: String, leaf: String) =
-      new java.io.File(s"$v/$leaf").listFiles()
-        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .map(f => JFiles.readAttributes(Paths.get(f.getPath),
-          classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()).toSet
-    // untouched deep leaves carried forward as the SAME inodes
+    def files(v: Int, leaf: String) =
+      ManifestIndex.read(spark, root, f"v$v%05d").byLeaf(leaf).map(_.path).toSet
+    // untouched deep leaves carried forward as the SAME files
     for (leaf <- Seq("day=d1/region=eu", "day=d2/region=eu", "day=d2/region=us"))
-      assert(inodes(v1, leaf) == inodes(v0, leaf), s"$leaf must hardlink")
-    assert(inodes(v1, "day=d1/region=us") != inodes(v0, "day=d1/region=us"))
+      assert(files(1, leaf) == files(0, leaf), s"$leaf must carry forward")
+    assert(files(1, "day=d1/region=us") != files(0, "day=d1/region=us"))
     // change feed prunes to exactly the touched deep leaf
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Layout.changedLeaves(spark, fs, new Path(v0), new Path(v1)) ==
-      Set("day=d1/region=us"))
-    assert(Layout.changeFeed(spark, root, 0, 1, Seq("id"))
-      .select($"id", $"_change_type").as[(Long, String)].collect().toSet ==
+    val feed = Layout.changeFeed(spark, root, 0, 1, Seq("id"))
+    assert(feed.inputFiles.nonEmpty &&
+      feed.inputFiles.forall(_.contains("day=d1/region=us")),
+      feed.inputFiles.mkString(","))
+    assert(feed.select($"id", $"_change_type").as[(Long, String)].collect().toSet ==
       Set((2L, "update_pre"), (2L, "update_post"), (5L, "insert")))
     // delete pruned by a partition-column predicate
     Layout.deleteVersionedPartitioned(spark, root,
@@ -297,7 +226,7 @@ class ChangeFeedSpec extends SparkSpec {
 
   test("optimistic concurrency: a claimed next version rejects the stale writer") {
     val root = Files.createTempDirectory("graft_occ").toString
-    Layout.initVersionedPartitioned(rows((1L, "p1", 1.0)), root, "part")
+    Layout.initVersionedManifest(rows((1L, "p1", 1.0)), root, Seq("part"))
     // another writer has claimed v00001 (crashed mid-commit, or is ahead)
     new java.io.File(root, "v00001.claim").createNewFile()
     intercept[java.util.ConcurrentModificationException] {
@@ -315,60 +244,6 @@ class ChangeFeedSpec extends SparkSpec {
     // the committed v1's claim is a tombstone — recovery must NOT touch it
     assert(Layout.recoverStaleClaims(spark, root, 0L) == 0)
     assert(new java.io.File(root, "v00001.claim").exists())
-  }
-
-  test("optimistic concurrency: racing writers never lose an update") {
-    val root = Files.createTempDirectory("graft_occ2").toString
-    Layout.initVersionedPartitioned(rows((1L, "p1", 1.0)), root, "part")
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val results = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    val threads = Seq(10L, 20L).map { id =>
-      new Thread(() => {
-        barrier.await()
-        try {
-          Layout.mergeVersionedPartitioned(spark, root,
-            rows((id, "p1", id.toDouble)), Seq("id"), "part")
-          results.put(id, "ok")
-        } catch {
-          case _: java.util.ConcurrentModificationException =>
-            results.put(id, "rejected")
-          case t: Throwable => results.put(id, s"unexpected: $t")
-        }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(120000))
-    assert(results.values().stream().allMatch(v => v == "ok" || v == "rejected"),
-      s"only clean outcomes allowed: $results")
-    val got = Layout.readCurrent(spark, root)
-      .select($"id").as[Long].collect().toSet
-    // every merge that REPORTED success must be present (no lost update)
-    Seq(10L, 20L).filter(id => results.get(id) == "ok").foreach(id =>
-      assert(got.contains(id), s"merge $id reported ok but its row is missing"))
-    assert(results.values().stream().anyMatch(v => v == "ok"),
-      "at least one writer must commit")
-  }
-
-  test("withCommitRetry: racing writers BOTH commit, serialized, no lost update") {
-    val root = Files.createTempDirectory("graft_occ3").toString
-    Layout.initVersionedPartitioned(rows((1L, "p1", 1.0)), root, "part")
-    val barrier = new java.util.concurrent.CyclicBarrier(3)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = Seq(10L, 20L, 30L).map { id =>
-      new Thread(() => {
-        barrier.await()
-        try Layout.withCommitRetry(maxAttempts = 10) {
-          Layout.mergeVersionedPartitioned(spark, root,
-            rows((id, "p1", id.toDouble)), Seq("id"), "part")
-        } catch { case t: Throwable => failures.add(t) }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(180000))
-    assert(failures.isEmpty, s"every retried writer must commit: $failures")
-    // all three rows present — serialized commits, no lost update
-    val got = Layout.readCurrent(spark, root).select($"id").as[Long].collect().toSet
-    assert(got == Set(1L, 10L, 20L, 30L))
-    // history is a clean chain: v0 + one version per committed merge
-    assert(Layout.history(spark, root).count() == 4)
   }
 
   test("withCommitRetry rethrows after maxAttempts and passes other errors through") {
@@ -392,34 +267,26 @@ class ChangeFeedSpec extends SparkSpec {
   }
 
   test("cloneVersion: zero-copy branch, independent history, vacuum-proof") {
-    import java.nio.file.{Files => JFiles, Paths}
     val root = history() // 3 versions
     val branch = Files.createTempDirectory("graft_clone").toString + "/b"
     Layout.cloneVersion(spark, root, 1, branch)
     def state(r: String) = Layout.readCurrent(spark, r)
       .select($"id", $"v").as[(Long, Double)].collect().toSet
-    // the clone IS v1's content, as the new root's v0, byte-shared
+    // the clone IS v1's content, as the new root's v0, byte-shared: its
+    // entries name exactly the source's files
     val v1 = Set((1L, 10.0), (2L, 99.0), (4L, 40.0), (3L, 30.0), (6L, 60.0))
     assert(state(branch) == v1)
-    def inodes(dir: String): Set[Any] = {
-      val out = scala.collection.mutable.Set[Any]()
-      def rec(f: java.io.File): Unit = f.listFiles().foreach { c =>
-        if (c.isDirectory) rec(c)
-        else if (!c.getName.startsWith("_") && !c.getName.startsWith("."))
-          out += JFiles.readAttributes(Paths.get(c.getPath),
-            classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
-      }
-      rec(new java.io.File(dir)); out.toSet
-    }
-    assert(inodes(Layout.resolveCurrent(spark, branch)) ==
-      inodes(Layout.resolveVersion(spark, root, 1)), "clone must be hardlinks")
+    assert(ManifestIndex.read(spark, branch, "v00000").entries.map(_.path).toSet ==
+      ManifestIndex.read(spark, root, "v00001").entries.map(e => s"$root/${e.path}").toSet,
+      "clone must reference the source's files, not copy them")
     // branch evolves independently of the source
     Layout.mergeVersionedPartitioned(spark, branch,
       rows((7L, "p3", 70.0)), Seq("id"), "part")
     assert(state(branch) == v1 + ((7L, 70.0)))
-    assert(spark.read.parquet(Layout.resolveVersion(spark, root, 1))
-      .count() == 5, "source untouched by branch merge")
-    // source vacuums the cloned version; the branch keeps its bytes
+    assert(Layout.readVersion(spark, root, 1).count() == 5,
+      "source untouched by branch merge")
+    // re-homed, the branch survives the source vacuuming the cloned version
+    Layout.rehomeClone(spark, branch)
     Layout.vacuumVersions(spark, root, keep = 1)
     assert(state(branch) == v1 + ((7L, 70.0)))
     // refusing to clone ONTO an existing root

@@ -129,10 +129,9 @@ class EdgeCaseSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val prints = Multimodal.phashes(Multimodal.fromDocuments(boundary))
     assert(prints.select($"asset_id").as[Long].collect().toSet == Set(1L))
-    // copyInto demands a manifest root, loudly
-    val hl = java.nio.file.Files.createTempDirectory("graft_edge_hl").toString
-    Layout.initVersionedPartitioned(
-      Seq((1L, "p", 1.0)).toDF("id", "part", "v"), hl, "part")
+    // copyInto demands a manifest root, loudly: a plain parquet dir is none
+    val hl = java.nio.file.Files.createTempDirectory("graft_edge_hl").toString + "/t"
+    Seq((1L, "p", 1.0)).toDF("id", "part", "v").write.parquet(hl)
     val e = intercept[IllegalArgumentException] {
       Layout.copyInto(spark, hl, "/nowhere") }
     assert(e.getMessage.contains("manifest root"))

@@ -29,7 +29,7 @@ class IncrementalSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_ivm").toString
     def rows(rs: (Long, String, Long)*) = rs.toDF("id", "g", "v")
     val init = (1L to 40L).map(i => (i, s"g${i % 5}", rnd.nextInt(100).toLong))
-    Layout.initVersionedPartitioned(rows(init: _*), root, "g")
+    Layout.initVersionedManifest(rows(init: _*), root, Seq("g"))
 
     var state = Incremental.materialize(
       Layout.readVersion(spark, root, 0), keys, sums)
@@ -191,10 +191,10 @@ class IncrementalSpec extends SparkSpec {
     val (fRoot, dRoot, vRoot) = (s"$tmp/f", s"$tmp/d", s"$tmp/v")
     def facts(rs: (Long, Long, Long)*) = rs.toDF("id", "ck", "fv")
     def dims(rs: (Long, String, Long)*) = rs.toDF("ck", "g", "dv")
-    Layout.initVersionedPartitioned(
-      facts((1L to 30L).map(i => (i, 1L + i % 6, i * 10)): _*), fRoot, "ck")
-    Layout.initVersionedPartitioned(
-      dims((1L to 8L).map(k => (k, s"g${k % 3}", k * 100)): _*), dRoot, "g")
+    Layout.initVersionedManifest(
+      facts((1L to 30L).map(i => (i, 1L + i % 6, i * 10)): _*), fRoot, Seq("ck"))
+    Layout.initVersionedManifest(
+      dims((1L to 8L).map(k => (k, s"g${k % 3}", k * 100)): _*), dRoot, Seq("g"))
     Incremental.initFollowingJoinView(spark, fRoot, dRoot, vRoot, Seq("ck"))
     (1 to 5).foreach { _ =>
       if (rnd.nextBoolean()) {

@@ -17,7 +17,7 @@ class LayoutPropertySpec extends SparkSpec {
   private val parts = Seq("p0", "p1", "p2")
   private def partOf(id: Long): String = parts((id % 3).toInt)
 
-  /** kind: 0 = merge, 1 = partition-pruned delete (both modes);
+  /** kind: 0 = merge, 1 = partition-pruned delete (every run);
     * 2 = row-level DV delete, 3 = row-level DV update, 4 = DV purge,
     * 5 = row-level DV upsert, 6 = type widening of the id column,
     * 7 = partition-spec evolution (toggle part <-> id), 8 = compaction,
@@ -41,8 +41,7 @@ class LayoutPropertySpec extends SparkSpec {
     * CLUSTER BY toggle on v (r15 — a sidecar write, NO version commit;
     * while declared, EVERY subsequent write front places its images on
     * the z-value, and the property is that placement NEVER changes
-    * content) (manifest
-    * mode only — the merge-on-read writers require it).
+    * content) (full-op runs only).
     * After an evolution the COW writers may refuse (mixed layout) — the
     * model accepts either outcome, because purge/compact can converge the
     * layout as a side effect at any point.
@@ -56,25 +55,24 @@ class LayoutPropertySpec extends SparkSpec {
     vals <- Gen.listOfN(n, Gen.choose(1, 999).map(_.toDouble))
   } yield Op(kind, ids.distinct, vals))
 
-  /** The model property, shared by both storage modes (manifest: round 10).
-    * Versions are read through Layout.readVersion — the only reader that is
-    * correct in BOTH modes (a manifest version dir is not self-contained).
+  /** The model property over the copy-on-write merge/delete pair alone
+    * (`fullOps = false`) or every op kind (round 10 on). Versions are read
+    * through Layout.readVersion (a version dir is not self-contained).
     */
-  private def modelProperty(manifest: Boolean): Prop =
-    Prop.forAll(genOps(if (manifest) 18 else 1)) { ops =>
+  private def modelProperty(fullOps: Boolean): Prop =
+    Prop.forAll(genOps(if (fullOps) 18 else 1)) { ops =>
     val root = Files.createTempDirectory("graft_vprop").toString
     var model = (0L until 12L).map(i => i -> (partOf(i), i.toDouble * 10)).toMap
-    // manifest tables are born with a NARROW id so a random widen op has
+    // full-op tables are born with a NARROW id so a random widen op has
     // something to widen; writers send int ids until the widen fires
     // (the model, like any reader, sees longs either way)
-    var widened = !manifest
+    var widened = !fullOps
     var extraAdded = false // ADD COLUMN fired? (writers must then carry it)
     val base0 = model.toSeq.map { case (id, (p, v)) => (id, p, v) }
       .toDF("id", "part", "v")
-    val base = if (manifest) base0.withColumn("id", col("id").cast("int"))
+    val base = if (fullOps) base0.withColumn("id", col("id").cast("int"))
                else base0
-    if (manifest) Layout.initVersionedManifest(base, root, Seq("part"))
-    else Layout.initVersionedPartitioned(base, root, "part")
+    Layout.initVersionedManifest(base, root, Seq("part"))
     def rowsDf(rows: Seq[(Long, String, Double)]) = {
       val df0 = rows.toDF("id", "part", "v")
       val df = if (widened) df0 else df0.withColumn("id", col("id").cast("int"))
@@ -277,14 +275,14 @@ class LayoutPropertySpec extends SparkSpec {
   test("random merge/delete sequences match the Map model; versions immutable") {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(4).withWorkers(1),
-      modelProperty(manifest = false))
+      modelProperty(fullOps = false))
     assert(res.passed, res.toString)
   }
 
   test("manifest mode: random merge/delete/DV-DML/purge/widen/REPARTITION/compact/APPEND/MAINTAIN/ADD-COLUMN/markers/COPY-INTO/zorder/REPLACE sequences match the Map model") {
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(4).withWorkers(1),
-      modelProperty(manifest = true))
+      modelProperty(fullOps = true))
     assert(res.passed, res.toString)
   }
 }

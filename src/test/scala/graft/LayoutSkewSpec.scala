@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.{Layout, ParquetIO}
+import graft.sources.{Layout, ManifestIndex, ParquetIO}
 import graft.ops.Skew
 
 /** Scale-layout operators: partition pruning, bucketed zero-exchange joins,
@@ -121,21 +121,20 @@ class LayoutSkewSpec extends SparkSpec {
   }
 
   test("versioned compaction: concurrent readers never see a missing or partial dir") {
-    val root = Files.createTempDirectory("graft_vc").toString
+    val root = Files.createTempDirectory("graft_vc").toString + "/t"
     val df = spark.read.parquet(s"${sf()}/orders.parquet")
-    Layout.initVersioned(df.repartition(40), root)
+    Layout.initVersionedManifest(df.repartition(40), root, Nil)
     val expectedRows = df.count()
-    val bytes = new java.io.File(Layout.resolveCurrent(spark, root)).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
+    val bytes = ManifestIndex.read(spark, root, "v00000").entries.map(_.size).sum
     @volatile var stop = false
     @volatile var reads = 0
     @volatile var err: Option[Throwable] = None
     val reader = new Thread(() => {
       // hammer resolve+scan the whole time compactions run: every read must
-      // land on a complete version dir with the full row count
+      // land on a complete version with the full row count
       while (!stop && err.isEmpty) {
         try {
-          val n = spark.read.parquet(Layout.resolveCurrent(spark, root)).count()
+          val n = Layout.readCurrent(spark, root).count()
           if (n != expectedRows)
             err = Some(new AssertionError(s"reader saw $n rows, expected $expectedRows"))
           reads += 1
@@ -143,115 +142,107 @@ class LayoutSkewSpec extends SparkSpec {
       }
     })
     reader.start()
-    try (1 to 3).foreach(_ => Layout.compactVersioned(spark, root, bytes / 3))
+    // three compactions of the one leaf, each still finding it fragmented:
+    // 40 files → ~10 (too many) → 2–3 (too many, or too small) → 1
+    try Seq(bytes / 10, bytes / 3, bytes).foreach(t =>
+      Layout.compactVersionedPartitioned(spark, root, t, maxFiles = 2))
     finally { stop = true; reader.join(30000) }
     assert(err.isEmpty, s"concurrent reader failed: ${err.map(_.toString)}")
     assert(reads > 0, "reader thread never completed a read")
     // the flip landed: live version is the compacted one, content preserved
     assert(Layout.resolveCurrent(spark, root).endsWith("v00003"))
-    val after = spark.read.parquet(Layout.resolveCurrent(spark, root))
+    val after = Layout.readCurrent(spark, root)
     assert(after.count() == expectedRows)
     def dsum(d: org.apache.spark.sql.DataFrame) =
       d.agg(sum($"o_totalprice".cast("decimal(38,4)"))).head().getDecimal(0)
     assert(dsum(after) == dsum(df))
     // vacuum reclaims old versions but keeps the live one
     assert(Layout.vacuumVersions(spark, root, keep = 1) == 3)
-    assert(spark.read.parquet(Layout.resolveCurrent(spark, root)).count() == expectedRows)
+    assert(Layout.readCurrent(spark, root).count() == expectedRows)
   }
 
   test("versioned merge/delete: upsert by key and predicate delete flip snapshots") {
-    val root = Files.createTempDirectory("graft_vm").toString
+    val root = Files.createTempDirectory("graft_vm").toString + "/t"
     val base = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("id", "tag", "v")
-    Layout.initVersioned(base, root)
+    // unpartitioned: the whole table is one leaf
+    Layout.initVersionedManifest(base, root, Nil)
     // upsert: replace id=2, add id=4
     val updates = Seq((2L, "B", 99.0), (4L, "d", 40.0)).toDF("id", "tag", "v")
-    Layout.mergeVersioned(spark, root, updates, Seq("id"))
-    val afterMerge = spark.read.parquet(Layout.resolveCurrent(spark, root))
+    Layout.mergeVersionedPartitioned(spark, root, updates, Seq("id"), Nil)
+    val afterMerge = Layout.readCurrent(spark, root)
       .as[(Long, String, Double)].collect().toSet
     assert(afterMerge == Set((1L, "a", 10.0), (2L, "B", 99.0),
       (3L, "c", 30.0), (4L, "d", 40.0)))
     // delete: GDPR-style predicate removal, old snapshot intact until vacuum
-    Layout.deleteVersioned(spark, root, $"id" === 1L)
-    val afterDelete = spark.read.parquet(Layout.resolveCurrent(spark, root))
+    Layout.deleteVersionedPartitioned(spark, root, $"id" === 1L, Nil)
+    val afterDelete = Layout.readCurrent(spark, root)
       .select("id").as[Long].collect().toSet
     assert(afterDelete == Set(2L, 3L, 4L))
-    assert(spark.read.parquet(s"$root/v00000").count() == 3) // old snapshot intact
+    assert(Layout.readVersion(spark, root, 0).count() == 3) // old snapshot intact
     // vacuum is the real deletion point
     Layout.vacuumVersions(spark, root, keep = 1)
     assert(!new java.io.File(s"$root/v00000").exists())
-    assert(spark.read.parquet(Layout.resolveCurrent(spark, root)).count() == 3)
+    assert(Layout.readCurrent(spark, root).count() == 3)
   }
 
   test("key-pruned versioned merge/delete rewrite only matched partitions") {
-    val root = Files.createTempDirectory("graft_vp").toString
+    val root = Files.createTempDirectory("graft_vp").toString + "/t"
     val base = Seq((1L, "p1", 10.0), (2L, "p1", 20.0), (3L, "p2", 30.0),
       (4L, "p3", 40.0)).toDF("id", "part", "v")
-    val v0 = Layout.initVersionedPartitioned(base, root, "part")
-    def leafFiles(ver: String, leaf: String): Seq[java.io.File] = {
-      val d = new java.io.File(s"$ver/$leaf")
-      if (!d.exists()) Seq.empty
-      else d.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
-    }
-    def inode(f: java.io.File): Any =
-      Files.getAttribute(f.toPath, "unix:ino")
-    def readSet(path: String): Set[(Long, String, Double)] =
-      spark.read.parquet(path).select("id", "part", "v")
+    Layout.initVersionedManifest(base, root, Seq("part"))
+    def entries(v: Int, leaf: String): Seq[ManifestIndex.Entry] =
+      ManifestIndex.read(spark, root, f"v$v%05d").byLeaf.getOrElse(leaf, Nil)
+    def readSet(v: Int): Set[(Long, String, Double)] =
+      Layout.readVersion(spark, root, v).select("id", "part", "v")
         .as[(Long, String, Double)].collect().toSet
 
     // merge touches ONLY p1 (update id=2, insert id=5) plus a brand-new p4
     val updates = Seq((2L, "p1", 99.0), (5L, "p1", 50.0), (6L, "p4", 60.0))
       .toDF("id", "part", "v")
-    val v1 = Layout.mergeVersionedPartitioned(spark, root, updates, Seq("id"), "part")
-    assert(readSet(v1) == Set((1L, "p1", 10.0), (2L, "p1", 99.0), (5L, "p1", 50.0),
+    Layout.mergeVersionedPartitioned(spark, root, updates, Seq("id"), "part")
+    assert(readSet(1) == Set((1L, "p1", 10.0), (2L, "p1", 99.0), (5L, "p1", 50.0),
       (3L, "p2", 30.0), (4L, "p3", 40.0), (6L, "p4", 60.0)))
-    // untouched partitions carried forward byte-identical — in fact the SAME
-    // inode (hardlink), so the carry-forward moved zero data bytes
-    for (leaf <- Seq("part=p2", "part=p3")) {
-      val a = leafFiles(v0, leaf); val b = leafFiles(v1, leaf)
-      assert(a.map(_.getName) == b.map(_.getName), s"$leaf file set changed")
-      a.zip(b).foreach { case (fa, fb) =>
-        assert(java.util.Arrays.equals(Files.readAllBytes(fa.toPath),
-          Files.readAllBytes(fb.toPath)), s"$leaf bytes changed")
-        assert(inode(fa) == inode(fb), s"$leaf was rewritten, not linked")
-      }
-    }
-    // the rewritten partition is NOT linked — it is a fresh file set
-    assert(leafFiles(v0, "part=p1").map(inode).toSet
-      .intersect(leafFiles(v1, "part=p1").map(inode).toSet).isEmpty)
+    // untouched partitions carried forward as the SAME files (identical
+    // manifest entries), so the carry-forward moved zero data bytes
+    for (leaf <- Seq("part=p2", "part=p3"))
+      assert(entries(1, leaf).nonEmpty && entries(1, leaf) == entries(0, leaf),
+        s"$leaf was rewritten, not carried")
+    // the rewritten partition is NOT carried — it is a fresh file set
+    assert(entries(0, "part=p1").map(_.path).toSet
+      .intersect(entries(1, "part=p1").map(_.path).toSet).isEmpty)
     // time travel: v0 is the pre-merge world
-    assert(readSet(Layout.resolveVersion(spark, root, 0)) ==
+    assert(readSet(0) ==
       Set((1L, "p1", 10.0), (2L, "p1", 20.0), (3L, "p2", 30.0), (4L, "p3", 40.0)))
 
     // key-pruned delete: predicate matches only p2 rows
-    val v2 = Layout.deleteVersionedPartitioned(spark, root, $"id" === 3L, "part")
-    assert(readSet(v2) == Set((1L, "p1", 10.0), (2L, "p1", 99.0), (5L, "p1", 50.0),
+    Layout.deleteVersionedPartitioned(spark, root, $"id" === 3L, "part")
+    assert(readSet(2) == Set((1L, "p1", 10.0), (2L, "p1", 99.0), (5L, "p1", 50.0),
       (4L, "p3", 40.0), (6L, "p4", 60.0)))
-    for (leaf <- Seq("part=p1", "part=p3", "part=p4")) {
-      val a = leafFiles(v1, leaf); val b = leafFiles(v2, leaf)
-      assert(a.map(_.getName) == b.map(_.getName), s"$leaf file set changed on delete")
-      a.zip(b).foreach { case (fa, fb) =>
-        assert(inode(fa) == inode(fb), s"$leaf was rewritten by an unrelated delete")
-      }
-    }
-    // vacuum old versions: hardlinked data survives deletion of old dirs
+    for (leaf <- Seq("part=p1", "part=p3", "part=p4"))
+      assert(entries(2, leaf).nonEmpty && entries(2, leaf) == entries(1, leaf),
+        s"$leaf was rewritten by an unrelated delete")
+    // vacuum old versions: carried data survives, rewritten-away data goes
     assert(Layout.vacuumVersions(spark, root, keep = 1) == 2)
-    assert(!new java.io.File(v0).exists())
-    assert(readSet(Layout.resolveCurrent(spark, root)) ==
+    intercept[IllegalArgumentException](Layout.readVersion(spark, root, 0))
+    assert(!new java.io.File(s"$root/v00000/part=p1").exists())
+    assert(readSet(2) ==
       Set((1L, "p1", 10.0), (2L, "p1", 99.0), (5L, "p1", 50.0),
         (4L, "p3", 40.0), (6L, "p4", 60.0)))
   }
 
   test("time travel: resolveVersion reads an old immutable snapshot") {
-    val root = Files.createTempDirectory("graft_tt").toString
-    Layout.initVersioned(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"), root)
-    Layout.mergeVersioned(spark, root,
-      Seq((2L, 99.0)).toDF("id", "v"), Seq("id"))
+    val root = Files.createTempDirectory("graft_tt").toString + "/t"
+    Layout.initVersionedManifest(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"),
+      root, Nil)
+    Layout.mergeVersionedPartitioned(spark, root,
+      Seq((2L, 99.0)).toDF("id", "v"), Seq("id"), Nil)
     // v0 is the pre-merge world; current is post-merge
-    val v0 = spark.read.parquet(Layout.resolveVersion(spark, root, 0))
+    assert(Layout.resolveVersion(spark, root, 0) == s"$root/v00000")
+    val v0 = Layout.readVersion(spark, root, 0)
       .as[(Long, Double)].collect().toSet
     assert(v0 == Set((1L, 10.0), (2L, 20.0)))
-    val cur = spark.read.parquet(Layout.resolveCurrent(spark, root))
+    val cur = Layout.readCurrent(spark, root)
       .as[(Long, Double)].collect().toSet
     assert(cur == Set((1L, 10.0), (2L, 99.0)))
     // vacuumed / never-written versions fail fast, not silently

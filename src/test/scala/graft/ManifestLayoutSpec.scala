@@ -5,10 +5,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.sources.{Layout, ManifestIndex}
 
-/** Manifest-mode versioned layout (round 10): a version is a FILE LIST,
+/** The versioned layout (round 10): a version is a FILE LIST,
   * carry-forward is a manifest entry, change-feed pruning is a manifest
-  * compare — the object-store shape. Same partitioned API as the hardlink
-  * mode; every operation here runs through the auto-detected dispatch.
+  * compare — the object-store shape. Publish roots (one manifest commit
+  * per snapshot, empty partition spec) ride the same format.
   */
 class ManifestLayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -170,6 +170,15 @@ class ManifestLayoutSpec extends SparkSpec {
     // p2 carried as an entry, still pointing at its original file
     assert(after.byLeaf("part=p2") == before.byLeaf("part=p2"))
     assert(state(root) == (1L to 11L).map(i => (i, "p1", i.toDouble)).toSet + ((100L, "p2", 5.0)))
+    // the pre-compaction snapshot is intact
+    assert(Layout.readVersion(spark, root, 10).count() == 12)
+    // the change feed across a pure compaction is EMPTY (files moved,
+    // content didn't) — manifest compare sees the rewritten leaf, the row
+    // diff then proves it equal
+    assert(Layout.changeFeed(spark, root, 10, 11, Seq("id")).isEmpty)
+    // and a re-run finds nothing left to do
+    assert(Layout.compactVersionedPartitioned(spark, root,
+      targetBytes = 64L * 1024 * 1024, maxFiles = 4)._2 == 0)
   }
 
   test("vacuum: a manifest-referenced file OUTLIVES its origin version dir") {
@@ -214,38 +223,55 @@ class ManifestLayoutSpec extends SparkSpec {
   }
 
   test("OCC: manifest commits race safely under withCommitRetry") {
-    val root = Files.createTempDirectory("graft_man_occ").toString
-    Layout.initVersionedManifest(rows((1L, "p1", 1.0)), root, Seq("part"))
-    val barrier = new java.util.concurrent.CyclicBarrier(2)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = Seq(10L, 20L).map { id =>
-      new Thread(() => {
-        barrier.await()
-        try Layout.withCommitRetry(maxAttempts = 10) {
-          Layout.mergeVersionedPartitioned(spark, root,
+    // three racing writers, with and without withCommitRetry: every outcome
+    // is clean (a commit, or a ConcurrentModificationException for a lost
+    // claim), no reported commit is lost, and history is a clean chain
+    for (retry <- Seq(true, false)) {
+      val root = Files.createTempDirectory("graft_man_occ").toString
+      Layout.initVersionedManifest(rows((1L, "p1", 1.0)), root, Seq("part"))
+      val ids = Seq(10L, 20L, 30L)
+      val barrier = new java.util.concurrent.CyclicBarrier(ids.size)
+      val results = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+      val threads = ids.map { id =>
+        new Thread(() => {
+          barrier.await()
+          def merge() = Layout.mergeVersionedPartitioned(spark, root,
             rows((id, "p1", id.toDouble)), Seq("id"), "part")
-        } catch { case t: Throwable => failures.add(t) }
-      })
+          try {
+            if (retry) Layout.withCommitRetry(maxAttempts = 10)(merge())
+            else merge()
+            results.put(id, "ok")
+          } catch {
+            case _: java.util.ConcurrentModificationException =>
+              results.put(id, "rejected")
+            case t: Throwable => results.put(id, s"unexpected: $t")
+          }
+        })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join(180000))
+      val outcomes = ids.map(id =>
+        id -> Option(results.get(id)).getOrElse("unfinished")).toMap
+      assert(outcomes.values.forall(v => v == "ok" || v == "rejected"),
+        s"retry=$retry: only clean outcomes allowed: $outcomes")
+      if (retry)
+        assert(outcomes.values.forall(_ == "ok"),
+          s"every retried writer must commit: $outcomes")
+      val committed = ids.filter(outcomes(_) == "ok")
+      assert(committed.nonEmpty, s"retry=$retry: no writer committed")
+      // no lost update: every merge that REPORTED success is present
+      assert(state(root).map(_._1) == Set(1L) ++ committed,
+        s"retry=$retry: $outcomes")
+      // history is a clean chain: v0 + one version per committed merge
+      assert(Layout.history(spark, root).select($"version").as[Int]
+        .collect().sorted.toSeq == (0 to committed.size),
+        s"retry=$retry: $outcomes")
     }
-    threads.foreach(_.start()); threads.foreach(_.join(180000))
-    assert(failures.isEmpty, s"$failures")
-    assert(state(root).map(_._1) == Set(1L, 10L, 20L))
-    assert(Layout.history(spark, root).count() == 3)
   }
 
-  test("flat writers reject manifest roots loudly; stale-claim recovery sweeps manifest debris") {
+  test("stale-claim recovery sweeps the debris of a writer that crashed " +
+      "before its pointer flip") {
     val root = Files.createTempDirectory("graft_man_guard").toString
     Layout.initVersionedManifest(rows((1L, "p1", 1.0)), root, Seq("part"))
-    val ex = intercept[IllegalArgumentException] {
-      Layout.mergeVersioned(spark, root, rows((2L, "p1", 2.0)), Seq("id"))
-    }
-    assert(ex.getMessage.contains("MANIFEST"))
-    intercept[IllegalArgumentException] {
-      Layout.deleteVersioned(spark, root, col("id") === 1)
-    }
-    intercept[IllegalArgumentException] {
-      Layout.publishVersion(spark, root, rows((2L, "p1", 2.0)))
-    }
     // simulate a writer that crashed AFTER claiming + committing a manifest
     // but BEFORE the pointer flip: claim + dir + manifest ahead of _current
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -421,5 +447,115 @@ class ManifestLayoutSpec extends SparkSpec {
       Layout.exportFileList(spark, root2, listFile2)
     }
     assert(e2.getMessage.contains("renames"))
+  }
+
+  // ------------------------------------------------------- publish roots
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.select($"id").as[Long].collect().toSet
+
+  private def shape(df: org.apache.spark.sql.DataFrame) =
+    df.schema.map(f => f.name -> f.dataType)
+
+  test("publishVersion: a version's metadata is exactly what its publish " +
+      "wrote; a key a later publish leaves out is absent there") {
+    val root = Files.createTempDirectory("graft_pub_meta").toString + "/t"
+    Layout.publishVersion(spark, root, rows((1L, "p1", 1.0)),
+      Map("a" -> "1", "b" -> "x\ty\"z"))
+    Layout.publishVersion(spark, root, rows((2L, "p1", 2.0)), Map("a" -> "2"))
+    def meta(v: Int, k: String) = Layout.versionMeta(spark, root, v, k)
+    assert(meta(0, "a").contains("1") && meta(0, "b").contains("x\ty\"z"))
+    assert(meta(1, "a").contains("2"))
+    assert(meta(1, "b").isEmpty, "publish metadata must not carry forward")
+    // the rows flipped with the metadata: v1 is exactly the second publish
+    assert(ids(Layout.readCurrent(spark, root)) == Set(2L))
+    // one manifest commit with an empty partition spec, no carried entries
+    val m1 = ManifestIndex.read(spark, root, "v00001")
+    assert(m1.partitionSchema.isEmpty && m1.entries.nonEmpty &&
+      m1.entries.forall(e => e.leaf == "" && e.path.startsWith("v00001/")))
+  }
+
+  test("publishVersion of an empty frame reads back empty with that " +
+      "frame's own schema") {
+    val empty = Seq.empty[(Long, String)].toDF("id", "tag")
+    // after a non-empty publish of a DIFFERENT schema
+    val root = Files.createTempDirectory("graft_pub_empty").toString + "/t"
+    Layout.publishVersion(spark, root, rows((1L, "p1", 1.0)))
+    Layout.publishVersion(spark, root, empty)
+    val back = Layout.readCurrent(spark, root)
+    assert(back.isEmpty && shape(back) == shape(empty), back.schema.simpleString)
+    // and as a fresh root's very first publish
+    val root2 = Files.createTempDirectory("graft_pub_empty2").toString + "/t"
+    Layout.publishVersion(spark, root2, empty)
+    val back2 = Layout.readCurrent(spark, root2)
+    assert(back2.isEmpty && shape(back2) == shape(empty))
+  }
+
+  test("a publish whose manifest landed but whose pointer never flipped " +
+      "leaves readers and the view watermark at the previous version") {
+    import graft.ops.Incremental
+    val base = Files.createTempDirectory("graft_pub_crash").toString
+    val (tbl, view) = (base + "/t", base + "/v")
+    Layout.initVersionedManifest(
+      rows((1L, "p1", 10.0), (2L, "p2", 20.0)), tbl, Seq("part"))
+    Incremental.initFollowingView(spark, tbl, view, Seq("part"), Seq("v"))
+    def viewRows() = Layout.readCurrent(spark, view).collect().toSet
+    val v0Rows = viewRows()
+    Layout.mergeVersionedPartitioned(spark, tbl, rows((3L, "p1", 30.0)),
+      Seq("id"), "part")
+    // a refresh that crashed after writing its manifest (watermark 1),
+    // before the pointer flip: claim + dir + manifest ahead of _current
+    val fs = new Path(view).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m0 = ManifestIndex.read(spark, view, "v00000")
+    fs.createNewFile(new Path(view, "v00001.claim"))
+    fs.mkdirs(new Path(view, "v00001"))
+    ManifestIndex.write(spark, view, "v00001", m0.copy(properties =
+      m0.properties.map { case (k, v) =>
+        k -> (if (k.startsWith(ManifestIndex.PublishPrefix)) "1" else v) }))
+    assert(Layout.currentVersionNumber(spark, view) == 0)
+    assert(viewRows() == v0Rows)
+    assert(Layout.history(spark, view).count() == 1)
+    // recovery clears the debris …
+    Thread.sleep(20)
+    assert(Layout.recoverStaleClaims(spark, view, olderThanMs = 10) == 1)
+    assert(!ManifestIndex.exists(spark, view, "v00001") &&
+      !fs.exists(new Path(view, "v00001")))
+    // … and the watermark was still 0: the refresh applies (0, 1]
+    assert(Incremental.refreshFollowingView(spark, tbl, view, Seq("id"),
+      Seq("part"), Seq("v")) == ((0, 1)))
+    assert(viewRows() == Incremental.materialize(
+      Layout.readCurrent(spark, tbl), Seq("part"), Seq("v")).collect().toSet)
+  }
+
+  test("vacuumVersions on a publish root deletes the replaced files and " +
+      "keeps the live ones") {
+    val root = Files.createTempDirectory("graft_pub_vac").toString + "/t"
+    (1 to 3).foreach(i =>
+      Layout.publishVersion(spark, root, rows((i.toLong, "p1", i.toDouble))))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(v: String) = ManifestIndex.read(spark, root, v).entries.map(_.path)
+    val (old, live) = (files("v00000") ++ files("v00001"), files("v00002"))
+    assert(old.nonEmpty && live.nonEmpty)
+    assert(Layout.vacuumVersions(spark, root, keep = 1) == 2)
+    assert(old.forall(p => !fs.exists(new Path(root, p))), old.mkString(","))
+    assert(live.forall(p => fs.exists(new Path(root, p))), live.mkString(","))
+    assert(!fs.exists(new Path(root, "v00000")) && !fs.exists(new Path(root, "v00001")))
+    assert(ids(Layout.readCurrent(spark, root)) == Set(3L))
+  }
+
+  test("readVersion of an older publish returns that version's rows and " +
+      "schema") {
+    val root = Files.createTempDirectory("graft_pub_tt").toString + "/t"
+    val v0 = rows((1L, "p1", 1.0), (2L, "p2", 2.0))
+    val v1 = Seq((7, "x")).toDF("k", "label")
+    Layout.publishVersion(spark, root, v0)
+    Layout.publishVersion(spark, root, v1)
+    val back0 = Layout.readVersion(spark, root, 0)
+    assert(shape(back0) == shape(v0))
+    assert(back0.as[(Long, String, Double)].collect().toSet ==
+      Set((1L, "p1", 1.0), (2L, "p2", 2.0)))
+    val back1 = Layout.readVersion(spark, root, 1)
+    assert(shape(back1) == shape(v1))
+    assert(back1.as[(Int, String)].collect().toSeq == Seq((7, "x")))
   }
 }

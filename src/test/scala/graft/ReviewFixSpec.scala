@@ -26,15 +26,15 @@ class ReviewFixSpec extends SparkSpec {
     val df = Seq((1L, "p1", Option.empty[Double]), (2L, "p1", Some(9.0)),
       (3L, "p2", Option.empty[Double]), (4L, "p2", Some(1.0)))
       .toDF("id", "part", "x")
-    for (manifest <- Seq(true, false)) {
+    // partitioned, and unpartitioned (one leaf holding every row)
+    for (pcols <- Seq(Seq("part"), Nil)) {
       val root = Files.createTempDirectory("graft_rf_null").toString + "/t"
-      if (manifest) Layout.initVersionedManifest(df, root, Seq("part"))
-      else Layout.initVersionedPartitioned(df, root, "part")
-      Layout.deleteVersionedPartitioned(spark, root, col("x") > 5.0, "part")
+      Layout.initVersionedManifest(df, root, pcols)
+      Layout.deleteVersionedPartitioned(spark, root, col("x") > 5.0, pcols)
       val kept = Layout.readCurrent(spark, root)
         .select("id").as[Long].collect().toSet
       assert(kept == Set(1L, 3L, 4L),
-        s"manifest=$manifest: null-x rows must survive everywhere, got $kept")
+        s"pcols=$pcols: null-x rows must survive everywhere, got $kept")
     }
   }
 
@@ -73,15 +73,14 @@ class ReviewFixSpec extends SparkSpec {
   }
 
   test("no-match DELETE and no-op COMPACT claim no version, both modes") {
-    for (manifest <- Seq(true, false)) {
+    // partitioned, and unpartitioned (one leaf holding every row)
+    for (pcols <- Seq(Seq("part"), Nil)) {
       val root = Files.createTempDirectory("graft_rf_noop").toString + "/t"
-      if (manifest) Layout.initVersionedManifest(
-        rows((1L, "p1", 10.0)), root, Seq("part"))
-      else Layout.initVersionedPartitioned(rows((1L, "p1", 10.0)), root, "part")
+      Layout.initVersionedManifest(rows((1L, "p1", 10.0)), root, pcols)
       val before = Layout.resolveCurrent(spark, root)
       assert(Layout.deleteVersionedPartitioned(spark, root,
-        col("id") === 999L, "part") == before,
-        s"manifest=$manifest: no-match delete must be a no-op")
+        col("id") === 999L, pcols) == before,
+        s"pcols=$pcols: no-match delete must be a no-op")
     }
     val root = manifestRoot("compact")
     val cur = Layout.resolveCurrent(spark, root)

@@ -139,8 +139,8 @@ class StreamingSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_smv_root").toString
     val ckpt = Files.createTempDirectory("graft_smv_ckpt").toString
     def rows(rs: (Long, String, Double)*) = rs.toDF("id", "part", "v")
-    Layout.initVersionedPartitioned(
-      rows((1L, "p1", 10.0), (2L, "p1", 20.0), (3L, "p2", 30.0)), root, "part")
+    Layout.initVersionedManifest(
+      rows((1L, "p1", 10.0), (2L, "p1", 20.0), (3L, "p2", 30.0)), root, Seq("part"))
 
     // drain 1: update id=2, insert id=4 (touches p1 only)
     rows((2L, "p1", 99.0), (4L, "p1", 40.0))
@@ -148,7 +148,7 @@ class StreamingSpec extends SparkSpec {
     val schema = rows((0L, "", 0.0)).schema
     StreamingOps.streamMergeVersioned(
       StreamingOps.fileStream(spark, inDir, schema), root, Seq("id"), "part", ckpt)
-    def state() = spark.read.parquet(Layout.resolveCurrent(spark, root))
+    def state() = Layout.readCurrent(spark, root)
       .select("id", "part", "v").as[(Long, String, Double)].collect().toSet
     assert(state() == Set((1L, "p1", 10.0), (2L, "p1", 99.0), (4L, "p1", 40.0),
       (3L, "p2", 30.0)))
@@ -161,7 +161,7 @@ class StreamingSpec extends SparkSpec {
     assert(state() == Set((1L, "p1", 10.0), (2L, "p1", 99.0), (4L, "p1", 40.0),
       (3L, "p2", 77.0), (5L, "p3", 50.0)))
     // pre-stream snapshot still readable (time travel across stream batches)
-    assert(spark.read.parquet(Layout.resolveVersion(spark, root, 0)).count() == 3)
+    assert(Layout.readVersion(spark, root, 0).count() == 3)
   }
 
   test("streamMergeVersioned auto-detects a MANIFEST root (r10)") {
@@ -179,7 +179,7 @@ class StreamingSpec extends SparkSpec {
     assert(Layout.readCurrent(spark, root)
       .select("id", "part", "v").as[(Long, String, Double)].collect().toSet ==
       Set((1L, "p1", 10.0), (2L, "p1", 99.0), (3L, "p2", 30.0)))
-    // the batch's commit carried p2 as a manifest entry, not a link
+    // the batch's commit carried p2 as a manifest entry
     val m = ManifestIndex.read(spark, root, "v00001")
     assert(m.byLeaf("part=p2").forall(_.path.startsWith("v00000/")))
     assert(m.byLeaf("part=p1").forall(_.path.startsWith("v00001/")))
@@ -538,6 +538,34 @@ class StreamingSpec extends SparkSpec {
       rows(2000 until 2100, i => s"c${i % 4}"), Seq("id"), "k")
     monitor()
     assert(alerts() == after)
+    graft.util.Caches.releaseAll()
+  }
+
+  test("a drift monitor re-initializes an alert root that a failed first " +
+      "init left with only its format marker, and the alerts land") {
+    import graft.sources.{Layout, ManifestIndex}
+    import graft.ops.Drift
+    val root = Files.createTempDirectory("graft_mk_tbl").toString + "/t"
+    val alertRoot = Files.createTempDirectory("graft_mk_al").toString + "/a"
+    val ckpt = Files.createTempDirectory("graft_mk_ck").toString
+    def rows(ids: Range, cat: Int => String) =
+      ids.map(i => (i.toLong, "k", cat(i))).toDF("id", "k", "cat")
+    val refCats = graft.util.Caches.cache(Drift.referenceCategories(
+      rows(0 until 200, i => s"c${i % 4}"), Seq("k"), "cat")).toDF
+    // the monitored snapshot is one NEW category: its first batch alarms
+    Layout.initVersionedManifest(rows(0 until 100, _ => "c9"), root, Seq("k"))
+    // an alert-root init that died after writing its marker, before its
+    // pointer flip
+    ManifestIndex.writeFormatMarker(spark, alertRoot)
+    assert(!Layout.isVersionedRoot(spark, alertRoot))
+    StreamingOps.streamDriftMonitorJs(
+      StreamingOps.readChangeStream(spark, root, Seq("id")),
+      refCats, Seq("k"), "cat", alarmNanos = 100000000L,
+      alertRoot = alertRoot, checkpoint = ckpt)
+    val alerts = Layout.readCurrent(spark, alertRoot)
+      .select($"k", $"jsd_nano").as[(String, Long)].collect().toSeq
+    assert(alerts.size == 1 && alerts.head._1 == "k" &&
+      alerts.head._2 >= 100000000L, s"$alerts")
     graft.util.Caches.releaseAll()
   }
 
