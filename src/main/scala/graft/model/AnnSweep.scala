@@ -79,8 +79,8 @@ object AnnSweep {
     // EXACT inner-product top-k — the labeled ground truth every rung's
     // recall reads against (the metric the quantized scores approximate).
     // Tracked lazy persist: two downstream hit-counts read it, and the
-    // frame is |queries|·k rows (bounded). Lazy, NOT an eager
-    // localCheckpoint: the eager form forced AQE's stage-at-a-time
+    // frame is |queries|·k rows (bounded). Lazy, NOT an eager cut
+    // (Caches.cut): the eager form forced AQE's stage-at-a-time
     // materialization, which ran the sweep's independent subtrees
     // SERIALLY (q282 JobProbe: 36 jobs, 12 of them 1–2-task scoring
     // stages back to back); under one classic job the DAG scheduler
@@ -218,7 +218,7 @@ object AnnSweep {
     // of re-planning the whole sweep DAG under one more operator (q287
     // measured the wrapped form re-serializing the sweep's rung subtrees
     // that evaluate concurrently when the sweep is the action root)
-    sweep.localCheckpoint(true)
+    graft.util.Caches.cut(sweep)
       .filter(col("recall_micro") >= targetRecallMicro)
       .withColumn("total_bytes",
         col("code_bytes") + col("float_rows") * lit(floatRowBytes))

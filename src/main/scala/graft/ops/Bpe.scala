@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Layout
+import graft.util.Caches, Caches.Round
 
 /** Byte-pair-encoding merge-table TRAINING and APPLICATION (Sennrich et
   * al., "Neural Machine Translation of Rare Words with Subword Units",
@@ -141,8 +142,8 @@ object Bpe {
     * most-frequent adjacent symbol pair over the word-frequency table
     * (freq-weighted; ties break (count DESC, left ASC, right ASC)) is
     * recorded and applied. Stops early if no pair remains (every word
-    * fully merged). The per-round state persists and the previous round
-    * unpersists — lineage stays one round deep, the graph-loop
+    * fully merged). Each round's segmentation is cut and the previous
+    * round's released — lineage stays one round deep, the graph-loop
     * discipline.
     *
     * @return (round, left, right, merged, pair_count) — `rounds` rows
@@ -153,20 +154,17 @@ object Bpe {
     val spark = docs.sparkSession
     import spark.implicits._
     require(rounds >= 1, "trainMerges: rounds must be ≥ 1")
-    // localCheckpoint, NOT persist: applyMerge's plan references its
+    // a cut, NOT a persist: applyMerge's plan references its
     // input ~4 times (explode, taken, consumed, rebuild), so an
     // un-truncated LOGICAL plan grows ~4× per round and the OPTIMIZER —
     // not execution — goes exponential (measured 56 s for 6 rounds with
     // persist-only vs ~2 s checkpointed, on a 31-word vocabulary). The
-    // checkpoint also cuts the corpus tokenize out of every later round.
-    var seg = wordCounts(docs, textCol, cjkCharSplit)
-      .withColumn("syms", charSyms(col("word"), eow))
-      .localCheckpoint(true)
+    // cut also takes the corpus tokenize out of every later round.
+    val seg0 = Caches.cut(wordCounts(docs, textCol, cjkCharSplit)
+      .withColumn("syms", charSyms(col("word"), eow)))
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, String, Long)]
-    var r = 1
-    var dry = false
-    while (r <= rounds && !dry) {
+    Caches.iterate(seg0, rounds) { (seg, r) =>
       val pairs = seg.select(col("freq"),
           slice(col("syms"), lit(1), size(col("syms")) - 1).as("__l"),
           slice(col("syms"), lit(2), size(col("syms")) - 1).as("__r"))
@@ -178,14 +176,13 @@ object Bpe {
         .agg(sum(col("freq")).as("c"))
         .orderBy(col("c").desc, col("a"), col("b"))
         .limit(1).collect()
-      if (best.isEmpty) dry = true
+      if (best.isEmpty) Round(seg, fixpoint = true)
       else {
         val a = best(0).getString(0)
         val b = best(0).getString(1)
         val c = best(0).getLong(2)
         out += ((r.toLong, a, b, a + b, c))
-        seg = applyMerge(seg, Seq("word"), a, b).localCheckpoint(true)
-        r += 1
+        Round(Caches.cut(applyMerge(seg, Seq("word"), a, b)))
       }
     }
     out.toSeq.toDF("round", "lhs", "rhs", "merged", "pair_count")
@@ -563,8 +560,8 @@ object Bpe {
     * paying). The corpus is touched once ([[wordCounts]]); everything
     * after runs at vocabulary grain. The rank/cumsum window is global-
     * ordered (one partition) by construction — measured 0.4–0.5 s warm at
-    * the 200k-symbol production shape ([[VocabWindowProbe]], SCALE.md
-    * §r19), so the serialization is bounded; the grand total rides a
+    * the 200k-symbol production shape (receipt in OPTIMIZATION_r19.md,
+    * SCALE.md §r19), so the serialization is bounded; the grand total rides a
     * broadcast 1-row aggregate instead of a second whole-frame window.
     */
   def vocabCoverage(docs: DataFrame, textCol: String,

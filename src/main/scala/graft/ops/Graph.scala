@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.util.Caches, Caches.Round
 
 /** Graph analytics over edge tables — the diagnostics a dedup/link graph
   * needs beyond [[MinHashDedup.dupGroups]]' connected components.
@@ -40,19 +41,7 @@ object Graph {
   def pageRank(edges: DataFrame, iters: Int,
                damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "pageRank: at least one iteration")
-    val dec = DecimalType(38, 12)
-    // the loop re-reads these every round — pin them once or the edge
-    // derivation (often a join+distinct) re-executes per iteration. The
-    // edge cache is PRE-PARTITIONED on the per-round join key: a cached
-    // InMemoryRelation reports its outputPartitioning, so every round's
-    // ranks⋈edges join reuses it instead of re-exchanging the edge table
-    // (r17 graph-loop pass: −22% in-suite on q154, hashes unchanged)
-    val e = graft.util.Caches.cache(
-      edges.select(col("src"), col("dst")).repartition(col("src")))
-    // deg rides the NODE TABLE (and from it the rank state) as a carried
-    // column — the old per-round ranks⋈outdeg join is gone (same pass)
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
+    val (e, outdeg) = walkEdges(edges)
     val nodes = graft.util.Caches.cache(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .join(outdeg, Seq("node"), "left"))
@@ -60,34 +49,10 @@ object Graph {
     // in by cross-joining a single row (broadcast by size) keeps it
     // in-plan — no driver collect
     val nRow = nodes.agg(count(lit(1)).as("n"))
-    var ranks = nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), col("deg"), (lit(1.0) / col("n")).as("rank"))
-    for (_ <- 0 until iters) {
-      // dangling nodes donate their whole rank to the uniform pool
-      val dangling = ranks.filter(col("deg").isNull)
-        .agg(coalesce(sum(col("rank").cast(dec)), lit(0).cast(dec))
-          .as("dangle"))
-      val contribs = ranks.filter(col("deg").isNotNull)
-        .join(e, ranks("node") === e("src"))
-        .select(col("dst").as("node"),
-          (col("rank") / col("deg")).cast(dec).as("c"))
-        .groupBy(col("node"))
-        .agg(sum(col("c")).as("in_mass"))
-      ranks = nodes
-        .join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(nRow))
-        .crossJoin(broadcast(dangling))
-        .select(col("node"), col("deg"),
-          ((lit(1.0) - lit(damping)) / col("n") +
-            lit(damping) *
-              (coalesce(col("in_mass"), lit(0).cast(dec)).cast("double") +
-                col("dangle").cast("double") / col("n"))).as("rank"))
-        // lineage CUT per round — the iterated plan would otherwise grow
-        // ~2× per iteration (the dupGroups lesson at MinHashDedup.scala:110;
-        // swap for checkpoint() against a fault-tolerant dir on a cluster)
-        .localCheckpoint(true)
-    }
-    ranks.select(col("node"), round(col("rank"), 10).as("rank"))
+    walk(e, nodes, Seq(nRow), nodes.crossJoin(broadcast(nRow))
+      .select(col("node"), col("deg"), (lit(1.0) / col("n")).as("rank")),
+      iters, damping, (lit(1.0) - lit(damping)) / col("n"),
+      col("dangle").cast("double") / col("n"))
   }
 
   /** PERSONALIZED PageRank (the random walk with restart to a SEED SET):
@@ -114,12 +79,7 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
                            damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "personalizedPageRank: at least one iteration")
-    val dec = DecimalType(38, 12)
-    // same r17 graph-loop discipline as [[pageRank]]: edges cached
-    // PRE-PARTITIONED on the per-round join key, deg carried on the
-    // teleport table (one join per round, not two)
-    val e = graft.util.Caches.cache(
-      edges.select(col("src"), col("dst")).repartition(col("src")))
+    val (e, outdeg) = walkEdges(edges)
     val nodes = graft.util.Caches.cache(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     val seedNodes = graft.util.Caches.cache(
@@ -129,8 +89,6 @@ object Graph {
       "personalizedPageRank: no seed appears in the graph — an all-zero " +
         "teleport would rank every node 0")
     val sRow = seedNodes.agg(count(lit(1)).as("s"))
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg"))
     val tele = graft.util.Caches.cache(nodes
       .join(seedNodes.withColumn("__is", lit(1)), Seq("node"), "left")
       .join(outdeg, Seq("node"), "left")
@@ -138,8 +96,35 @@ object Graph {
       .select(col("node"), col("deg"),
         when(col("__is").isNotNull, lit(1.0) / col("s"))
           .otherwise(lit(0.0)).as("t")))
-    var ranks = tele.select(col("node"), col("deg"), col("t").as("rank"))
-    for (_ <- 0 until iters) {
+    walk(e, tele, Nil, tele.select(col("node"), col("deg"), col("t").as("rank")),
+      iters, damping, (lit(1.0) - lit(damping)) * col("t"),
+      col("dangle").cast("double") * col("t"))
+  }
+
+  /** The edges a walk re-reads every round, pinned once (or their
+    * derivation, often a join+distinct, re-executes per round) and
+    * PRE-PARTITIONED on the per-round join key: a cached relation reports
+    * its partitioning, so every round's ranks⋈edges join reuses it instead
+    * of re-exchanging the edges (r17 graph-loop pass: −22% in-suite on
+    * q154). Out-degrees ride the node table as a carried column, so a
+    * round joins once, not twice.
+    */
+  private def walkEdges(edges: DataFrame): (DataFrame, DataFrame) = {
+    val e = Caches.cache(
+      edges.select(col("src"), col("dst")).repartition(col("src")))
+    (e, e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
+  }
+
+  /** The damped walk both PageRanks run: per round, dangling nodes pool
+    * their rank (`dangle`), the rest split it over their out-edges `e`, and
+    * each node of `nodes` takes `teleport + damping · (in_mass +
+    * dangleShare)`, both terms read off `nodes` and the one-row `scalars`.
+    */
+  private def walk(e: DataFrame, nodes: DataFrame, scalars: Seq[DataFrame],
+                   init: DataFrame, iters: Int, damping: Double,
+                   teleport: Column, dangleShare: Column): DataFrame = {
+    val dec = DecimalType(38, 12)
+    val ranks = Caches.iterate(init, iters) { (ranks, _) =>
       val dangling = ranks.filter(col("deg").isNull)
         .agg(coalesce(sum(col("rank").cast(dec)), lit(0).cast(dec))
           .as("dangle"))
@@ -149,15 +134,13 @@ object Graph {
           (col("rank") / col("deg")).cast(dec).as("c"))
         .groupBy(col("node"))
         .agg(sum(col("c")).as("in_mass"))
-      ranks = tele
-        .join(contribs, Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
+      val joined = scalars.foldLeft(nodes.join(contribs, Seq("node"), "left"))(
+        (f, s) => f.crossJoin(broadcast(s)))
+      Round(Caches.cut(joined.crossJoin(broadcast(dangling))
         .select(col("node"), col("deg"),
-          ((lit(1.0) - lit(damping)) * col("t") +
-            lit(damping) *
-              (coalesce(col("in_mass"), lit(0).cast(dec)).cast("double") +
-                col("dangle").cast("double") * col("t"))).as("rank"))
-        .localCheckpoint(true)
+          (teleport + lit(damping) *
+            (coalesce(col("in_mass"), lit(0).cast(dec)).cast("double") +
+              dangleShare)).as("rank"))))
     }
     ranks.select(col("node"), round(col("rank"), 10).as("rank"))
   }
@@ -239,8 +222,12 @@ object Graph {
     // wedges it spreads). No key over the bound ⇒ the exact pre-guard
     // plan (TriangleSkewSpec pins both the no-op and the salted result).
     val wedgeCap = oriented.sparkSession.conf
-      .getOption("graft.triangles.wedgeRowsPerTask")
-      .map(_.trim.toLong).getOrElse(1L << 26)
+      .getOption("graft.triangles.wedgeRowsPerTask").map { v =>
+        val n = scala.util.Try(v.trim.toLong).toOption
+        require(n.exists(_ > 0), "graft.triangles.wedgeRowsPerTask must " +
+          s"be a positive integer, got '$v'")
+        n.get
+      }.getOrElse(1L << 26)
     val hot = oriented.groupBy(col("lo")).agg(count(lit(1)).as("__n"))
       .filter(col("__n") * col("__n") > wedgeCap)
       .orderBy(col("__n").desc, col("lo"))
@@ -304,10 +291,8 @@ object Graph {
     * Scale shape: each round is two equi-joins of the edge table
     * against the (node-cardinality) survivor set plus one
     * map-side-combined degree count — no wedges, no m^1.5 anywhere;
-    * `localCheckpoint` cuts the iterated lineage per round (the
-    * [[pageRank]] lesson; swap for checkpoint() against a
-    * fault-tolerant dir on a cluster). Survivors only shrink, so round
-    * cost is monotone non-increasing.
+    * each round's survivors are cut ([[Caches.cut]]). Survivors only
+    * shrink, so round cost is monotone non-increasing.
     *
     * @return survivors after `rounds` peels: (node, deg) — deg is the
     *         node's degree within the PREVIOUS round's survivor set,
@@ -320,7 +305,7 @@ object Graph {
     // after the one full degree count, each round only touches edges
     // INCIDENT TO THE JUST-DROPPED NODES — deg(v) −= edges(v, dropped)
     // — instead of recounting every survivor's degree. The edge table
-    // is checkpointed once and never rewritten: an edge whose endpoint
+    // is cut once and never rewritten: an edge whose endpoint
     // dropped in an earlier round can never decrement again (a node
     // drops at most once), and deltas land on the survivor frame, where
     // long-gone nodes simply don't join. Replaces two full-edge
@@ -330,23 +315,16 @@ object Graph {
     // survivor set — identical to the fixed-round recount semantics,
     // and an empty dropped set means every later round is a no-op, so
     // the early exit is bit-identical to running all `rounds`.
-    // localCheckpoint pins the edge set + per-round survivors in
-    // executor storage — on a cluster swap for checkpoint() against a
-    // fault-tolerant dir (the pageRank contract).
-    val full = edges
+    val full = Caches.cut(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val deg0 = full.select(col("a").as("node"))
+      .distinct())
+    val deg0 = Caches.cut(full.select(col("a").as("node"))
       .union(full.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    var s = deg0.filter(col("deg") >= k)
-    var dropped = deg0.filter(col("deg") < k).select("node")
-    var r = 1
-    while (r < rounds && !dropped.isEmpty) {
+      .groupBy("node").agg(count(lit(1)).as("deg")))
+    Caches.iterate(deg0, rounds - 1) { (degs, _) =>
+      val dropped = degs.filter(col("deg") < k).select("node")
       // SHUFFLE_HASH on the dropped side: strategy fixed regardless of
       // size estimates (a bare filter's selectivity guess misplanned
       // this join into per-round edge sorts), and scale-robust — the
@@ -359,15 +337,12 @@ object Graph {
           .join(dropped.select(col("node").as("b")).hint("shuffle_hash"), "b")
           .select(col("a").as("node")))
         .groupBy("node").agg(count(lit(1)).as("minus"))
-      val updated = s.join(delta, Seq("node"), "left")
+      if (dropped.isEmpty) Round(degs, fixpoint = true)
+      else Round(Caches.cut(degs.filter(col("deg") >= k)
+        .join(delta, Seq("node"), "left")
         .select(col("node"),
-          (col("deg") - coalesce(col("minus"), lit(0L))).as("deg"))
-        .localCheckpoint(true)
-      s = updated.filter(col("deg") >= k)
-      dropped = updated.filter(col("deg") < k).select("node")
-      r += 1
-    }
-    s
+          (col("deg") - coalesce(col("minus"), lit(0L))).as("deg"))))
+    }.filter(col("deg") >= k)
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge set:
@@ -388,8 +363,7 @@ object Graph {
     * Scale shape: per half-step, one edge join + a decimal-accumulated
     * hash aggregate at node grain + a one-row broadcast norm — the
     * [[pageRank]] cost model exactly; fixed `iters` bounds the rounds
-    * and the per-round `localCheckpoint` cuts lineage (swap for
-    * `checkpoint` on a cluster).
+    * and each half-step's scores are cut ([[Caches.cut]]).
     *
     * @return one row per node: (node, hub, auth), each column L1-summing
     *         to ~1 over the graph
@@ -410,8 +384,8 @@ object Graph {
       .union(eBySrc.select(col("dst").as("node"))).distinct())
     // initial hub mass 1 per node — the first normalization washes the
     // scale out, so no N is needed anywhere
-    var hub = nodes.select(col("node"), lit(1.0).as("hub"))
-    var auth = nodes.select(col("node"), lit(0.0).as("auth"))
+    val hub0 = nodes.select(col("node"), lit(1.0).as("hub"))
+    val auth0 = nodes.select(col("node"), lit(0.0).as("auth"))
     def half(scores: DataFrame, scoreCol: String, inCol: String,
              outCol: String, outName: String): DataFrame = {
       val e = if (inCol == "src") eBySrc else eByDst
@@ -420,31 +394,28 @@ object Graph {
       // aggregate (the whole half-step's work, measured ~2× the loop cost
       // at sf0.1; r18 perf). A TRACKED lazy persist materializes the
       // node-grain sums once for both consumers AND releases the blocks
-      // via Caches.releaseAll — the r18 eager localCheckpoints pinned two
-      // never-released ~|nodes|-row RDDs per iteration for the session's
-      // lifetime (ADVICE r18).
+      // via Caches.releaseAll.
       val raw = graft.util.Caches.cache(
         e.join(scores, e(inCol) === scores("node"))
           .select(col(outCol).as("node"), col(scoreCol).cast(dec).as("c"))
           .groupBy(col("node")).agg(sum(col("c")).as("raw")))
       val tot = raw.agg(sum(col("raw")).as("tot"))
-      nodes.join(raw, Seq("node"), "left")
+      // lineage cut per HALF-step: the auth frame feeds both the next
+      // hub half AND the final output, so an uncut half re-executes its
+      // join+agg at every consumer — measured 6.0 s (per-half) vs 8.6 s
+      // (per-round) at sf0.1; eager materialization is the cheaper side
+      // of that trade at every scale where the node table fits storage
+      // memory
+      Caches.cut(nodes.join(raw, Seq("node"), "left")
         .crossJoin(broadcast(tot))
         .select(col("node"),
           when(col("tot").isNull || col("tot") === 0, lit(0.0))
             .otherwise(coalesce(col("raw"), lit(0).cast(dec)).cast("double") /
-              col("tot").cast("double")).as(outName))
-        // lineage cut per HALF-step: the auth frame feeds both the next
-        // hub half AND the final output, so an uncheckpointed half
-        // re-executes its join+agg at every consumer — measured 6.0 s
-        // (per-half) vs 8.6 s (per-round) at sf0.1; eager materialization
-        // is the cheaper side of that trade at every scale where the
-        // node table fits storage memory
-        .localCheckpoint(true)
+              col("tot").cast("double")).as(outName)))
     }
-    for (_ <- 0 until iters) {
-      auth = half(hub, "hub", "src", "dst", "auth")
-      hub = half(auth, "auth", "dst", "src", "hub")
+    val (hub, auth) = Caches.iterate((hub0, auth0), iters) { case ((h, _), _) =>
+      val a = half(h, "hub", "src", "dst", "auth")
+      Round((half(a, "auth", "dst", "src", "hub"), a))
     }
     hub.join(auth, Seq("node"))
       .select(col("node"), round(col("hub"), 10).as("hub"),
@@ -472,10 +443,9 @@ object Graph {
     * Scale shape: per round, ONE edge-grain join (labels onto both
     * orientations) + one (node, label) count aggregate (map-side
     * combinable) + one argmax window partitioned BY NODE (bounded by
-    * per-node degree — the [[Funnels.sequenceMatch]] class);
-    * `localCheckpoint` cuts the iterated lineage per round (the
-    * [[pageRank]] discipline). Labels-per-round state is one row per
-    * node, never corpus-squared.
+    * per-node degree — the [[Funnels.sequenceMatch]] class); each
+    * round's labels are cut ([[Caches.cut]]). Labels-per-round state is
+    * one row per node, never corpus-squared.
     *
     * @param edges (src, dst) — each undirected edge ONCE (orientation
     *              irrelevant; both are expanded internally)
@@ -492,8 +462,8 @@ object Graph {
         .distinct().repartition(col("b"))).toDF
     val nodes = graft.util.Caches.cache(
       e.select(col("a").as("node")).distinct()).toDF
-    var labels = nodes.select(col("node"), col("node").as("label"))
-    for (_ <- 1 to iters) {
+    val labels0 = nodes.select(col("node"), col("node").as("label"))
+    Caches.iterate(labels0, iters) { (labels, _) =>
       val votes = e.join(labels, e("b") === labels("node"))
         .select(col("a").as("node"), col("label"))
         .groupBy(col("node"), col("label"))
@@ -509,11 +479,9 @@ object Graph {
         .agg(min(struct((-col("__c")).as("nc"), col("label").as("l")))
           .as("__m"))
         .select(col("node"), col("__m.l").as("label"))
-      labels = nodes.join(adopted, Seq("node"), "left")
+      Round(Caches.cut(nodes.join(adopted, Seq("node"), "left")
         .select(col("node"),
-          coalesce(col("label"), col("node")).as("label"))
-        .localCheckpoint(true)
+          coalesce(col("label"), col("node")).as("label"))))
     }
-    labels
   }
 }

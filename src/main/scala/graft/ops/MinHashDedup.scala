@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.functions.TextFunctions
+import graft.util.Caches, Caches.Round
 
 /** D5 (north star): MinHash + LSH near-duplicate detection for documents.
   *
@@ -185,40 +187,22 @@ object MinHashDedup {
     * no separate change-detection join. Rounds needed = graph diameter in
     * the worst case (near-dup groups are shallow in practice).
     *
-    * Lineage: every round persists (tracked); every third round
-    * `localCheckpoint`s. A merely-persisted iterative plan GROWS its logical
-    * plan ~2× per round (the classic lineage explosion — it OOMs the driver
-    * on plan strings past ~10 rounds), so lineage must be CUT periodically;
-    * cutting every round, though, pays an extra materialization job per
-    * round, and shallow dedup graphs converge in 2-3 rounds — before the
-    * first cut. On a cluster-scale run swap localCheckpoint for
-    * `checkpoint` against a fault-tolerant dir (localCheckpoint blocks are
-    * lost with an executor).
+    * Lineage: every round persists (tracked) and every third round is cut
+    * ([[graft.util.Caches.cut]]) — cutting every round pays an extra
+    * materialization job per round, and shallow dedup graphs converge in
+    * 2-3 rounds, before the first cut.
     *
     * @return (id, component) — one row per distinct id in `pairs`.
     */
   def dupGroups(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val edgesAll = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    // The pair set is usually FAR smaller than the corpus that produced it
-    // (dups are the exception), but it inherits the corpus's shuffle fan-out
-    // — so every loop round below would schedule dozens of near-empty tasks
-    // per job, and scheduling dominates on shallow graphs (measured ~2.3 s
-    // of a 4.7 s query at sf0.1 for a 300-node graph). Right-size once off
-    // the checkpoint's exact count: ~500k directed edges per partition,
-    // `coalesce` so nothing reshuffles. At 100 TB the count keeps the
-    // fan-out wide; the knob only collapses when the graph actually is tiny.
-    val nEdges = edgesAll.count()
-    val p = math.max(1L, math.min(edgesAll.rdd.getNumPartitions.toLong,
-      nEdges / 500000L + 1L)).toInt
-    val edges = edgesAll.coalesce(p)
+    val (edges, _) = rightSized(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct())
     // The per-round groupBy shuffles are left at the session fan-out: AQE
     // (on by default) coalesces each round's near-empty reduce partitions
     // down to the graph's actual size, and the map side is already `p` tasks
-    // via the coalesce above. Overriding spark.sql.shuffle.partitions here
+    // via the right-sizing above. Overriding spark.sql.shuffle.partitions here
     // would be session-GLOBAL — any query planned concurrently on another
     // thread of the same session would silently compile with graph-sized
     // (possibly 1) shuffle width, exactly the long-lived-session hazard
@@ -231,35 +215,26 @@ object MinHashDedup {
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
     // label(v) = min(v, direct neighbors) to start
-    var labels = graft.util.Caches.cache(
+    val labels0 = Caches.cache(
       edges.select(col("src").as("id"), col("dst").as("lbl"))
         .unionByName(edges.select(col("src").as("id"), col("src").as("lbl")))
-        .groupBy("id").agg(min("lbl").as("lbl"))).toDF
-    var prevSum = checksum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+        .groupBy("id").agg(min("lbl").as("lbl")))
+    // Unconverged labels are not "approximate components", they are WRONG
+    // (a chain deeper than maxIter splits silently), so the loop fails
+    // loudly; deep graphs belong on [[dupGroupsStar]], whose round count
+    // is O(log²) instead of O(diameter).
+    val (labels, _) = Caches.iterate((labels0, checksum(labels0)), maxIter,
+      Some(s"dupGroups did not converge in $maxIter rounds — the pair " +
+        "graph is deeper than min-label propagation can close here; use " +
+        "dupGroupsStar")) { case ((labels, prevSum), round) =>
       val step = labels.unionByName(
           edges.join(labels.select(col("id").as("dst"), col("lbl")), "dst")
             .select(col("src").as("id"), col("lbl")))
         .groupBy("id").agg(min("lbl").as("lbl"))
-      val next =
-        if ((i + 1) % 3 == 0) step.localCheckpoint(true)
-        else graft.util.Caches.cache(step).toDF
+      val next = if (round % 3 == 0) Caches.cut(step) else Caches.cache(step)
       val s = checksum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels.unpersist(false)
-      labels = next
-      i += 1
+      Round((next, s), fixpoint = s.compareTo(prevSum) == 0)
     }
-    // Unconverged labels are not "approximate components", they are WRONG
-    // (a chain deeper than maxIter splits silently). Fail loudly; deep
-    // graphs belong on [[dupGroupsStar]], whose round count is O(log²)
-    // instead of O(diameter).
-    if (!converged) throw new IllegalStateException(
-      s"dupGroups did not converge in $maxIter rounds — the pair graph is " +
-        s"deeper than min-label propagation can close here; use dupGroupsStar")
     // Every round's labels were materialized by its checksum read, so the
     // caller's action is a narrow scan of the cache, shuffling nothing.
     labels.select(col("id"), col("lbl").as("component"))
@@ -294,38 +269,27 @@ object MinHashDedup {
     * (member → component-min), so the mapping is one projection; ids that
     * only ever paired with themselves fold back in via one left join.
     *
-    * Lineage discipline matches [[dupGroups]]: persist each round, cut
-    * with localCheckpoint every third (swap for `checkpoint` on a
-    * cluster).
+    * Lineage is cut every round (see the loop for why).
     */
   def dupGroupsStar(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val allIds = pairs.select(col("id_a").as("id"))
       .unionByName(pairs.select(col("id_b").as("id"))).distinct()
     // canonical undirected edges, self-loops dropped (re-attached at the end)
-    val edgesAll = pairs
+    val (edges0, p) = rightSized(pairs
       .select(greatest(col("id_a"), col("id_b")).as("hi"),
         least(col("id_a"), col("id_b")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(true)
-    // Right-size once, same rationale (and knob) as [[dupGroups]]: a star
-    // round is ~5 shuffle stages, so stage-scheduling overhead dominates
-    // wall on small graphs unless the fan-out matches the data (measured
-    // 10.5 s → 3 s at sf0.1 for the q128 chain graph).
-    val nEdges = edgesAll.count()
-    val p = math.max(1L, math.min(edgesAll.rdd.getNumPartitions.toLong,
-      nEdges / 500000L + 1L)).toInt
-    var edges = edgesAll.coalesce(p).toDF
+      .filter(col("hi") =!= col("lo")).distinct())
 
     def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
         sum(xxhash64(col("hi"), col("lo")).cast(DecimalType(38, 0)))).first()
       (r.getLong(0), if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
     }
-    var prev = checksum(edges)
-    var converged = prev._1 == 0L
-    var i = 0
-    while (!converged && i < maxIter) {
+    val (edges, _) = Caches.iterate((edges0, checksum(edges0)), maxIter,
+        Some(s"dupGroupsStar did not converge in $maxIter rounds")) {
+      // an empty edge set is already the fixpoint
+      case (state @ (_, (0L, _)), _) => Round(state, fixpoint = true)
+      case ((edges, prev), _) =>
       // Every stage below is EXPLICITLY pre-partitioned on its key at the
       // graph-sized width p: cached iterative plans execute without AQE
       // (Spark keeps a cached plan's output partitioning), so leaving the
@@ -364,16 +328,32 @@ object MinHashDedup {
       // round cost grows 2.7 → 8.9 s by round 3; with a per-round cut it
       // stays flat at ~0.9 s). The extra materialization job is tiny next
       // to the plan-compile it avoids.
-      val next = small.localCheckpoint(true)
+      val next = Caches.cut(small)
       val s = checksum(next)
-      converged = s == prev
-      prev = s
-      edges = next
-      i += 1
+      Round((next, s), fixpoint = s == prev)
     }
-    if (!converged) throw new IllegalStateException(
-      s"dupGroupsStar did not converge in $maxIter rounds")
     allIds.join(edges.select(col("hi").as("id"), col("lo")), Seq("id"), "left")
       .select(col("id"), coalesce(col("lo"), col("id")).as("component"))
+  }
+
+  /** Cut a pair graph's edge table once and right-size it. The pair set is
+    * usually FAR smaller than the corpus that produced it (dups are the
+    * exception), but it inherits the corpus's shuffle fan-out — so every
+    * loop round would schedule dozens of near-empty tasks per job, and
+    * scheduling dominates on small graphs (measured at sf0.1: ~2.3 s of a
+    * 4.7 s query for [[dupGroups]]' 300-node graph; 10.5 s → 3 s for
+    * [[dupGroupsStar]]'s q128 chain, ~5 shuffle stages a round). Off the
+    * cut's exact count:
+    * ~500k directed edges per partition, `coalesce` so nothing reshuffles.
+    * At 100 TB the count keeps the fan-out wide.
+    *
+    * @return the coalesced edges and their partition count
+    */
+  private def rightSized(edges: DataFrame): (DataFrame, Int) = {
+    val all = Caches.cut(edges)
+    val n = all.count()
+    val p = math.max(1L, math.min(all.rdd.getNumPartitions.toLong,
+      n / 500000L + 1L)).toInt
+    (all.coalesce(p), p)
   }
 }

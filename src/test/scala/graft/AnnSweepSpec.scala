@@ -84,8 +84,8 @@ class AnnSweepSpec extends SparkSpec {
     }
     // NO cross-codebook recall assertion on purpose: whether trained
     // books beat seeded on a given eval slice is an empirical outcome
-    // (one-hit granularity at this size — the SweepProbe receipt in
-    // SCALE.md shows a refined rung moving BOTH directions), not a law.
+    // (one-hit granularity at this size — the trained-books sweep receipt
+    // in SCALE.md shows a refined rung moving BOTH directions), not a law.
     // The laws are the byte equality and the within-codebook dominance
     // above; comparing seeded vs trained is what the sweep table is FOR.
   }

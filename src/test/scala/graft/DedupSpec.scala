@@ -108,6 +108,8 @@ class DedupSpec extends SparkSpec {
     // while star rewriting contracts it within its default budget
     val deep = (0L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[IllegalStateException] { MinHashDedup.dupGroups(deep, maxIter = 10) }
+    // the star loop fails just as loudly when its budget runs out
+    intercept[IllegalStateException] { MinHashDedup.dupGroupsStar(deep, maxIter = 1) }
     val star = MinHashDedup.dupGroupsStar(deep).as[(Long, Long)].collect().toMap
     assert(star == (0L to 60L).map(_ -> 0L).toMap)
   }

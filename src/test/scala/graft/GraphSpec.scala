@@ -183,4 +183,40 @@ class GraphSpec extends SparkSpec {
     }
     graft.util.Caches.releaseAll()
   }
+
+  test("releaseAll frees every block the iterative operators pin, " +
+      "including the lineage cuts their results still read") {
+    import graft.model.AnnSweep
+    import graft.ops.{Bpe, MinHashDedup}
+    val sc = spark.sparkContext
+    // start from an empty registry: earlier tests may have left blocks
+    // that only the ContextCleaner (post-GC) would reclaim
+    spark.catalog.clearCache()
+    graft.util.Caches.releaseAll()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(true))
+    val es = edges.toDF("src", "dst")
+    // an 8-node path: dupGroups needs 8 rounds, so cut rounds (every
+    // third) and cached rounds both occur
+    val path = (0L until 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val sweep = Seq(("flat_adc", 1L, 200000L, 2000L, 0L),
+      ("sq8", 1L, 900000L, 32000L, 0L))
+      .toDF("rung", "refine", "recall_micro", "code_bytes", "float_rows")
+    val held = Seq(
+      Graph.pageRank(es, iters = 3),
+      Graph.personalizedPageRank(es, Seq(1L).toDF("node"), iters = 3),
+      Graph.kCore(es, k = 2, rounds = 4),
+      Graph.hits(es, iters = 2),
+      Graph.labelPropagation(es, iters = 2),
+      MinHashDedup.dupGroups(path),
+      MinHashDedup.dupGroupsStar(path),
+      Bpe.trainMerges(Seq((1L, "low low lower newest")).toDF("doc_id", "text"),
+        "text", rounds = 3),
+      AnnSweep.selectRung(sweep, 100000L, 512L))
+    held.foreach(df => assert(df.collect().nonEmpty))
+    assert(sc.getPersistentRDDs.nonEmpty,
+      "the held results should still pin their final rounds")
+    graft.util.Caches.releaseAll()
+    assert(sc.getPersistentRDDs.isEmpty,
+      s"releaseAll left live blocks: ${sc.getPersistentRDDs.keySet}")
+  }
 }

@@ -60,4 +60,15 @@ class TriangleSkewSpec extends SparkSpec {
       assert(plan.contains("__salt"), "skewed plan must salt the wedge join")
     } finally spark.conf.unset("graft.triangles.wedgeRowsPerTask")
   }
+
+  test("a wedge cap that is not a positive integer fails naming the key") {
+    for (bad <- Seq("abc", "0", "-3")) {
+      spark.conf.set("graft.triangles.wedgeRowsPerTask", bad)
+      try {
+        val e = intercept[IllegalArgumentException] { counts(skewed(8)) }
+        assert(e.getMessage.contains("graft.triangles.wedgeRowsPerTask"),
+          e.getMessage)
+      } finally spark.conf.unset("graft.triangles.wedgeRowsPerTask")
+    }
+  }
 }

@@ -3,7 +3,7 @@
 
     python3 tools/perfbench_ab.py PARENT CHANGE [--pairs 10] [--seed0 1]
         [--workloads ingest_churn,curation_loops] [--seconds 5]
-        [--tmp DIR] [--keep]
+        [--tmp DIR] [--keep] [--layers]
 
 PARENT and CHANGE are any git revisions of this repository. Each is checked
 out as a git worktree of a throwaway shared clone under a temp dir (the
@@ -25,6 +25,11 @@ verdict of the benchmark's gain rule:
 
 A run that fails (no result line, or failed > 0) is reported and counted as
 a loss for its side. Raw results go to <tmp>/results.jsonl.
+
+With --layers, after the pairs each side makes one `--trace 1` run per
+workload at seed0; their per-layer metrics are printed side by side, and
+every count metric that should not move with timing (`*_jobs`,
+`jobs_per_commit`, `util.leaked_rdds`) is flagged when the sides differ.
 """
 import argparse
 import json
@@ -56,11 +61,11 @@ def checkout(tmp, revs):
     return dirs
 
 
-def run_one(wt, workload, seed, seconds):
+def run_one(wt, workload, seed, seconds, trace=0):
     p = subprocess.run(
         [sys.executable, os.path.join(wt, "perfbench", "run.py"),
          "--workload", workload, "--seed", str(seed),
-         "--seconds", str(seconds), "--trace", "0"],
+         "--seconds", str(seconds), "--trace", str(trace)],
         cwd=wt, capture_output=True, text=True)
     lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
     if p.returncode != 0 or not lines:
@@ -77,6 +82,30 @@ def metric(r, name):
         return None
     m = r["metrics"].get(name)
     return m.get("value") if isinstance(m, dict) else m
+
+
+def is_count(name):
+    return (name.endswith("_jobs") or name.endswith("jobs_per_commit")
+            or name == "util.leaked_rdds")
+
+
+def layers(dirs, workloads, seed, seconds, log):
+    """One traced run per side and workload; per-layer metrics side by side."""
+    print("\n| workload | layer metric | parent | change | |")
+    print("|---|---|---|---|---|")
+    for w in workloads:
+        r = {}
+        for side in ("parent", "change"):
+            r[side] = run_one(dirs[side][0], w, seed, seconds, trace=1)
+            log.write(json.dumps({"workload": w, "seed": seed, "side": side,
+                                  "trace": 1, "result": r[side]}) + "\n")
+            if "error" in r[side]:
+                print(f"| {w} | traced run failed | {side}: {r[side]['error']} | | |")
+        names = sorted(set().union(*(x.get("metrics", {}) for x in r.values())))
+        for n in names:
+            vp, vc = metric(r["parent"], n), metric(r["change"], n)
+            flag = "DIFFERS" if is_count(n) and vp != vc else ""
+            print(f"| {w} | {n} | {vp} | {vc} | {flag} |")
 
 
 def quartiles(xs):
@@ -108,6 +137,8 @@ def main():
                     help="run length (default: BENCHMARK.json run_seconds)")
     ap.add_argument("--tmp", default=None, help="parent dir for the checkouts")
     ap.add_argument("--keep", action="store_true", help="keep the checkouts")
+    ap.add_argument("--layers", action="store_true",
+                    help="after the pairs, one traced run per side at seed0")
     a = ap.parse_args()
 
     tmp = tempfile.mkdtemp(prefix="perfbench_ab_", dir=a.tmp)
@@ -134,6 +165,8 @@ def main():
                         status = r.get("error") or " ".join(
                             f"{m['name']}={metric(r, m['name'])}" for m in metrics)
                         print(f"  {w} pair {i} seed {seed} {side:6s} {status}", flush=True)
+            if a.layers:
+                layers(dirs, a.workloads.split(","), a.seed0, seconds, log)
 
         print()
         print("| workload | metric | parent median [Q1, Q3] | change median [Q1, Q3] "
