@@ -195,8 +195,8 @@ class GraphSpec extends SparkSpec {
     graft.util.Caches.releaseAll()
     sc.getPersistentRDDs.values.foreach(_.unpersist(true))
     val es = edges.toDF("src", "dst")
-    // an 8-node path: dupGroups needs 8 rounds, so cut rounds (every
-    // third) and cached rounds both occur
+    // an 8-node path: dupGroups takes 7 rounds on it, so cut rounds
+    // (every third) and cached rounds both occur
     val path = (0L until 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val sweep = Seq(("flat_adc", 1L, 200000L, 2000L, 0L),
       ("sq8", 1L, 900000L, 32000L, 0L))
