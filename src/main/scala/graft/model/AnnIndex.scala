@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{Layout, ManifestIndex}
@@ -568,24 +568,24 @@ object AnnIndex {
     root
   }
 
-  /** The shared stage-2 exact rerank: collect the BOUNDED candidate id
-    * set (|queries|·topK·refine — driver metadata by the tiny-query
-    * contract), push it down as a static `IN` filter on the float corpus
-    * (parquet stats skip every other row group — AnnArtifactSpec pins
-    * the filter on the executed plan), join the per-query candidates
-    * broadcast-side, and rerank by EXACT inner product. The query frame's
-    * id/vector columns are THREADED from the caller (ADVICE r17: they were
-    * hard-coded vec_id/embedding while stage 1 honored the caller's names
-    * — a non-default caller passed stage 1 and broke, or silently misread,
-    * stage 2).
+  /** The shared stage-2 exact rerank: evaluate stage 1 ONCE by collecting
+    * the BOUNDED candidate pairs (|queries|·topK·refine — driver metadata
+    * by the tiny-query contract), push their ids down as a static `IN`
+    * filter on the float corpus (parquet stats skip every other row group
+    * — AnnArtifactSpec pins the filter on the executed plan), join the
+    * same collected pairs broadcast-side, and rerank by EXACT inner
+    * product. The query frame's id/vector columns are THREADED from the
+    * caller (ADVICE r17: they were hard-coded vec_id/embedding while stage
+    * 1 honored the caller's names — a non-default caller passed stage 1
+    * and broke, or silently misread, stage 2).
     */
   private def exactRefine(candidates: DataFrame, corpus: DataFrame,
                           idCol: String, vecCol: String,
                           queries: DataFrame, queryIdCol: String,
                           queryVecCol: String, topK: Int): DataFrame = {
     import graft.functions.{VectorFunctions => VF}
-    val ids = candidates.select(col("nn_id")).distinct()
-      .collect().map(_.get(0))
+    val (pairs, cands) = evalOnce(candidates)
+    val ids = pairs.map(_.getAs[Any]("nn_id")).distinct
     val floats = corpus
       .filter(col(idCol).isin(ids: _*))
       .select(col(idCol).as("nn_id"),
@@ -594,11 +594,20 @@ object AnnIndex {
       col(queryVecCol).cast("array<double>").as("__qe"))
     val wK = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("__s").desc, col("nn_id"))
-    floats.join(broadcast(candidates.join(q, "query_id")), "nn_id")
+    floats.join(broadcast(cands.join(q, "query_id")), "nn_id")
       .withColumn("__s", VF.dot(col("__qe"), col("__ve")))
       .withColumn("rnk", row_number().over(wK)).filter(col("rnk") <= topK)
       .select(col("query_id"), col("nn_id"),
         round(col("__s"), 6).as("score"), col("rnk").cast("long").as("rnk"))
+  }
+
+  /** Run a BOUNDED frame once: its rows on the driver, and the same rows
+    * as a local relation that later plans read without re-running it.
+    */
+  private def evalOnce(df: DataFrame): (Array[Row], DataFrame) = {
+    val rows = df.collect()
+    (rows, df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows: _*), df.schema))
   }
 
   /** Shared skew gate for the IVF family: kind, books version, centroids
@@ -666,18 +675,19 @@ object AnnIndex {
         qe0.withColumn("__qe", graft.ops.Quantize.rotate(col("__qe0"), r)))
       .select(col("query_id"),
         graft.ops.Quantize.adcLut(col("__qe"), books).as("__lut"))
-    // bounded collect (|queries|·nprobe cell ids) → STATIC partition
-    // pruning on the codes root; without it the join alone would leave
-    // pruning to runtime DPP heuristics
-    val cells = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.get(0))
+    // the probe rows are bounded (|queries|·nprobe): evaluated once, their
+    // cell ids drive STATIC partition pruning on the codes root (the join
+    // alone would leave pruning to runtime DPP heuristics) and the same
+    // rows are the broadcast side of the codes join
+    val (probeRows, probed) = evalOnce(probes)
+    val cells = probeRows.map(_.getAs[Any]("centroid_id")).distinct
     val codes = Layout.readCurrent(spark, codesRoot)
       .filter(col("centroid_id").isin(cells: _*))
     val wK = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("__s").desc, col("nn_id"))
     val adc = graft.ops.Quantize.adcScoreLut(col("__lut"), col("code"),
       books.length)
-    codes.join(broadcast(probes), "centroid_id")
+    codes.join(broadcast(probed), "centroid_id")
       .filter(col("nn_id") =!= col("query_id"))
       .join(broadcast(qluts), "query_id")
       .withColumn("__s", if (residual) col("__qdotc") + adc else adc)

@@ -20,8 +20,10 @@ object Graph {
     * rank to everyone — dropping it would leak mass and the ranks would
     * no longer sum to 1). `iters` is a bounded driver loop over one
     * join+aggregate per round, the same contract as
-    * [[Similarity.kmeansStep]] and [[MinHashDedup.dupGroups]]: each
-    * iteration is one job, no driver-side data.
+    * [[Similarity.kmeansStep]] and [[MinHashDedup.dupGroups]]: each round
+    * is one lineage cut (a handful of jobs: the edge shuffle, the dangling
+    * aggregate, the cut itself). The only driver-side datum is N, counted
+    * once per call.
     *
     * Determinism (the oracle contract): per-edge contributions divide in
     * double (same operands every engine), but SUMS run through a
@@ -41,18 +43,15 @@ object Graph {
   def pageRank(edges: DataFrame, iters: Int,
                damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "pageRank: at least one iteration")
-    val (e, outdeg) = walkEdges(edges)
-    val nodes = graft.util.Caches.cache(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(outdeg, Seq("node"), "left"))
-    // N is a scalar the plan needs everywhere; one tiny aggregate joined
-    // in by cross-joining a single row (broadcast by size) keeps it
-    // in-plan — no driver collect
-    val nRow = nodes.agg(count(lit(1)).as("n"))
-    walk(e, nodes, Seq(nRow), nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), col("deg"), (lit(1.0) / col("n")).as("rank")),
-      iters, damping, (lit(1.0) - lit(damping)) / col("n"),
-      col("dangle").cast("double") / col("n"))
+    val (e, nodes) = walkEdges(edges)
+    // N is a scalar every round reads: counted once here, it enters the
+    // plan as a literal instead of a one-row aggregate re-broadcast per
+    // round. The constant terms divide on the driver (the same IEEE double
+    // operations; an empty graph's 1/0 never reaches a row, where a folded
+    // plan-side division would throw under ANSI)
+    val n = nodes.count().toDouble
+    walk(e, nodes, nodes.select(col("node"), col("deg"), lit(1.0 / n).as("rank")),
+      iters, damping, lit((1.0 - damping) / n), col("dangle").cast("double") / n)
   }
 
   /** PERSONALIZED PageRank (the random walk with restart to a SEED SET):
@@ -79,24 +78,20 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iters: Int,
                            damping: Double = 0.85): DataFrame = {
     require(iters >= 1, "personalizedPageRank: at least one iteration")
-    val (e, outdeg) = walkEdges(edges)
-    val nodes = graft.util.Caches.cache(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
+    val (e, nodes) = walkEdges(edges)
     val seedNodes = graft.util.Caches.cache(
-      nodes.join(seeds.select(col("node")).distinct(), Seq("node"),
-        "left_semi"))
-    require(!seedNodes.isEmpty,
+      nodes.select(col("node")).join(seeds.select(col("node")).distinct(),
+        Seq("node"), "left_semi"))
+    val s = seedNodes.count()
+    require(s > 0,
       "personalizedPageRank: no seed appears in the graph — an all-zero " +
         "teleport would rank every node 0")
-    val sRow = seedNodes.agg(count(lit(1)).as("s"))
     val tele = graft.util.Caches.cache(nodes
       .join(seedNodes.withColumn("__is", lit(1)), Seq("node"), "left")
-      .join(outdeg, Seq("node"), "left")
-      .crossJoin(broadcast(sRow))
       .select(col("node"), col("deg"),
-        when(col("__is").isNotNull, lit(1.0) / col("s"))
+        when(col("__is").isNotNull, lit(1.0 / s))
           .otherwise(lit(0.0)).as("t")))
-    walk(e, tele, Nil, tele.select(col("node"), col("deg"), col("t").as("rank")),
+    walk(e, tele, tele.select(col("node"), col("deg"), col("t").as("rank")),
       iters, damping, (lit(1.0) - lit(damping)) * col("t"),
       col("dangle").cast("double") * col("t"))
   }
@@ -106,21 +101,29 @@ object Graph {
     * PRE-PARTITIONED on the per-round join key: a cached relation reports
     * its partitioning, so every round's ranks⋈edges join reuses it instead
     * of re-exchanging the edges (r17 graph-loop pass: −22% in-suite on
-    * q154). Out-degrees ride the node table as a carried column, so a
-    * round joins once, not twice.
+    * q154). With them, the node table `(node, deg)` from ONE aggregate
+    * over the edges: an edge counts 1 toward its `src` and 0 toward its
+    * `dst`, so duplicate edges count toward out-degree and a node with no
+    * out-edge gets a null `deg` (dangling). Out-degrees ride the node
+    * table as a carried column, so a round joins once, not twice.
     */
   private def walkEdges(edges: DataFrame): (DataFrame, DataFrame) = {
     val e = Caches.cache(
       edges.select(col("src"), col("dst")).repartition(col("src")))
-    (e, e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
+    val deg = sum(col("out"))
+    val nodes = e.select(col("src").as("node"), lit(1L).as("out"))
+      .union(e.select(col("dst").as("node"), lit(0L).as("out")))
+      .groupBy(col("node")).agg(when(deg > 0, deg).as("deg"))
+    (e, Caches.cache(nodes))
   }
 
   /** The damped walk both PageRanks run: per round, dangling nodes pool
     * their rank (`dangle`), the rest split it over their out-edges `e`, and
     * each node of `nodes` takes `teleport + damping · (in_mass +
-    * dangleShare)`, both terms read off `nodes` and the one-row `scalars`.
+    * dangleShare)`, both terms read off `nodes` and the round's one-row
+    * `dangle`.
     */
-  private def walk(e: DataFrame, nodes: DataFrame, scalars: Seq[DataFrame],
+  private def walk(e: DataFrame, nodes: DataFrame,
                    init: DataFrame, iters: Int, damping: Double,
                    teleport: Column, dangleShare: Column): DataFrame = {
     val dec = DecimalType(38, 12)
@@ -134,9 +137,8 @@ object Graph {
           (col("rank") / col("deg")).cast(dec).as("c"))
         .groupBy(col("node"))
         .agg(sum(col("c")).as("in_mass"))
-      val joined = scalars.foldLeft(nodes.join(contribs, Seq("node"), "left"))(
-        (f, s) => f.crossJoin(broadcast(s)))
-      Round(Caches.cut(joined.crossJoin(broadcast(dangling))
+      Round(Caches.cut(nodes.join(contribs, Seq("node"), "left")
+        .crossJoin(broadcast(dangling))
         .select(col("node"), col("deg"),
           (teleport + lit(damping) *
             (coalesce(col("in_mass"), lit(0).cast(dec)).cast("double") +

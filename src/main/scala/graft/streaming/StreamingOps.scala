@@ -89,10 +89,6 @@ object StreamingOps {
           col(rightTs) >= col(leftTs) &&
           col(rightTs) <= col(leftTs) + expr(s"INTERVAL $within"))
 
-  /** Run a streaming DataFrame to a memory sink, draining everything
-    * available, then stop — the AvailableNow micro-batch harness used by
-    * tests.
-    */
   /** Run `body` with `spark.sql.shuffle.partitions` right-sized for a
     * STATEFUL micro-batch and restore the previous value after. A
     * stateful streaming aggregate opens one state-store instance per
@@ -113,6 +109,10 @@ object StreamingOps {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** Run a streaming DataFrame to a memory sink, draining everything
+    * available, then stop — the AvailableNow micro-batch harness used by
+    * tests.
+    */
   def drainToMemory(df: DataFrame, name: String): StreamingQuery = {
     val q = df.writeStream.format("memory").queryName(name)
       .outputMode("append").trigger(Trigger.AvailableNow()).start()

@@ -3,6 +3,7 @@ package graft.util
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.Shim
 import org.apache.spark.storage.StorageLevel
 
 /** Tracked persists and lineage cuts for operator-internal intermediates
@@ -16,9 +17,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object Caches {
 
-  /** A tracked frame; `blocks` holds the data of a [[cut]]. */
+  /** A tracked frame; `blocks` holds the data of a [[cut]], freed without
+    * `RDD.unpersist`'s warning that a cut cannot be recomputed: releasing
+    * it is the point.
+    */
   private final case class Pin(df: Dataset[_], blocks: Option[RDD[_]]) {
-    def free(): Unit = blocks.fold[Any](df.unpersist(false))(_.unpersist(false))
+    def free(): Unit = blocks.fold[Any](df.unpersist(false))(Shim.freeBlocks)
   }
 
   private val tracked = new java.util.concurrent.ConcurrentLinkedQueue[Pin]()

@@ -86,6 +86,15 @@ object Shim {
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
+  /** Free the stored blocks of `rdd` (non-blocking) and drop it from the
+    * context's persistent set — what `RDD.unpersist` does, minus its
+    * warning for a locally checkpointed RDD, whose released blocks cannot
+    * be recomputed. A caller freeing such a cut on purpose uses this
+    * (`SparkContext.unpersistRDD` is `private[spark]`).
+    */
+  def freeBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Write `df` as parquet under `path` — hive leaves on `partitionColumns`,
     * the same files `df.write.partitionBy(...).parquet(path)` lays out —
     * through Spark's one file-format write path (`FileFormatWriter`, what

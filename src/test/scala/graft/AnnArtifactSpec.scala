@@ -321,6 +321,59 @@ class AnnArtifactSpec extends SparkSpec {
       s"refined recall $rRef fell below ADC recall $rAdc")
   }
 
+  /** SQL executions started while `body` runs whose physical plan reads
+    * a path under `root`.
+    */
+  private def executionsScanning(root: String)(body: => Unit): Int = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusSync.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusSync.drain(sc)
+    } finally sc.removeSparkListener(l)
+    plans.asScala.count(_.contains(root))
+  }
+
+  test("refined serving runs stage 1 once: one SQL execution scans the " +
+      "codes root per served query batch (IVF-PQ and flat ADC)") {
+    val emb = graft.sources.Tables.embeddings(spark, sf())
+    val cb = Quantize.seededCodebooks(m = 4, k = 8, subDim = 16, seed = 7)
+    val root = freshRoot()
+    AnnIndex.publishCodebooks(spark, root + "/books", cb)
+    val cents = emb.filter($"vec_id" < 8)
+    AnnIndex.publishCentroids(spark, root + "/cents", cents)
+    AnnIndex.publishIvfPqCodes(spark, root + "/ivf", emb, cents, cb)
+    AnnIndex.publishCodes(spark, root + "/flat",
+      Quantize.encode(emb, "embedding", cb), "vec_id", booksVersion = 0)
+    val queries = emb.filter($"vec_id" >= 10 && $"vec_id" <= 12)
+    var ivfRows, flatRows = 0
+    val ivf = executionsScanning(root + "/ivf") {
+      ivfRows = AnnIndex.serveIvfPqTopKRefined(spark, root + "/ivf",
+        root + "/books", root + "/cents", emb, "vec_id", "embedding",
+        queries, nprobe = 2, topK = 4, refine = 3).collect().length
+    }
+    val flat = executionsScanning(root + "/flat") {
+      flatRows = AnnIndex.serveAdcTopKRefined(spark, root + "/books",
+        root + "/flat", emb, "vec_id", "embedding", queries,
+        topK = 4, refine = 3).collect().length
+    }
+    assert(ivfRows == 12 && flatRows == 12, s"rows $ivfRows / $flatRows")
+    assert(ivf == 1, s"the IVF-PQ codes root was scanned by $ivf executions")
+    assert(flat == 1, s"the flat ADC codes root was scanned by $flat executions")
+  }
+
   test("flat-ADC refine: serveAdcTopKRefined carries the candidate IN " +
       "pushdown, and a corpus-covering refine degenerates to the exact " +
       "brute-force answer (r17)") {

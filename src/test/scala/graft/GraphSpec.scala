@@ -53,6 +53,26 @@ class GraphSpec extends SparkSpec {
     assert(a == b, "ranks must be bit-identical across partitionings")
   }
 
+  test("pageRank's out-degree counts duplicate edges and self-loops; a " +
+      "node with only in-edges is dangling") {
+    // (1,2) twice, a self-loop on 3, and 6 reached only from 5
+    val odd = Seq((1L, 2L), (1L, 2L), (1L, 3L), (2L, 3L), (3L, 3L),
+      (3L, 1L), (3L, 5L), (5L, 6L))
+    val got = Graph.pageRank(odd.toDF("src", "dst"), iters = 6)
+      .as[(Long, Double)].collect().toMap
+    val want = ref(odd, 6)
+    assert(got.keySet == want.keySet)
+    got.foreach { case (v, r) =>
+      assert(math.abs(r - want(v)) < 1e-9, s"node $v: $r vs ${want(v)}")
+    }
+    assert(math.abs(got.values.sum - 1.0) < 1e-9)
+  }
+
+  test("pageRank of an empty edge list ranks nothing") {
+    assert(Graph.pageRank(Seq.empty[(Long, Long)].toDF("src", "dst"),
+      iters = 2).collect().isEmpty)
+  }
+
   /** Reference PERSONALIZED PageRank — teleport and dangling mass go to
     * the seed set uniformly.
     */
@@ -182,6 +202,39 @@ class GraphSpec extends SparkSpec {
       Graph.labelPropagation(edges, iters = 0)
     }
     graft.util.Caches.releaseAll()
+  }
+
+  test("releasing a lineage cut logs no lost-lineage warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("cut-release", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    // the suite logs at ERROR; listen at WARN on the RDD loggers only
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rdds = new LoggerConfig("org.apache.spark.rdd", Level.WARN, false)
+    rdds.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(rdds.getName, rdds)
+    ctx.updateLoggers()
+    try {
+      val ranks = Graph.pageRank(edges.toDF("src", "dst"), iters = 3)
+      assert(ranks.collect().length == 5)
+      assert(!spark.sparkContext.getPersistentRDDs.isEmpty)
+      graft.util.Caches.releaseAll()
+    } finally {
+      ctx.getConfiguration.removeLogger(rdds.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    val lost = warned.toArray.map(_.toString)
+      .filter(_.contains("locally checkpointed"))
+    assert(lost.isEmpty, lost.mkString("\n"))
   }
 
   test("releaseAll frees every block the iterative operators pin, " +
