@@ -466,11 +466,11 @@ object AnnIndex {
   /** TWO-STAGE exact-refine serving (r17): stage 1 ranks the index's ADC
     * scores to `topK·refine` candidates per query (the cell-pruned,
     * float-free plan of [[serveIvfPqTopK]]); stage 2 reads ONLY those
-    * candidate rows from the float corpus — the candidate id set is
+    * candidate rows from the float corpus — the candidate pairs are
     * bounded at |queries|·topK·refine (driver metadata by the tiny-query
-    * contract), collected once and pushed down as a static `id IN (…)`
-    * filter, so parquet stats skip every other row group — and reranks
-    * them by EXACT inner product. The standard recall lift of
+    * contract), collected once, and their ids pushed down as a static
+    * `id IN (…)` filter, so parquet stats skip every other row group —
+    * and reranks them by EXACT inner product. The standard recall lift of
     * quantized ANN at a bounded extra IO of k·refine float rows per
     * query; recall(refined) ≥ recall(ADC) whenever the true neighbor
     * ADC-ranks within the refine window (AnnArtifactSpec pins it on a

@@ -321,10 +321,10 @@ class AnnArtifactSpec extends SparkSpec {
       s"refined recall $rRef fell below ADC recall $rAdc")
   }
 
-  /** SQL executions started while `body` runs whose physical plan reads
-    * a path under `root`.
+  /** `body`'s result, and the SQL executions started while it runs whose
+    * physical plan reads a path under `root`.
     */
-  private def executionsScanning(root: String)(body: => Unit): Int = {
+  private def executionsScanning[T](root: String)(body: => T): (T, Int) = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
@@ -339,11 +339,12 @@ class AnnArtifactSpec extends SparkSpec {
     val sc = spark.sparkContext
     org.apache.spark.graft.ListenerBusSync.drain(sc)
     sc.addSparkListener(l)
-    try {
-      body
+    val result = try {
+      val r = body
       org.apache.spark.graft.ListenerBusSync.drain(sc)
+      r
     } finally sc.removeSparkListener(l)
-    plans.asScala.count(_.contains(root))
+    (result, plans.asScala.count(_.contains(root)))
   }
 
   test("refined serving runs stage 1 once: one SQL execution scans the " +
@@ -358,14 +359,13 @@ class AnnArtifactSpec extends SparkSpec {
     AnnIndex.publishCodes(spark, root + "/flat",
       Quantize.encode(emb, "embedding", cb), "vec_id", booksVersion = 0)
     val queries = emb.filter($"vec_id" >= 10 && $"vec_id" <= 12)
-    var ivfRows, flatRows = 0
-    val ivf = executionsScanning(root + "/ivf") {
-      ivfRows = AnnIndex.serveIvfPqTopKRefined(spark, root + "/ivf",
+    val (ivfRows, ivf) = executionsScanning(root + "/ivf") {
+      AnnIndex.serveIvfPqTopKRefined(spark, root + "/ivf",
         root + "/books", root + "/cents", emb, "vec_id", "embedding",
         queries, nprobe = 2, topK = 4, refine = 3).collect().length
     }
-    val flat = executionsScanning(root + "/flat") {
-      flatRows = AnnIndex.serveAdcTopKRefined(spark, root + "/books",
+    val (flatRows, flat) = executionsScanning(root + "/flat") {
+      AnnIndex.serveAdcTopKRefined(spark, root + "/books",
         root + "/flat", emb, "vec_id", "embedding", queries,
         topK = 4, refine = 3).collect().length
     }
