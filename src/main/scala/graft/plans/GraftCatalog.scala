@@ -57,11 +57,9 @@ import graft.sources.Layout
   *    on `appendVersionedRows`/`replaceVersionedRows`, and a
   *    `TruncatableTable`. Spark's own `ResolveOutputRelation` does the
   *    column alignment/casting, replacing the hand-rolled insert paths.
-  *  - MERGE / UPDATE / DELETE: lowered at parse time by the SAME
-  *    [[GraftDml.GraftDmlRule]] machinery (see [[GraftSqlParser]]) — the
-  *    conditions must be captured while still unresolved, which a
-  *    resolution rule can no longer guarantee once the catalog resolves
-  *    the target relation in the same fixed-point batch.
+  *  - MERGE / UPDATE / DELETE: lowered from the RESOLVED plan by
+  *    [[GraftDmlResolved]] onto the SAME command trio the non-catalog
+  *    [[GraftDml.GraftDmlRule]] produces.
   *  - DESCRIBE HISTORY / VACUUM / OPTIMIZE / RESTORE / SHALLOW CLONE:
   *    unchanged on the injected parser (Spark has no grammar for them).
   *

@@ -83,52 +83,13 @@ object GraftDml {
   /** Whether this session runs with the DSv2 [[GraftCatalog]] registered
     * (`spark.sql.catalog.graft`). In catalog mode Spark's own resolution
     * owns the `graft.` namespace for DDL/reads/INSERT, so the parse-time
-    * DDL lowering steps aside and DML lowers from the parser instead of
-    * the resolution rule — see [[GraftCatalog]]'s division of labor.
+    * DDL lowering steps aside and DML lowers from the resolved plan
+    * ([[GraftDmlResolved]]) instead of this file's unresolved capture —
+    * see [[GraftCatalog]]'s division of labor.
     */
   private[plans] def catalogMode(
       spark: org.apache.spark.sql.SparkSession): Boolean =
     spark.conf.getOption(s"spark.sql.catalog.$Namespace").isDefined
-
-  /** Whether catalog-mode DML lowers from the RESOLVED plan (the
-    * catalog-native path, [[GraftDmlResolved]]) instead of at parse time.
-    */
-  private[plans] def resolvedDmlLowering(
-      spark: org.apache.spark.sql.SparkSession): Boolean =
-    catalogMode(spark) &&
-      spark.conf.get("spark.graft.catalogDml.resolved", "true") == "true"
-
-  /** Under `USE graft`, a DML statement's BARE target name (`DELETE FROM
-    * orders`) means the graft table — but the parse-time lowering keys on
-    * the 2-part `graft.x` shape, so qualify the TARGET with the current
-    * catalog before the rule runs. Sources are untouched: they resolve
-    * through the normal current-catalog path (and the read rule).
-    *
-    * TEMP-VIEW precedence is preserved (review fix): Spark resolves a
-    * 1-part name to a temp view BEFORE the current catalog, so a name
-    * shadowed by a (local or global) temp view is NOT qualified — the
-    * statement then fails loudly on the view exactly like vanilla Spark,
-    * instead of silently deleting from the base table the view shadows.
-    */
-  private[plans] def qualifyBareTarget(
-      spark: org.apache.spark.sql.SparkSession,
-      plan: LogicalPlan): LogicalPlan = {
-    def shadowed(name: String): Boolean =
-      spark.sessionState.catalog.isTempView(Seq(name))
-    def fix(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(id, child) => SubqueryAlias(id, fix(child))
-      case r: UnresolvedRelation if r.multipartIdentifier.length == 1 &&
-          !shadowed(r.multipartIdentifier.head) =>
-        r.copy(multipartIdentifier = Seq(Namespace, r.multipartIdentifier.head))
-      case other => other
-    }
-    plan match {
-      case d: DeleteFromTable => d.copy(table = fix(d.table))
-      case u: UpdateTable => u.copy(table = fix(u.table))
-      case m: MergeIntoTable => m.copy(targetTable = fix(m.targetTable))
-      case other => other
-    }
-  }
 
   /** Match `graft.`path`` targets through an optional alias, yielding
     * (root path, lower-cased alias qualifiers).

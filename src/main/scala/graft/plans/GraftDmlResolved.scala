@@ -55,9 +55,6 @@ import org.apache.spark.sql.graft.Shim
   * Correlated subqueries in conditions refuse loudly (the captured tree
   * re-resolves against the live snapshot, where the outer scope no longer
   * exists) — the same documented limit as the parse-time path.
-  *
-  * Escape hatch: `spark.graft.catalogDml.resolved=false` reverts catalog
-  * mode to the parse-time capture.
   */
 object GraftDmlResolved {
 
@@ -80,7 +77,7 @@ object GraftDmlResolved {
   case class GraftDmlResolvedRule(spark: SparkSession)
       extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan =
-      if (!GraftDml.resolvedDmlLowering(spark)) plan
+      if (!GraftDml.catalogMode(spark)) plan
       else plan match {
         case d @ DeleteFromTable(TargetV2(g, out), cond) if d.resolved =>
           refuseTravel(g, "DELETE")

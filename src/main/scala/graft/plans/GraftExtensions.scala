@@ -44,8 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // from the fully RESOLVED plan in the post-hoc batch — after Spark's
     // scoping/star-expansion/schema-evolution, before CheckAnalysis
     // rejects the scanless v2 relation. See GraftDmlResolved; the
-    // parse-time capture remains the non-catalog path (and the
-    // spark.graft.catalogDml.resolved=false escape hatch).
+    // parse-time capture remains the non-catalog path.
     ext.injectPostHocResolutionRule(session =>
       GraftDmlResolved.GraftDmlResolvedRule(session))
     // SQL table-lifecycle DDL (CREATE/DROP TABLE, ALTER TABLE …) lowers

@@ -36,40 +36,10 @@ class GraftSqlParser(session: org.apache.spark.sql.SparkSession,
       val plan = delegate.parsePlan(sqlText)
       if (GraftDml.catalogMode(session)) {
         // CATALOG mode (spark.sql.catalog.graft registered): Spark's own
-        // grammar + GraftCatalog resolution carry DDL, reads and INSERT;
-        // only MERGE/UPDATE/DELETE lower here, at parse time, because
-        // their conditions must be captured while still UNRESOLVED (the
-        // catalog would resolve the target — and with it the condition
-        // attrs — in the same fixed-point batch a resolution rule runs
-        // in). Same GraftDmlRule machinery as the non-catalog path.
-        // `MERGE … WITH SCHEMA EVOLUTION` flows through the resolved path
-        // too (since r15): the AUTOMATIC_SCHEMA_EVOLUTION capability stays
-        // withheld (GraftTable.capabilities), so Spark's own positional
-        // ResolveMergeIntoSchemaEvolution never fires, analysis carries
-        // the flag inert, and GraftDmlResolved re-expands star-shaped SET
-        // against the live post-evolution schema at execution — the
-        // layout-aware evolution GraftMergeCommand always had.
-        def parseTimeDml(p: org.apache.spark.sql.catalyst.plans.logical
-            .LogicalPlan): Boolean = p match {
-          case _: org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable |
-               _: org.apache.spark.sql.catalyst.plans.logical.UpdateTable |
-               _: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable =>
-            !GraftDml.resolvedDmlLowering(session)
-          case _ => false
-        }
+        // grammar + GraftCatalog resolution carry DDL, reads and INSERT,
+        // and MERGE/UPDATE/DELETE lower from the resolved plan
+        // (GraftDmlResolved); only the two DDL statements below lower here
         plan match {
-          case _: org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable |
-               _: org.apache.spark.sql.catalyst.plans.logical.UpdateTable |
-               _: org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable
-              if parseTimeDml(plan) =>
-            // `USE graft` makes a bare target name a graft table — the
-            // rule keys on the 2-part shape, so qualify it first
-            // (temp-view-shadowed names excluded; see qualifyBareTarget)
-            val qualified =
-              if (session.catalog.currentCatalog() == GraftDml.Namespace)
-                GraftDml.qualifyBareTarget(session, plan)
-              else plan
-            GraftDml.GraftDmlRule(session).apply(qualified)
           case acc: org.apache.spark.sql.catalyst.plans.logical.AddCheckConstraint =>
             // the DDL statements that lower in catalog mode too — see
             // GraftDdl.lowerAddConstraint / lowerAlterColumnMarkers for why

@@ -324,16 +324,20 @@ object Layout {
     */
   def publishVersion(spark: SparkSession, root: String, df: DataFrame,
                      meta: Map[String, String] = Map.empty): String = graft.util.DmlTimer.timed {
-    val fresh = !isVersionedRoot(spark, root)
-    val (next, nextPath) =
-      if (fresh) (versionName(0), s"$root/${versionName(0)}")
-      else nextVersion(spark, root, resolveCurrent(spark, root))
-    if (fresh) ManifestIndex.writeFormatMarker(spark, root)
-    commitManifest(spark, root, next, ManifestIndex.TableManifest(df.schema,
-      new StructType(), writeEntries(spark, root, next, df.schema, Nil, df),
-      meta.map { case (k, v) => (ManifestIndex.PublishPrefix + k) -> v }),
-      "PUBLISH")
-    nextPath
+    def published(version: String) = ManifestIndex.TableManifest(df.schema,
+      new StructType(), writeEntries(spark, root, version, df.schema, Nil, df),
+      meta.map { case (k, v) => (ManifestIndex.PublishPrefix + k) -> v } +
+        (ManifestIndex.OperationKey -> "PUBLISH"))
+    if (isVersionedRoot(spark, root))
+      commit(spark, root, resolveCurrent(spark, root), "PUBLISH")(published)
+    else {
+      // a fresh root's v0, like initVersionedManifest: nothing to claim
+      val v0 = versionName(0)
+      ManifestIndex.writeFormatMarker(spark, root)
+      ManifestIndex.write(spark, root, v0, published(v0))
+      writePointer(spark, root, v0)
+      s"$root/$v0"
+    }
   }
 
   /** Export the live version's data-file list for EXTERNAL engines — the
@@ -469,33 +473,33 @@ object Layout {
     }
     // nothing fragmented → NO-OP, no version claimed (review fix)
     if (fragmented.isEmpty && respec.isEmpty) return (cur, 0)
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    val fresh =
-      if (zCols.isEmpty)
-        rewriteEntries(spark, root, next, man, fragmented.keySet ++ respec,
-          targetBytes)
-      else {
-        // z-order keeps a per-leaf range sort; it does not apply to
-        // respec'd rows (they fan across leaves — cluster them on the
-        // NEXT compaction, once they live in current-spec leaves). The
-        // respec write replaces the version dir, so it goes first; each
-        // leaf's z-write then adds its files beside any respec'd ones.
-        val respecd =
-          if (respec.isEmpty) Nil
-          else rewriteEntries(spark, root, next, man, respec, targetBytes)
-        respecd ++ fragmented.toSeq.sortBy(_._1).flatMap { case (leaf, bytes) =>
-          val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-          writeEntries(spark, root, next, man.dataSchema, Nil,
-            zOrdered(ManifestIndex.dataFrame(spark, root, man, Some(Set(leaf)))
-              .drop(man.partitionSchema.fieldNames: _*), zCols, 8, files),
-            leaf = Some(leaf))
+    val live = commit(spark, root, cur, "COMPACT") { next =>
+      val fresh =
+        if (zCols.isEmpty)
+          rewriteEntries(spark, root, next, man, fragmented.keySet ++ respec,
+            targetBytes)
+        else {
+          // z-order keeps a per-leaf range sort; it does not apply to
+          // respec'd rows (they fan across leaves — cluster them on the
+          // NEXT compaction, once they live in current-spec leaves). The
+          // respec write replaces the version dir, so it goes first; each
+          // leaf's z-write then adds its files beside any respec'd ones.
+          val respecd =
+            if (respec.isEmpty) Nil
+            else rewriteEntries(spark, root, next, man, respec, targetBytes)
+          respecd ++ fragmented.toSeq.sortBy(_._1).flatMap { case (leaf, bytes) =>
+            val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+            writeEntries(spark, root, next, man.dataSchema, Nil,
+              zOrdered(ManifestIndex.dataFrame(spark, root, man, Some(Set(leaf)))
+                .drop(man.partitionSchema.fieldNames: _*), zCols, 8, files),
+              leaf = Some(leaf))
+          }
         }
-      }
-    commitManifest(spark, root, next, man.copy(
-      entries = fresh ++
+      man.copy(entries = fresh ++
         man.entries.filterNot(e =>
-          fragmented.contains(e.leaf) || respec.contains(e.leaf))), "COMPACT")
-    (nextPath, fragmented.size + respec.size)
+          fragmented.contains(e.leaf) || respec.contains(e.leaf)))
+    }
+    (live, fragmented.size + respec.size)
   }
 
   /** Schema evolution contract for merges: `updates` must keep every live
@@ -514,22 +518,37 @@ object Layout {
     }
   }
 
-  /** Advance the version counter under OPTIMISTIC CONCURRENCY CONTROL:
-    * the writer atomically claims `vN+1` by creating `root/vNNNNN.claim`
-    * with an exclusive create (`FileSystem.createNewFile`; on the local
-    * filesystem the OS's create-if-absent). Two writers that both resolved the same
-    * base version race for the same claim — exactly one wins; the loser
-    * gets a `ConcurrentModificationException` instead of silently
-    * overwriting the winner's version dir or flipping the pointer over a
-    * commit it never read (the lost-update anomaly). A writer that
-    * resolves AFTER the winner's flip claims the next number and
-    * serializes cleanly behind it. Claim files are tiny tombstones of
-    * committed version numbers; [[vacuumVersions]] sweeps them with their
-    * manifests.
+  /** The ONE commit protocol of every version after v0:
+    *
+    *  1. Claim `vN+1` (N from `cur`, the live path the writer read) under
+    *     OPTIMISTIC CONCURRENCY CONTROL, by creating `root/vNNNNN.claim`
+    *     with an exclusive create (`FileSystem.createNewFile`; on the
+    *     local filesystem the OS's create-if-absent). Two writers that
+    *     both resolved the same base version race for the same claim —
+    *     exactly one wins; the loser gets a `ConcurrentModificationException`
+    *     instead of silently overwriting the winner's version dir or
+    *     flipping the pointer over a commit it never read (the lost-update
+    *     anomaly). A writer that resolves AFTER the winner's flip claims
+    *     the next number and serializes cleanly behind it. Claim files are
+    *     tiny tombstones of committed version numbers; [[vacuumVersions]]
+    *     sweeps them with their manifests.
+    *  2. `build(next)` returns the new manifest; data files and DV
+    *     sidecars land under `root/next` inside it.
+    *  3. Stamp `commit.operation` (each version's manifest names ITS
+    *     operation — the DESCRIBE HISTORY surface) and, with `txn`, the
+    *     application's `txn.<app>` watermark.
+    *  4. Make sure the version dir exists (so [[history]]'s listing and
+    *     external tooling see every version), write the manifest, flip the
+    *     pointer — a reader that resolves the new pointer always finds a
+    *     complete manifest.
+    *
+    * Validation belongs BEFORE the call: a rejected write must not leave
+    * a claim behind. Returns the new live path.
     */
-  private def nextVersion(spark: SparkSession, root: String,
-                          currentPath: String): (String, String) = {
-    val curN = currentPath.substring(currentPath.lastIndexOf("/v") + 2).toInt
+  private def commit(spark: SparkSession, root: String, cur: String,
+                     operation: String, txn: Option[(String, Long)] = None)
+                    (build: String => ManifestIndex.TableManifest): String = {
+    val curN = cur.substring(cur.lastIndexOf("/v") + 2).toInt
     val next = versionName(curN + 1)
     val claim = new Path(root, s"$next.claim")
     val fs = claim.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -562,22 +581,52 @@ object Layout {
       throw new java.util.ConcurrentModificationException(
         s"version $next of $root is already claimed by a concurrent writer; " +
           "re-resolve the current version and retry")
-    (next, s"$root/$next")
+    val m = build(next)
+    fsOf(spark, root).mkdirs(new Path(root, next))
+    ManifestIndex.write(spark, root, next, m.copy(properties = m.properties ++
+      txn.map { case (app, batch) => ManifestIndex.TxnPrefix + app -> batch.toString } +
+      (ManifestIndex.OperationKey -> operation)))
+    writePointer(spark, root, next)
+    s"$root/$next"
   }
+
+  /** The ONE metadata-only commit: read the live manifest, `edit` it, and
+    * [[commit]] the result as `operation`. Every validation and probe scan
+    * runs inside `edit`, before the version is claimed. Timed here, once,
+    * so every metadata DDL counts as table-history setup
+    * ([[graft.util.DmlTimer]]); the job description still names the
+    * public entry point that called this.
+    */
+  private def alterManifest(spark: SparkSession, root: String, operation: String)
+                           (edit: ManifestIndex.TableManifest => ManifestIndex.TableManifest)
+      : String = graft.util.DmlTimer.timed {
+    val (cur, _, man) = currentManifest(spark, root)
+    val edited = edit(man)
+    commit(spark, root, cur, operation)(_ => edited)
+  }
+
+  /** Whether `txn` presents a batch at or below the watermark the live
+    * manifest stores for its application — a replayed batch, which the
+    * idempotent writers no-op without reading it.
+    */
+  private def replayed(man: ManifestIndex.TableManifest,
+                       txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (app, batch) =>
+      man.properties.get(ManifestIndex.TxnPrefix + app).exists(_.toLong >= batch)
+    }
 
   /** Run a versioned-layout commit under OCC RETRY: when the closure loses
     * the version-claim race (`ConcurrentModificationException` from
-    * [[nextVersion]]), re-run it after a bounded, jittered backoff — up to
+    * [[commit]]), re-run it after a bounded, jittered backoff — up to
     * `maxAttempts` total attempts, then rethrow.
     *
-    * This is correct because every Layout writer (merge, delete, the
-    * row-level writers, [[compactVersionedPartitioned]], [[publishVersion]])
-    * re-resolves `_current` at the TOP of each call: the retry is a genuine
-    * re-read of the new base, a re-run of the merge/delete against it, and
-    * a fresh claim — serialized behind the winner, never a blind re-flip of
-    * the pointer over a commit it did not read. Pass the WHOLE operation as
-    * the closure (not a pre-resolved path), or the re-read guarantee is
-    * lost.
+    * This is correct because every Layout writer commits through
+    * [[commit]] against the base it resolved from `_current` at the TOP of
+    * the same call: the retry is a genuine re-read of the new base, a
+    * re-run of the merge/delete against it, and a fresh claim — serialized
+    * behind the winner, never a blind re-flip of the pointer over a commit
+    * it did not read. Pass the WHOLE operation as the closure (not a
+    * pre-resolved path), or the re-read guarantee is lost.
     *
     * Backoff is exponential from `baseBackoffMs` with full jitter
     * (`U[0, base·2^attempt)`, capped at 2 s) — two writers that collided
@@ -693,16 +742,6 @@ object Layout {
   def initVersionedManifest(df: DataFrame, root: String,
                             pcols: Seq[String]): String =
     initVersionedManifest(df, root, pcols, Nil)
-
-  /** Declare WRITE-TIME clustering for every future image-appending write
-    * on this root (append, replace, upsert, merge) — the standing-order
-    * form of the per-call `zOrderCols` argument, so hot upserted/merged
-    * tables never decluster between OPTIMIZE passes. Validates loudly
-    * (active numeric data columns only). See [[ManifestIndex.setClusterColumns]].
-    */
-  def declareClustering(spark: SparkSession, root: String,
-                        cols: Seq[String]): Unit =
-    ManifestIndex.setClusterColumns(spark, root, cols)
 
   /** Variant declaring per-file BLOOM-FILTER columns from version 0 on
     * (see [[ManifestIndex.setBloomColumns]]): point lookups (`id = X`)
@@ -841,13 +880,13 @@ object Layout {
       s"schema evolution would duplicate a PHYSICAL column name " +
         s"(${physNames.mkString(",")}): an added column may not reuse a " +
         "renamed column's physical name")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(
-      dataSchema = newDataSchema,
-      entries = writeEntries(spark, root, next, newDataSchema, pcols,
-        leafSized(merged, pcols)) ++
-        man.entries.filterNot(e => affected.contains(e.leaf))), "MERGE")
-    nextPath
+    commit(spark, root, cur, "MERGE") { next =>
+      man.copy(
+        dataSchema = newDataSchema,
+        entries = writeEntries(spark, root, next, newDataSchema, pcols,
+          leafSized(merged, pcols)) ++
+          man.entries.filterNot(e => affected.contains(e.leaf)))
+    }
   }
 
   /** Key-pruned DELETE: leaves containing at least one row matching
@@ -877,13 +916,12 @@ object Layout {
     // fix: the row-level delete documents this; the partition-pruned
     // path must not churn retention with byte-identical versions)
     if (affected.isEmpty) return cur
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(
-      entries = writeEntries(spark, root, next, man.dataSchema, pcols,
+    commit(spark, root, cur, "DELETE") { next =>
+      man.copy(entries = writeEntries(spark, root, next, man.dataSchema, pcols,
         ManifestIndex.dataFrame(spark, root, man, Some(affected))
           .filter(!coalesce(predicate, lit(false)))) ++
-        man.entries.filterNot(e => affected.contains(e.leaf))), "DELETE")
-    nextPath
+        man.entries.filterNot(e => affected.contains(e.leaf)))
+    }
   }
 
   /** Row-level DELETE via DELETION VECTORS (merge-on-read) on a MANIFEST
@@ -930,11 +968,9 @@ object Layout {
     try rowLevelPlan(spark, root, man, matched) match {
       case None => cur
       case Some((counts, allPos)) =>
-        val (next, nextPath) = nextVersion(spark, root, cur)
-        val entries = writeDvSidecar(spark, man, counts, allPos, next, nextPath)
-        commitManifest(spark, root, next, man.copy(entries = entries),
-          "DELETE ROWS")
-        nextPath
+        commit(spark, root, cur, "DELETE ROWS") { next =>
+          man.copy(entries = writeDvSidecar(spark, root, man, counts, allPos, next))
+        }
     } finally matched.unpersist(false)
   }
 
@@ -985,15 +1021,14 @@ object Layout {
           // the no-match short-circuit (a no-op must not pay a validation
           // scan: review fix) but still BEFORE any version is claimed
           requireConstraints(images, man.writerChecks, "updated rows")
-          val (next, nextPath) = nextVersion(spark, root, cur)
-          // updated images first (the write replaces the version dir; the
-          // sidecar lands inside it afterwards)
-          val fresh = writeEntries(spark, root, next, man.dataSchema, pcols,
-            leafSized(images, pcols))
-          val carried = writeDvSidecar(spark, man, counts, allPos, next, nextPath)
-          commitManifest(spark, root, next, man.copy(entries = fresh ++ carried),
-            "UPDATE ROWS")
-          nextPath
+          commit(spark, root, cur, "UPDATE ROWS") { next =>
+            // updated images first (the write replaces the version dir; the
+            // sidecar lands inside it afterwards)
+            val fresh = writeEntries(spark, root, next, man.dataSchema, pcols,
+              leafSized(images, pcols))
+            man.copy(entries = fresh ++
+              writeDvSidecar(spark, root, man, counts, allPos, next))
+          }
       }
     } finally matched.unpersist(false)
   }
@@ -1060,10 +1095,7 @@ object Layout {
                           txn: Option[(String, Long)] = None): String = graft.util.DmlTimer.timed {
     require(keys.nonEmpty, "upsertVersionedRows: empty key set")
     val (cur, _, man) = currentManifest(spark, root)
-    txn.foreach { case (app, batch) =>
-      val applied = man.properties.get(ManifestIndex.TxnPrefix + app)
-      if (applied.exists(_.toLong >= batch)) return cur // replay: no-op
-    }
+    if (replayed(man, txn)) return cur
     val pcols = man.partitionSchema.fieldNames.toSeq
     // the incoming plan is executed several times below (empty probe,
     // constraint validation, key bounds, the semi-join build, the image
@@ -1113,8 +1145,7 @@ object Layout {
       .join(updates.select(keys.map(k => col(s"`$k`")): _*).distinct(),
         keys, "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (next, nextPath) = nextVersion(spark, root, cur)
+    try commit(spark, root, cur, "UPSERT ROWS", txn) { next =>
       // images first, replacing the version dir (a stale partial dir from
       // a crashed claimer is wiped), sidecar into it afterwards —
       // same ordering as updateVersionedRows. The writer emits PHYSICAL
@@ -1130,35 +1161,13 @@ object Layout {
       val carried = rowLevelPlan(spark, root, man, matched) match {
         case None => man.entries
         case Some((counts, allPos)) =>
-          writeDvSidecar(spark, man, counts, allPos, next, nextPath)
+          writeDvSidecar(spark, root, man, counts, allPos, next)
       }
-      commitManifest(spark, root, next, man.copy(
-        properties = man.properties ++ txn.map { case (app, batch) =>
-          ManifestIndex.TxnPrefix + app -> batch.toString },
-        entries = fresh ++ carried),
-        "UPSERT ROWS")
-      nextPath
+      man.copy(entries = fresh ++ carried)
     } finally matched.unpersist(false)
     } finally updates.unpersist(false)
   }
 
-  /** Pure APPEND on a MANIFEST root — `INSERT INTO` semantics: every
-    * incoming row lands, no matching, no deletion vectors, no rewrite of
-    * anything. One commit writes O(|rows|) bytes (partitioned into the
-    * table's leaves) and copies the carried entry list — the cheapest
-    * possible write at any table size, and the right one for fact/event
-    * ingestion where keys are fresh by construction.
-    *
-    * What it deliberately does NOT do: enforce key uniqueness (append has
-    * no keys — a caller feeding [[changeFeed]]/[[upsertVersionedRows]]
-    * consumers owns the unique-key contract) or schema evolution (merge's
-    * job; narrow producers post-widening are upcast at the door like every
-    * writer). CHECK constraints validate the incoming rows before any
-    * version is claimed; `txn` gives exactly-once commits over replays,
-    * exactly as on [[upsertVersionedRows]]. An empty batch is a no-op.
-    *
-    * @return the new live version path (or the current one on no-op)
-    */
   /** REPLACE the whole table's content in one commit — the SQL
     * `INSERT OVERWRITE` / `TRUNCATE` lowering: the next manifest carries
     * ONLY the fresh files (no carry-forward), so the snapshot IS `rows`, while
@@ -1181,7 +1190,22 @@ object Layout {
         extraProps = extraProps, zOrderCols = zOrderCols)
     }
 
-  /** Optional `zOrderCols` (WRITE-TIME clustering, S72): the fresh batch
+  /** Pure APPEND on a MANIFEST root — `INSERT INTO` semantics: every
+    * incoming row lands, no matching, no deletion vectors, no rewrite of
+    * anything. One commit writes O(|rows|) bytes (partitioned into the
+    * table's leaves) and copies the carried entry list — the cheapest
+    * possible write at any table size, and the right one for fact/event
+    * ingestion where keys are fresh by construction.
+    *
+    * What it deliberately does NOT do: enforce key uniqueness (append has
+    * no keys — a caller feeding [[changeFeed]]/[[upsertVersionedRows]]
+    * consumers owns the unique-key contract) or schema evolution (merge's
+    * job; narrow producers post-widening are upcast at the door like every
+    * writer). CHECK constraints validate the incoming rows before any
+    * version is claimed; `txn` gives exactly-once commits over replays,
+    * exactly as on [[upsertVersionedRows]]. An empty batch is a no-op.
+    *
+    * Optional `zOrderCols` (WRITE-TIME clustering, S72): the fresh batch
     * range-partitions and sorts on the interleaved z-value BEFORE landing,
     * so hot tables cluster on ingest instead of waiting for OPTIMIZE —
     * per-file min/max stats on the z dimensions are tight from the first
@@ -1189,6 +1213,8 @@ object Layout {
     * over the (already persisted) batch + a range shuffle, paid only when
     * requested. OPTIMIZE ZORDER remains the way to re-cluster data that
     * arrived unclustered.
+    *
+    * @return the new live version path (or the current one on no-op)
     */
   def appendVersionedRows(spark: SparkSession, root: String, rows0: DataFrame,
                           txn: Option[(String, Long)] = None,
@@ -1215,10 +1241,7 @@ object Layout {
                               extraProps: Map[String, String] = Map.empty,
                               zOrderCols: Seq[String] = Nil): String = {
     val (cur, _, man) = currentManifest(spark, root)
-    txn.foreach { case (app, batch) =>
-      val applied = man.properties.get(ManifestIndex.TxnPrefix + app)
-      if (applied.exists(_.toLong >= batch)) return cur // replay: no-op
-    }
+    if (replayed(man, txn)) return cur
     val pcols = man.partitionSchema.fieldNames.toSeq
     val rows = upcastToActive(man, rows0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1259,28 +1282,25 @@ object Layout {
         requireUniqueBatch(man, rows,
           if (keepEntries) Some(ManifestIndex.dataFrame(spark, root, man))
           else None, s"$op rows")
-      val (next, nextPath) = nextVersion(spark, root, cur)
-      val fresh = if (empty) Seq.empty else {
-        // write-time clustering happens on the LOGICAL frame (zOrderCols
-        // are logical names; toPhysical is a narrow projection, so the
-        // range partitioning and in-partition order survive it). An
-        // explicit argument wins; otherwise the table's DECLARED
-        // clustering (ManifestIndex.ClusterFile, S80) applies — one
-        // sidecar existence check per commit.
-        val zCols =
-          if (zOrderCols.nonEmpty) zOrderCols
-          else ManifestIndex.clusterColumns(spark, root)
-        val placed =
-          if (zCols.isEmpty) leafSized(rows, pcols)
-          else clusterForWrite(rows, pcols, zCols, what)
-        writeEntries(spark, root, next, man.dataSchema, pcols, placed)
+      commit(spark, root, cur, op, txn) { next =>
+        val fresh = if (empty) Seq.empty else {
+          // write-time clustering happens on the LOGICAL frame (zOrderCols
+          // are logical names; toPhysical is a narrow projection, so the
+          // range partitioning and in-partition order survive it). An
+          // explicit argument wins; otherwise the table's DECLARED
+          // clustering (ManifestIndex.ClusterFile, S80) applies — one
+          // sidecar existence check per commit.
+          val zCols =
+            if (zOrderCols.nonEmpty) zOrderCols
+            else ManifestIndex.clusterColumns(spark, root)
+          val placed =
+            if (zCols.isEmpty) leafSized(rows, pcols)
+            else clusterForWrite(rows, pcols, zCols, what)
+          writeEntries(spark, root, next, man.dataSchema, pcols, placed)
+        }
+        man.copy(properties = man.properties ++ extraProps,
+          entries = fresh ++ (if (keepEntries) man.entries else Seq.empty))
       }
-      commitManifest(spark, root, next, man.copy(
-        properties = man.properties ++ txn.map { case (app, batch) =>
-          ManifestIndex.TxnPrefix + app -> batch.toString } ++ extraProps,
-        entries = fresh ++ (if (keepEntries) man.entries else Seq.empty)),
-        op)
-      nextPath
     } finally rows.unpersist(false)
   }
 
@@ -1365,10 +1385,7 @@ object Layout {
       whenNotMatchedInsert.isDefined || hasBySource,
       "mergeIntoVersionedRows: no clauses")
     val (cur, _, man) = currentManifest(spark, root)
-    txn.foreach { case (app, batch) =>
-      val applied = man.properties.get(ManifestIndex.TxnPrefix + app)
-      if (applied.exists(_.toLong >= batch)) return cur // replay: no-op
-    }
+    if (replayed(man, txn)) return cur
     val pcols = man.partitionSchema.fieldNames.toSeq
     (whenMatchedUpdate.toSeq ++ whenNotMatchedBySourceUpdate.toSeq).foreach { case (_, set) =>
       require(set.nonEmpty, "mergeIntoVersionedRows: empty update set")
@@ -1540,29 +1557,25 @@ object Layout {
               // validate appended images BEFORE any version is claimed
               if (haveImages)
                 requireConstraints(images.get, man.writerChecks, "merged rows")
-              val (next, nextPath) = nextVersion(spark, root, cur)
-              val fresh = if (!haveImages) Seq.empty else {
-                // DECLARED clustering (S80) on the merge's appended image
-                // — update + insert images land z-placed like appends do
-                val zCols = ManifestIndex.clusterColumns(spark, root)
-                val placedImages =
-                  if (zCols.isEmpty) leafSized(images.get, pcols)
-                  else clusterForWrite(images.get, pcols, zCols,
-                    "mergeIntoVersionedRows")
-                writeEntries(spark, root, next, man.dataSchema, pcols,
-                  placedImages)
+              commit(spark, root, cur, "MERGE INTO", txn) { next =>
+                val fresh = if (!haveImages) Seq.empty else {
+                  // DECLARED clustering (S80) on the merge's appended image
+                  // — update + insert images land z-placed like appends do
+                  val zCols = ManifestIndex.clusterColumns(spark, root)
+                  val placedImages =
+                    if (zCols.isEmpty) leafSized(images.get, pcols)
+                    else clusterForWrite(images.get, pcols, zCols,
+                      "mergeIntoVersionedRows")
+                  writeEntries(spark, root, next, man.dataSchema, pcols,
+                    placedImages)
+                }
+                val carried = plan match {
+                  case Some((counts, allPos)) =>
+                    writeDvSidecar(spark, root, man, counts, allPos, next)
+                  case None => man.entries
+                }
+                man.copy(entries = fresh ++ carried)
               }
-              val carried = plan match {
-                case Some((counts, allPos)) =>
-                  writeDvSidecar(spark, man, counts, allPos, next, nextPath)
-                case None => man.entries
-              }
-              commitManifest(spark, root, next,
-                man.copy(entries = fresh ++ carried,
-                  properties = man.properties ++ txn.map { case (app, batch) =>
-                    ManifestIndex.TxnPrefix + app -> batch.toString }),
-                "MERGE INTO")
-              nextPath
           }
         } finally images.foreach(_.unpersist(false))
       } finally {
@@ -1615,7 +1628,7 @@ object Layout {
     val allPos =
       if (oldDirs.isEmpty) newPos
       else newPos.unionByName(
-        spark.read.schema(ManifestIndex.DvSchema).parquet(oldDirs: _*)
+        ManifestIndex.readDv(spark, oldDirs)
           .join(broadcast(touchedDf), col("path") === col("__touched"),
             "left_semi"))
     Some((newCounts, allPos))
@@ -1626,16 +1639,15 @@ object Layout {
     * re-pointed at it — an entry whose every row is now deleted (row count
     * known from stats) drops out entirely.
     */
-  private def writeDvSidecar(spark: SparkSession,
+  private def writeDvSidecar(spark: SparkSession, root: String,
                              man: ManifestIndex.TableManifest,
                              counts: Map[String, Long], allPos: DataFrame,
-                             next: String, nextPath: String)
-      : Seq[ManifestIndex.Entry] = {
+                             next: String): Seq[ManifestIndex.Entry] = {
     val entriesByKey = man.entries.map(e => ManifestIndex.dvKey(e.path) -> e).toMap
     val total = counts.values.sum +
       counts.keysIterator.flatMap(k => entriesByKey(k).dv.map(_.rows)).sum
     allPos.repartition(math.max(1L, total / 4000000L + 1L).toInt)
-      .write.mode(SaveMode.Overwrite).parquet(s"$nextPath/_dv")
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/$next/_dv")
     man.entries.flatMap { e =>
       val k = ManifestIndex.dvKey(e.path)
       counts.get(k) match {
@@ -1666,43 +1678,40 @@ object Layout {
     * @return the new live version path
     */
   def renameColumn(spark: SparkSession, root: String,
-                   oldName: String, newName: String): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(!man.partitionSchema.fieldNames.contains(oldName),
-      s"renameColumn: '$oldName' is a partition column — its name is baked " +
-        "into every leaf path; repartitioning is a rewrite, not a rename")
-    require(man.entries.forall(e =>
-        !ManifestIndex.leafSpec(e.leaf).contains(oldName)),
-      s"renameColumn: '$oldName' is dir-encoded in historical leaves " +
-        "(written under an earlier partition spec) — compact to re-spec " +
-        "those leaves first, or the dir values would detach from the column")
-    require(ManifestIndex.activeSchema(man.dataSchema).fieldNames.contains(oldName),
-      s"renameColumn: no (active) column '$oldName' in " +
-        ManifestIndex.activeSchema(man.dataSchema).fieldNames.mkString(","))
-    require(!man.dataSchema.fieldNames.contains(newName) &&
-      !man.partitionSchema.fieldNames.contains(newName),
-      s"renameColumn: '$newName' already exists")
-    requireNoConstraintReference(spark, man, oldName, "renameColumn")
-    // a declared CLUSTER BY column rides the sidecar by LOGICAL name —
-    // renaming underneath it would brick every subsequent write (the
-    // placement selects a column that no longer exists); refuse loudly,
-    // the same contract as constraint references
-    require(!ManifestIndex.clusterColumns(spark, root).contains(oldName),
-      s"renameColumn: '$oldName' is a declared CLUSTER BY column — " +
-        "redeclare the clustering (or CLUSTER BY NONE) first")
-    val renamed = StructType(man.dataSchema.map { f =>
-      if (f.name != oldName) f
-      else org.apache.spark.sql.types.StructField(newName, f.dataType, f.nullable,
-        new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putString(ManifestIndex.PhysicalKey, ManifestIndex.physicalName(f))
-          .build())
-    })
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(dataSchema = renamed),
-      "RENAME COLUMN")
-    nextPath
-  }
+                   oldName: String, newName: String): String =
+    alterManifest(spark, root, "RENAME COLUMN") { man =>
+      require(!man.partitionSchema.fieldNames.contains(oldName),
+        s"renameColumn: '$oldName' is a partition column — its name is baked " +
+          "into every leaf path; repartitioning is a rewrite, not a rename")
+      require(man.entries.forall(e =>
+          !ManifestIndex.leafSpec(e.leaf).contains(oldName)),
+        s"renameColumn: '$oldName' is dir-encoded in historical leaves " +
+          "(written under an earlier partition spec) — compact to re-spec " +
+          "those leaves first, or the dir values would detach from the column")
+      require(ManifestIndex.activeSchema(man.dataSchema).fieldNames.contains(oldName),
+        s"renameColumn: no (active) column '$oldName' in " +
+          ManifestIndex.activeSchema(man.dataSchema).fieldNames.mkString(","))
+      require(!man.dataSchema.fieldNames.contains(newName) &&
+        !man.partitionSchema.fieldNames.contains(newName),
+        s"renameColumn: '$newName' already exists")
+      requireNoConstraintReference(spark, man, oldName, "renameColumn")
+      // a declared CLUSTER BY column rides the sidecar by LOGICAL name —
+      // renaming underneath it would brick every subsequent write (the
+      // placement selects a column that no longer exists); refuse loudly,
+      // the same contract as constraint references
+      require(!ManifestIndex.clusterColumns(spark, root).contains(oldName),
+        s"renameColumn: '$oldName' is a declared CLUSTER BY column — " +
+          "redeclare the clustering (or CLUSTER BY NONE) first")
+      val renamed = StructType(man.dataSchema.map { f =>
+        if (f.name != oldName) f
+        else org.apache.spark.sql.types.StructField(newName, f.dataType, f.nullable,
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata)
+            .putString(ManifestIndex.PhysicalKey, ManifestIndex.physicalName(f))
+            .build())
+      })
+      man.copy(dataSchema = renamed)
+    }
 
   /** ADD a (nullable) data column to a manifest root — metadata-only: the
     * new manifest carries one more field; no file is rewritten. Files
@@ -1723,33 +1732,29 @@ object Layout {
     * @return the new live version path
     */
   def addColumn(spark: SparkSession, root: String,
-                name: String, dataType: org.apache.spark.sql.types.DataType): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
-    // case-INSENSITIVE guards: Spark resolves case-insensitively by
-    // default, so committing both 'v' and 'V' would brick every read
-    // with AMBIGUOUS_REFERENCE (review fix)
-    require(!(man.dataSchema.fieldNames ++ man.partitionSchema.fieldNames)
-        .exists(_.equalsIgnoreCase(name)),
-      s"addColumn: '$name' already exists (a dropped column's tombstone " +
-        "keeps its name claimed — re-adding it would ambiguate history)")
-    val claimed = (man.dataSchema.map(ManifestIndex.physicalName) ++
-      man.partitionSchema.fieldNames).map(_.toLowerCase).toSet
-    val field =
-      if (!claimed(name.toLowerCase))
-        org.apache.spark.sql.types.StructField(name, dataType, nullable = true)
-      else {
-        val phys = Iterator.from(1).map(i => s"${name}_$i")
-          .find(p => !claimed(p.toLowerCase)).get
-        org.apache.spark.sql.types.StructField(name, dataType, nullable = true,
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putString(ManifestIndex.PhysicalKey, phys).build())
-      }
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next,
-      man.copy(dataSchema = StructType(man.dataSchema :+ field)),
-      "ADD COLUMN")
-    nextPath
-  }
+                name: String, dataType: org.apache.spark.sql.types.DataType): String =
+    alterManifest(spark, root, "ADD COLUMN") { man =>
+      // case-INSENSITIVE guards: Spark resolves case-insensitively by
+      // default, so committing both 'v' and 'V' would brick every read
+      // with AMBIGUOUS_REFERENCE (review fix)
+      require(!(man.dataSchema.fieldNames ++ man.partitionSchema.fieldNames)
+          .exists(_.equalsIgnoreCase(name)),
+        s"addColumn: '$name' already exists (a dropped column's tombstone " +
+          "keeps its name claimed — re-adding it would ambiguate history)")
+      val claimed = (man.dataSchema.map(ManifestIndex.physicalName) ++
+        man.partitionSchema.fieldNames).map(_.toLowerCase).toSet
+      val field =
+        if (!claimed(name.toLowerCase))
+          org.apache.spark.sql.types.StructField(name, dataType, nullable = true)
+        else {
+          val phys = Iterator.from(1).map(i => s"${name}_$i")
+            .find(p => !claimed(p.toLowerCase)).get
+          org.apache.spark.sql.types.StructField(name, dataType, nullable = true,
+            new org.apache.spark.sql.types.MetadataBuilder()
+              .putString(ManifestIndex.PhysicalKey, phys).build())
+        }
+      man.copy(dataSchema = StructType(man.dataSchema :+ field))
+    }
 
   /** WIDEN a data column's type on a manifest root — metadata-only, like
     * [[renameColumn]]: no data file is rewritten, because Spark 4's
@@ -1786,61 +1791,45 @@ object Layout {
     * @return the new live version path
     */
   def widenColumn(spark: SparkSession, root: String,
-                  name: String, to: org.apache.spark.sql.types.DataType): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(!man.partitionSchema.fieldNames.contains(name),
-      s"widenColumn: '$name' is a partition column — its encoded values " +
-        "are baked into every leaf path; repartitioning is a rewrite")
-    val active = ManifestIndex.activeSchema(man.dataSchema)
-    require(active.fieldNames.contains(name),
-      s"widenColumn: no (active) column '$name' in " +
-        active.fieldNames.mkString(","))
-    val f = active(active.fieldIndex(name))
-    require(ManifestIndex.isWidening(f.dataType, to),
-      s"widenColumn: ${f.dataType.simpleString} -> ${to.simpleString} is " +
-        "not a lossless parquet-reader widening (see ManifestIndex.isWidening)")
-    val zone = spark.sessionState.conf.sessionLocalTimeZone
-    val phys = ManifestIndex.physicalName(f)
-    val widened = StructType(man.dataSchema.map { g =>
-      if (g.name == name && !ManifestIndex.isDropped(g)) g.copy(dataType = to)
-      else g
-    })
-    val entries = man.entries.map { e =>
-      e.stats.flatMap(st => st.cols.get(phys).map { c =>
-        e.copy(stats = Some(st.copy(cols = st.cols.updated(phys, c.copy(
-          min = c.min.flatMap(
-            ManifestIndex.reencodeBound(_, f.dataType, to, zone)),
-          max = c.max.flatMap(
-            ManifestIndex.reencodeBound(_, f.dataType, to, zone)),
-          // bloom AND ndv hash the STORED type: xxhash64(int 5) ≠
-          // xxhash64(long 5), so a sketch built under the old type must
-          // not union with new-type sketches (the same reason the bloom
-          // drops) — it would double-count every value present on both
-          // sides of the widen. Fresh files regrow both at the next
-          // compaction/commit.
-          bloom = None,
-          ndv = None)))))
-      }).getOrElse(e)
+                  name: String, to: org.apache.spark.sql.types.DataType): String =
+    alterManifest(spark, root, "WIDEN COLUMN") { man =>
+      require(!man.partitionSchema.fieldNames.contains(name),
+        s"widenColumn: '$name' is a partition column — its encoded values " +
+          "are baked into every leaf path; repartitioning is a rewrite")
+      val active = ManifestIndex.activeSchema(man.dataSchema)
+      require(active.fieldNames.contains(name),
+        s"widenColumn: no (active) column '$name' in " +
+          active.fieldNames.mkString(","))
+      val f = active(active.fieldIndex(name))
+      require(ManifestIndex.isWidening(f.dataType, to),
+        s"widenColumn: ${f.dataType.simpleString} -> ${to.simpleString} is " +
+          "not a lossless parquet-reader widening (see ManifestIndex.isWidening)")
+      val zone = spark.sessionState.conf.sessionLocalTimeZone
+      val phys = ManifestIndex.physicalName(f)
+      val widened = StructType(man.dataSchema.map { g =>
+        if (g.name == name && !ManifestIndex.isDropped(g)) g.copy(dataType = to)
+        else g
+      })
+      val entries = man.entries.map { e =>
+        e.stats.flatMap(st => st.cols.get(phys).map { c =>
+          e.copy(stats = Some(st.copy(cols = st.cols.updated(phys, c.copy(
+            min = c.min.flatMap(
+              ManifestIndex.reencodeBound(_, f.dataType, to, zone)),
+            max = c.max.flatMap(
+              ManifestIndex.reencodeBound(_, f.dataType, to, zone)),
+            // bloom AND ndv hash the STORED type: xxhash64(int 5) ≠
+            // xxhash64(long 5), so a sketch built under the old type must
+            // not union with new-type sketches (the same reason the bloom
+            // drops) — it would double-count every value present on both
+            // sides of the widen. Fresh files regrow both at the next
+            // compaction/commit.
+            bloom = None,
+            ndv = None)))))
+        }).getOrElse(e)
+      }
+      man.copy(dataSchema = widened, entries = entries)
     }
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next,
-      man.copy(dataSchema = widened, entries = entries), "WIDEN COLUMN")
-    nextPath
-  }
 
-  /** DROP a data column of a manifest root — metadata-only, like
-    * [[renameColumn]]: the field becomes a TOMBSTONE in the manifest
-    * schema (no file rewritten, no bytes read for it ever again), and its
-    * physical name stays claimed forever, so schema evolution that tries
-    * to re-add the name is REJECTED loudly instead of silently resurrecting
-    * the old footers' values. Old versions still show the column (time
-    * travel reads the schema of its day); a change feed across the drop is
-    * empty when the data didn't change. To truly reclaim the bytes,
-    * rewrite (compact) — the tombstone only stops the column from being
-    * read.
-    *
-    * @return the new live version path
-    */
   /** PARTITION-SPEC EVOLUTION on a manifest root — metadata-only, the
     * Iceberg move: change what future writes partition by WITHOUT touching
     * a single existing file. One manifest commit swaps `partitionSchema`
@@ -1871,84 +1860,90 @@ object Layout {
     * @return the new live version path
     */
   def repartitionTable(spark: SparkSession, root: String,
-                       newPcols: Seq[String]): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
-    val active = ManifestIndex.activeSchema(man.dataSchema)
-    val fieldBy = (active ++ man.partitionSchema).map(f => f.name -> f).toMap
-    require(newPcols.nonEmpty && newPcols.distinct == newPcols,
-      s"repartitionTable: partition columns must be non-empty and distinct, " +
-        s"got ${newPcols.mkString(",")}")
-    require(newPcols != man.partitionSchema.fieldNames.toSeq,
-      s"repartitionTable: table is already partitioned by ${newPcols.mkString(",")}")
-    newPcols.foreach { n =>
-      val f = fieldBy.getOrElse(n, throw new IllegalArgumentException(
-        s"repartitionTable: unknown (or dropped) column '$n'"))
-      require(ManifestIndex.physicalName(f) == f.name,
-        s"repartitionTable: column '$n' has been renamed (physical " +
-          s"'${ManifestIndex.physicalName(f)}') — a dir name cannot carry " +
-          "the mapping; partition columns must be physical-identity")
-      require(!f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] &&
-          !f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] &&
-          !f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType],
-        s"repartitionTable: column '$n' has non-atomic type ${f.dataType} — " +
-          "only atomic types can be dir-encoded")
+                       newPcols: Seq[String]): String =
+    alterManifest(spark, root, "REPARTITION") { man =>
+      val active = ManifestIndex.activeSchema(man.dataSchema)
+      val fieldBy = (active ++ man.partitionSchema).map(f => f.name -> f).toMap
+      require(newPcols.nonEmpty && newPcols.distinct == newPcols,
+        s"repartitionTable: partition columns must be non-empty and distinct, " +
+          s"got ${newPcols.mkString(",")}")
+      require(newPcols != man.partitionSchema.fieldNames.toSeq,
+        s"repartitionTable: table is already partitioned by ${newPcols.mkString(",")}")
+      newPcols.foreach { n =>
+        val f = fieldBy.getOrElse(n, throw new IllegalArgumentException(
+          s"repartitionTable: unknown (or dropped) column '$n'"))
+        require(ManifestIndex.physicalName(f) == f.name,
+          s"repartitionTable: column '$n' has been renamed (physical " +
+            s"'${ManifestIndex.physicalName(f)}') — a dir name cannot carry " +
+            "the mapping; partition columns must be physical-identity")
+        require(!f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] &&
+            !f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] &&
+            !f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType],
+          s"repartitionTable: column '$n' has non-atomic type ${f.dataType} — " +
+            "only atomic types can be dir-encoded")
+      }
+      val blooms = ManifestIndex.bloomColumns(spark, root)
+      require(blooms.forall(b => !newPcols.contains(b)),
+        s"repartitionTable: ${blooms.mkString(",")} are declared bloom " +
+          "columns — a dir-encoded column gets no per-file blooms; unset first")
+      val clustered = ManifestIndex.clusterColumns(spark, root)
+      require(clustered.forall(c => !newPcols.contains(c)),
+        s"repartitionTable: ${clustered.mkString(",")} are declared CLUSTER " +
+          "BY columns — the leaves would already split on them and every " +
+          "subsequent write would refuse; CLUSTER BY NONE (or redeclare) first")
+      val plain = newPcols.map(n =>
+        org.apache.spark.sql.types.StructField(n, fieldBy(n).dataType,
+          fieldBy(n).nullable))
+      val newData = StructType(
+        (active.filterNot(f => newPcols.contains(f.name)) ++
+          man.partitionSchema.filterNot(f => newPcols.contains(f.name))) ++
+          man.dataSchema.filter(ManifestIndex.isDropped))
+      man.copy(dataSchema = newData, partitionSchema = StructType(plain))
     }
-    val blooms = ManifestIndex.bloomColumns(spark, root)
-    require(blooms.forall(b => !newPcols.contains(b)),
-      s"repartitionTable: ${blooms.mkString(",")} are declared bloom " +
-        "columns — a dir-encoded column gets no per-file blooms; unset first")
-    val clustered = ManifestIndex.clusterColumns(spark, root)
-    require(clustered.forall(c => !newPcols.contains(c)),
-      s"repartitionTable: ${clustered.mkString(",")} are declared CLUSTER " +
-        "BY columns — the leaves would already split on them and every " +
-        "subsequent write would refuse; CLUSTER BY NONE (or redeclare) first")
-    val plain = newPcols.map(n =>
-      org.apache.spark.sql.types.StructField(n, fieldBy(n).dataType,
-        fieldBy(n).nullable))
-    val newData = StructType(
-      (active.filterNot(f => newPcols.contains(f.name)) ++
-        man.partitionSchema.filterNot(f => newPcols.contains(f.name))) ++
-        man.dataSchema.filter(ManifestIndex.isDropped))
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(
-      dataSchema = newData, partitionSchema = StructType(plain)),
-      "REPARTITION")
-    nextPath
-  }
 
-  def dropColumn(spark: SparkSession, root: String, name: String): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(!man.partitionSchema.fieldNames.contains(name),
-      s"dropColumn: '$name' is a partition column — repartitioning is a " +
-        "rewrite, not a drop")
-    require(man.entries.forall(e =>
-        !ManifestIndex.leafSpec(e.leaf).contains(name)),
-      s"dropColumn: '$name' is dir-encoded in historical leaves (written " +
-        "under an earlier partition spec) — compact to re-spec those " +
-        "leaves first; a tombstone cannot hide dir values the reader " +
-        "still needs to parse")
-    val active = ManifestIndex.activeSchema(man.dataSchema)
-    require(active.fieldNames.contains(name),
-      s"dropColumn: no (active) column '$name' in ${active.fieldNames.mkString(",")}")
-    require(active.length > 1,
-      "dropColumn: refusing to drop the last data column")
-    requireNoConstraintReference(spark, man, name, "dropColumn")
-    require(!ManifestIndex.clusterColumns(spark, root).contains(name),
-      s"dropColumn: '$name' is a declared CLUSTER BY column — " +
-        "redeclare the clustering (or CLUSTER BY NONE) first")
-    val dropped = StructType(man.dataSchema.map { f =>
-      if (f.name != name) f
-      else org.apache.spark.sql.types.StructField(f.name, f.dataType, f.nullable,
-        new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putBoolean(ManifestIndex.DroppedKey, true)
-          .build())
-    })
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(dataSchema = dropped),
-      "DROP COLUMN")
-    nextPath
-  }
+  /** DROP a data column of a manifest root — metadata-only, like
+    * [[renameColumn]]: the field becomes a TOMBSTONE in the manifest
+    * schema (no file rewritten, no bytes read for it ever again), and its
+    * physical name stays claimed forever, so schema evolution that tries
+    * to re-add the name is REJECTED loudly instead of silently resurrecting
+    * the old footers' values. Old versions still show the column (time
+    * travel reads the schema of its day); a change feed across the drop is
+    * empty when the data didn't change. To truly reclaim the bytes,
+    * rewrite (compact) — the tombstone only stops the column from being
+    * read.
+    *
+    * @return the new live version path
+    */
+  def dropColumn(spark: SparkSession, root: String, name: String): String =
+    alterManifest(spark, root, "DROP COLUMN") { man =>
+      require(!man.partitionSchema.fieldNames.contains(name),
+        s"dropColumn: '$name' is a partition column — repartitioning is a " +
+          "rewrite, not a drop")
+      require(man.entries.forall(e =>
+          !ManifestIndex.leafSpec(e.leaf).contains(name)),
+        s"dropColumn: '$name' is dir-encoded in historical leaves (written " +
+          "under an earlier partition spec) — compact to re-spec those " +
+          "leaves first; a tombstone cannot hide dir values the reader " +
+          "still needs to parse")
+      val active = ManifestIndex.activeSchema(man.dataSchema)
+      require(active.fieldNames.contains(name),
+        s"dropColumn: no (active) column '$name' in ${active.fieldNames.mkString(",")}")
+      require(active.length > 1,
+        "dropColumn: refusing to drop the last data column")
+      requireNoConstraintReference(spark, man, name, "dropColumn")
+      require(!ManifestIndex.clusterColumns(spark, root).contains(name),
+        s"dropColumn: '$name' is a declared CLUSTER BY column — " +
+          "redeclare the clustering (or CLUSTER BY NONE) first")
+      val dropped = StructType(man.dataSchema.map { f =>
+        if (f.name != name) f
+        else org.apache.spark.sql.types.StructField(f.name, f.dataType, f.nullable,
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata)
+            .putBoolean(ManifestIndex.DroppedKey, true)
+            .build())
+      })
+      man.copy(dataSchema = dropped)
+    }
 
   /** Add a CHECK constraint (writer-enforced data quality at the storage
     * layer, Delta-shape) to a manifest root: `sql` is a boolean SQL
@@ -1966,22 +1961,19 @@ object Layout {
     * @return the new live version path
     */
   def addCheckConstraint(spark: SparkSession, root: String,
-                         name: String, sql: String): String = graft.util.DmlTimer.timed {
-    require(name.matches("[A-Za-z0-9_.-]+"),
-      s"constraint name '$name' must be [A-Za-z0-9_.-]+")
-    val (cur, _, man) = currentManifest(spark, root)
-    require(!man.constraints.contains(name),
-      s"constraint '$name' already exists: ${man.constraints(name)}")
-    // existing data must satisfy the new invariant (also resolves the
-    // expression against the schema — unknown columns fail loudly here)
-    requireConstraints(ManifestIndex.dataFrame(spark, root, man),
-      Map(name -> sql), s"existing data of $root")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties + (ManifestIndex.ConstraintPrefix + name -> sql)),
-      "ADD CONSTRAINT")
-    nextPath
-  }
+                         name: String, sql: String): String =
+    alterManifest(spark, root, "ADD CONSTRAINT") { man =>
+      require(name.matches("[A-Za-z0-9_.-]+"),
+        s"constraint name '$name' must be [A-Za-z0-9_.-]+")
+      require(!man.constraints.contains(name),
+        s"constraint '$name' already exists: ${man.constraints(name)}")
+      // existing data must satisfy the new invariant (also resolves the
+      // expression against the schema — unknown columns fail loudly here)
+      requireConstraints(ManifestIndex.dataFrame(spark, root, man),
+        Map(name -> sql), s"existing data of $root")
+      man.copy(properties =
+        man.properties + (ManifestIndex.ConstraintPrefix + name -> sql))
+    }
 
   /** Whether `name` is a declared CHECK constraint on the live version. */
   def hasCheckConstraint(spark: SparkSession, root: String,
@@ -2022,16 +2014,13 @@ object Layout {
 
   /** Remove a CHECK constraint; later writers stop validating it. */
   def dropCheckConstraint(spark: SparkSession, root: String,
-                          name: String): String = {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(man.constraints.contains(name),
-      s"no constraint '$name' (have: ${man.constraints.keys.mkString(",")})")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties - (ManifestIndex.ConstraintPrefix + name)),
-      "DROP CONSTRAINT")
-    nextPath
-  }
+                          name: String): String =
+    alterManifest(spark, root, "DROP CONSTRAINT") { man =>
+      require(man.constraints.contains(name),
+        s"no constraint '$name' (have: ${man.constraints.keys.mkString(",")})")
+      man.copy(properties =
+        man.properties - (ManifestIndex.ConstraintPrefix + name))
+    }
 
   /** Declare a column NOT NULL (S69): existing data is validated (one
     * null-probe scan, predicate pushed down), then every later writer
@@ -2039,8 +2028,7 @@ object Layout {
     * ([[ManifestIndex.TableManifest.writerChecks]]). One metadata commit.
     */
   def setNotNull(spark: SparkSession, root: String, col: String): String =
-    graft.util.DmlTimer.timed {
-      val (cur, _, man) = currentManifest(spark, root)
+    alterManifest(spark, root, "SET NOT NULL") { man =>
       requireTableColumn(spark, man, col, "setNotNull")
       require(!man.notNullCols.contains(col),
         s"column '$col' is already NOT NULL")
@@ -2048,25 +2036,19 @@ object Layout {
           .filter(org.apache.spark.sql.functions.col(col).isNull).isEmpty)
         throw new IllegalArgumentException(
           s"setNotNull: existing data of $root has NULLs in '$col'")
-      val (next, nextPath) = nextVersion(spark, root, cur)
-      commitManifest(spark, root, next, man.copy(properties =
-        man.properties + (ManifestIndex.NotNullPrefix + col -> "1")),
-        "SET NOT NULL")
-      nextPath
+      man.copy(properties =
+        man.properties + (ManifestIndex.NotNullPrefix + col -> "1"))
     }
 
   /** Remove a NOT NULL marker; later writers stop validating it. */
-  def dropNotNull(spark: SparkSession, root: String, col: String): String = {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(man.notNullCols.contains(col),
-      s"column '$col' is not declared NOT NULL " +
-        s"(have: ${man.notNullCols.toSeq.sorted.mkString(",")})")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties - (ManifestIndex.NotNullPrefix + col)),
-      "DROP NOT NULL")
-    nextPath
-  }
+  def dropNotNull(spark: SparkSession, root: String, col: String): String =
+    alterManifest(spark, root, "DROP NOT NULL") { man =>
+      require(man.notNullCols.contains(col),
+        s"column '$col' is not declared NOT NULL " +
+          s"(have: ${man.notNullCols.toSeq.sorted.mkString(",")})")
+      man.copy(properties =
+        man.properties - (ManifestIndex.NotNullPrefix + col))
+    }
 
   /** Declare a column DEFAULT (S70): an INSERT that omits the column gets
     * `defaultSql` instead of NULL ([[completeInsertColumns]]). The
@@ -2076,40 +2058,34 @@ object Layout {
     * (standard SET DEFAULT semantics — it shapes future inserts only).
     */
   def setColumnDefault(spark: SparkSession, root: String, col: String,
-                       defaultSql: String): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
-    requireTableColumn(spark, man, col, "setColumnDefault")
-    require(!man.identity.exists(_._1 == col),
-      s"setColumnDefault: '$col' is the GENERATED identity column")
-    val colType = (ManifestIndex.activeSchema(man.dataSchema) ++
-      man.partitionSchema).find(_.name == col).get.dataType
-    // loud validation: unresolvable names, non-castable types, runtime
-    // cast failures (ANSI) all surface now. The probe row carries ZERO
-    // columns (range(1).select()) so any column reference in the default
-    // fails resolution — a default must be column-free (range(1) alone
-    // would silently resolve a default referencing `id`)
-    spark.range(1).select()
-      .select(expr(defaultSql).cast(colType).as("v")).collect()
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties + (ManifestIndex.DefaultPrefix + col -> defaultSql)),
-      "SET DEFAULT")
-    nextPath
-  }
+                       defaultSql: String): String =
+    alterManifest(spark, root, "SET DEFAULT") { man =>
+      requireTableColumn(spark, man, col, "setColumnDefault")
+      require(!man.identity.exists(_._1 == col),
+        s"setColumnDefault: '$col' is the GENERATED identity column")
+      val colType = (ManifestIndex.activeSchema(man.dataSchema) ++
+        man.partitionSchema).find(_.name == col).get.dataType
+      // loud validation: unresolvable names, non-castable types, runtime
+      // cast failures (ANSI) all surface now. The probe row carries ZERO
+      // columns (range(1).select()) so any column reference in the default
+      // fails resolution — a default must be column-free (range(1) alone
+      // would silently resolve a default referencing `id`)
+      spark.range(1).select()
+        .select(expr(defaultSql).cast(colType).as("v")).collect()
+      man.copy(properties =
+        man.properties + (ManifestIndex.DefaultPrefix + col -> defaultSql))
+    }
 
   /** Remove a column DEFAULT; later inserts fill NULL again. */
   def dropColumnDefault(spark: SparkSession, root: String,
-                        col: String): String = {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(man.defaults.contains(col),
-      s"column '$col' has no DEFAULT " +
-        s"(have: ${man.defaults.keys.toSeq.sorted.mkString(",")})")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties - (ManifestIndex.DefaultPrefix + col)),
-      "DROP DEFAULT")
-    nextPath
-  }
+                        col: String): String =
+    alterManifest(spark, root, "DROP DEFAULT") { man =>
+      require(man.defaults.contains(col),
+        s"column '$col' has no DEFAULT " +
+          s"(have: ${man.defaults.keys.toSeq.sorted.mkString(",")})")
+      man.copy(properties =
+        man.properties - (ManifestIndex.DefaultPrefix + col))
+    }
 
   /** Declare a BIGINT column GENERATED (identity, S71): an INSERT that
     * omits it gets values strictly above the committed high-water mark —
@@ -2126,26 +2102,23 @@ object Layout {
     * already present.
     */
   def setIdentityColumn(spark: SparkSession, root: String,
-                        col: String): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
-    requireTableColumn(spark, man, col, "setIdentityColumn")
-    require(man.identity.isEmpty,
-      s"table already has identity column '${man.identity.get._1}'")
-    require(!man.defaults.contains(col),
-      s"setIdentityColumn: '$col' carries a DEFAULT — dropColumnDefault first")
-    val colType = (ManifestIndex.activeSchema(man.dataSchema) ++
-      man.partitionSchema).find(_.name == col).get.dataType
-    require(colType == org.apache.spark.sql.types.LongType,
-      s"setIdentityColumn: '$col' must be BIGINT, got ${colType.sql}")
-    val mx = ManifestIndex.dataFrame(spark, root, man)
-      .agg(max(org.apache.spark.sql.functions.col(col))).first()
-    val hw = if (mx.isNullAt(0)) 0L else math.max(0L, mx.getLong(0))
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties + (ManifestIndex.IdentityPrefix + col -> hw.toString)),
-      "SET IDENTITY")
-    nextPath
-  }
+                        col: String): String =
+    alterManifest(spark, root, "SET IDENTITY") { man =>
+      requireTableColumn(spark, man, col, "setIdentityColumn")
+      require(man.identity.isEmpty,
+        s"table already has identity column '${man.identity.get._1}'")
+      require(!man.defaults.contains(col),
+        s"setIdentityColumn: '$col' carries a DEFAULT — dropColumnDefault first")
+      val colType = (ManifestIndex.activeSchema(man.dataSchema) ++
+        man.partitionSchema).find(_.name == col).get.dataType
+      require(colType == org.apache.spark.sql.types.LongType,
+        s"setIdentityColumn: '$col' must be BIGINT, got ${colType.sql}")
+      val mx = ManifestIndex.dataFrame(spark, root, man)
+        .agg(max(org.apache.spark.sql.functions.col(col))).first()
+      val hw = if (mx.isNullAt(0)) 0L else math.max(0L, mx.getLong(0))
+      man.copy(properties =
+        man.properties + (ManifestIndex.IdentityPrefix + col -> hw.toString))
+    }
 
   /** Declare a column GENERATED ALWAYS AS `exprSql` (S77, the Delta
     * generated-column shape): an INSERT that omits the column gets the
@@ -2168,76 +2141,70 @@ object Layout {
     * some later write).
     */
   def setGeneratedColumn(spark: SparkSession, root: String, col: String,
-                         exprSql: String): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
-    requireTableColumn(spark, man, col, "setGeneratedColumn")
-    val resolver = spark.sessionState.analyzer.resolver
-    require(!man.identity.exists(p => resolver(p._1, col)),
-      s"setGeneratedColumn: '$col' is the GENERATED identity column")
-    require(!man.defaults.keys.exists(resolver(_, col)),
-      s"setGeneratedColumn: '$col' carries a DEFAULT — dropColumnDefault " +
-        "first (a column cannot be both defaulted and generated)")
-    require(!man.generatedCols.keys.exists(resolver(_, col)),
-      s"setGeneratedColumn: '$col' is already generated — " +
-        "dropGeneratedColumn first")
-    val refs = referencedColumns(spark, exprSql)
-    require(!refs.exists(resolver(_, col)),
-      s"setGeneratedColumn: expression references '$col' itself")
-    man.generatedCols.keys.foreach { g =>
-      require(!refs.exists(resolver(_, g)),
-        s"setGeneratedColumn: expression references generated column '$g' " +
-          "— generation expressions see only base columns (no hidden " +
-          "evaluation order)")
+                         exprSql: String): String =
+    alterManifest(spark, root, "SET GENERATED") { man =>
+      requireTableColumn(spark, man, col, "setGeneratedColumn")
+      val resolver = spark.sessionState.analyzer.resolver
+      require(!man.identity.exists(p => resolver(p._1, col)),
+        s"setGeneratedColumn: '$col' is the GENERATED identity column")
+      require(!man.defaults.keys.exists(resolver(_, col)),
+        s"setGeneratedColumn: '$col' carries a DEFAULT — dropColumnDefault " +
+          "first (a column cannot be both defaulted and generated)")
+      require(!man.generatedCols.keys.exists(resolver(_, col)),
+        s"setGeneratedColumn: '$col' is already generated — " +
+          "dropGeneratedColumn first")
+      val refs = referencedColumns(spark, exprSql)
+      require(!refs.exists(resolver(_, col)),
+        s"setGeneratedColumn: expression references '$col' itself")
+      man.generatedCols.keys.foreach { g =>
+        require(!refs.exists(resolver(_, g)),
+          s"setGeneratedColumn: expression references generated column '$g' " +
+            "— generation expressions see only base columns (no hidden " +
+            "evaluation order)")
+      }
+      val colType = (ManifestIndex.activeSchema(man.dataSchema) ++
+        man.partitionSchema).find(_.name == col).get.dataType
+      // resolve + cast against the table's own schema (zero rows read);
+      // determinism checked on the ANALYZED expressions — rand() in a
+      // generated column would make the writer probe unsatisfiable
+      val probe = ManifestIndex.dataFrame(spark, root, man).limit(0)
+        .select(expr(exprSql).cast(colType).as("v"))
+      require(probe.queryExecution.analyzed.expressions.forall(_.deterministic),
+        s"setGeneratedColumn: expression must be deterministic: $exprSql")
+      // a scalar subquery RESOLVES (the session catalog is in scope) and
+      // reports deterministic, but generation would then depend on ANOTHER
+      // table's current state — the writer probe would start refusing
+      // every write the moment that table changes (review fix: refuse the
+      // declaration, not some later insert)
+      require(!probe.queryExecution.analyzed.expressions.exists(_.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression])),
+        s"setGeneratedColumn: expression must not contain a subquery — " +
+          s"generation is a pure function of the row's own columns: $exprSql")
+      probe.collect()
+      // existing rows must already satisfy the invariant the writers will
+      // enforce from now on
+      val bad = ManifestIndex.dataFrame(spark, root, man)
+        .filter(!(org.apache.spark.sql.functions.col(col) <=>
+          expr(exprSql).cast(colType))).limit(1).count()
+      require(bad == 0L,
+        s"setGeneratedColumn: existing data of $root has rows where " +
+          s"'$col' <> ($exprSql)")
+      man.copy(properties =
+        man.properties + (ManifestIndex.GeneratedPrefix + col -> exprSql))
     }
-    val colType = (ManifestIndex.activeSchema(man.dataSchema) ++
-      man.partitionSchema).find(_.name == col).get.dataType
-    // resolve + cast against the table's own schema (zero rows read);
-    // determinism checked on the ANALYZED expressions — rand() in a
-    // generated column would make the writer probe unsatisfiable
-    val probe = ManifestIndex.dataFrame(spark, root, man).limit(0)
-      .select(expr(exprSql).cast(colType).as("v"))
-    require(probe.queryExecution.analyzed.expressions.forall(_.deterministic),
-      s"setGeneratedColumn: expression must be deterministic: $exprSql")
-    // a scalar subquery RESOLVES (the session catalog is in scope) and
-    // reports deterministic, but generation would then depend on ANOTHER
-    // table's current state — the writer probe would start refusing
-    // every write the moment that table changes (review fix: refuse the
-    // declaration, not some later insert)
-    require(!probe.queryExecution.analyzed.expressions.exists(_.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression])),
-      s"setGeneratedColumn: expression must not contain a subquery — " +
-        s"generation is a pure function of the row's own columns: $exprSql")
-    probe.collect()
-    // existing rows must already satisfy the invariant the writers will
-    // enforce from now on
-    val bad = ManifestIndex.dataFrame(spark, root, man)
-      .filter(!(org.apache.spark.sql.functions.col(col) <=>
-        expr(exprSql).cast(colType))).limit(1).count()
-    require(bad == 0L,
-      s"setGeneratedColumn: existing data of $root has rows where " +
-        s"'$col' <> ($exprSql)")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties + (ManifestIndex.GeneratedPrefix + col -> exprSql)),
-      "SET GENERATED")
-    nextPath
-  }
 
   /** Remove a GENERATED ALWAYS AS declaration; the column keeps its
     * current values and later inserts must provide it (or get NULL).
     */
   def dropGeneratedColumn(spark: SparkSession, root: String,
-                          col: String): String = {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(man.generatedCols.contains(col),
-      s"column '$col' is not generated " +
-        s"(have: ${man.generatedCols.keys.toSeq.sorted.mkString(",")})")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties - (ManifestIndex.GeneratedPrefix + col)),
-      "DROP GENERATED")
-    nextPath
-  }
+                          col: String): String =
+    alterManifest(spark, root, "DROP GENERATED") { man =>
+      require(man.generatedCols.contains(col),
+        s"column '$col' is not generated " +
+          s"(have: ${man.generatedCols.keys.toSeq.sorted.mkString(",")})")
+      man.copy(properties =
+        man.properties - (ManifestIndex.GeneratedPrefix + col))
+    }
 
   /** Declare a UNIQUE constraint over `cols` (S78) — the hard guarantee
     * Delta/Iceberg leave "informational", priced honestly: existing data
@@ -2264,29 +2231,26 @@ object Layout {
     * key-completeness is wanted.
     */
   def addUniqueConstraint(spark: SparkSession, root: String, name: String,
-                          cols: Seq[String]): String = graft.util.DmlTimer.timed {
-    require(cols.nonEmpty, "addUniqueConstraint: empty column list")
-    require(cols.distinct.size == cols.size,
-      s"addUniqueConstraint: duplicate columns in (${cols.mkString(",")})")
-    require(cols.forall(!_.contains(",")),
-      "addUniqueConstraint: column names may not contain ','")
-    val (cur, _, man) = currentManifest(spark, root)
-    cols.foreach(requireTableColumn(spark, man, _, "addUniqueConstraint"))
-    require(!man.uniqueConstraints.contains(name),
-      s"addUniqueConstraint: constraint '$name' already exists")
-    val dup = keyedNonNull(ManifestIndex.dataFrame(spark, root, man), cols)
-      .groupBy(cols.map(c => col(s"`$c`")): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
-    require(dup.isEmpty,
-      s"addUniqueConstraint: existing data of $root has duplicate " +
-        s"(${cols.mkString(",")}) rows")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties +
-        (ManifestIndex.UniquePrefix + name -> cols.mkString(","))),
-      "ADD UNIQUE")
-    nextPath
-  }
+                          cols: Seq[String]): String =
+    alterManifest(spark, root, "ADD UNIQUE") { man =>
+      require(cols.nonEmpty, "addUniqueConstraint: empty column list")
+      require(cols.distinct.size == cols.size,
+        s"addUniqueConstraint: duplicate columns in (${cols.mkString(",")})")
+      require(cols.forall(!_.contains(",")),
+        "addUniqueConstraint: column names may not contain ','")
+      cols.foreach(requireTableColumn(spark, man, _, "addUniqueConstraint"))
+      require(!man.uniqueConstraints.contains(name),
+        s"addUniqueConstraint: constraint '$name' already exists")
+      val dup = keyedNonNull(ManifestIndex.dataFrame(spark, root, man), cols)
+        .groupBy(cols.map(c => col(s"`$c`")): _*)
+        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
+      require(dup.isEmpty,
+        s"addUniqueConstraint: existing data of $root has duplicate " +
+          s"(${cols.mkString(",")}) rows")
+      man.copy(properties =
+        man.properties +
+          (ManifestIndex.UniquePrefix + name -> cols.mkString(",")))
+    }
 
   /** Whether the table declares a UNIQUE constraint named `name`. */
   def hasUniqueConstraint(spark: SparkSession, root: String,
@@ -2295,17 +2259,14 @@ object Layout {
 
   /** Remove a UNIQUE constraint; later writes stop paying its probes. */
   def dropUniqueConstraint(spark: SparkSession, root: String,
-                           name: String): String = {
-    val (cur, _, man) = currentManifest(spark, root)
-    require(man.uniqueConstraints.contains(name),
-      s"no UNIQUE constraint '$name' " +
-        s"(have: ${man.uniqueConstraints.keys.toSeq.sorted.mkString(",")})")
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(properties =
-      man.properties - (ManifestIndex.UniquePrefix + name)),
-      "DROP UNIQUE")
-    nextPath
-  }
+                           name: String): String =
+    alterManifest(spark, root, "DROP UNIQUE") { man =>
+      require(man.uniqueConstraints.contains(name),
+        s"no UNIQUE constraint '$name' " +
+          s"(have: ${man.uniqueConstraints.keys.toSeq.sorted.mkString(",")})")
+      man.copy(properties =
+        man.properties - (ManifestIndex.UniquePrefix + name))
+    }
 
   /** Rows with every `cols` value non-null — the UNIQUE-relevant subset
     * (SQL: NULLs never conflict), projected to the constraint columns.
@@ -2441,10 +2402,6 @@ object Layout {
       s"$op: no column '$col' (have: ${all.mkString(",")})")
   }
 
-  /** Reject `df` if any row makes a constraint predicate FALSE (NULL
-    * passes — SQL CHECK semantics). One short-circuiting job per
-    * constraint, predicate pushed into the scan.
-    */
   /** Idempotent batch file ingest (S73, the Databricks `COPY INTO`
     * shape): load every data file under `source` that the table's ingest
     * ledger does not already record, append the rows, and mark the files
@@ -2505,19 +2462,15 @@ object Layout {
       val ledger = fresh.map(f =>
         ManifestIndex.IngestPrefix + f -> (before + 1).toString).toMap
       val path = appendVersionedRows(spark, root, df, extraProps = ledger)
-      if (currentVersionNumber(spark, root) == before) {
-        // all-empty fresh files: the append no-opped and DROPPED the
-        // ledger (an empty append discards extraProps by contract) — mark
-        // them with a metadata-only commit or every later call re-reads
-        // the same empty files forever (review fix)
-        val (cur, _, liveMan) = currentManifest(spark, root)
-        val (next, nextPath) = nextVersion(spark, root, cur)
-        commitManifest(spark, root, next,
-          liveMan.copy(properties = liveMan.properties ++ ledger),
-          "COPY INTO")
-        return (nextPath, fresh.length)
-      }
-      (path, fresh.length)
+      // all-empty fresh files: the append no-opped and DROPPED the ledger
+      // (an empty append discards extraProps by contract) — mark them with
+      // a metadata-only commit or every later call re-reads the same empty
+      // files forever (review fix)
+      val live =
+        if (currentVersionNumber(spark, root) != before) path
+        else alterManifest(spark, root, "COPY INTO")(m =>
+          m.copy(properties = m.properties ++ ledger))
+      (live, fresh.length)
     }
 
   /** Range-place a fresh batch on (partition cols, z-value) and sort
@@ -2599,6 +2552,10 @@ object Layout {
           s"$what violates CHECK constraint '$name' ($sql)")
     }
 
+  /** Reject `df` if any row makes a constraint predicate FALSE (NULL
+    * passes — SQL CHECK semantics). Every check [[neededChecks]] keeps is
+    * counted in one combined aggregate over `df`.
+    */
   private def requireConstraints(df: DataFrame,
                                  constraints: Map[String, String],
                                  what: String): Unit = {
@@ -2671,11 +2628,9 @@ object Layout {
     val (cur, _, _) = currentManifest(spark, root)
     require(cur != s"$root/${versionName(version)}",
       s"restoreVersion: version $version is already live")
-    val (next, nextPath) = nextVersion(spark, root, cur)
     // "the table as it was" — schema, entries, DVs AND constraints come
     // from the restored version; only the operation stamp is this commit's
-    commitManifest(spark, root, next, old, "RESTORE")
-    nextPath
+    commit(spark, root, cur, "RESTORE")(_ => old)
   }
 
   /** (live version path, version name, manifest) of a versioned root —
@@ -2699,13 +2654,11 @@ object Layout {
   private def rewriteLeaves(spark: SparkSession, root: String, cur: String,
                             man: ManifestIndex.TableManifest,
                             leaves: Set[String],
-                            targetBytes: Long, operation: String): String = {
-    val (next, nextPath) = nextVersion(spark, root, cur)
-    commitManifest(spark, root, next, man.copy(
-      entries = rewriteEntries(spark, root, next, man, leaves, targetBytes) ++
-        man.entries.filterNot(e => leaves.contains(e.leaf))), operation)
-    nextPath
-  }
+                            targetBytes: Long, operation: String): String =
+    commit(spark, root, cur, operation) { next =>
+      man.copy(entries = rewriteEntries(spark, root, next, man, leaves, targetBytes) ++
+        man.entries.filterNot(e => leaves.contains(e.leaf)))
+    }
 
   /** The ONE rewrite job behind purge, re-home and compaction: every leaf
     * in `leaves` is read in one scan (one DV anti-join; leaves written
@@ -2900,22 +2853,6 @@ object Layout {
         s"(repartitionTable) — use row-level DML (upsertVersionedRows / " +
         "mergeIntoVersionedRows / deleteVersionedRows) or run " +
         "compactVersionedPartitioned to re-spec old leaves first")
-  }
-
-  /** Shared manifest-commit tail: version dir always exists (so
-    * [[history]]'s listing and external tooling see every version), then
-    * manifest, then the atomic pointer flip — a reader that resolves the
-    * new pointer always finds a complete manifest.
-    */
-  private def commitManifest(spark: SparkSession, root: String, version: String,
-                             m: ManifestIndex.TableManifest,
-                             operation: String): Unit = {
-    fsOf(spark, root).mkdirs(new Path(root, version))
-    ManifestIndex.write(spark, root, version, m.copy(
-      // every commit overwrites the key, so each version's manifest names
-      // ITS operation (the DESCRIBE HISTORY surface)
-      properties = m.properties + (ManifestIndex.OperationKey -> operation)))
-    writePointer(spark, root, version)
   }
 
   /** Write one commit's data files: `rows` (logical column names, the

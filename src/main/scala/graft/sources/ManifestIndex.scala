@@ -1193,7 +1193,7 @@ object ManifestIndex {
     val mapDf = spark.createDataFrame(keyToAbs).toDF("__dv_key", "__dv_file")
     val dirs = dvEntries.flatMap(_.dv.map(d =>
       absEntryPath(root, d.path).toString)).distinct
-    val dv = spark.read.schema(DvSchema).parquet(dirs: _*)
+    val dv = readDv(spark, dirs)
       .join(mapDf, col("path") === col("__dv_key"))
       .select(col("__dv_file"), col("pos").as("__dv_pos"))
     df.join(broadcast(dv),
@@ -1275,6 +1275,22 @@ object ManifestIndex {
     org.apache.spark.sql.types.StructField("path", StringType, nullable = false),
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType, nullable = false)))
+
+  /** The `(path, pos)` rows of the deletion-vector sidecars in `dirs`
+    * (`vNNNNN/_dv`), read by their part files: handed the directories
+    * themselves, Spark treats the leading `_` as hidden and logs "All
+    * paths were ignored" on every read.
+    */
+  private[sources] def readDv(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    val files = dirs.flatMap { d =>
+      val dir = new Path(d)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+        .map(_.getPath)
+        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .map(_.toString)
+    }
+    spark.read.schema(DvSchema).parquet(files: _*)
+  }
 
   private def partitionDirectories(spark: SparkSession, root: String,
                                    partitionSchema: StructType,

@@ -13,8 +13,8 @@ import graft.sources.Layout
   * the parse-time path, exprId-based target/source classification,
   * clause-order masking, star expansion, subqueries, `USE graft` bare
   * names, Spark-native ambiguity errors, the refusal surface (identity
-  * INSERT, correlated subqueries, time-travel writes), the evolution
-  * carve-out, and the parse-time escape hatch.
+  * INSERT, correlated subqueries, time-travel writes) and the evolution
+  * carve-out.
   */
 class CatalogDmlSpec extends SparkSpec {
 
@@ -305,16 +305,5 @@ class CatalogDmlSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(changes.getOrElse("delete", 0L) == 10L)
     assert(changes.getOrElse("update_post", 0L) == 1L)
-  }
-
-  test("escape hatch: spark.graft.catalogDml.resolved=false → parse path") {
-    val t = mkTable()
-    cat.conf.set("spark.graft.catalogDml.resolved", "false")
-    try {
-      sql(s"DELETE FROM graft.$t WHERE id >= 15")
-      assert(state(t).keySet == (0L until 15L).toSet)
-      sql(s"UPDATE graft.$t SET v = 0 WHERE id = 0")
-      assert(state(t)(0L) == 0L)
-    } finally cat.conf.set("spark.graft.catalogDml.resolved", "true")
   }
 }

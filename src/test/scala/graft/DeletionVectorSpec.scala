@@ -385,4 +385,41 @@ class DeletionVectorSpec extends SparkSpec {
         .agg(count(lit(1)), sum($"v")).as[(Long, Double)].head())
     assert(dvAnswers == purged)
   }
+
+  test("reading a DV-bearing version logs no ignored-paths warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val root = init()
+    Layout.deleteVersionedRows(spark, root, $"id" === 2L)
+    Layout.deleteVersionedRows(spark, root, $"id" === 4L)
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("dv-read", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    // the suite logs at ERROR; listen at WARN on the data-source logger only
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val ds = new LoggerConfig("org.apache.spark.sql.execution.datasources",
+      Level.WARN, false)
+    ds.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.addLogger(ds.getName, ds)
+    ctx.updateLoggers()
+    try {
+      assert(state(root) == Set((1L, "p1", 10.0), (3L, "p1", 30.0),
+        (5L, "p2", 50.0), (6L, "p3", 60.0)))
+      // the row-level writers read the touched files' prior DVs too
+      Layout.deleteVersionedRows(spark, root, $"id" === 1L)
+    } finally {
+      ctx.getConfiguration.removeLogger(ds.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    val ignored = warned.toArray.map(_.toString)
+      .filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
 }

@@ -239,7 +239,7 @@ class LayoutPropertySpec extends SparkSpec {
           // the property
           if (graft.sources.ManifestIndex.clusterColumns(spark, root).nonEmpty)
             graft.sources.ManifestIndex.dropClusterColumns(spark, root)
-          else Layout.declareClustering(spark, root, Seq("v"))
+          else graft.sources.ManifestIndex.setClusterColumns(spark, root, Seq("v"))
           committed = false
         case 10 =>
           val r = Layout.maintain(spark, root,

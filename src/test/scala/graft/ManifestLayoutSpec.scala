@@ -558,4 +558,118 @@ class ManifestLayoutSpec extends SparkSpec {
     assert(shape(back1) == shape(v1))
     assert(back1.as[(Int, String)].collect().toSeq == Seq((7, "x")))
   }
+
+  /** A root every metadata DDL applies to: `g` satisfies `g = v * 2`, `id`
+    * is unique and non-null, `v` holds no NULL, and `w` is an INT that
+    * repeats.
+    */
+  private def ddlRoot(): String = {
+    val root = Files.createTempDirectory("graft_ddl").toString
+    Layout.initVersionedManifest(
+      Seq((1L, "p1", 10.0, 20.0, 1), (2L, "p2", 20.0, 40.0, 1))
+        .toDF("id", "part", "v", "g", "w"), root, Seq("part"))
+    root
+  }
+
+  private def liveOperation(root: String): String =
+    Layout.history(spark, root).filter($"is_current")
+      .select($"operation").as[String].head()
+
+  test("every metadata DDL commits exactly one version through the one " +
+      "timed commit path, recording its operation") {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val root = ddlRoot()
+    // an all-empty drop zone whose file has the table's exact schema:
+    // COPY INTO commits its ledger alone
+    val zone = Files.createTempDirectory("graft_ddl_zone").toString + "/in"
+    Layout.readCurrent(spark, root).limit(0).write.parquet(zone)
+    val calls: Seq[(String, String, () => Any)] = Seq(
+      ("copyInto", "COPY INTO", () => Layout.copyInto(spark, root, zone)),
+      ("addCheckConstraint", "ADD CONSTRAINT",
+        () => Layout.addCheckConstraint(spark, root, "pos", "v >= 0")),
+      ("dropCheckConstraint", "DROP CONSTRAINT",
+        () => Layout.dropCheckConstraint(spark, root, "pos")),
+      ("setNotNull", "SET NOT NULL", () => Layout.setNotNull(spark, root, "v")),
+      ("dropNotNull", "DROP NOT NULL", () => Layout.dropNotNull(spark, root, "v")),
+      ("setColumnDefault", "SET DEFAULT",
+        () => Layout.setColumnDefault(spark, root, "v", "0.0")),
+      ("dropColumnDefault", "DROP DEFAULT",
+        () => Layout.dropColumnDefault(spark, root, "v")),
+      ("setGeneratedColumn", "SET GENERATED",
+        () => Layout.setGeneratedColumn(spark, root, "g", "v * 2")),
+      ("dropGeneratedColumn", "DROP GENERATED",
+        () => Layout.dropGeneratedColumn(spark, root, "g")),
+      ("addUniqueConstraint", "ADD UNIQUE",
+        () => Layout.addUniqueConstraint(spark, root, "uid", Seq("id"))),
+      ("dropUniqueConstraint", "DROP UNIQUE",
+        () => Layout.dropUniqueConstraint(spark, root, "uid")),
+      ("setIdentityColumn", "SET IDENTITY",
+        () => Layout.setIdentityColumn(spark, root, "id")),
+      ("renameColumn", "RENAME COLUMN",
+        () => Layout.renameColumn(spark, root, "g", "g2")),
+      ("addColumn", "ADD COLUMN",
+        () => Layout.addColumn(spark, root, "x", StringType)),
+      ("widenColumn", "WIDEN COLUMN",
+        () => Layout.widenColumn(spark, root, "w", LongType)),
+      ("dropColumn", "DROP COLUMN", () => Layout.dropColumn(spark, root, "x")),
+      ("repartitionTable", "REPARTITION",
+        () => Layout.repartitionTable(spark, root, Seq("w"))),
+      ("restoreVersion", "RESTORE", () => Layout.restoreVersion(spark, root, 0)))
+    calls.foreach { case (name, op, call) =>
+      val before = Layout.currentVersionNumber(spark, root)
+      graft.util.DmlTimer.readAndResetSec()
+      call()
+      val timed = graft.util.DmlTimer.readAndResetSec()
+      assert(Layout.currentVersionNumber(spark, root) == before + 1,
+        s"$name must commit exactly one version")
+      assert(liveOperation(root) == op, name)
+      assert(timed > 0.0, s"$name must count as DML setup time")
+    }
+  }
+
+  test("a metadata DDL its own validation refuses claims no version") {
+    val root = ddlRoot()
+    Layout.addColumn(spark, root, "n", org.apache.spark.sql.types.DoubleType)
+    val before = Layout.currentVersionNumber(spark, root)
+    val refusals: Seq[() => Any] = Seq(
+      () => Layout.addCheckConstraint(spark, root, "neg", "v < 0"),
+      () => Layout.setNotNull(spark, root, "n"),
+      () => Layout.addUniqueConstraint(spark, root, "up", Seq("w")),
+      () => Layout.setGeneratedColumn(spark, root, "g", "v * 3"),
+      () => Layout.dropCheckConstraint(spark, root, "nope"),
+      () => Layout.widenColumn(spark, root, "v",
+        org.apache.spark.sql.types.IntegerType))
+    refusals.foreach(r => intercept[IllegalArgumentException](r()))
+    Layout.addUniqueConstraint(spark, root, "up", Seq("id"))
+    assert(Layout.currentVersionNumber(spark, root) == before + 1)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val claims = fs.listStatus(new Path(root)).map(_.getPath.getName)
+      .filter(_.endsWith(".claim")).sorted.toSeq
+    assert(claims == (1 to before + 1).map(v => f"v$v%05d.claim"),
+      "a refused DDL must leave no claim behind")
+  }
+
+  test("the jobs of a metadata DDL's probe scan are labelled with its " +
+      "public entry point") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = ddlRoot()
+    // an all-NULL column: file stats cannot prune the null probe's scan
+    Layout.addColumn(spark, root, "n", org.apache.spark.sql.types.DoubleType)
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.add(String.valueOf(
+          e.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusSync.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      intercept[IllegalArgumentException](Layout.setNotNull(spark, root, "n"))
+      org.apache.spark.graft.ListenerBusSync.drain(sc)
+    } finally sc.removeSparkListener(l)
+    val seen = labels.toArray.map(_.toString).toSeq
+    assert(seen.nonEmpty, "the null probe runs at least one job")
+    assert(seen.forall(_ == "Layout.setNotNull"), seen.mkString(", "))
+  }
 }

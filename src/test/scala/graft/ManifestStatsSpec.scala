@@ -368,7 +368,7 @@ class ManifestStatsSpec extends SparkSpec {
       Layout.initVersionedManifest(
         spark.range(1).select($"id", ($"id" % 97).as("a"), ($"id" % 89).as("b"),
           lit("p1").as("part")), root, Seq("part"))
-      if (declare) Layout.declareClustering(spark, root, Seq("a", "b"))
+      if (declare) ManifestIndex.setClusterColumns(spark, root, Seq("a", "b"))
       // three merge batches of SHUFFLED fresh keys: every image is an
       // insert (ids disjoint from the seed), so this is exactly the
       // "hot upserted table" shape that used to decluster until OPTIMIZE
@@ -409,10 +409,10 @@ class ManifestStatsSpec extends SparkSpec {
     assert(a == c)
     // declaration validates loudly: partition and non-numeric columns refuse
     intercept[IllegalArgumentException] {
-      Layout.declareClustering(spark, clustered, Seq("part"))
+      ManifestIndex.setClusterColumns(spark, clustered, Seq("part"))
     }
     intercept[IllegalArgumentException] {
-      Layout.declareClustering(spark, clustered, Seq("nope"))
+      ManifestIndex.setClusterColumns(spark, clustered, Seq("nope"))
     }
     // SQL face: CLUSTER BY redeclares, NONE drops; OPTIMIZE with no
     // explicit ZORDER list re-clusters to the declaration
