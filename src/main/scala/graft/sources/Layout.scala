@@ -594,8 +594,8 @@ object Layout {
     * [[commit]] the result as `operation`. Every validation and probe scan
     * runs inside `edit`, before the version is claimed. Timed here, once,
     * so every metadata DDL counts as table-history setup
-    * ([[graft.util.DmlTimer]]); the job description still names the
-    * public entry point that called this.
+    * ([[graft.util.DmlTimer]], which skips this frame, so the job
+    * description still names the public entry point that called it).
     */
   private def alterManifest(spark: SparkSession, root: String, operation: String)
                            (edit: ManifestIndex.TableManifest => ManifestIndex.TableManifest)

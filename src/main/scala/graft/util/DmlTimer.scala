@@ -33,17 +33,18 @@ object DmlTimer {
     // Label the jobs this writer op launches (guide §1.5): the outermost
     // entry point's method name becomes the Spark job description, so a
     // job-level profile (JobProbe, the UI) attributes multi-action DML
-    // setups op-by-op. A private method is never the entry point: a
-    // helper that times on its public caller's behalf
-    // (Layout.alterManifest) is skipped. Restored (not cleared) on exit so
-    // a caller's own label survives nested writer calls.
+    // setups op-by-op. Layout.alterManifest times every metadata DDL on
+    // its public caller's behalf, so its frame is skipped. Restored (not
+    // cleared) on exit so a caller's own label survives nested writer
+    // calls.
     val sess =
       if (d == 0) org.apache.spark.sql.SparkSession.getActiveSession else None
     val prior = sess.map { s =>
       val p = s.sparkContext.getLocalProperty("spark.job.description")
       val op = Thread.currentThread.getStackTrace
         .drop(1).find(e => e.getClassName.startsWith("graft.") &&
-          !e.getClassName.startsWith("graft.util.") && !isPrivate(e))
+          !e.getClassName.startsWith("graft.util.") &&
+          e.getMethodName != "alterManifest")
         .map(e => e.getClassName.split('.').last.takeWhile(_ != '$') +
           "." + e.getMethodName)
         .getOrElse("dml")
@@ -60,17 +61,6 @@ object DmlTimer {
       ()
     }
   }
-
-  /** Whether the frame's method is private in its class (every overload of
-    * the name is); false when the class cannot be loaded.
-    */
-  private def isPrivate(e: StackTraceElement): Boolean =
-    scala.util.Try {
-      val ms = Class.forName(e.getClassName, false, getClass.getClassLoader)
-        .getDeclaredMethods.filter(_.getName == e.getMethodName)
-      ms.nonEmpty &&
-        ms.forall(m => java.lang.reflect.Modifier.isPrivate(m.getModifiers))
-    }.getOrElse(false)
 
   /** Seconds accumulated since the last reset, and reset. */
   def readAndResetSec(): Double = nanos.getAndSet(0L) / 1e9
