@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver benchmark contract: run every registered query against
   * SPARK_GRAFT_SF_DIR and print exactly ONE JSON line with per-query and
   * total wall seconds.
@@ -13,18 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // pinned at build time: events.parquet is TIMESTAMP(NANOS) (see
-      // Tables.events scaladoc on the setting's session-global scope)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Session.build()
 
     // Untimed warmup at the smallest SF: one query per heavy code path
     // (native dot + window, LSH hashing, shingle/HOF pipeline, agg/join,

@@ -48,14 +48,6 @@ object VectorFunctions {
     when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
   }
 
-  /** Squared L2 distance. */
-  def l2sq(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double"); d * d
-      }),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Random-hyperplane (SimHash-style) LSH bucket for cosine similarity:
     * sign pattern of the vector against `nBits` seeded ±1 hyperplanes.
     * Hyperplanes are generated driver-side from the seed and embedded as

@@ -121,19 +121,10 @@ object AnnIndex {
     * metadata by the publish contract); deterministic reassembly by
     * (subspace, centroid).
     */
-  def loadCodebooks(spark: SparkSession, root: String): Array[Array[Array[Double]]] =
-    assemble(Layout.readCurrent(spark, root))
-
-  /** [[loadCodebooks]] pinned to a historical version — serving a frozen
-    * index while a retrain publishes, or auditing what version n served.
-    */
-  def loadCodebooksAt(spark: SparkSession, root: String,
-                      version: Int): Array[Array[Array[Double]]] =
-    assemble(Layout.readVersion(spark, root, version))
-
-  private def assemble(df: DataFrame): Array[Array[Array[Double]]] = {
-    val rows = df.select(col("subspace").cast("int"),
-        col("centroid").cast("int"), col("center").cast("array<double>"))
+  def loadCodebooks(spark: SparkSession, root: String): Array[Array[Array[Double]]] = {
+    val rows = Layout.readCurrent(spark, root).select(
+        col("subspace").cast("int"), col("centroid").cast("int"),
+        col("center").cast("array<double>"))
       .collect()
     require(rows.nonEmpty, "loadCodebooks: empty codebook table")
     val m = rows.map(_.getInt(0)).max + 1

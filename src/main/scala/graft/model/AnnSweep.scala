@@ -82,7 +82,7 @@ object AnnSweep {
     // frame is |queries|·k rows (bounded). Lazy, NOT an eager cut
     // (Caches.cut): the eager form forced AQE's stage-at-a-time
     // materialization, which ran the sweep's independent subtrees
-    // SERIALLY (q282 JobProbe: 36 jobs, 12 of them 1–2-task scoring
+    // SERIALLY (q282 per-job Probe: 36 jobs, 12 of them 1–2-task scoring
     // stages back to back); under one classic job the DAG scheduler
     // overlaps them (20 jobs, jobSum 5.0 → 0.5 s, wall 5.7 → 2.4 s).
     val exact = graft.util.Caches.cache(

@@ -8,14 +8,14 @@ import graft.util.Num
   *
   * The reference's only aggregates are emptiness counts
   * (/root/reference/transformation.py:52, loading.py:111); the full surface
-  * here is the [EXT] set: hash aggregate, distinct counts (exact + HLL),
+  * here is the [EXT] set: hash aggregate, distinct-count sketches,
   * rollup/cube/grouping sets.
   *
   * Scale notes: groupBy().agg() gets map-side partial aggregation from
   * Catalyst automatically — the shuffle carries one row per (partition, key),
   * not per input row. Exact countDistinct on high-cardinality keys expands to
-  * a two-phase aggregate; prefer [[approxDistinct]] (HLL++, constant memory)
-  * when 2-3% error is acceptable at 100 TB.
+  * a two-phase aggregate; prefer a sketch ([[kmvDistinct]], constant memory
+  * per group) when a few percent error is acceptable at 100 TB.
   */
 object Aggregates {
 
@@ -28,17 +28,9 @@ object Aggregates {
       max(col(value)).as(s"max_$value"),
       count(lit(1)).as("n"))
 
-  def exactDistinct(df: DataFrame, keys: Seq[String], of: Seq[String]): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(countDistinct(of.head, of.tail: _*).as("n_distinct"))
-
-  def approxDistinct(df: DataFrame, keys: Seq[String], of: String, rsd: Double = 0.02): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .agg(approx_count_distinct(col(of), rsd).as("approx_distinct"))
-
   /** A25 (SURVEY §2.18): K-minimum-values distinct-count sketch (Bar-Yossef et al. 2002)
-    * on the PORTABLE hash — the oracle-checkable sibling of
-    * [[approxDistinct]] (whose HLL bytes are engine-internal): keep the k
+    * on the PORTABLE hash — the oracle-checkable sibling of Spark's
+    * `approx_count_distinct` (whose HLL bytes are engine-internal): keep the k
     * smallest distinct hash values per group; with hashes ~uniform on
     * [0, P), `est = (k-1)·P / h_(k)` (exact count when fewer than k
     * distinct hashes exist). DETERMINISTIC — same data, same estimate,

@@ -52,8 +52,8 @@ object Drift {
     * counts at `|keys| × bins` grain. Persist/publish THIS (it is
     * broadcast-sized) and feed [[psiAgainstReference]] per comparison:
     * a monitor that scores every incoming micro-batch then scans the
-    * reference corpus ONCE at setup, not once per batch — the
-    * [[graft.streaming.StreamingOps.streamDriftMonitor]] contract.
+    * reference corpus ONCE at setup, not once per batch ([[psiDrift]] is
+    * the one-shot composition of the two halves).
     *
     * @return keys… , __bin, __cr (bin count), __lo, __hi, n_ref — bins
     *         with no reference rows are ABSENT (the grid completes in

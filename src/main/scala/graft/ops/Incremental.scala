@@ -140,7 +140,7 @@ object Incremental {
     // joined is consumed TWICE (the valid fold and the invalid-key set),
     // and each consumer would otherwise re-evaluate the whole state
     // subtree — chained applyFeedMinMax levels then cost 2^levels
-    // evaluations of the base fold (q153's JobProbe showed FOUR identical
+    // evaluations of the base fold (a per-job Probe of q153 showed FOUR identical
     // 14-task jobs for a 2-level chain). One tracked persist of the
     // group-grain frame makes each level's fold run once (guide §5 —
     // reuse beats recompute when the frame is small and read twice).
@@ -216,142 +216,4 @@ object Incremental {
       .join(currentB.join(touched, joinKeys, "left_semi"), joinKeys)
     kept.unionByName(recomputed)
   }
-
-  private val AppliedMeta = "_applied_table_version"
-  private val AppliedMetaA = "_applied_table_version_a"
-  private val AppliedMetaB = "_applied_table_version_b"
-
-  /** Create `viewRoot` as a versioned materialized JOIN view of two
-    * versioned tables' live versions, with one atomic watermark PER SIDE
-    * (same exactly-once contract as [[initFollowingView]]).
-    */
-  def initFollowingJoinView(spark: org.apache.spark.sql.SparkSession,
-                            tableRootA: String, tableRootB: String,
-                            viewRoot: String, joinKeys: Seq[String]): String = {
-    val na = graft.sources.Layout.currentVersionNumber(spark, tableRootA)
-    val nb = graft.sources.Layout.currentVersionNumber(spark, tableRootB)
-    graft.sources.Layout.publishVersion(spark, viewRoot,
-      materializeJoin(
-        graft.sources.Layout.readVersion(spark, tableRootA, na),
-        graft.sources.Layout.readVersion(spark, tableRootB, nb), joinKeys),
-      Map(AppliedMetaA -> na.toString, AppliedMetaB -> nb.toString))
-  }
-
-  /** Catch a join view up to BOTH tables' live versions in one commit:
-    * one change feed per side spanning `(applied, current]`, folded via
-    * [[applyFeedJoin]]. Either side's retention loss (its watermark
-    * version vacuumed) falls back to a full rebuild from the live
-    * snapshots — incremental when retention allows, recompute when it
-    * doesn't, never wrong. Already-current on both sides no-ops, so a
-    * replayed refresh commits nothing twice.
-    *
-    * @param rowKeysA/rowKeysB each table's ROW identity (its feed's join
-    *                          keys); `joinKeys` is the VIEW's join
-    * @return ((fromA, toA), (fromB, toB)) applied
-    */
-  def refreshFollowingJoinView(spark: org.apache.spark.sql.SparkSession,
-                               tableRootA: String, tableRootB: String,
-                               viewRoot: String,
-                               rowKeysA: Seq[String], rowKeysB: Seq[String],
-                               joinKeys: Seq[String]): ((Int, Int), (Int, Int)) = {
-    val viewVer = graft.sources.Layout.currentVersionNumber(spark, viewRoot)
-    def watermark(key: String): Int = graft.sources.Layout
-      .versionMeta(spark, viewRoot, viewVer, key)
-      .getOrElse(throw new IllegalStateException(
-        s"$viewRoot v$viewVer has no $key watermark — not a following join view"))
-      .trim.toInt
-    val (appliedA, appliedB) = (watermark(AppliedMetaA), watermark(AppliedMetaB))
-    val curA = graft.sources.Layout.currentVersionNumber(spark, tableRootA)
-    val curB = graft.sources.Layout.currentVersionNumber(spark, tableRootB)
-    if (curA == appliedA && curB == appliedB) return ((appliedA, appliedA), (appliedB, appliedB))
-    require(curA >= appliedA && curB >= appliedB,
-      s"a table is BEHIND the view's watermark (A v$curA/w$appliedA, " +
-        s"B v$curB/w$appliedB) — was a table rolled back?")
-    val snapA = graft.sources.Layout.readVersion(spark, tableRootA, curA)
-    val snapB = graft.sources.Layout.readVersion(spark, tableRootB, curB)
-    val state =
-      if (versionReadable(spark, tableRootA, appliedA) &&
-          versionReadable(spark, tableRootB, appliedB)) {
-        def feed(root: String, from: Int, to: Int, rowKeys: Seq[String],
-                 donor: DataFrame) =
-          if (from == to)
-            // empty feed with the feed's shape — only _change_type and the
-            // join keys are read downstream
-            donor.filter(lit(false)).withColumn("_change_type", lit(""))
-          else graft.sources.Layout.changeFeed(spark, root, from, to, rowKeys)
-        applyFeedJoin(graft.sources.Layout.readCurrent(spark, viewRoot),
-          feed(tableRootA, appliedA, curA, rowKeysA, snapA),
-          feed(tableRootB, appliedB, curB, rowKeysB, snapB),
-          snapA, snapB, joinKeys)
-      } else materializeJoin(snapA, snapB, joinKeys)
-    graft.sources.Layout.publishVersion(spark, viewRoot, state,
-      Map(AppliedMetaA -> curA.toString, AppliedMetaB -> curB.toString))
-    ((appliedA, curA), (appliedB, curB))
-  }
-
-  /** Create `viewRoot` as a versioned MATERIALIZED VIEW of `tableRoot`'s
-    * live version: the grouped (count, sums) state plus an atomic
-    * "derived from table version N" watermark
-    * ([[graft.sources.Layout.publishVersion]] metadata). From here on,
-    * [[refreshFollowingView]] advances the view by CHANGE FEED only.
-    */
-  def initFollowingView(spark: org.apache.spark.sql.SparkSession,
-                        tableRoot: String, viewRoot: String,
-                        keys: Seq[String], sumCols: Seq[String]): String = {
-    val n = graft.sources.Layout.currentVersionNumber(spark, tableRoot)
-    graft.sources.Layout.publishVersion(spark, viewRoot,
-      materialize(graft.sources.Layout.readVersion(spark, tableRoot, n),
-        keys, sumCols),
-      Map(AppliedMeta -> n.toString))
-  }
-
-  /** Catch the view up to the table's live version by applying ONE change
-    * feed spanning `(applied, current]` — refresh cost is the feed size,
-    * never the table size. The commit is exactly-once by construction:
-    * state and watermark publish atomically, so a crashed or REPLAYED
-    * refresh (a restarted streaming batch, a second maintenance job) sees
-    * the already-advanced watermark and no-ops instead of double-applying
-    * the feed.
-    *
-    * @param rowKeys the table's row identity (the feed's join keys);
-    *                `keys`/`sumCols` are the VIEW's grouping and measures
-    * @return (fromVersion, toVersion) applied; equal when already current
-    */
-  def refreshFollowingView(spark: org.apache.spark.sql.SparkSession,
-                           tableRoot: String, viewRoot: String,
-                           rowKeys: Seq[String], keys: Seq[String],
-                           sumCols: Seq[String]): (Int, Int) = {
-    val viewVer = graft.sources.Layout.currentVersionNumber(spark, viewRoot)
-    val applied = graft.sources.Layout
-      .versionMeta(spark, viewRoot, viewVer, AppliedMeta)
-      .getOrElse(throw new IllegalStateException(
-        s"$viewRoot v$viewVer has no $AppliedMeta watermark — not a following view"))
-      .trim.toInt
-    val tableVer = graft.sources.Layout.currentVersionNumber(spark, tableRoot)
-    if (tableVer == applied) return (applied, applied)
-    require(tableVer > applied, s"table at v$tableVer is BEHIND the view's " +
-      s"watermark v$applied — was the table rolled back?")
-    // Retention loss: if the table vacuumed past the view's watermark, the
-    // (applied, current] feed is gone — fall back to a FULL rebuild from
-    // the live snapshot (the standard CDF-consumer contract: incremental
-    // when retention allows, recompute when it doesn't — never wrong).
-    val state =
-      if (versionReadable(spark, tableRoot, applied)) {
-        val feed = graft.sources.Layout.changeFeed(
-          spark, tableRoot, applied, tableVer, rowKeys)
-        applyFeed(
-          graft.sources.Layout.readCurrent(spark, viewRoot), feed, keys, sumCols)
-      } else
-        materialize(
-          graft.sources.Layout.readVersion(spark, tableRoot, tableVer),
-          keys, sumCols)
-    graft.sources.Layout.publishVersion(spark, viewRoot, state,
-      Map(AppliedMeta -> tableVer.toString))
-    (applied, tableVer)
-  }
-
-  private def versionReadable(spark: org.apache.spark.sql.SparkSession,
-                              root: String, version: Int): Boolean =
-    try { graft.sources.Layout.resolveVersion(spark, root, version); true }
-    catch { case _: IllegalArgumentException => false }
 }

@@ -48,10 +48,6 @@ object Joins {
                lo: Column, hi: Column): DataFrame =
     fact.join(broadcast(bands), value >= lo && value < hi, "inner")
 
-  /** Generic theta join against a broadcast-sized build side. */
-  def thetaBroadcast(fact: DataFrame, small: DataFrame, cond: Column): DataFrame =
-    fact.join(broadcast(small), cond, "inner")
-
   /** J5b: the LARGE-LARGE shape of [[bandJoin]] — when the band table is
     * too big to broadcast, a nested-loop over it is quadratic death; the
     * scalable plan quantizes the value axis into width-`cellWidth` grid

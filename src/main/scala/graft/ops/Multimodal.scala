@@ -294,21 +294,4 @@ object Multimodal {
         count(lit(1)).as("n_shots"),
         max(col("len")).as("longest_shot"))
   }
-
-  /** STUB — resize plan shape: clamp declared dims to a bounding box
-    * preserving aspect ratio and mark the codec. A real implementation
-    * would transcode payload bytes; the metadata math, payload passthrough,
-    * and single-projection shape are the engine-side contract.
-    */
-  def stubResize(assets: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val scale = least(
-      lit(maxW.toDouble) / col("meta.width"),
-      lit(maxH.toDouble) / col("meta.height"),
-      lit(1.0))
-    assets.withColumn("meta", struct(
-      greatest(floor(col("meta.width") * scale), lit(1)).cast("int").as("width"),
-      greatest(floor(col("meta.height") * scale), lit(1)).cast("int").as("height"),
-      col("meta.duration_ms").as("duration_ms"),
-      concat(coalesce(col("meta.codec"), lit("raw")), lit("+resized")).as("codec")))
-  }
 }

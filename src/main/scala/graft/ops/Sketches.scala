@@ -3,44 +3,12 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Mergeable distinct-count sketches (Apache DataSketches HLL, exposed by
-  * Spark as `hll_sketch_agg`/`hll_union_agg`/`hll_sketch_estimate`) — the
-  * pre-aggregation pattern exact count-distinct cannot deliver: distinct
-  * counts do NOT add (Σ per-day uniques ≠ weekly uniques), so every new
-  * grain normally means another full scan of the corpus. Sketches fix the
-  * algebra: build once at the FINEST grain, then any coarser rollup is a
-  * union over the tiny sketch table — dashboard-speed re-aggregation at
-  * 100 TB, bounded error (~1.6%/√2^lgK), and the binary sketch column
-  * stores/round-trips through parquet like any other column.
-  *
-  * Estimates are deterministic for a given input SET (the sketch is an
-  * order-insensitive value map), so rollups are repartition-stable; they
-  * are still approximations, so this family is differential-tested
-  * against exact distincts (q42's contract), not hash-oracled.
+/** Mergeable frequency sketches. The distinct-count sketch lives in
+  * [[Aggregates.kmvDistinct]] (mergeable and oracle-checked: q42, q135);
+  * Spark's own `hll_sketch_agg`/`hll_union_agg`/`hll_sketch_estimate`
+  * cover the HLL form without a wrapper.
   */
 object Sketches {
-
-  /** Per-`grain` HLL sketches of `entity` (finest-grain build pass —
-    * the one full scan). lgConfigK = 12 → ~1.6% relative standard error
-    * in 4 KB per group.
-    */
-  def distinctSketches(df: DataFrame, grain: Seq[String], entity: Column,
-                       lgConfigK: Int = 12): DataFrame =
-    df.groupBy(grain.map(col): _*)
-      .agg(hll_sketch_agg(entity, lit(lgConfigK)).as("sketch"))
-
-  /** Roll fine-grain sketches up to `coarser` keys WITHOUT rescanning the
-    * corpus: one union aggregate over the sketch table. Returns the
-    * merged sketch (for further rollups) plus its estimate.
-    */
-  def rollupDistinct(sketches: DataFrame, coarser: Seq[String]): DataFrame = {
-    val grouped =
-      if (coarser.isEmpty) sketches.groupBy()
-      else sketches.groupBy(coarser.map(col): _*)
-    grouped.agg(hll_union_agg(col("sketch")).as("sketch"))
-      .withColumn("n_distinct_est",
-        hll_sketch_estimate(col("sketch")).cast("long"))
-  }
 
   import graft.functions.TextFunctions
 

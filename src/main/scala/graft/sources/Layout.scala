@@ -27,21 +27,14 @@ import org.apache.spark.sql.types.{BooleanType, ByteType, IntegerType,
   *
   * COMPACTION: streaming ingests and fine-grained partitions leave thousands
   * of KB-sized files; at 100 TB the scan's task-per-file scheduling and
-  * footer reads dominate. Two shapes:
-  *  - [[compact]] rewrites a plain parquet directory IN PLACE via
-  *    rename-aside swap. Renames are checked and the original is restored
-  *    on failure (no data-loss path), but a reader BETWEEN the two renames
-  *    still sees a missing directory, and directory rename is
-  *    copy-not-atomic on object stores — use it only for single-writer,
-  *    no-concurrent-reader maintenance windows.
-  *  - [[compactVersionedPartitioned]] is the reader-safe shape for a
-  *    VERSIONED ROOT: each version is a manifest (`vNNNNN.manifest`, a file
-  *    list) and a tiny `_current` pointer names the live one. Compaction
-  *    writes the rewritten files and a NEW manifest completely, then flips
-  *    the pointer with one atomic file rename — a concurrent reader
-  *    resolves either the old or the new version, never a half-written
-  *    one. Old versions persist until [[vacuumVersions]], giving in-flight
-  *    readers a grace window.
+  * footer reads dominate. [[compactVersionedPartitioned]] is the
+  * reader-safe shape for a VERSIONED ROOT: each version is a manifest
+  * (`vNNNNN.manifest`, a file list) and a tiny `_current` pointer names
+  * the live one. Compaction writes the rewritten files and a NEW manifest
+  * completely, then flips the pointer with one atomic file rename — a
+  * concurrent reader resolves either the old or the new version, never a
+  * half-written one. Old versions persist until [[vacuumVersions]], giving
+  * in-flight readers a grace window.
   *
   * VERSIONED ROOTS have one format: `root/_current` names the live
   * version, `root/vNNNNN.manifest` lists that version's data files (with
@@ -76,11 +69,6 @@ object Layout {
     }.reduce(_.bitwiseOR(_))
   }
 
-  /** Write `df` Z-ordered on `zCols` into `files` output files. */
-  def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-                    bits: Int = 8, files: Int = 16): Unit =
-    zOrdered(df, zCols, bits, files).write.mode(SaveMode.Overwrite).parquet(path)
-
   /** `df` placed for a Z-ordered write: range-partitioned on the Z-value of
     * `zCols` into `files` tasks, each sorted by it.
     *
@@ -110,39 +98,6 @@ object Layout {
         .sortWithinPartitions("__z")
         .drop("__z")
     }
-  }
-
-  /** Rewrite a parquet directory IN PLACE into ~`targetBytes` files via
-    * rename-aside swap (path → path__old, tmp → path, drop __old). Returns
-    * the new file count. Every rename result is checked; a failed forward
-    * swap restores the original, so no outcome loses data — but readers
-    * between the two renames see a MISSING directory. For concurrent
-    * readers keep the data in a versioned root and use
-    * [[compactVersionedPartitioned]]. Partition-directory trees should
-    * compact per leaf directory (embarrassingly parallel across partitions
-    * at 100 TB).
-    */
-  @deprecated("readers between the two renames see a missing directory; use " +
-    "a versioned root's compactVersionedPartitioned (reader-safe, atomic " +
-    "pointer flip) unless you own an exclusive maintenance window", "round 9")
-  def compact(spark: SparkSession, path: String, targetBytes: Long): Int = {
-    val hadoopPath = new Path(path)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(hadoopPath).getLength
-    val files = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = new Path(path + "__compact_tmp")
-    val old = new Path(path + "__compact_old")
-    spark.read.parquet(path).coalesce(files)
-      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(old, true)
-    require(fs.rename(hadoopPath, old), s"compact: rename aside failed for $path")
-    if (!fs.rename(tmp, hadoopPath)) {
-      // restore the original before failing — never leave the data gone
-      fs.rename(old, hadoopPath)
-      throw new java.io.IOException(s"compact: swap-in failed for $path; original restored")
-    }
-    fs.delete(old, true)
-    files
   }
 
   // ---------------------------------------------------------------- versioned
@@ -311,10 +266,9 @@ object Layout {
     * [[ManifestIndex.PublishPrefix]] — so the rows and their metadata flip
     * together with the one pointer rename, and a crash before the flip
     * leaves both at the previous version. This is the snapshot-publish
-    * primitive incremental view maintenance commits through: the view's
-    * rows and its "derived from table version N" watermark must move
-    * atomically or a crashed refresh double-applies a feed
-    * ([[graft.ops.Incremental.refreshFollowingView]]).
+    * primitive the versioned artifacts commit through (ANN centroids and
+    * codebooks, BPE merge tables): an artifact's rows and the metadata
+    * that describes them must never be seen apart.
     *
     * One manifest commit with an empty partition spec: the frame's
     * partitions are written as they arrive, and the manifest names ONLY
@@ -356,6 +310,9 @@ object Layout {
     * engine would surface — compaction re-homes them). Type-widened
     * columns export readable-but-narrow footers; the caller owns that
     * cast, as every symlink-manifest consumer does.
+    *
+    * An operational entry point: no query or SQL statement calls it; an
+    * operator runs it by hand when wiring an external reader.
     *
     * @return number of data files listed
     */
@@ -414,10 +371,9 @@ object Layout {
       .get(ManifestIndex.PublishPrefix + name)
 
   /** Reader-safe compaction — the maintenance pass that pays down the
-    * small files a streaming upsert
-    * ([[graft.streaming.StreamingOps.streamMergeVersioned]]) accretes:
-    * every micro-batch rewrites its touched leaves, so a hot partition
-    * ends up with one small file per batch. Fragmentation is diagnosed
+    * small files a streaming writer (`graft-sink`) accretes: every
+    * micro-batch commits its own files, so a hot partition ends up with
+    * one small file per batch. Fragmentation is diagnosed
     * FROM the manifest (no directory listing): only leaves with more than
     * `maxFiles` data files (or an average file under `targetBytes/2`) are
     * rewritten — all of them in one write job ([[rewriteEntries]]) unless
@@ -429,7 +385,7 @@ object Layout {
     * [[vacuumVersions]]. An unpartitioned root is one leaf.
     *
     * Optional `zOrderCols`: cluster each rewritten leaf with
-    * [[writeZOrdered]]'s placement while it is being compacted anyway —
+    * Z-value placement ([[zValue]]) while it is being compacted anyway —
     * the rewrite is already paid for, so multi-dimensional data skipping
     * inside hot partitions comes at shuffle-of-one-leaf cost (the standard
     * OPTIMIZE ZORDER maintenance pairing). Healthy leaves keep their
@@ -699,7 +655,7 @@ object Layout {
       // pinned a full 32-reducer exchange on every tiny commit (the r18
       // driver measured 10–26 % setup regressions on small-batch DML —
       // q150 3.9 → 2.8 s steady-state with this hint, same-window
-      // JobProbe ×4). The rebalance shuffle keys on the partition columns
+      // per-job Probe ×4). The rebalance shuffle keys on the partition columns
       // so each touched leaf still lands in one task (one file per leaf,
       // ChangeFeedSpec's pin) while AQE coalesces a small batch's reduce
       // side to ~1 task — and at bulk shape SPLITS a leaf bigger than the
@@ -1082,7 +1038,7 @@ object Layout {
     * application: the manifest stores `txn.<appId> = batchId` and a later
     * call presenting a batch id at or below the stored watermark no-ops
     * WITHOUT reading the updates — a replayed at-least-once batch
-    * (checkpoint recovery, foreachBatch re-run) commits exactly once
+    * (checkpoint recovery, a re-run micro-batch) commits exactly once
     * instead of churning a content-identical version. The watermark rides
     * the properties line through every other writer's carry; a
     * [[restoreVersion]] rolls it back with everything else (a rollback
@@ -2475,7 +2431,7 @@ object Layout {
 
   /** Range-place a fresh batch on (partition cols, z-value) and sort
     * within tasks, so each leaf's files carry tight per-file min/max on
-    * the z dimensions — [[writeZOrdered]]'s clustering applied at the
+    * the z dimensions — compaction's z-order clustering applied at the
     * APPEND boundary (the partition columns join the range key because
     * `partitionBy` will split each task's output by leaf; without them a
     * z-range would scatter across every leaf's files).
@@ -3227,20 +3183,12 @@ object Layout {
   /** Delete all versions except the newest `keep` (the live one is always
     * within the newest `keep` ≥ 1). Run this on a schedule with a grace
     * period, not inline with the flip — an in-flight reader may still be
-    * scanning an old version.
+    * scanning an old version. Like [[vacuumRetain]] and [[vacuumPlan]]
+    * (which `VACUUM` lowers onto), an operational entry point a scheduled
+    * job or an operator calls by hand.
     */
   def vacuumVersions(spark: SparkSession, root: String, keep: Int = 2): Int =
     vacuumRetain(spark, root, Retention.Versions(keep))
-
-  /** Wall-clock retention (`VACUUM … RETAIN n HOURS`): keep what the last
-    * `n` hours of `timestampAsOf` reads need — see [[Retention.Hours]] for
-    * the window-plus-anchor rule. Same grace-period caveat as the
-    * versions policy: in-flight readers of an out-of-window snapshot are
-    * only safe if `n` exceeds the longest running read.
-    */
-  def vacuumRetainHours(spark: SparkSession, root: String,
-                        hours: Double): Int =
-    vacuumRetain(spark, root, Retention.Hours(hours))
 
   /** Vacuum under `ret`. A version dir can hold files still REFERENCED by
     * newer manifests (carry-forward points backward), so vacuuming version
@@ -3309,7 +3257,9 @@ object Layout {
     * break `timestampAsOf(now − n·1h)` even though it names a time inside
     * the advertised window; the Delta `RETAIN n HOURS` semantics). Commit
     * instants are the manifest mtimes — the same clock `timestampAsOf`
-    * resolution reads, so retention and travel can never disagree.
+    * resolution reads, so retention and travel can never disagree. Under
+    * the hours policy an in-flight reader of an out-of-window snapshot is
+    * safe only if `n` exceeds the longest running read.
     */
   sealed trait Retention
   object Retention {
@@ -3387,11 +3337,6 @@ object Layout {
   def vacuumPlan(spark: SparkSession, root: String, keep: Int = 2): DataFrame =
     vacuumPlan(spark, root, Retention.Versions(keep))
 
-  /** Dry-run of the HOURS policy — same pricing contract. */
-  def vacuumPlanHours(spark: SparkSession, root: String,
-                      hours: Double): DataFrame =
-    vacuumPlan(spark, root, Retention.Hours(hours))
-
   def vacuumPlan(spark: SparkSession, root: String,
                  ret: Retention): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -3446,6 +3391,9 @@ object Layout {
     * lease): run it like [[vacuumVersions]], with a horizon longer than
     * any legitimate commit takes. Claims at or behind the pointer are
     * commit tombstones and are never touched here.
+    *
+    * An operational entry point: no query or SQL statement calls it; an
+    * operator runs it by hand after a writer crash.
     *
     * @return number of stale claims recovered
     */

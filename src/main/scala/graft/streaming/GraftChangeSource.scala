@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.sources.Layout
 
 /** Streaming SOURCE over a graft versioned root — the read-side of the
-  * lakehouse streaming story (the write side is
-  * [[StreamingOps.streamUpsertRows]]/`streamApplyCdcRows`): serve a
-  * versioned table AS a stream whose micro-batches are the CHANGE FEEDS
-  * between committed versions, Delta-`readChangeFeed`-shape:
+  * lakehouse streaming story (the write side is the `graft-sink`
+  * provider, [[GraftSinkProvider]]): serve a versioned table AS a stream
+  * whose micro-batches are the CHANGE FEEDS between committed versions,
+  * Delta-`readChangeFeed`-shape:
   *
   * {{{
   * spark.readStream.format("graft-changes")

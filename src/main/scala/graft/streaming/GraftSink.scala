@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions.col
 
 import graft.sources.{Layout, ManifestIndex}
 
-/** Streaming SINK into a graft versioned root — the `writeStream` face of
-  * the foreachBatch helpers ([[StreamingOps.streamUpsertRows]] et al.), so
-  * a pipeline reads AND writes the lakehouse through stock streaming API:
+/** Streaming SINK into a graft versioned root — the ONE streaming write
+  * path into the lakehouse, so a pipeline reads AND writes it through the
+  * stock streaming API:
   *
   * {{{
   * df.writeStream.format("graft-sink")
@@ -32,11 +32,11 @@ import graft.sources.{Layout, ManifestIndex}
   * the other sink modes (upsert would strand vanished groups, append
   * would duplicate — both silent divergence).
   *
-  * `mode=cdc` is the delete-capable apply ([[StreamingOps.streamApplyCdcRows]]'
-  * semantics behind the stock API): each batch carries the table's columns
-  * plus an op code (`opCol`: `"D"` deletes, anything else upserts) and an
-  * ordering column (`seqCol`); the batch compacts to its final op per key
-  * (keep-last by `seqCol`) and applies as ONE conditional merge. Paired
+  * `mode=cdc` is the delete-capable apply: each batch carries the table's
+  * columns plus an op code (`opCol`: `"D"` deletes, anything else
+  * upserts) and an ordering column (`seqCol`); the batch compacts to its
+  * final op per key (keep-last by `seqCol`) and applies as ONE
+  * conditional merge. Paired
   * with the change source's `includeVersion` column this mirrors a source
   * table EXACTLY — deletes included (GraftSinkSpec pins the loop).
   *
@@ -46,8 +46,7 @@ import graft.sources.{Layout, ManifestIndex}
   * `txnAppId` (default: the checkpoint location — the identity Structured
   * Streaming already assigns the query): a batch replayed after a crash
   * between table commit and checkpoint commit no-ops instead of
-  * re-applying — exactly-once COMMITS over at-least-once delivery, the
-  * same contract as the foreachBatch helpers.
+  * re-applying — exactly-once COMMITS over at-least-once delivery.
   *
   * Composes with [[GraftChangeSource]] for table-to-table streaming:
   * `readChangeStream(src) → transform → writeStream.format("graft-sink")` keeps

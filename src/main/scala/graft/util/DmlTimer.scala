@@ -17,7 +17,7 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * Reentrancy: nested writer calls (maintain → purge → commit; merge →
   * commit) count ONCE, at the outermost entry — a per-thread depth guard,
-  * with the sum itself global so streaming `foreachBatch` writers on
+  * with the sum itself global so streaming sink writers (`graft-sink`) on
   * other threads attribute too. Overhead when idle: two thread-local
   * reads per call — nothing a benchmark can see.
   */
@@ -32,7 +32,7 @@ object DmlTimer {
     depth.set(d + 1)
     // Label the jobs this writer op launches (guide §1.5): the outermost
     // entry point's method name becomes the Spark job description, so a
-    // job-level profile (JobProbe, the UI) attributes multi-action DML
+    // job-level profile (Probe, the UI) attributes multi-action DML
     // setups op-by-op. Layout.alterManifest times every metadata DDL on
     // its public caller's behalf, so its frame is skipped. Restored (not
     // cleared) on exit so a caller's own label survives nested writer

@@ -95,6 +95,13 @@ object Shim {
   def freeBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
+  /** Block until every posted listener event has been delivered, so a
+    * listener's job list is complete when read (`listenerBus` is
+    * `private[spark]`).
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Write `df` as parquet under `path` — hive leaves on `partitionColumns`,
     * the same files `df.write.partitionBy(...).parquet(path)` lays out —
     * through Spark's one file-format write path (`FileFormatWriter`, what

@@ -51,8 +51,8 @@ class AnnArtifactSpec extends SparkSpec {
     assert(meta("kind") == "pq_codebooks")
   }
 
-  test("retrain publishes a NEW version: readCurrent serves the retrain, " +
-      "loadCodebooksAt time-travels to the frozen index (r16)") {
+  test("retrain publishes a NEW version: loadCodebooks serves the retrain, " +
+      "the frozen index stays time-travel readable (r16)") {
     val root = freshRoot() + "/books"
     val v0 = Quantize.seededCodebooks(m = 2, k = 4, subDim = 8, seed = 1)
     val v1 = Quantize.seededCodebooks(m = 2, k = 4, subDim = 8, seed = 2)
@@ -60,8 +60,10 @@ class AnnArtifactSpec extends SparkSpec {
     AnnIndex.publishCodebooks(spark, root, v1)
     assert(AnnIndex.loadCodebooks(spark, root)(0)(0)
       .sameElements(v1(0)(0)))
-    assert(AnnIndex.loadCodebooksAt(spark, root, 0)(0)(0)
-      .sameElements(v0(0)(0)))
+    val frozen = graft.sources.Layout.readVersion(spark, root, 0)
+      .filter($"subspace" === 0 && $"centroid" === 0)
+      .select($"center").as[Seq[Double]].head()
+    assert(frozen.sameElements(v0(0)(0)))
   }
 
   test("serveAdcTopK ≡ in-plan adcTopK over the same books, and the probe " +

@@ -35,6 +35,22 @@ class GraftSinkSpec extends SparkSpec {
     q.awaitTermination()
   }
 
+  /** One AvailableNow drain of the parquet files under `inDir` (schema
+    * `schema`) into `root` through the sink, with the given writer options.
+    */
+  private def sinkDrain(inDir: String, schema: org.apache.spark.sql.types.StructType,
+                        root: String, ckpt: String, opts: (String, String)*): Unit =
+    opts.foldLeft(StreamingOps.fileStream(spark, inDir, schema)
+        .writeStream.format("graft-sink")
+        .option("path", root).option("checkpointLocation", ckpt)) {
+        case (w, (k, v)) => w.option(k, v)
+      }
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  private def pvState(root: String): Set[(Long, String, Double)] =
+    Layout.readCurrent(spark, root).select("id", "part", "v")
+      .as[(Long, String, Double)].collect().toSet
+
   test("upsert mode: micro-batches merge by key; idle drains claim no version") {
     val (root, in, ckpt) = mk("upsert")
     Layout.initVersionedManifest(rows((1L, "a", 10L), (2L, "b", 20L)), root, Seq("g"))
@@ -77,7 +93,7 @@ class GraftSinkSpec extends SparkSpec {
     def follow(): Unit = {
       val q = StreamingOps.readChangeStream(spark, src, Seq("id"))
         // keep post-images only (this derived table mirrors upserts; the
-        // delete-capable path is streamApplyCdcRows)
+        // delete-capable path is the sink's cdc mode, the next test)
         .filter($"_change_type".isin("insert", "update_post"))
         .drop("_change_type")
         .writeStream.format("graft-sink")
@@ -135,6 +151,101 @@ class GraftSinkSpec extends SparkSpec {
     mirror()
     assert(state(derived) == state(src))
     assert(state(derived).contains((3L, "a", 33L)))
+  }
+
+  test("upsert mode on a partitioned root: resumed drains upsert by key, " +
+      "v0 stays time-travel readable") {
+    val (root, in, ckpt) = mk("pupsert")
+    def rows(rs: (Long, String, Double)*) = rs.toDF("id", "part", "v")
+    Layout.initVersionedManifest(
+      rows((1L, "p1", 10.0), (2L, "p1", 20.0), (3L, "p2", 30.0)), root, Seq("part"))
+    val schema = rows((0L, "", 0.0)).schema
+    // drain 1: update id=2, insert id=4 (touches p1 only)
+    rows((2L, "p1", 99.0), (4L, "p1", 40.0)).write.mode("append").parquet(in)
+    sinkDrain(in, schema, root, ckpt, "keys" -> "id")
+    assert(pvState(root) == Set((1L, "p1", 10.0), (2L, "p1", 99.0),
+      (4L, "p1", 40.0), (3L, "p2", 30.0)))
+    // drain 2 RESUMES the same checkpoint: only the new file is merged,
+    // including a key landing in a partition the table never had
+    rows((3L, "p2", 77.0), (5L, "p3", 50.0)).write.mode("append").parquet(in)
+    sinkDrain(in, schema, root, ckpt, "keys" -> "id")
+    assert(pvState(root) == Set((1L, "p1", 10.0), (2L, "p1", 99.0),
+      (4L, "p1", 40.0), (3L, "p2", 77.0), (5L, "p3", 50.0)))
+    // the pre-stream snapshot stays readable across stream batches
+    assert(Layout.readVersion(spark, root, 0).count() == 3)
+  }
+
+  test("upsert mode is merge-on-read: old images DV'd, init files carried " +
+      "byte-identical, a resumed drain DVs the previous drain's images") {
+    import graft.sources.ManifestIndex
+    val (root, in, ckpt) = mk("mor")
+    def rows(rs: (Long, String, Double)*) = rs.toDF("id", "part", "v")
+    Layout.initVersionedManifest(
+      rows((1L, "p1", 10.0), (2L, "p1", 20.0), (3L, "p2", 30.0)), root, Seq("part"))
+    val before = ManifestIndex.read(spark, root, "v00000")
+      .entries.map(e => (e.path, e.size)).toSet
+    val schema = rows((0L, "", 0.0)).schema
+    // drain 1: replace id=2, insert id=4
+    rows((2L, "p1", 99.0), (4L, "p3", 40.0)).write.mode("append").parquet(in)
+    sinkDrain(in, schema, root, ckpt, "keys" -> "id")
+    assert(pvState(root) == Set((1L, "p1", 10.0), (2L, "p1", 99.0),
+      (3L, "p2", 30.0), (4L, "p3", 40.0)))
+    // surviving init files are byte-identical (DV'd or untouched, never
+    // rewritten) and the batch arrived as appended files
+    val m1 = ManifestIndex.read(spark, root, "v00001")
+    val carried = m1.entries.filter(_.path.startsWith("v00000/"))
+      .map(e => (e.path, e.size)).toSet
+    assert(carried.subsetOf(before) && carried.nonEmpty)
+    assert(m1.entries.exists(_.path.startsWith("v00001/")), "appended images")
+    // drain 2 resumes the checkpoint: only the new file applies — and it
+    // DVs the image drain 1 appended
+    rows((4L, "p3", 44.0), (5L, "p2", 50.0)).write.mode("append").parquet(in)
+    sinkDrain(in, schema, root, ckpt, "keys" -> "id")
+    assert(pvState(root) == Set((1L, "p1", 10.0), (2L, "p1", 99.0),
+      (3L, "p2", 30.0), (4L, "p3", 44.0), (5L, "p2", 50.0)))
+    assert(Layout.readVersion(spark, root, 0).count() == 3L)
+  }
+
+  test("cdc mode: in-batch insert→update→delete chains, equal-seq ties " +
+      "where the delete wins, partition moves") {
+    val (root, in, ckpt) = mk("cdc")
+    def base(rs: (Long, String, Double)*) = rs.toDF("id", "part", "v")
+    def cdc(rs: (Long, String, Double, String, Long)*) =
+      rs.toDF("id", "part", "v", "op", "seq")
+    Layout.initVersionedManifest(
+      base((1L, "p1", 10.0), (2L, "p1", 20.0), (3L, "p2", 30.0)), root, Seq("part"))
+    val schema = cdc((0L, "", 0.0, "", 0L)).schema
+    def drain(): Unit = sinkDrain(in, schema, root, ckpt,
+      "keys" -> "id", "mode" -> "cdc", "opCol" -> "op", "seqCol" -> "seq")
+    // drain 1: delete id=1; id=4 inserts then updates IN the same batch
+    // (keep-last by seq); a delete of missing id=9 is tolerated
+    cdc((1L, "p1", 10.0, "D", 1L), (4L, "p3", 40.0, "U", 2L),
+      (4L, "p3", 44.0, "U", 3L), (9L, "p2", 0.0, "D", 4L))
+      .write.mode("append").parquet(in)
+    drain()
+    assert(pvState(root) == Set((2L, "p1", 20.0), (3L, "p2", 30.0),
+      (4L, "p3", 44.0)))
+    // drain 2 resumes: update id=2, then a later delete for it in the same
+    // batch wins (chain compaction); insert id=5
+    cdc((2L, "p1", 99.0, "U", 5L), (2L, "p1", 99.0, "D", 6L),
+      (5L, "p2", 50.0, "U", 7L))
+      .write.mode("append").parquet(in)
+    drain()
+    assert(pvState(root) == Set((3L, "p2", 30.0), (4L, "p3", 44.0),
+      (5L, "p2", 50.0)))
+    // drain 3: an upstream PARTITION MOVE (id=4 p3 -> p1) moves the row
+    cdc((4L, "p1", 45.0, "U", 8L)).write.mode("append").parquet(in)
+    drain()
+    assert(pvState(root) == Set((3L, "p2", 30.0), (4L, "p1", 45.0),
+      (5L, "p2", 50.0)))
+    // drain 4: equal-seq ties resolve deterministically to the delete — on
+    // a live key (id=5 goes) and on a new key (id=6 never lands)
+    cdc((5L, "p2", 55.0, "U", 9L), (5L, "p2", 55.0, "D", 9L),
+      (6L, "p1", 60.0, "U", 10L), (6L, "p1", 60.0, "D", 10L))
+      .write.mode("append").parquet(in)
+    drain()
+    assert(pvState(root) == Set((3L, "p2", 30.0), (4L, "p1", 45.0)))
+    assert(Layout.readVersion(spark, root, 0).count() == 3L) // time travel
   }
 
   test("an empty keys option refuses instead of silently appending") {

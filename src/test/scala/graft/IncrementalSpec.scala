@@ -185,47 +185,6 @@ class IncrementalSpec extends SparkSpec {
     assert(canonJoin(next) == Set((1L, 10L, 100L, "a", 7L)))
   }
 
-  test("following join view tracks two tables through a random history") {
-    val rnd = new scala.util.Random(171717)
-    val tmp = Files.createTempDirectory("graft_jvm").toString
-    val (fRoot, dRoot, vRoot) = (s"$tmp/f", s"$tmp/d", s"$tmp/v")
-    def facts(rs: (Long, Long, Long)*) = rs.toDF("id", "ck", "fv")
-    def dims(rs: (Long, String, Long)*) = rs.toDF("ck", "g", "dv")
-    Layout.initVersionedManifest(
-      facts((1L to 30L).map(i => (i, 1L + i % 6, i * 10)): _*), fRoot, Seq("ck"))
-    Layout.initVersionedManifest(
-      dims((1L to 8L).map(k => (k, s"g${k % 3}", k * 100)): _*), dRoot, Seq("g"))
-    Incremental.initFollowingJoinView(spark, fRoot, dRoot, vRoot, Seq("ck"))
-    (1 to 5).foreach { _ =>
-      if (rnd.nextBoolean()) {
-        val ups = (1 to 1 + rnd.nextInt(5)).map { _ =>
-          val id = 1L + rnd.nextInt(40); (id, 1L + id % 6, rnd.nextInt(500).toLong)
-        }
-        Layout.mergeVersionedPartitioned(spark, fRoot, facts(ups: _*), Seq("id"), "ck")
-      } else if (rnd.nextBoolean()) {
-        val cut = 1L + rnd.nextInt(8)
-        // g stays cut%3: the leaf-pruned merge contract keys the partition
-        Layout.mergeVersionedPartitioned(spark, dRoot,
-          dims((cut, s"g${cut % 3}", rnd.nextInt(900).toLong)), Seq("ck"), "g")
-      } else {
-        Layout.deleteVersionedPartitioned(spark, fRoot,
-          col("id") % 9 === lit(rnd.nextInt(9).toLong), "ck")
-      }
-      Incremental.refreshFollowingJoinView(spark, fRoot, dRoot, vRoot,
-        Seq("id"), Seq("ck"), Seq("ck"))
-      val expect = Incremental.materializeJoin(
-        Layout.readCurrent(spark, fRoot), Layout.readCurrent(spark, dRoot),
-        Seq("ck"))
-      assert(canonJoin(Layout.readCurrent(spark, vRoot)) == canonJoin(expect))
-    }
-    // already-current on both sides: the refresh no-ops (no new commit)
-    val before = Layout.currentVersionNumber(spark, vRoot)
-    val spans = Incremental.refreshFollowingJoinView(spark, fRoot, dRoot, vRoot,
-      Seq("id"), Seq("ck"), Seq("ck"))
-    assert(spans._1._1 == spans._1._2 && spans._2._1 == spans._2._2)
-    assert(Layout.currentVersionNumber(spark, vRoot) == before)
-  }
-
   test("update feeds move sums by exactly the value delta; nulls sum as 0") {
     val a = Seq((1L, "g1", 5L), (2L, "g1", 7L)).toDF("id", "g", "v")
     val state = Incremental.materialize(a, keys, sums)

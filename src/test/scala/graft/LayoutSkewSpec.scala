@@ -94,25 +94,39 @@ class LayoutSkewSpec extends SparkSpec {
     assert(plain == salted)
   }
 
-  test("z-ordered layout clusters a 2-D range filter into fewer files") {
+  /** An unpartitioned versioned root of `df` fragmented into `files`
+    * data files, so compaction selects its one leaf.
+    */
+  private def fragmentedRoot(df: org.apache.spark.sql.DataFrame, tag: String,
+                             files: Int): String = {
+    val root = Files.createTempDirectory(tag).toString + "/t"
+    Layout.initVersionedManifest(df.repartition(files), root, Nil)
+    root
+  }
+
+  test("z-ordered compaction clusters a 2-D range filter into fewer files") {
     val li = spark.read.parquet(s"${sf()}/lineitem.parquet")
       .select("l_orderkey", "l_extendedprice", "l_quantity", "l_discount")
-    val files = 16
+    val root = fragmentedRoot(li, "graft_z", 48)
+    val bytes = ManifestIndex.read(spark, root, "v00000").entries.map(_.size).sum
+    val (_, rewritten) = Layout.compactVersionedPartitioned(spark, root,
+      targetBytes = (bytes + 15) / 16, maxFiles = 1,
+      zOrderCols = Seq("l_extendedprice", "l_quantity"))
+    assert(rewritten == 1)
+    val files = ManifestIndex.read(spark, root,
+      f"v${Layout.currentVersionNumber(spark, root)}%05d").entries.length
+    assert(files > 8, s"the target should land ~16 clustered files, got $files")
     // Baseline: the same file count, range-laid-out on a column UNRELATED
     // to the filter dims — every file then spans the full (price, qty) box.
     val flat = Files.createTempDirectory("graft_flat").toString
     li.repartitionByRange(files, $"l_orderkey")
       .write.mode("overwrite").parquet(flat)
-    val zdir = Files.createTempDirectory("graft_z").toString
-    Layout.writeZOrdered(li, zdir, Seq("l_extendedprice", "l_quantity"),
-      bits = 8, files = files)
-    def touched(dir: String): (Long, Long) = {
-      val hit = spark.read.parquet(dir)
-        .filter($"l_extendedprice" < 20000 && $"l_quantity" < 10)
+    def touched(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val hit = df.filter($"l_extendedprice" < 20000 && $"l_quantity" < 10)
       (hit.select(input_file_name()).distinct().count(), hit.count())
     }
-    val (flatFiles, flatRows) = touched(flat)
-    val (zFiles, zRows) = touched(zdir)
+    val (flatFiles, flatRows) = touched(spark.read.parquet(flat))
+    val (zFiles, zRows) = touched(Layout.readCurrent(spark, root))
     assert(zRows == flatRows, "layout must not change results")
     assert(zRows > 0)
     assert(flatFiles == files, s"baseline should scatter matches (got $flatFiles)")
@@ -251,45 +265,23 @@ class LayoutSkewSpec extends SparkSpec {
     intercept[IllegalArgumentException](Layout.resolveVersion(spark, root, 0))
   }
 
-  test("writeZOrdered degrades gracefully on empty, all-null, and constant dims") {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(StructField("a", DoubleType), StructField("b", DoubleType)))
-    // empty input: plain write, zero rows back
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val d1 = Files.createTempDirectory("graft_z_empty").toString
-    Layout.writeZOrdered(empty, d1, Seq("a", "b"), files = 2)
-    assert(spark.read.parquet(d1).count() == 0)
+  test("z-ordered compaction degrades gracefully on all-null and constant dims") {
+    def compactZ(df: org.apache.spark.sql.DataFrame, tag: String)
+        : Set[(Option[Double], Option[Double])] = {
+      val root = fragmentedRoot(df, tag, 2)
+      assert(Layout.compactVersionedPartitioned(spark, root, targetBytes = 1L << 30,
+        zOrderCols = Seq("a", "b"))._2 == 1)
+      Layout.readCurrent(spark, root).select("a", "b")
+        .as[(Option[Double], Option[Double])].collect().toSet
+    }
     // one dim all-null: dropped from the Z-value, rows intact
     val halfNull = Seq((1.0, Option.empty[Double]), (2.0, None), (3.0, None))
       .toDF("a", "b")
-    val d2 = Files.createTempDirectory("graft_z_null").toString
-    Layout.writeZOrdered(halfNull, d2, Seq("a", "b"), files = 2)
-    assert(spark.read.parquet(d2).count() == 3)
+    assert(compactZ(halfNull, "graft_z_null") ==
+      Set((Some(1.0), None), (Some(2.0), None), (Some(3.0), None)))
     // constant dim: widened range instead of a degenerate width_bucket
     val const = Seq((1.0, 5.0), (2.0, 5.0), (3.0, 5.0)).toDF("a", "b")
-    val d3 = Files.createTempDirectory("graft_z_const").toString
-    Layout.writeZOrdered(const, d3, Seq("a", "b"), files = 2)
-    assert(spark.read.parquet(d3).count() == 3)
-  }
-
-  test("compact rewrites many small files into few, same rows") {
-    val dir = Files.createTempDirectory("graft_compact").toString
-    val df = spark.read.parquet(s"${sf()}/orders.parquet")
-    df.repartition(40).write.mode("overwrite").parquet(dir)
-    def parquetFiles() = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    val before = parquetFiles()
-    assert(before == 40)
-    val bytes = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    Layout.compact(spark, dir, targetBytes = bytes / 3)
-    assert(parquetFiles() <= 4, s"expected ≤4 files, got ${parquetFiles()}")
-    val after = spark.read.parquet(dir)
-    assert(after.count() == df.count())
-    // decimal sum: partition-order-independent content check
-    def dsum(d: org.apache.spark.sql.DataFrame) =
-      d.agg(sum($"o_totalprice".cast("decimal(38,4)"))).head().getDecimal(0)
-    assert(dsum(after) == dsum(df))
+    assert(compactZ(const, "graft_z_const") ==
+      Set((Some(1.0), Some(5.0)), (Some(2.0), Some(5.0)), (Some(3.0), Some(5.0))))
   }
 }

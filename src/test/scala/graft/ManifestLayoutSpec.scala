@@ -492,39 +492,35 @@ class ManifestLayoutSpec extends SparkSpec {
   }
 
   test("a publish whose manifest landed but whose pointer never flipped " +
-      "leaves readers and the view watermark at the previous version") {
-    import graft.ops.Incremental
-    val base = Files.createTempDirectory("graft_pub_crash").toString
-    val (tbl, view) = (base + "/t", base + "/v")
-    Layout.initVersionedManifest(
-      rows((1L, "p1", 10.0), (2L, "p2", 20.0)), tbl, Seq("part"))
-    Incremental.initFollowingView(spark, tbl, view, Seq("part"), Seq("v"))
-    def viewRows() = Layout.readCurrent(spark, view).collect().toSet
-    val v0Rows = viewRows()
-    Layout.mergeVersionedPartitioned(spark, tbl, rows((3L, "p1", 30.0)),
-      Seq("id"), "part")
-    // a refresh that crashed after writing its manifest (watermark 1),
+      "leaves readers and the publish metadata at the previous version") {
+    val root = Files.createTempDirectory("graft_pub_crash").toString + "/t"
+    Layout.publishVersion(spark, root,
+      rows((1L, "p1", 10.0), (2L, "p2", 20.0)), Map("w" -> "0"))
+    def current() = Layout.readCurrent(spark, root).collect().toSet
+    val v0Rows = current()
+    // a publish that crashed after writing its manifest (metadata w=1),
     // before the pointer flip: claim + dir + manifest ahead of _current
-    val fs = new Path(view).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val m0 = ManifestIndex.read(spark, view, "v00000")
-    fs.createNewFile(new Path(view, "v00001.claim"))
-    fs.mkdirs(new Path(view, "v00001"))
-    ManifestIndex.write(spark, view, "v00001", m0.copy(properties =
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m0 = ManifestIndex.read(spark, root, "v00000")
+    fs.createNewFile(new Path(root, "v00001.claim"))
+    fs.mkdirs(new Path(root, "v00001"))
+    ManifestIndex.write(spark, root, "v00001", m0.copy(properties =
       m0.properties.map { case (k, v) =>
         k -> (if (k.startsWith(ManifestIndex.PublishPrefix)) "1" else v) }))
-    assert(Layout.currentVersionNumber(spark, view) == 0)
-    assert(viewRows() == v0Rows)
-    assert(Layout.history(spark, view).count() == 1)
+    assert(Layout.currentVersionNumber(spark, root) == 0)
+    assert(current() == v0Rows)
+    assert(Layout.versionMeta(spark, root, 0, "w").contains("0"))
+    assert(Layout.history(spark, root).count() == 1)
     // recovery clears the debris …
     Thread.sleep(20)
-    assert(Layout.recoverStaleClaims(spark, view, olderThanMs = 10) == 1)
-    assert(!ManifestIndex.exists(spark, view, "v00001") &&
-      !fs.exists(new Path(view, "v00001")))
-    // … and the watermark was still 0: the refresh applies (0, 1]
-    assert(Incremental.refreshFollowingView(spark, tbl, view, Seq("id"),
-      Seq("part"), Seq("v")) == ((0, 1)))
-    assert(viewRows() == Incremental.materialize(
-      Layout.readCurrent(spark, tbl), Seq("part"), Seq("v")).collect().toSet)
+    assert(Layout.recoverStaleClaims(spark, root, olderThanMs = 10) == 1)
+    assert(!ManifestIndex.exists(spark, root, "v00001") &&
+      !fs.exists(new Path(root, "v00001")))
+    // … and the next publish claims v1 and flips to it
+    Layout.publishVersion(spark, root, rows((3L, "p1", 30.0)), Map("w" -> "1"))
+    assert(Layout.currentVersionNumber(spark, root) == 1)
+    assert(ids(Layout.readCurrent(spark, root)) == Set(3L))
+    assert(Layout.versionMeta(spark, root, 1, "w").contains("1"))
   }
 
   test("vacuumVersions on a publish root deletes the replaced files and " +

@@ -35,14 +35,6 @@ class MultimodalSpec extends SparkSpec {
     assert(rows.map(_.getSeq[Double](1)).toSeq == again.map(_.getSeq[Double](1)).toSeq)
   }
 
-  test("stub resize clamps dims into the box, preserves aspect ratio") {
-    val out = Multimodal.stubResize(assets, 100, 100)
-    val dims = out.select($"meta.width", $"meta.height").collect()
-    assert(dims.forall(r => r.getInt(0) <= 100 && r.getInt(1) <= 100))
-    assert(out.head().getAs[org.apache.spark.sql.Row]("meta")
-      .getAs[String]("codec").endsWith("+resized"))
-  }
-
   test("frame sampling explodes bounded per-asset rows") {
     val frames = Multimodal.sampleFrames(assets.limit(3), everyNth = 50, maxFrames = 4, dim = 4)
     val counts = frames.groupBy("asset_id").count().as[(Long, Long)].collect().toMap

@@ -4,66 +4,15 @@ import org.apache.spark.sql.functions._
 import graft.ops.Sketches
 import graft.sources.Tables
 
-/** HLL sketch rollups: error bounds vs exact distincts, rollup ≡ direct
-  * build, repartition stability, parquet round-trip (round 9).
+/** Distinct, quantile and frequency sketches: KMV error bounds and
+  * merge ≡ direct build, hash-sample quantiles, count–min merge and error
+  * bounds.
   */
 class SketchesSpec extends SparkSpec {
   import spark.implicits._
 
   private def events = Tables.events(spark, sf())
     .withColumn("day", to_date($"ts"))
-
-  test("rollup estimates stay within the HLL error band of exact distincts") {
-    val daily = Sketches.distinctSketches(events, Seq("event_type", "day"),
-      $"user_id")
-    val est = Sketches.rollupDistinct(daily, Seq("event_type"))
-      .select($"event_type", $"n_distinct_est").as[(String, Long)]
-      .collect().toMap
-    val exact = events.groupBy("event_type")
-      .agg(countDistinct($"user_id").as("n")).as[(String, Long)]
-      .collect().toMap
-    assert(est.keySet == exact.keySet && est.nonEmpty)
-    exact.foreach { case (k, n) =>
-      val e = est(k)
-      // lgK=12 → rse ~1.6%; allow 4 sigma plus integer slack
-      assert(math.abs(e - n) <= math.max(4, 0.065 * n),
-        s"$k: estimate $e too far from exact $n")
-    }
-  }
-
-  test("rolling up fine sketches equals building at the coarse grain directly") {
-    val daily = Sketches.distinctSketches(events, Seq("event_type", "day"),
-      $"user_id")
-    val rolled = Sketches.rollupDistinct(daily, Seq("event_type"))
-      .select($"event_type", $"n_distinct_est").as[(String, Long)]
-      .collect().toMap
-    val direct = Sketches.rollupDistinct(
-      Sketches.distinctSketches(events, Seq("event_type"), $"user_id"),
-      Seq("event_type"))
-      .select($"event_type", $"n_distinct_est").as[(String, Long)]
-      .collect().toMap
-    // same input SET → same sketch state → identical estimate, exactly
-    assert(rolled == direct)
-    // and the estimate is invariant to input partitioning
-    val repart = Sketches.rollupDistinct(
-      Sketches.distinctSketches(events.repartition(17),
-        Seq("event_type", "day"), $"user_id"),
-      Seq("event_type"))
-      .select($"event_type", $"n_distinct_est").as[(String, Long)]
-      .collect().toMap
-    assert(repart == rolled)
-  }
-
-  test("sketches survive a parquet round-trip and keep unioning") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sk").toString
-    Sketches.distinctSketches(events, Seq("event_type", "day"), $"user_id")
-      .write.mode("overwrite").parquet(dir)
-    val total = Sketches.rollupDistinct(spark.read.parquet(dir), Seq.empty)
-      .select($"n_distinct_est").as[Long].head()
-    val exact = events.select(countDistinct($"user_id")).as[Long].head()
-    assert(math.abs(total - exact) <= math.max(4, 0.065 * exact),
-      s"stored-sketch total $total vs exact $exact")
-  }
 
   test("KMV distinct sketch: exact under k, ~accurate over, merge = direct") {
     import graft.ops.Aggregates

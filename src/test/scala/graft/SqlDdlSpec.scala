@@ -180,7 +180,8 @@ class SqlDdlSpec extends SparkSpec {
     }
     // dry-run parity: the hours plan prices exactly the versions the
     // real sweep would drop (v0; v1 is the −1h horizon's ANCHOR)
-    val planned = graft.sources.Layout.vacuumPlanHours(spark, root, 1.0)
+    val planned = graft.sources.Layout.vacuumPlan(spark, root,
+        graft.sources.Layout.Retention.Hours(1.0))
       .select("path").as[String].collect()
     assert(planned.exists(_.startsWith("v00000")) &&
       !planned.exists(_.startsWith("v00001")), planned.mkString(","))
