@@ -17,8 +17,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *
   * Environment: `GRAFT_CONF="k=v;k=v"` sets session confs for an A/B
   * probe; `PROBE_WARM_DIR` runs each query there once, untimed, first
-  * (Bench's warmup); `PROBE_EXPLAIN=1` prints the formatted plan. Not part
-  * of the driver contract.
+  * (Bench's warmup); `PROBE_EXPLAIN=1` prints the formatted plan. A
+  * development tool: Bench and Verify are the benchmark and correctness
+  * entry points.
   */
 object Probe {
   private case class JobRow(id: Int, start: Long, site: String, tasks: Int,

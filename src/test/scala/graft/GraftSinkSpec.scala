@@ -24,17 +24,6 @@ class GraftSinkSpec extends SparkSpec {
     Layout.readCurrent(spark, root).select($"id", $"g", $"v")
       .as[(Long, String, Long)].collect().toSet
 
-  private def drain(inDir: String, root: String, ckpt: String,
-                    keys: Option[String]): Unit = {
-    val stream = StreamingOps.fileStream(spark, inDir,
-      rows().schema)
-    val w = stream.writeStream.format("graft-sink")
-      .option("path", root).option("checkpointLocation", ckpt)
-    val q = keys.fold(w)(k => w.option("keys", k))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
   /** One AvailableNow drain of the parquet files under `inDir` (schema
     * `schema`) into `root` through the sink, with the given writer options.
     */
@@ -46,6 +35,10 @@ class GraftSinkSpec extends SparkSpec {
         case (w, (k, v)) => w.option(k, v)
       }
       .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  private def drain(inDir: String, root: String, ckpt: String,
+                    keys: Option[String]): Unit =
+    sinkDrain(inDir, rows().schema, root, ckpt, keys.map("keys" -> _).toSeq: _*)
 
   private def pvState(root: String): Set[(Long, String, Double)] =
     Layout.readCurrent(spark, root).select("id", "part", "v")
