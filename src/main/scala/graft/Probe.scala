@@ -48,7 +48,7 @@ object Probe {
         jobs.put(e.jobId, JobRow(e.jobId, e.time,
           Option(e.properties.getProperty("spark.job.description"))
             .orElse(Option(e.properties.getProperty("callSite.short")))
-            .getOrElse(""),
+            .getOrElse("").replace('\n', ' '),
           e.stageInfos.map(_.numTasks).sum))
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         Option(jobs.get(e.jobId)).foreach(_.end = e.time)
