@@ -767,27 +767,27 @@ object SparkEntry {
       val stage = s"/root/repo/target/graft_stream/events_${new java.io.File(dir).getName}"
       if (!new java.io.File(s"$stage/_SUCCESS").exists())
         Tables.events(s, dir).write.mode("overwrite").parquet(stage)
-      val schema = s.read.parquet(stage).schema
-      val ev = s.readStream.schema(schema).parquet(stage)
-      val agg = ev
-        .groupBy(window(col("ts"), "15 minutes").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(graft.util.Num.Money)).cast("double").as("sum_value"))
-        .select(col("w.start").as("bucket_start"), col("event_type"),
-          col("n"), col("sum_value"))
-      // Memory sink is safe HERE because complete-mode output is window-
-      // count-bounded (96 buckets/day × event types), not corpus-sized.
-      // Producers of UNBOUNDED results must use StreamingOps.drainToParquet
-      // (file sink + checkpoint — the production shape; StreamingSpec pins
-      // its row-for-row equivalence to the memory sink).
-      // State-store count rides the right-sized partition override (one
-      // store per shuffle partition per batch; see withStatefulShuffle).
-      graft.streaming.StreamingOps.withStatefulShuffle(s) {
-        val q = agg.writeStream.format("memory").queryName("graft_q72")
+      // State-store count rides the right-sized partition count of a child
+      // session (one store per shuffle partition per batch; see
+      // withStatefulShuffle): the stream and its memory table live there.
+      graft.streaming.StreamingOps.withStatefulShuffle(s) { c =>
+        val schema = c.read.parquet(stage).schema
+        val agg = c.readStream.schema(schema).parquet(stage)
+          .groupBy(window(col("ts"), "15 minutes").as("w"), col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast(graft.util.Num.Money)).cast("double").as("sum_value"))
+          .select(col("w.start").as("bucket_start"), col("event_type"),
+            col("n"), col("sum_value"))
+        // Memory sink is safe HERE because complete-mode output is window-
+        // count-bounded (96 buckets/day × event types), not corpus-sized.
+        // Producers of UNBOUNDED results must use StreamingOps.drainToParquet
+        // (file sink + checkpoint — the production shape; StreamingSpec pins
+        // its row-for-row equivalence to the memory sink).
+        agg.writeStream.format("memory").queryName("graft_q72")
           .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .awaitTermination()
+        c.table("graft_q72")
       }
-      s.table("graft_q72")
     }),
 
     // --- salted equi-join on a skewed fact side (Skew.saltedJoin) ---

@@ -58,8 +58,8 @@ import graft.sources.Layout
   *    `TruncatableTable`. Spark's own `ResolveOutputRelation` does the
   *    column alignment/casting, replacing the hand-rolled insert paths.
   *  - MERGE / UPDATE / DELETE: lowered from the RESOLVED plan by
-  *    [[GraftDmlResolved]] onto the SAME command trio the non-catalog
-  *    [[GraftDml.GraftDmlRule]] produces.
+  *    [[GraftDmlResolved]] — the one lowering, which non-catalog path
+  *    and warehouse-name targets reach through [[GraftRead]] too.
   *  - DESCRIBE HISTORY / VACUUM / OPTIMIZE / RESTORE / SHALLOW CLONE:
   *    unchanged on the injected parser (Spark has no grammar for them).
   *
@@ -372,9 +372,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       "graft catalog: the namespace is flat and immutable")
 }
 
-/** A graft versioned root as a DSv2 `Table`. Reads are substituted by
-  * [[GraftV2Read.GraftV2ReadRule]] (see [[GraftCatalog]]'s division of
-  * labor); writes are genuine DSv2 — `V1Write` fallback onto the layout's
+/** A graft versioned root as a DSv2 `Table` — built by the catalog's
+  * `loadTable`, and by [[GraftRead.GraftReadRule]] for a path or
+  * warehouse-name DELETE/UPDATE/MERGE target. Reads are substituted by
+  * [[GraftV2Read.GraftV2ReadRule]]; row-level DML lowers through
+  * [[GraftDmlResolved]] (see [[GraftCatalog]]'s division of labor);
+  * INSERT and TRUNCATE are genuine DSv2 — `V1Write` fallback onto the layout's
   * append/replace commits, `TruncatableTable` onto an empty replace.
   * `pinnedVersion`/`pinnedTsMillis` carry time travel from the catalog's
   * `loadTable(ident, version/timestamp)` overloads to the read rule.
@@ -406,22 +409,27 @@ case class GraftTable(ident: String, root: String,
     * `SUPPORT_COLUMN_DEFAULT_VALUE` on the catalog), so Spark's OWN
     * insert resolution fills an omitted column with its declared default
     * — the catalog INSERT face of [[Layout.completeInsertColumns]]. The
-    * literal value is the default evaluated NOW (defaults are column-free
-    * by [[Layout.setColumnDefault]]'s contract, so this is one driver-side
-    * fold).
+    * literal value is the default folded NOW on the driver: defaults are
+    * column-free by [[Layout.setColumnDefault]]'s contract, so the
+    * optimized probe projection is one constant and no Spark job runs
+    * (Spark builds this relation for every statement that names the
+    * table, DML analysis included).
     */
   override def columns(): Array[org.apache.spark.sql.connector.catalog.Column] = {
     val dfts = manifestState.defaults
     schema.fields.map { f =>
       dfts.get(f.name) match {
         case Some(sql) =>
-          val ext = spark.range(1).select()
+          // the optimized probe's one projection: Alias(v) over the
+          // constant-folded default
+          val value = spark.range(1).select()
             .select(org.apache.spark.sql.functions.expr(sql)
-              .cast(f.dataType).as("v")).head().get(0)
+              .cast(f.dataType).as("v")).queryExecution.optimizedPlan
+            .expressions.head.eval()
           org.apache.spark.sql.connector.catalog.Column.create(
             f.name, f.dataType, f.nullable, null,
             new ColumnDefaultValue(sql,
-              org.apache.spark.sql.graft.Shim.v2Literal(ext, f.dataType)),
+              org.apache.spark.sql.graft.Shim.v2Literal(value, f.dataType)),
             null)
         case None =>
           org.apache.spark.sql.connector.catalog.Column.create(

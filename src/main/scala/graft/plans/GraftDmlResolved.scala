@@ -9,10 +9,12 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{coalesce, lit}
 import org.apache.spark.sql.graft.Shim
 
-/** Catalog-NATIVE row-level DML: `MERGE` / `UPDATE` / `DELETE` whose target
-  * the [[GraftCatalog]] resolved lower HERE, from the fully RESOLVED plan,
-  * as a post-hoc resolution rule — retiring the parse-time capture
-  * ([[GraftSqlParser]] → [[GraftDml.GraftDmlRule]]) for catalog mode.
+/** THE lowering of row-level DML: every `MERGE` / `UPDATE` / `DELETE`
+  * whose target is a [[GraftTable]] relation lowers HERE, from the fully
+  * RESOLVED plan, as a post-hoc resolution rule. The target reaches that
+  * shape by either face: the registered catalog's `loadTable`, or
+  * [[GraftRead.GraftReadRule]] for a path or warehouse name
+  * (`graft.`/p``, `graft.orders`) with no catalog registered.
   *
   * Why post-hoc (not the resolution fixed point): the plan must be DONE
   * resolving — conditions, assignments and star expansions all bound by
@@ -20,14 +22,12 @@ import org.apache.spark.sql.graft.Shim
   * which rejects an unrewritten row-level command on a table that exposes
   * no batch scan. The post-hoc batch is exactly that window.
   *
-  * What resolution buys over the parse-time capture (the r13 verdict's
-  * "last unresolved-capture fragility"):
+  * What lowering from the resolved plan buys:
   *  - target/source references classify by ExprId, not by textual alias
-  *    matching — `t.v`, `v`, and a struct field that happens to share an
-  *    alias name can never be confused;
+  *    matching — `t.v`, `v`, `graft.`p`.v` and a struct field that
+  *    happens to share an alias name can never be confused;
   *  - ambiguous unqualified references error in Spark's OWN resolution
-  *    (the hand-rolled `bareRefs` both-sides check becomes dead weight on
-  *    this path);
+  *    (`AMBIGUOUS_REFERENCE`);
   *  - `UPDATE SET *` / `INSERT *` arrive pre-expanded against the real
   *    schemas.
   *
@@ -41,26 +41,26 @@ import org.apache.spark.sql.graft.Shim
   * at execution against the live post-evolution schema — name-based, not
   * positional, so the partition column can never mis-wire.
   *
-  * The lowering target is the SAME command trio the parse-time path
-  * produces ([[GraftDml.GraftDeleteCommand]]/[[GraftDml.GraftUpdateCommand]]/
+  * The lowering target is the command trio
+  * ([[GraftDml.GraftDeleteCommand]]/[[GraftDml.GraftUpdateCommand]]/
   * [[GraftDml.GraftMergeCommand]]) — resolved expressions are re-expressed
   * as name-based trees (target column `v` → `v`, merge-source column `v` →
   * `src_v`, the joined-frame contract `Layout.mergeIntoVersionedRows`
   * documents) and re-resolve at execution time against the live snapshot,
   * exactly like the Scala API's `Column` arguments. Semantics (one clause
   * per kind, first-matching-clause-wins masking, keyed ON conjunctions,
-  * identity-only merge INSERT) are the same surface contract as
-  * [[GraftDml]]; refusals are loud and name the unsupported shape.
+  * identity-only merge INSERT) are the surface contract [[GraftDml]]
+  * documents; refusals are loud and name the unsupported shape.
   *
   * Correlated subqueries in conditions refuse loudly (the captured tree
   * re-resolves against the live snapshot, where the outer scope no longer
-  * exists) — the same documented limit as the parse-time path.
+  * exists).
   */
 object GraftDmlResolved {
 
-  /** The DML target through its alias chain: the catalog-resolved
-    * [[GraftTable]] relation (kept a relation by [[GraftV2Read]]'s
-    * write-target protection) and its output attributes.
+  /** The DML target through its alias chain: the [[GraftTable]]
+    * relation (kept a relation by [[GraftV2Read]]'s write-target
+    * protection) and its output attributes.
     */
   private object TargetV2 {
     def unapply(plan: LogicalPlan): Option[(GraftTable, Seq[Attribute])] =
@@ -76,34 +76,32 @@ object GraftDmlResolved {
 
   case class GraftDmlResolvedRule(spark: SparkSession)
       extends Rule[LogicalPlan] {
-    override def apply(plan: LogicalPlan): LogicalPlan =
-      if (!GraftDml.catalogMode(spark)) plan
-      else plan match {
-        case d @ DeleteFromTable(TargetV2(g, out), cond) if d.resolved =>
-          refuseTravel(g, "DELETE")
-          GraftDml.GraftDeleteCommand(g.root,
-            toNames(cond, byId(out), Map.empty, "DELETE WHERE"))
+    override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+      case d @ DeleteFromTable(TargetV2(g, out), cond) if d.resolved =>
+        refuseTravel(g, "DELETE")
+        GraftDml.GraftDeleteCommand(g.root,
+          toNames(cond, byId(out), Map.empty, "DELETE WHERE"))
 
-        case u @ UpdateTable(TargetV2(g, out), assignments, cond)
-            if u.resolved =>
-          refuseTravel(g, "UPDATE")
-          val tgt = byId(out)
-          val set = assignments.map(a => keyName(a.key, tgt) ->
-            toNames(a.value, tgt, Map.empty, "UPDATE SET")).toMap
-          require(set.size == assignments.size,
-            "graft SQL UPDATE: duplicate assignment targets")
-          GraftDml.GraftUpdateCommand(g.root,
-            cond.map(toNames(_, tgt, Map.empty, "UPDATE WHERE"))
-              .getOrElse(lit(true)), set)
+      case u @ UpdateTable(TargetV2(g, out), assignments, cond)
+          if u.resolved =>
+        refuseTravel(g, "UPDATE")
+        val tgt = byId(out)
+        val set = assignments.map(a => keyName(a.key, tgt) ->
+          toNames(a.value, tgt, Map.empty, "UPDATE SET")).toMap
+        require(set.size == assignments.size,
+          "graft SQL UPDATE: duplicate assignment targets")
+        GraftDml.GraftUpdateCommand(g.root,
+          cond.map(toNames(_, tgt, Map.empty, "UPDATE WHERE"))
+            .getOrElse(lit(true)), set)
 
-        case m: MergeIntoTable if m.resolved =>
-          m.targetTable match {
-            case TargetV2(g, out) => lowerMerge(m, g, out)
-            case _ => plan
-          }
+      case m: MergeIntoTable if m.resolved =>
+        m.targetTable match {
+          case TargetV2(g, out) => lowerMerge(m, g, out)
+          case _ => plan
+        }
 
-        case _ => plan
-      }
+      case _ => plan
+    }
   }
 
   private def refuseTravel(g: GraftTable, stmt: String): Unit =
@@ -115,7 +113,7 @@ object GraftDmlResolved {
     out.map(a => a.exprId -> a.name).toMap
 
   /** Assignment target → column name. Nested-field assignment refuses
-    * (assign the whole column), same as the parse-time surface.
+    * (assign the whole column).
     */
   private def keyName(key: Expression, tgt: Map[ExprId, String]): String =
     key match {
@@ -221,9 +219,13 @@ object GraftDmlResolved {
     def joined(e: Expression, where: String): Column =
       toNames(e, tgt, src, where)
 
-    // one clause per kind + first-matching-clause-wins masking — the same
-    // surface contract (and the same delete-first engine reconciliation)
-    // as GraftDml.GraftDmlRule
+    // one clause per kind + first-matching-clause-wins masking: SQL says
+    // the FIRST matching clause wins, but the layout merge evaluates
+    // delete-first (Delta's fixed clause order). DELETE-before-UPDATE
+    // coincides (the engine updates only !delCond rows); UPDATE-before-
+    // DELETE must mask the delete with the update's condition, or every
+    // matched row satisfying both clauses would be deleted when SQL says
+    // update
     var del: Option[Column] = None
     var upd: Option[(Column, Option[Map[String, Column]])] = None
     var updFirst = false
@@ -341,6 +343,6 @@ object GraftDmlResolved {
     // see the UpdateAction star re-expansion above for how SET * reaches
     // the evolved columns.
     GraftDml.GraftMergeCommand(g.root, m.sourceTable, keys, del, upd, ins,
-      bareRefs = Set.empty, bsDel, bsUpd, m.withSchemaEvolution)
+      bsDel, bsUpd, m.withSchemaEvolution)
   }
 }

@@ -25,26 +25,25 @@ import graft.functions.expressions.{DotProduct, EmaScan, HyperplaneBuckets, Misr
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // SQL DML (MERGE INTO / UPDATE / DELETE) against `graft.`…`` targets:
-    // Spark's own parser produces the DML plans; this rule lowers them to
-    // the Layout writers. See GraftDml for the full surface contract.
+    // SQL INSERT [OVERWRITE] INTO `graft.`…``: Spark's own parser
+    // produces the plan; this rule lowers it to the Layout append. See
+    // GraftDml for the full DML surface contract.
     ext.injectResolutionRule(session => GraftDml.GraftDmlRule(session))
     // plain-SQL READS of graft tables (SELECT … FROM graft.x, VERSION/
-    // TIMESTAMP AS OF) — injected AFTER the DML rule and inert on plans
-    // still carrying DML statements, so DML targets are never rewritten
-    // into scans. See GraftRead for the ordering contract.
+    // TIMESTAMP AS OF) resolve to the Layout read plan; a DELETE/UPDATE/
+    // MERGE target resolves to the GraftTable relation instead, and an
+    // INSERT target stays for the rule above. See GraftRead.
     ext.injectResolutionRule(session => GraftRead.GraftReadRule(session))
-    // CATALOG-mode reads (spark.sql.catalog.graft = GraftCatalog): a
-    // GraftTable relation the catalog resolved substitutes with the same
-    // Layout read plan — see GraftV2Read for the exprId-preserving
-    // contract and the V2WriteCommand target protection. Inert when the
-    // catalog is not registered (no GraftTable relations exist then).
+    // a GraftTable relation read by a query (the catalog resolved it)
+    // substitutes with the same Layout read plan — see GraftV2Read for
+    // the exprId-preserving contract and the write-target protection
+    // (row-level DML and INSERT targets stay relations).
     ext.injectResolutionRule(session => GraftV2Read.GraftV2ReadRule(session))
-    // CATALOG-mode row-level DML (MERGE/UPDATE/DELETE on graft.x): lowers
-    // from the fully RESOLVED plan in the post-hoc batch — after Spark's
-    // scoping/star-expansion/schema-evolution, before CheckAnalysis
-    // rejects the scanless v2 relation. See GraftDmlResolved; the
-    // parse-time capture remains the non-catalog path.
+    // row-level DML (MERGE/UPDATE/DELETE) on every graft target — path,
+    // warehouse name or catalog: lowers from the fully RESOLVED plan in
+    // the post-hoc batch — after Spark's scoping and star expansion,
+    // before CheckAnalysis rejects the scanless v2 relation. See
+    // GraftDmlResolved.
     ext.injectPostHocResolutionRule(session =>
       GraftDmlResolved.GraftDmlResolvedRule(session))
     // SQL table-lifecycle DDL (CREATE/DROP TABLE, ALTER TABLE …) lowers

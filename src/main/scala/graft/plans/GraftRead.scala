@@ -5,8 +5,11 @@ import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRel
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{DateType, StringType, TimestampType}
 
+import graft.plans.GraftDml.GraftIdent
 import graft.sources.Layout
 
 /** Plain-SQL READS of graft tables — the last piece of the by-name story:
@@ -23,39 +26,32 @@ import graft.sources.Layout
   * explicit-path/power form — AS OF by arbitrary expression, etc.).
   *
   * A resolution rule, not a catalog: the unclaimed `[graft, x]`
-  * `UnresolvedRelation` (exactly the shape the DML rule keys on) rewrites
+  * `UnresolvedRelation` (the shape the INSERT rule keys on too) rewrites
   * to the SAME logical plan `Layout.readCurrent` produces — deletion
   * vectors, column mapping, stats/bloom skipping and manifest pruning all
   * apply identically, and `RelationTimeTravel` maps onto
   * `readVersion`/`readAsOf` (version numbers, typed date/timestamp
   * literals, or wall-clock strings read in the SESSION time zone).
   *
-  * Ordering contract: this rule is injected AFTER [[GraftDml.GraftDmlRule]]
-  * and never rewrites a DML statement's TARGET relation (tracked by node
-  * identity — a read-rewritten target would silently turn `DELETE FROM
-  * graft.x` into a scan); every OTHER graft relation resolves, including
-  * the sources of non-graft-target DML (`INSERT INTO parquet_t SELECT …
-  * FROM graft.x`). Graft-target DML captures its source plans unresolved
-  * and they re-enter analysis at command RUN time, where this rule
-  * resolves any graft relations THEY reference (`MERGE … USING graft.y`,
-  * `WHERE id IN (SELECT … FROM graft.z)`).
+  * Row-level DML targets (`DELETE FROM` / `UPDATE` / `MERGE INTO`
+  * graft.x) resolve here too, but to the catalog's relation instead of a
+  * scan: `SubqueryAlias(graft.x, DataSourceV2Relation(GraftTable))`, the
+  * same [[GraftTable]] `GraftCatalog.loadTable` builds. Spark then binds
+  * conditions and assignments against it and [[GraftDmlResolved]] lowers
+  * the statement from the resolved plan, so path, warehouse-name and
+  * catalog targets share one lowering. An INSERT target stays an
+  * `UnresolvedRelation` for [[GraftDml.GraftDmlRule]] (identity and
+  * DEFAULT fill, which the DSv2 insert path lacks); every OTHER graft
+  * relation resolves to a scan, including the sources of DML (`MERGE …
+  * USING graft.y`, `WHERE id IN (SELECT … FROM graft.z)`) and of a
+  * non-graft-target INSERT (`INSERT INTO parquet_t SELECT … FROM
+  * graft.x`). A path INSERT's query is captured unresolved and re-enters
+  * analysis at command RUN time, where this rule resolves the graft
+  * relations it references.
   */
 object GraftRead {
 
-  private def graftIdent(r: UnresolvedRelation): Option[String] =
-    if (r.multipartIdentifier.length == 2 &&
-        r.multipartIdentifier.head.equalsIgnoreCase(GraftDml.Namespace))
-      Some(r.multipartIdentifier(1))
-    else None
-
-  /** The relation under a DML statement's TARGET (through aliases) — the
-    * one node this rule must never rewrite (it belongs to the DML rule;
-    * a read-rewritten target would turn `DELETE FROM graft.x` into a
-    * scan). Only the TARGET is protected: a non-graft-target DML whose
-    * SOURCE reads a graft table (`INSERT INTO parquet_t SELECT … FROM
-    * graft.x`) must still resolve here — blanket whole-plan inertness
-    * broke exactly that (review fix).
-    */
+  /** The relation under a DML statement's TARGET (through aliases). */
   private def targetRelOf(plan: LogicalPlan): Option[UnresolvedRelation] =
     plan match {
       case SubqueryAlias(_, child) => targetRelOf(child)
@@ -65,30 +61,33 @@ object GraftRead {
 
   case class GraftReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = {
-      val protectedTargets =
-        java.util.Collections.newSetFromMap(
-          new java.util.IdentityHashMap[UnresolvedRelation, java.lang.Boolean]())
+      def identitySet() = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[UnresolvedRelation, java.lang.Boolean]())
+      val insertTargets, rowLevelTargets = identitySet()
       plan.foreach {
-        case d: DeleteFromTable => targetRelOf(d.table).foreach(protectedTargets.add)
-        case u: UpdateTable => targetRelOf(u.table).foreach(protectedTargets.add)
+        case d: DeleteFromTable => targetRelOf(d.table).foreach(rowLevelTargets.add)
+        case u: UpdateTable => targetRelOf(u.table).foreach(rowLevelTargets.add)
         case m: MergeIntoTable =>
-          targetRelOf(m.targetTable).foreach(protectedTargets.add)
+          targetRelOf(m.targetTable).foreach(rowLevelTargets.add)
         case i: InsertIntoStatement =>
-          targetRelOf(i.table).foreach(protectedTargets.add)
+          targetRelOf(i.table).foreach(insertTargets.add)
         case _ =>
       }
       plan.resolveOperatorsUp {
         case tt: RelationTimeTravel =>
           tt.relation match {
-            case r: UnresolvedRelation if !protectedTargets.contains(r) =>
-              graftIdent(r).map(x => travel(x, tt)).getOrElse(tt)
+            case r @ GraftIdent(x) if !insertTargets.contains(r) =>
+              travel(x, tt)
             case _ => tt
           }
-        case r: UnresolvedRelation if !protectedTargets.contains(r) =>
-          graftIdent(r).map { x =>
-            Layout.readCurrent(spark, GraftPaths.resolve(spark, x))
-              .queryExecution.logical
-          }.getOrElse(r)
+        case r @ GraftIdent(x) if rowLevelTargets.contains(r) =>
+          SubqueryAlias(Seq(GraftDml.Namespace, x),
+            DataSourceV2Relation.create(
+              GraftTable(x, GraftPaths.resolve(spark, x)), None,
+              Some(Identifier.of(Array.empty, x))))
+        case r @ GraftIdent(x) if !insertTargets.contains(r) =>
+          Layout.readCurrent(spark, GraftPaths.resolve(spark, x))
+            .queryExecution.logical
       }
     }
 

@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, InsertIntoS
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
-/** Catalog-mode READ substitution: a [[GraftTable]] relation the catalog
-  * resolved (`SELECT … FROM graft.x`, `… VERSION AS OF n`, a MERGE source,
-  * a subquery) rewrites to the SAME logical plan `Layout.readCurrent` /
+/** READ substitution: a [[GraftTable]] relation read by a query (the
+  * catalog resolved `SELECT … FROM graft.x`, `… VERSION AS OF n`, a MERGE
+  * source, a subquery) rewrites to the SAME logical plan `Layout.readCurrent` /
   * `readVersion` / `readAsOf` produce — deletion vectors, column mapping,
   * stats/bloom skipping and manifest pruning apply identically, and
   * `sizeInBytes` flows from `ManifestFileIndex` so broadcast planning
@@ -21,10 +21,11 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * orphan every reference the analyzer already resolved against the v2
   * relation's output).
   *
-  * Write-target protection, same contract as [[GraftRead.GraftReadRule]]:
-  * the relation under a `V2WriteCommand` (AppendData / OverwriteByExpr —
-  * the DSv2 INSERT path) must stay a v2 relation for the write exec;
-  * every OTHER occurrence (including the SOURCE of such a write) rewrites.
+  * Write-target protection: the relation under a `V2WriteCommand`
+  * (AppendData / OverwriteByExpr — the DSv2 INSERT path) must stay a v2
+  * relation for the write exec, and the one under a DELETE / UPDATE /
+  * MERGE for [[GraftDmlResolved]]; every OTHER occurrence (including the
+  * SOURCE of such a write) rewrites.
   */
 object GraftV2Read {
 
@@ -48,12 +49,12 @@ object GraftV2Read {
         // GraftRead.GraftReadRule's target protection)
         case i: InsertIntoStatement =>
           targetRelOf(i.table).foreach(protectedRels.add)
-        // row-level DML targets stay v2 relations so (a) the post-hoc
-        // resolved lowering (GraftDmlResolved) can read the GraftTable's
-        // root + output exprIds off the relation, and (b) Spark's own
-        // ResolveMergeIntoSchemaEvolution sees a v2 relation to evolve
-        // through the catalog. Conditions/assignments resolve against the
-        // relation's output identically either way.
+        // row-level DML targets stay v2 relations — whether the catalog
+        // or GraftRead.GraftReadRule (path and warehouse-name targets)
+        // resolved them — so the post-hoc lowering (GraftDmlResolved) can
+        // read the GraftTable's root + output exprIds off the relation.
+        // Conditions/assignments resolve against the relation's output
+        // identically either way.
         case d: DeleteFromTable => targetRelOf(d.table).foreach(protectedRels.add)
         case u: UpdateTable => targetRelOf(u.table).foreach(protectedRels.add)
         case m: MergeIntoTable =>

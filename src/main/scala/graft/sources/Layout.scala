@@ -154,20 +154,6 @@ object Layout {
         .rename(tmp, dst, Options.Rename.OVERWRITE)
   }
 
-  /** Time travel: path of a SPECIFIC version's dir under a versioned root.
-    * A committed manifest is immutable, so any un-vacuumed version is a
-    * complete, consistent snapshot readable forever (audits,
-    * reproductions, diffing a merge). Fails fast if the version was
-    * vacuumed or never existed. The dir holds only the files that version
-    * WROTE; read the snapshot with [[readVersion]].
-    */
-  def resolveVersion(spark: SparkSession, root: String, version: Int): String = {
-    require(ManifestIndex.exists(spark, root, versionName(version)),
-      s"version $version does not exist under $root " +
-        "(never committed, or already vacuumed)")
-    new Path(root, versionName(version)).toString
-  }
-
   /** Read a specific version. The manifest's data schema is authoritative:
     * files written before a schema-evolving merge null-fill the added
     * columns by name, and a version that holds NO data files (a delete
@@ -361,14 +347,6 @@ object Layout {
     */
   def partitionColumns(spark: SparkSession, root: String): Seq[String] =
     currentManifest(spark, root)._3.partitionSchema.fieldNames.toSeq
-
-  /** Metadata value `name` that version `version`'s [[publishVersion]]
-    * recorded, if that publish wrote it.
-    */
-  def versionMeta(spark: SparkSession, root: String, version: Int,
-                  name: String): Option[String] =
-    ManifestIndex.read(spark, root, versionName(version)).properties
-      .get(ManifestIndex.PublishPrefix + name)
 
   /** Reader-safe compaction — the maintenance pass that pays down the
     * small files a streaming writer (`graft-sink`) accretes: every

@@ -43,24 +43,30 @@ object StreamingOps {
     startingVersion.fold(r0)(v => r0.option("startingVersion", v.toString)).load()
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` right-sized for a
-    * STATEFUL micro-batch and restore the previous value after. A
-    * stateful streaming aggregate opens one state-store instance per
-    * shuffle partition per batch, so a cluster-wide partition count
-    * (sized for batch table scans) buys store open/commit overhead
-    * instead of parallelism at micro-batch grain — the r18 driver
-    * measured the 8-core bench BEATING the 32-core one on the tumbling
-    * aggregate (scaling ratio 0.57). `max(2, partitions/4)` keys the
-    * store count to the session's own scale — each core count the
-    * driver benches derives its own value, never a local constant
-    * (guide §2.2: fewer, larger partitions when per-partition fixed
-    * costs dominate).
+  /** Run `body` in a child session whose `spark.sql.shuffle.partitions`
+    * is right-sized for a STATEFUL micro-batch. A stateful streaming
+    * aggregate opens one state-store instance per shuffle partition per
+    * batch, so a cluster-wide partition count (sized for batch table
+    * scans) buys store open/commit overhead instead of parallelism at
+    * micro-batch grain — the r18 driver measured the 8-core bench BEATING
+    * the 32-core one on the tumbling aggregate (scaling ratio 0.57).
+    * `max(2, partitions/4)` keys the store count to the session's own
+    * scale — each core count the driver benches derives its own value,
+    * never a local constant (guide §2.2: fewer, larger partitions when
+    * per-partition fixed costs dominate).
+    *
+    * The child ([[org.apache.spark.sql.graft.Shim.childSession]]) copies
+    * the caller's conf and temp views and shares its SparkContext, so the
+    * caller's conf never changes — a query running concurrently in the
+    * caller's session keeps its partition count. Build the stream, and
+    * read anything the stream registers (a memory sink's table), through
+    * the session `body` receives.
     */
-  def withStatefulShuffle[T](spark: SparkSession)(body: => T): T = {
+  def withStatefulShuffle[T](spark: SparkSession)(body: SparkSession => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, math.max(2, prev.toInt / 4).toString)
-    try body finally spark.conf.set(key, prev)
+    val child = org.apache.spark.sql.graft.Shim.childSession(spark)
+    child.conf.set(key, math.max(2, spark.conf.get(key).toInt / 4).toString)
+    body(child)
   }
 
   /** Run a streaming DataFrame to a memory sink, draining everything

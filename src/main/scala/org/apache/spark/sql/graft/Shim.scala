@@ -24,7 +24,7 @@ object Shim {
     org.apache.spark.sql.connector.catalog.CatalogV2Util
       .v2ColumnsToStructType(cols)
 
-  /** A v2 connector `Literal` from an EXTERNAL Scala value
+  /** A v2 connector `Literal` from a Scala or Catalyst value
     * (`LiteralValue` and the Catalyst converters are `private[sql]`) —
     * the catalog's column-DEFAULT metadata needs one.
     */
@@ -34,6 +34,13 @@ object Shim {
       org.apache.spark.sql.catalyst.CatalystTypeConverters
         .convertToCatalyst(external),
       dt)
+
+  /** A child of `spark`: a copy of its session state (conf, temp views,
+    * functions) over the same SparkContext and cache, so conf set on the
+    * child never reaches `spark` (`cloneSession` is `private[sql]`).
+    */
+  def childSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   /** Analyze-and-wrap a logical plan as a DataFrame (`Dataset.ofRows` went
     * `private[sql]` with the Spark 4 classic split). Used by the SQL DML

@@ -29,7 +29,8 @@ class AnnArtifactSpec extends SparkSpec {
     // the metadata is committed WITH the version it describes: it lives
     // in that version's manifest
     assert(vdir.endsWith("/v00000"))
-    def meta(k: String) = graft.sources.Layout.versionMeta(spark, root, 0, k)
+    def meta(k: String) = graft.sources.ManifestIndex.read(spark, root,
+      "v00000").properties.get(graft.sources.ManifestIndex.PublishPrefix + k)
     assert(meta("kind").contains("pq_codebooks") && meta("m").contains("3") &&
       meta("seed").contains("11"))
     intercept[IllegalArgumentException] {

@@ -291,6 +291,53 @@ class CatalogDmlSpec extends SparkSpec {
     assert(state(t)(3L) == 37L)
   }
 
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides, so the count is complete).
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = cat.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusSync.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusSync.drain(sc)
+      n.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("DML analysis launches no Spark job on a DEFAULT-bearing table") {
+    val t = mkTable()
+    val root = graft.plans.GraftPaths.resolve(cat, t)
+    Layout.setColumnDefault(cat, root, "v", "42")
+    Layout.setColumnDefault(cat, root, "part", "concat('p', '9')")
+    val stmts = Seq(
+      "DELETE FROM %s WHERE id = 1",
+      "UPDATE %s SET v = v + 1 WHERE id = 2",
+      "MERGE INTO %s t USING (SELECT 3L AS id, 5L AS v, 'p1' AS part) s " +
+        "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT *")
+    // both faces build the GraftTable relation (and its DEFAULT column
+    // metadata) during analysis: the catalog's loadTable, and the path
+    // target in a session with no catalog registered
+    stmts.foreach { q =>
+      assert(jobsDuring(sql("EXPLAIN " + q.format(s"graft.$t"))) == 0,
+        s"catalog: $q")
+      assert(jobsDuring(spark.sql("EXPLAIN " + q.format(s"graft.`$root`"))) == 0,
+        s"path: $q")
+    }
+    // the folded literal is the default's value (Spark's insert
+    // resolution reads it back as the column's current default)
+    sql(s"INSERT INTO graft.$t (id) VALUES (100)")
+    assert(sql(s"SELECT v, part FROM graft.$t WHERE id = 100").head().toSeq ==
+      Seq(42L, "p9"))
+  }
+
   test("catalog DML composes with time travel reads and the change feed") {
     val t = mkTable()
     sql(s"DELETE FROM graft.$t WHERE id >= 10") // v2

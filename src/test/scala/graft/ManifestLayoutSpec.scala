@@ -457,13 +457,18 @@ class ManifestLayoutSpec extends SparkSpec {
   private def shape(df: org.apache.spark.sql.DataFrame) =
     df.schema.map(f => f.name -> f.dataType)
 
+  /** Metadata value `k` that version `v`'s publish recorded, if any. */
+  private def publishMeta(root: String, v: Int, k: String): Option[String] =
+    ManifestIndex.read(spark, root, f"v$v%05d").properties
+      .get(ManifestIndex.PublishPrefix + k)
+
   test("publishVersion: a version's metadata is exactly what its publish " +
       "wrote; a key a later publish leaves out is absent there") {
     val root = Files.createTempDirectory("graft_pub_meta").toString + "/t"
     Layout.publishVersion(spark, root, rows((1L, "p1", 1.0)),
       Map("a" -> "1", "b" -> "x\ty\"z"))
     Layout.publishVersion(spark, root, rows((2L, "p1", 2.0)), Map("a" -> "2"))
-    def meta(v: Int, k: String) = Layout.versionMeta(spark, root, v, k)
+    def meta(v: Int, k: String) = publishMeta(root, v, k)
     assert(meta(0, "a").contains("1") && meta(0, "b").contains("x\ty\"z"))
     assert(meta(1, "a").contains("2"))
     assert(meta(1, "b").isEmpty, "publish metadata must not carry forward")
@@ -509,7 +514,7 @@ class ManifestLayoutSpec extends SparkSpec {
         k -> (if (k.startsWith(ManifestIndex.PublishPrefix)) "1" else v) }))
     assert(Layout.currentVersionNumber(spark, root) == 0)
     assert(current() == v0Rows)
-    assert(Layout.versionMeta(spark, root, 0, "w").contains("0"))
+    assert(publishMeta(root, 0, "w").contains("0"))
     assert(Layout.history(spark, root).count() == 1)
     // recovery clears the debris …
     Thread.sleep(20)
@@ -520,7 +525,7 @@ class ManifestLayoutSpec extends SparkSpec {
     Layout.publishVersion(spark, root, rows((3L, "p1", 30.0)), Map("w" -> "1"))
     assert(Layout.currentVersionNumber(spark, root) == 1)
     assert(ids(Layout.readCurrent(spark, root)) == Set(3L))
-    assert(Layout.versionMeta(spark, root, 1, "w").contains("1"))
+    assert(publishMeta(root, 1, "w").contains("1"))
   }
 
   test("vacuumVersions on a publish root deletes the replaced files and " +

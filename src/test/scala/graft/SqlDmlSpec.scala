@@ -5,11 +5,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Layout
 
-/** SQL DML statements against graft versioned tables (GraftDml): DELETE /
-  * UPDATE / 3-clause MERGE lowered onto the same Layout writers the Scala
-  * API uses. Pins: value semantics ≡ the Scala calls, alias/qualifier
-  * rewriting, star update expansion, extra source columns as clause
-  * inputs, the refusal surface, and that non-graft SQL is untouched.
+/** SQL DML statements against path-addressed graft versioned tables:
+  * DELETE / UPDATE / 3-clause MERGE lowered from the resolved plan
+  * (GraftDmlResolved) onto the same Layout writers the Scala API uses.
+  * Pins: value semantics ≡ the Scala calls, alias/qualifier binding, star
+  * update expansion, extra source columns as clause inputs, the refusal
+  * surface, and that non-graft SQL is untouched.
   */
 class SqlDmlSpec extends SparkSpec {
   import spark.implicits._
@@ -108,13 +109,16 @@ class SqlDmlSpec extends SparkSpec {
         s"""MERGE INTO graft.`$root` t USING g_src s ON t.id > s.id
            |WHEN MATCHED THEN DELETE""".stripMargin)
     }
-    assert(e1.getMessage.contains("conjunction of qualified key"))
+    assert(e1.getMessage.contains("conjunction of key equalities"))
     val e2 = intercept[Exception] {
       spark.sql(
         s"""MERGE INTO graft.`$root` t USING g_src s ON t.id = s.id
            |WHEN NOT MATCHED BY SOURCE AND s.v > 0 THEN DELETE""".stripMargin)
     }
-    assert(e2.getMessage.contains("only target columns"))
+    // a NOT MATCHED BY SOURCE clause binds against the target alone, so
+    // Spark's resolution cannot find the source column there
+    assert(e2.getMessage.contains("UNRESOLVED_COLUMN") &&
+      e2.getMessage.contains("`s`.`v`"), e2.getMessage)
     val e3 = intercept[Exception] {
       spark.sql(
         s"""MERGE INTO graft.`$root` t USING g_src s ON t.id = s.id
@@ -129,6 +133,21 @@ class SqlDmlSpec extends SparkSpec {
          |WHEN NOT MATCHED THEN INSERT (id, v, part) VALUES (s.id, s.v, s.part)
          |""".stripMargin)
     assert(state(root)(300L) == (3L, "p0"))
+  }
+
+  test("MERGE refuses a type-mismatched ON key at analysis") {
+    val root = mkRoot("keytype")
+    Seq(("1", 1L, "p1")).toDF("id", "v", "part")
+      .createOrReplaceTempView("keytype_src")
+    val before = Layout.currentVersionNumber(spark, root)
+    val e = intercept[Exception] {
+      spark.sql(
+        s"""MERGE INTO graft.`$root` t USING keytype_src s ON t.id = s.id
+           |WHEN MATCHED THEN DELETE""".stripMargin)
+    }
+    assert(e.getMessage.contains("conjunction of key equalities"),
+      e.getMessage)
+    assert(Layout.currentVersionNumber(spark, root) == before)
   }
 
   test("SQL DML composes with graft_changes/graft_table reads and constraints") {
@@ -322,14 +341,15 @@ class SqlDmlSpec extends SparkSpec {
   test("MERGE refuses unqualified refs that exist on BOTH target and source") {
     val root = mkRoot("amb")
     // the source carries 'v' too — an unqualified 'v' in a matched clause
-    // would silently bind to the target (ADVICE r11); refuse instead
+    // must not silently bind to the target: Spark's own resolution refuses
+    // it as ambiguous (AMBIGUOUS_REFERENCE)
     Seq((2L, 999L)).toDF("id", "v").createOrReplaceTempView("amb_src")
     val e = intercept[Exception] {
       spark.sql(
         s"""MERGE INTO graft.`$root` t USING amb_src s ON t.id = s.id
            |WHEN MATCHED AND v > 0 THEN UPDATE SET v = v + 1""".stripMargin)
     }
-    assert(e.getMessage.contains("BOTH"), e.getMessage)
+    assert(e.getMessage.toLowerCase.contains("ambiguous"), e.getMessage)
     // the qualified form runs (SET target name is unambiguous by nature);
     // an unqualified ref to a TARGET-ONLY column (part) stays legal
     Seq((2L, 999L, "p0")).toDF("id", "v", "part")
@@ -352,11 +372,27 @@ class SqlDmlSpec extends SparkSpec {
          |ON graft.`$root`.id = s.id
          |WHEN MATCHED THEN UPDATE SET graft.`$root`.v = s.v""".stripMargin)
     assert(state(root)(4L)._1 == 777L)
-    // genuinely nested-field targets still refuse with the accurate message
+    // a field of a non-struct column refuses, naming the cause (v is a
+    // BIGINT, there is no field to extract)
     val e = intercept[Exception] {
       spark.sql(s"UPDATE graft.`$root` SET v.f = 1 WHERE id = 2")
     }
+    assert(e.getMessage.contains("INVALID_EXTRACT_BASE_FIELD_TYPE") &&
+      e.getMessage.contains("BIGINT"), e.getMessage)
+  }
+
+  test("a nested-field SET on a struct column refuses; assign the whole column") {
+    val root = Files.createTempDirectory("graft_sql_nested").toString + "/t"
+    Layout.initVersionedManifest(
+      spark.range(3).select($"id", struct(($"id" * 2).as("f")).as("st")),
+      root, Nil)
+    val e = intercept[Exception] {
+      spark.sql(s"UPDATE graft.`$root` SET st.f = 1 WHERE id = 2")
+    }
     assert(e.getMessage.contains("nested-field"), e.getMessage)
+    spark.sql(s"UPDATE graft.`$root` SET st = named_struct('f', 7L) WHERE id = 2")
+    assert(Layout.readCurrent(spark, root).where($"id" === 2)
+      .select($"st.f").as[Long].head() == 7L)
   }
 
   test("MERGE WITH SCHEMA EVOLUTION adds source columns, then merges") {

@@ -41,6 +41,32 @@ class StreamingSpec extends SparkSpec {
     assert(pq.size == 3)
   }
 
+  test("withStatefulShuffle runs the stateful stream in a child session; " +
+      "the caller's conf never changes") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val dir = Files.createTempDirectory("graft_stream_child").toString
+    Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "k")
+      .write.mode("overwrite").parquet(dir)
+    val (during, rows, stores) = StreamingOps.withStatefulShuffle(spark) { c =>
+      val q = c.readStream.schema("id BIGINT, k STRING").parquet(dir)
+        .groupBy("k").count()
+        .writeStream.format("memory").queryName("graft_child_counts")
+        .outputMode("complete")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      (spark.conf.get(key), c.table("graft_child_counts").count(),
+        q.lastProgress.stateOperators.head.numShufflePartitions)
+    }
+    assert(during == before, "the caller's conf changed while the body ran")
+    assert(spark.conf.get(key) == before)
+    assert(rows == 2L)
+    // the stream ran with the right-sized partition count, and its memory
+    // table lives in the child only
+    assert(stores == math.max(2, before.toInt / 4))
+    assert(!spark.catalog.tableExists("graft_child_counts"))
+  }
+
   test("flatMapGroupsWithState sessionization closes sessions at the gap") {
     import graft.streaming.Sessionize
     import graft.streaming.Sessionize.Event
