@@ -149,7 +149,7 @@ object GraftDml {
     */
   case class GraftInsertCommand(root: String, query: LogicalPlan,
                                 userCols: Seq[String], byName: Boolean,
-                                overwrite: Boolean = false)
+                                overwrite: Boolean)
       extends LeafRunnableCommand {
     override val output: Seq[Attribute] = pathAttr
     override def run(session: SparkSession): Seq[Row] = {
@@ -199,9 +199,9 @@ object GraftDml {
                                keys: Seq[String], del: Option[Column],
                                upd: Option[(Column, Option[Map[String, Column]])],
                                ins: Option[Column],
-                               bsDel: Option[Column] = None,
-                               bsUpd: Option[(Column, Option[Map[String, Column]])] = None,
-                               withSchemaEvolution: Boolean = false)
+                               bsDel: Option[Column],
+                               bsUpd: Option[(Column, Option[Map[String, Column]])],
+                               withSchemaEvolution: Boolean)
       extends LeafRunnableCommand {
     override val output: Seq[Attribute] = pathAttr
     override def run(session: SparkSession): Seq[Row] = {

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, ExprId, Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -74,8 +74,7 @@ object GraftDmlResolved {
       }
   }
 
-  case class GraftDmlResolvedRule(spark: SparkSession)
-      extends Rule[LogicalPlan] {
+  object GraftDmlResolvedRule extends Rule[LogicalPlan] {
     override def apply(plan: LogicalPlan): LogicalPlan = plan match {
       case d @ DeleteFromTable(TargetV2(g, out), cond) if d.resolved =>
         refuseTravel(g, "DELETE")

@@ -44,8 +44,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the post-hoc batch — after Spark's scoping and star expansion,
     // before CheckAnalysis rejects the scanless v2 relation. See
     // GraftDmlResolved.
-    ext.injectPostHocResolutionRule(session =>
-      GraftDmlResolved.GraftDmlResolvedRule(session))
+    ext.injectPostHocResolutionRule(_ => GraftDmlResolved.GraftDmlResolvedRule)
     // SQL table-lifecycle DDL (CREATE/DROP TABLE, ALTER TABLE …) lowers
     // at PARSE time inside the delegating parser (ResolveSessionCatalog
     // would claim the identifiers before a resolution rule could — see
