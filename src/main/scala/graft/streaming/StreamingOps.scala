@@ -48,12 +48,12 @@ object StreamingOps {
     * aggregate opens one state-store instance per shuffle partition per
     * batch, so a cluster-wide partition count (sized for batch table
     * scans) buys store open/commit overhead instead of parallelism at
-    * micro-batch grain — the r18 driver measured the 8-core bench BEATING
-    * the 32-core one on the tumbling aggregate (scaling ratio 0.57).
-    * `max(2, partitions/4)` keys the store count to the session's own
-    * scale — each core count the driver benches derives its own value,
-    * never a local constant (guide §2.2: fewer, larger partitions when
-    * per-partition fixed costs dominate).
+    * micro-batch grain — the benchmark measured the 8-core run
+    * BEATING the 32-core one on the tumbling aggregate (scaling ratio
+    * 0.57). `max(2, partitions/4)` keys the store count to the session's
+    * own scale — each core count derives its own value, never a local
+    * constant (fewer, larger partitions when per-partition fixed costs
+    * dominate).
     *
     * The child ([[org.apache.spark.sql.graft.Shim.childSession]]) copies
     * the caller's conf and temp views and shares its SparkContext, so the
