@@ -63,12 +63,10 @@ object AnnIndex {
     * them).
     */
   private def liveProps(spark: SparkSession, root: String,
-                        prefix: String): Map[String, String] = {
-    val cur = Layout.currentVersionNumber(spark, root)
-    ManifestIndex.read(spark, root, f"v$cur%05d").properties
+                        prefix: String): Map[String, String] =
+    Layout.currentManifest(spark, root)._2.properties
       .collect { case (k, v) if k.startsWith(prefix) =>
         k.stripPrefix(prefix) -> v }
-  }
 
   private def requireVersion(meta: Map[String, String], key: String,
                              actual: Int, what: String,

@@ -402,8 +402,7 @@ case class GraftTable(ident: String, root: String,
   override lazy val schema: StructType = readPlan().schema
 
   private lazy val manifestState: graft.sources.ManifestIndex.TableManifest =
-    graft.sources.ManifestIndex.read(spark, root,
-      f"v${Layout.currentVersionNumber(spark, root)}%05d")
+    Layout.currentManifest(spark, root)._2
 
   /** Column DEFAULTs surface as v2 column metadata (capability
     * `SUPPORT_COLUMN_DEFAULT_VALUE` on the catalog), so Spark's OWN

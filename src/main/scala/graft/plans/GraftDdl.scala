@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructType}
 
-import graft.sources.{Layout, ManifestIndex}
+import graft.sources.Layout
 
 /** Table-by-NAME addressing for the SQL surface. A graft identifier that
   * LOOKS like a path (contains `/` or a scheme) is used verbatim; a bare
@@ -620,8 +620,7 @@ object GraftDdl {
       Seq(AttributeReference("createtab_stmt", StringType, nullable = false)())
     override def run(session: SparkSession): Seq[Row] = {
       val root = GraftPaths.resolve(session, ident)
-      val man = graft.sources.ManifestIndex.read(session, root,
-        f"v${Layout.currentVersionNumber(session, root)}%05d")
+      val man = Layout.currentManifest(session, root)._2
       val cols =
         (graft.sources.ManifestIndex.activeSchema(man.dataSchema) ++
           man.partitionSchema)
@@ -828,16 +827,15 @@ object GraftDdl {
       AttributeReference("cluster_columns", StringType, nullable = false)())
     override def run(session: SparkSession): Seq[Row] = {
       val root = GraftPaths.resolve(session, ident)
-      val cur = Layout.currentVersionNumber(session, root)
-      // S80 observability: the declared write-time clustering, "" if none
-      val cluster = ManifestIndex.clusterColumns(session, root).mkString(",")
-      val man = graft.sources.ManifestIndex.read(session, root, f"v$cur%05d")
+      val (live, man) = Layout.currentManifest(session, root)
+      val cur = live.substring(live.lastIndexOf("/v") + 2).toInt
       Seq(Row("graft-manifest", root, cur,
         man.entries.length.toLong, man.entries.map(_.size).sum,
         man.partitionSchema.fieldNames.mkString(","),
         man.constraints.toSeq.sortBy(_._1)
           .map { case (n, sql) => s"$n CHECK ($sql)" }.mkString("; "),
-        cluster))
+        // S80 observability: the declared write-time clustering, "" if none
+        man.clusterColumns.mkString(",")))
     }
   }
 
@@ -895,11 +893,14 @@ object GraftDdl {
 
   /** `ALTER TABLE graft.x CLUSTER BY (a, b)` / `CLUSTER BY NONE`
     * (parser-injected): declare — or drop — the table's S80 write-time
-    * clustering. Once declared, every image-appending write (append /
-    * replace / upsert / merge) range-places its fresh batch on the
-    * z-value of these columns, and OPTIMIZE without an explicit ZORDER
-    * list re-clusters to them. NONE drops the declaration; existing file
-    * layout is untouched either way (OPTIMIZE rewrites).
+    * clustering, one metadata commit ([[Layout.setClusterColumns]]) whose
+    * manifest records the declaration, so RESTORE, time travel and both
+    * clones take the clustering of their version. Once declared, every
+    * image-appending write (append / replace / upsert / merge)
+    * range-places its fresh batch on the z-value of these columns, and
+    * OPTIMIZE without an explicit ZORDER list re-clusters to them. NONE
+    * drops the declaration; existing file layout is untouched either way
+    * (OPTIMIZE rewrites).
     */
   case class GraftClusterByCommand(ident: String, cols: Seq[String])
       extends LeafRunnableCommand {
@@ -907,9 +908,7 @@ object GraftDdl {
       Seq(AttributeReference("cluster_columns", StringType,
         nullable = false)())
     override def run(session: SparkSession): Seq[Row] = {
-      val root = GraftPaths.resolve(session, ident)
-      if (cols.isEmpty) ManifestIndex.dropClusterColumns(session, root)
-      else ManifestIndex.setClusterColumns(session, root, cols)
+      Layout.setClusterColumns(session, GraftPaths.resolve(session, ident), cols)
       Seq(Row(cols.mkString(",")))
     }
   }

@@ -216,8 +216,7 @@ object GraftDml {
         // clause inputs would land in the table under evolution — drop
         // them in the USING query when evolving. Skip-if-present makes a
         // replayed merge idempotent across the evolution commits.
-        val man0 = ManifestIndex.read(session, rootR,
-          f"v${Layout.currentVersionNumber(session, rootR)}%05d")
+        val man0 = Layout.currentManifest(session, rootR)._2
         // ACTIVE schema only: a source column named like a DROPPED
         // column's tombstone must reach addColumn and refuse LOUDLY
         // there — a full-dataSchema set would skip it silently and the
@@ -227,8 +226,7 @@ object GraftDml {
         sourceDf.schema.filterNot(f => have(f.name.toLowerCase))
           .foreach(f => Layout.addColumn(session, rootR, f.name, f.dataType))
       }
-      val man = ManifestIndex.read(session, rootR,
-        f"v${Layout.currentVersionNumber(session, rootR)}%05d")
+      val man = Layout.currentManifest(session, rootR)._2
       val tableFields =
         ManifestIndex.activeSchema(man.dataSchema) ++ man.partitionSchema
       val updSet = upd.map { case (c, setOpt) =>

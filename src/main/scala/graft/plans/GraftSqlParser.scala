@@ -20,6 +20,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * ALTER TABLE graft.x CLUSTER BY (c1, c2, …) | CLUSTER BY NONE
   * }}}
   *
+  * CLUSTER BY and CLUSTER BY NONE each commit one version
+  * ([[graft.sources.Layout.setClusterColumns]]), so the declaration is
+  * time-travelled, restored and cloned with the rest of the table state.
+  *
   * Everything that DOESN'T match these shapes — including every
   * other DESCRIBE/VACUUM-looking string — falls through to the session
   * parser verbatim, so the extension is invisible outside its grammar.

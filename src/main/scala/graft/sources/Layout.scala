@@ -166,7 +166,7 @@ object Layout {
 
   /** [[readVersion]] for the live version. */
   def readCurrent(spark: SparkSession, root: String): DataFrame =
-    ManifestIndex.dataFrame(spark, root, currentManifest(spark, root)._3)
+    ManifestIndex.dataFrame(spark, root, currentManifest(spark, root)._2)
 
   /** Timestamp time travel (`AS OF <ts>`): the newest version committed at
     * or before `tsMillis`. The commit instant is the manifest file's mtime
@@ -209,14 +209,14 @@ object Layout {
     * collection (then count the data). See [[ManifestIndex.rowCount]].
     */
   def countRows(spark: SparkSession, root: String): Option[Long] =
-    ManifestIndex.rowCount(currentManifest(spark, root)._3)
+    ManifestIndex.rowCount(currentManifest(spark, root)._2)
 
   /** Metadata-only per-column profile (nulls/min/max) of the live
     * version, folded from the manifest's file envelopes; see
     * [[ManifestIndex.columnProfile]] for the exactness contract.
     */
   def columnStats(spark: SparkSession, root: String): DataFrame =
-    ManifestIndex.columnProfile(spark, currentManifest(spark, root)._3)
+    ManifestIndex.columnProfile(spark, currentManifest(spark, root)._2)
 
   /** Path of the live version dir under a versioned root. A root without
     * a `_current` pointer is not a table (or an init that never reached
@@ -264,16 +264,16 @@ object Layout {
     */
   def publishVersion(spark: SparkSession, root: String, df: DataFrame,
                      meta: Map[String, String] = Map.empty): String = graft.util.DmlTimer.timed {
-    def published(version: String) = ManifestIndex.TableManifest(df.schema,
-      new StructType(), writeEntries(spark, root, version, df.schema, Nil, df),
+    val header = ManifestIndex.TableManifest(df.schema, new StructType(), Nil,
       meta.map { case (k, v) => (ManifestIndex.PublishPrefix + k) -> v } +
         (ManifestIndex.OperationKey -> "PUBLISH"))
+    def published(version: String) =
+      header.copy(entries = writeEntries(spark, root, version, header, Nil, df))
     if (isVersionedRoot(spark, root))
       commit(spark, root, resolveCurrent(spark, root), "PUBLISH")(published)
     else {
       // a fresh root's v0, like initVersionedManifest: nothing to claim
       val v0 = versionName(0)
-      ManifestIndex.writeFormatMarker(spark, root)
       ManifestIndex.write(spark, root, v0, published(v0))
       writePointer(spark, root, v0)
       s"$root/$v0"
@@ -303,7 +303,7 @@ object Layout {
     * @return number of data files listed
     */
   def exportFileList(spark: SparkSession, root: String, outFile: String): Int = {
-    val (_, _, man) = currentManifest(spark, root)
+    val (_, man) = currentManifest(spark, root)
     require(man.entries.forall(_.dv.isEmpty),
       "exportFileList: live entries carry deletion vectors — an external " +
         "reader of the raw files would resurrect deleted rows; run " +
@@ -346,7 +346,7 @@ object Layout {
     * [[updateVersionedRows]] refuses it). Empty for an unpartitioned root.
     */
   def partitionColumns(spark: SparkSession, root: String): Seq[String] =
-    currentManifest(spark, root)._3.partitionSchema.fieldNames.toSeq
+    currentManifest(spark, root)._2.partitionSchema.fieldNames.toSeq
 
   /** Reader-safe compaction — the maintenance pass that pays down the
     * small files a streaming writer (`graft-sink`) accretes: every
@@ -376,13 +376,11 @@ object Layout {
                                   targetBytes: Long,
                                   maxFiles: Int = 8,
                                   zOrderCols: Seq[String] = Nil): (String, Int) = graft.util.DmlTimer.timed {
+    val (cur, man) = currentManifest(spark, root)
     // no explicit ZORDER list → the table's DECLARED clustering (S80)
     // applies, so OPTIMIZE / maintain on a declared table re-clusters
     // rewritten leaves without repeating the column list every call
-    val zCols =
-      if (zOrderCols.nonEmpty) zOrderCols
-      else ManifestIndex.clusterColumns(spark, root)
-    val (cur, _, man) = currentManifest(spark, root)
+    val zCols = if (zOrderCols.nonEmpty) zOrderCols else man.clusterColumns
     val currentSpec = man.partitionSchema.fieldNames.toSeq
     // leaves written under an EARLIER partition spec are always selected:
     // compaction is where a metadata-only repartitionTable converges to a
@@ -423,7 +421,7 @@ object Layout {
             else rewriteEntries(spark, root, next, man, respec, targetBytes)
           respecd ++ fragmented.toSeq.sortBy(_._1).flatMap { case (leaf, bytes) =>
             val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-            writeEntries(spark, root, next, man.dataSchema, Nil,
+            writeEntries(spark, root, next, man, Nil,
               zOrdered(ManifestIndex.dataFrame(spark, root, man, Some(Set(leaf)))
                 .drop(man.partitionSchema.fieldNames: _*), zCols, 8, files),
               leaf = Some(leaf))
@@ -534,7 +532,7 @@ object Layout {
   private def alterManifest(spark: SparkSession, root: String, operation: String)
                            (edit: ManifestIndex.TableManifest => ManifestIndex.TableManifest)
       : String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     val edited = edit(man)
     commit(spark, root, cur, operation)(_ => edited)
   }
@@ -672,33 +670,24 @@ object Layout {
     * every subsequent merge/delete/compact carries untouched partitions
     * forward as MANIFEST ENTRIES: a 1-row upsert into a 100 TB table costs
     * one partition's rewrite plus O(metadata), on object stores too.
-    */
-  def initVersionedManifest(df: DataFrame, root: String,
-                            pcols: Seq[String]): String =
-    initVersionedManifest(df, root, pcols, Nil)
-
-  /** Variant declaring per-file BLOOM-FILTER columns from version 0 on
-    * (see [[ManifestIndex.setBloomColumns]]): point lookups (`id = X`)
-    * on high-cardinality columns skip files min/max envelopes can't.
-    */
-  def initVersionedManifest(df: DataFrame, root: String,
-                            pcols: Seq[String],
-                            bloomCols: Seq[String]): String =
-    initVersionedManifest(df, root, pcols, bloomCols, None)
-
-  /** Variant seeding the initial manifest's PROPERTIES verbatim (the
-    * [[deepClone]] carry: constraints, markers, identity high-water,
-    * ledgers, declarations all live there). Plumbing them into the v00000
-    * commit itself — instead of deleting and rewriting the fresh manifest
-    * — means the clone root is never observable in a broken state: a
-    * crash mid-clone leaves either no `_current` at all (clean retry) or
-    * a complete v00000 (ADVICE r14: the delete-then-rewrite window left
-    * an unrecoverable half-clone).
+    *
+    * `bloomCols` declares per-file BLOOM-FILTER columns from version 0 on
+    * ([[ManifestIndex.BloomKey]]): point lookups (`id = X`) on
+    * high-cardinality columns skip files min/max envelopes can't.
+    *
+    * `initProperties` seeds v0's PROPERTIES verbatim (the [[deepClone]]
+    * carry: constraints, markers, identity high-water, ledgers and the
+    * bloom and cluster declarations all live there). Plumbing them into
+    * the v00000 commit itself — instead of deleting and rewriting the
+    * fresh manifest — means the clone root is never observable in a
+    * broken state: a crash mid-clone leaves either no `_current` at all
+    * (clean retry) or a complete v00000 (ADVICE r14: the
+    * delete-then-rewrite window left an unrecoverable half-clone).
     */
   def initVersionedManifest(df: DataFrame, root: String,
                             pcols: Seq[String],
-                            bloomCols: Seq[String],
-                            initProperties: Option[Map[String, String]]): String = graft.util.DmlTimer.timed {
+                            bloomCols: Seq[String] = Nil,
+                            initProperties: Option[Map[String, String]] = None): String = graft.util.DmlTimer.timed {
     // re-init of a live root is REFUSED, not overwritten: rewriting v00000
     // would destroy data files newer manifests still reference via
     // carry-forward — unrecoverable corruption (review fix; same guard as
@@ -707,23 +696,19 @@ object Layout {
       s"initVersionedManifest: $root is already a versioned root " +
         "(re-initializing would orphan every newer version's " +
         "carry-forward references) — write to a fresh root, or merge")
-    // validate BEFORE any write — at this point no manifest exists yet for
-    // setBloomColumns' own late-declaration check to see
-    if (bloomCols.nonEmpty)
-      ManifestIndex.validateBloomColumns(bloomCols,
-        StructType(df.schema.filterNot(f => pcols.contains(f.name))))
     val spark = df.sparkSession
     val v0 = versionName(0)
-    // marker and bloom declaration first: the write-time stats read the
-    // declaration, and a root without `_current` is still re-initializable
-    ManifestIndex.writeFormatMarker(spark, root)
-    if (bloomCols.nonEmpty) ManifestIndex.setBloomColumns(spark, root, bloomCols)
     val dataSchema = StructType(df.schema.filterNot(f => pcols.contains(f.name)))
-    ManifestIndex.write(spark, root, v0, ManifestIndex.TableManifest(
-      dataSchema,
-      StructType(pcols.map(c => df.schema(c))),
-      writeEntries(spark, root, v0, dataSchema, pcols, leafSized(df, pcols)),
-      initProperties.getOrElse(Map(ManifestIndex.OperationKey -> "CREATE"))))
+    // validate BEFORE any write, against the incoming frame
+    ManifestIndex.validateBloomColumns(bloomCols, dataSchema)
+    val header = ManifestIndex.TableManifest(dataSchema,
+      StructType(pcols.map(c => df.schema(c))), Nil,
+      initProperties.getOrElse(Map(ManifestIndex.OperationKey -> "CREATE")))
+    val declared =
+      if (bloomCols.isEmpty) header
+      else header.withColumnList(ManifestIndex.BloomKey, bloomCols)
+    ManifestIndex.write(spark, root, v0, declared.copy(entries =
+      writeEntries(spark, root, v0, declared, pcols, leafSized(df, pcols))))
     writePointer(spark, root, v0)
     s"$root/$v0"
   }
@@ -764,7 +749,7 @@ object Layout {
   def mergeVersionedPartitioned(spark: SparkSession, root: String,
                                 updates0: DataFrame, keys: Seq[String],
                                 pcols: Seq[String]): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     requireSpec(root, man, pcols, "mergeVersionedPartitioned")
     // a producer that still sends the NARROW type after a widenColumn is
     // upcast at the door (lossless by isWidening) — the schema contract
@@ -815,11 +800,10 @@ object Layout {
         s"(${physNames.mkString(",")}): an added column may not reuse a " +
         "renamed column's physical name")
     commit(spark, root, cur, "MERGE") { next =>
-      man.copy(
-        dataSchema = newDataSchema,
-        entries = writeEntries(spark, root, next, newDataSchema, pcols,
-          leafSized(merged, pcols)) ++
-          man.entries.filterNot(e => affected.contains(e.leaf)))
+      val evolved = man.copy(dataSchema = newDataSchema)
+      evolved.copy(entries = writeEntries(spark, root, next, evolved, pcols,
+        leafSized(merged, pcols)) ++
+        man.entries.filterNot(e => affected.contains(e.leaf)))
     }
   }
 
@@ -840,7 +824,7 @@ object Layout {
   /** Multi-level variant of the key-pruned DELETE. */
   def deleteVersionedPartitioned(spark: SparkSession, root: String,
                                  predicate: Column, pcols: Seq[String]): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     requireSpec(root, man, pcols, "deleteVersionedPartitioned")
     val full = ManifestIndex.dataFrame(spark, root, man)
     val affected = affectedLeaves(
@@ -851,7 +835,7 @@ object Layout {
     // path must not churn retention with byte-identical versions)
     if (affected.isEmpty) return cur
     commit(spark, root, cur, "DELETE") { next =>
-      man.copy(entries = writeEntries(spark, root, next, man.dataSchema, pcols,
+      man.copy(entries = writeEntries(spark, root, next, man, pcols,
         ManifestIndex.dataFrame(spark, root, man, Some(affected))
           .filter(!coalesce(predicate, lit(false)))) ++
         man.entries.filterNot(e => affected.contains(e.leaf)))
@@ -889,7 +873,7 @@ object Layout {
     */
   def deleteVersionedRows(spark: SparkSession, root: String,
                           predicate: Column): String = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     // current snapshot (existing DVs applied — already-deleted rows can't
     // re-match) with the file/position coordinates each row lives at.
     // The matched set is PINNED so the predicate is evaluated once: the
@@ -929,7 +913,7 @@ object Layout {
   def updateVersionedRows(spark: SparkSession, root: String,
                           predicate: Column, set: Map[String, Column]): String = graft.util.DmlTimer.timed {
     require(set.nonEmpty, "updateVersionedRows: empty assignment set")
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     val pcols = man.partitionSchema.fieldNames.toSeq
     set.keys.foreach { k =>
       require(!pcols.contains(k),
@@ -958,7 +942,7 @@ object Layout {
           commit(spark, root, cur, "UPDATE ROWS") { next =>
             // updated images first (the write replaces the version dir; the
             // sidecar lands inside it afterwards)
-            val fresh = writeEntries(spark, root, next, man.dataSchema, pcols,
+            val fresh = writeEntries(spark, root, next, man, pcols,
               leafSized(images, pcols))
             man.copy(entries = fresh ++
               writeDvSidecar(spark, root, man, counts, allPos, next))
@@ -1028,7 +1012,7 @@ object Layout {
                           updates0: DataFrame, keys: Seq[String],
                           txn: Option[(String, Long)] = None): String = graft.util.DmlTimer.timed {
     require(keys.nonEmpty, "upsertVersionedRows: empty key set")
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     if (replayed(man, txn)) return cur
     val pcols = man.partitionSchema.fieldNames.toSeq
     // the incoming plan is executed several times below (empty probe,
@@ -1086,11 +1070,11 @@ object Layout {
       // names so new footers agree with old ones across renames. DECLARED
       // clustering (S80) places the appended image like every other write
       // front — without this, hot upserted tables decluster until OPTIMIZE.
-      val zCols = ManifestIndex.clusterColumns(spark, root)
+      val zCols = man.clusterColumns
       val placedUpdates =
         if (zCols.isEmpty) leafSized(updates, pcols)
         else clusterForWrite(updates, pcols, zCols, "upsertVersionedRows")
-      val fresh = writeEntries(spark, root, next, man.dataSchema, pcols,
+      val fresh = writeEntries(spark, root, next, man, pcols,
         placedUpdates)
       val carried = rowLevelPlan(spark, root, man, matched) match {
         case None => man.entries
@@ -1174,7 +1158,7 @@ object Layout {
                               what: String, evolveHint: String,
                               extraProps: Map[String, String] = Map.empty,
                               zOrderCols: Seq[String] = Nil): String = {
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     if (replayed(man, txn)) return cur
     val pcols = man.partitionSchema.fieldNames.toSeq
     val rows = upcastToActive(man, rows0)
@@ -1222,15 +1206,12 @@ object Layout {
           // are logical names; toPhysical is a narrow projection, so the
           // range partitioning and in-partition order survive it). An
           // explicit argument wins; otherwise the table's DECLARED
-          // clustering (ManifestIndex.ClusterFile, S80) applies — one
-          // sidecar existence check per commit.
-          val zCols =
-            if (zOrderCols.nonEmpty) zOrderCols
-            else ManifestIndex.clusterColumns(spark, root)
+          // clustering (ManifestIndex.ClusterKey, S80) applies.
+          val zCols = if (zOrderCols.nonEmpty) zOrderCols else man.clusterColumns
           val placed =
             if (zCols.isEmpty) leafSized(rows, pcols)
             else clusterForWrite(rows, pcols, zCols, what)
-          writeEntries(spark, root, next, man.dataSchema, pcols, placed)
+          writeEntries(spark, root, next, man, pcols, placed)
         }
         man.copy(properties = man.properties ++ extraProps,
           entries = fresh ++ (if (keepEntries) man.entries else Seq.empty))
@@ -1318,7 +1299,7 @@ object Layout {
     require(whenMatchedDelete.isDefined || whenMatchedUpdate.isDefined ||
       whenNotMatchedInsert.isDefined || hasBySource,
       "mergeIntoVersionedRows: no clauses")
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     if (replayed(man, txn)) return cur
     val pcols = man.partitionSchema.fieldNames.toSeq
     (whenMatchedUpdate.toSeq ++ whenNotMatchedBySourceUpdate.toSeq).foreach { case (_, set) =>
@@ -1495,12 +1476,12 @@ object Layout {
                 val fresh = if (!haveImages) Seq.empty else {
                   // DECLARED clustering (S80) on the merge's appended image
                   // — update + insert images land z-placed like appends do
-                  val zCols = ManifestIndex.clusterColumns(spark, root)
+                  val zCols = man.clusterColumns
                   val placedImages =
                     if (zCols.isEmpty) leafSized(images.get, pcols)
                     else clusterForWrite(images.get, pcols, zCols,
                       "mergeIntoVersionedRows")
-                  writeEntries(spark, root, next, man.dataSchema, pcols,
+                  writeEntries(spark, root, next, man, pcols,
                     placedImages)
                 }
                 val carried = plan match {
@@ -1629,11 +1610,11 @@ object Layout {
         !man.partitionSchema.fieldNames.contains(newName),
         s"renameColumn: '$newName' already exists")
       requireNoConstraintReference(spark, man, oldName, "renameColumn")
-      // a declared CLUSTER BY column rides the sidecar by LOGICAL name —
+      // a declared CLUSTER BY column is recorded by LOGICAL name —
       // renaming underneath it would brick every subsequent write (the
       // placement selects a column that no longer exists); refuse loudly,
       // the same contract as constraint references
-      require(!ManifestIndex.clusterColumns(spark, root).contains(oldName),
+      require(!man.clusterColumns.contains(oldName),
         s"renameColumn: '$oldName' is a declared CLUSTER BY column — " +
           "redeclare the clustering (or CLUSTER BY NONE) first")
       val renamed = StructType(man.dataSchema.map { f =>
@@ -1816,11 +1797,11 @@ object Layout {
           s"repartitionTable: column '$n' has non-atomic type ${f.dataType} — " +
             "only atomic types can be dir-encoded")
       }
-      val blooms = ManifestIndex.bloomColumns(spark, root)
+      val blooms = man.bloomColumns
       require(blooms.forall(b => !newPcols.contains(b)),
         s"repartitionTable: ${blooms.mkString(",")} are declared bloom " +
           "columns — a dir-encoded column gets no per-file blooms; unset first")
-      val clustered = ManifestIndex.clusterColumns(spark, root)
+      val clustered = man.clusterColumns
       require(clustered.forall(c => !newPcols.contains(c)),
         s"repartitionTable: ${clustered.mkString(",")} are declared CLUSTER " +
           "BY columns — the leaves would already split on them and every " +
@@ -1865,7 +1846,7 @@ object Layout {
       require(active.length > 1,
         "dropColumn: refusing to drop the last data column")
       requireNoConstraintReference(spark, man, name, "dropColumn")
-      require(!ManifestIndex.clusterColumns(spark, root).contains(name),
+      require(!man.clusterColumns.contains(name),
         s"dropColumn: '$name' is a declared CLUSTER BY column — " +
           "redeclare the clustering (or CLUSTER BY NONE) first")
       val dropped = StructType(man.dataSchema.map { f =>
@@ -1912,7 +1893,7 @@ object Layout {
   /** Whether `name` is a declared CHECK constraint on the live version. */
   def hasCheckConstraint(spark: SparkSession, root: String,
                          name: String): Boolean = {
-    currentManifest(spark, root)._3.constraints.contains(name)
+    currentManifest(spark, root)._2.constraints.contains(name)
   }
 
   /** Whether `root` is a graft versioned root: the `_current` pointer is
@@ -2189,7 +2170,7 @@ object Layout {
   /** Whether the table declares a UNIQUE constraint named `name`. */
   def hasUniqueConstraint(spark: SparkSession, root: String,
                           name: String): Boolean =
-    currentManifest(spark, root)._3.uniqueConstraints.contains(name)
+    currentManifest(spark, root)._2.uniqueConstraints.contains(name)
 
   /** Remove a UNIQUE constraint; later writes stop paying its probes. */
   def dropUniqueConstraint(spark: SparkSession, root: String,
@@ -2200,6 +2181,35 @@ object Layout {
           s"(have: ${man.uniqueConstraints.keys.toSeq.sorted.mkString(",")})")
       man.copy(properties =
         man.properties - (ManifestIndex.UniquePrefix + name))
+    }
+
+  /** Declare which columns get per-file Bloom filters on the FUTURE
+    * commits of `root` ([[ManifestIndex.BloomKey]]); `Nil` drops the
+    * declaration. Validated against the live schema before the version
+    * is claimed — a misspelled or ineligible column would otherwise be
+    * silently ignored by every later commit. One metadata commit.
+    */
+  def setBloomColumns(spark: SparkSession, root: String,
+                      cols: Seq[String]): String =
+    alterManifest(spark, root, "SET BLOOM COLUMNS") { man =>
+      ManifestIndex.validateBloomColumns(cols, man.dataSchema)
+      man.withColumnList(ManifestIndex.BloomKey, cols)
+    }
+
+  /** Declare the table's write-time clustering (S80,
+    * [[ManifestIndex.ClusterKey]]; `ALTER TABLE … CLUSTER BY`), or drop it
+    * with `Nil` (`CLUSTER BY NONE`) so future writes land unplaced.
+    * Validated against the live schema before the version is claimed.
+    * Existing file layout is untouched either way (OPTIMIZE rewrites).
+    * One metadata commit.
+    */
+  def setClusterColumns(spark: SparkSession, root: String,
+                        cols: Seq[String]): String =
+    alterManifest(spark, root,
+        if (cols.isEmpty) "CLUSTER BY NONE" else "CLUSTER BY") { man =>
+      ManifestIndex.validateClusterColumns(cols, man.dataSchema,
+        man.partitionSchema)
+      man.withColumnList(ManifestIndex.ClusterKey, cols)
     }
 
   /** Rows with every `cols` value non-null — the UNIQUE-relevant subset
@@ -2285,7 +2295,7 @@ object Layout {
     */
   def completeInsertColumns(spark: SparkSession, root: String,
                             df: DataFrame): (DataFrame, Map[String, String]) = {
-    val man = currentManifest(spark, root)._3
+    val man = currentManifest(spark, root)._2
     val resolver = spark.sessionState.analyzer.resolver
     val tableCols = (ManifestIndex.activeSchema(man.dataSchema) ++
       man.partitionSchema)
@@ -2362,7 +2372,7 @@ object Layout {
     graft.util.DmlTimer.timed {
       require(Set("parquet", "csv", "json").contains(format.toLowerCase),
         s"copyInto: unsupported FILEFORMAT '$format' (parquet|csv|json)")
-      val man = currentManifest(spark, root)._3
+      val man = currentManifest(spark, root)._2
       val srcPath = new Path(source)
       val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val matched =
@@ -2559,7 +2569,7 @@ object Layout {
     */
   def restoreVersion(spark: SparkSession, root: String, version: Int): String = graft.util.DmlTimer.timed {
     val old = ManifestIndex.read(spark, root, versionName(version))
-    val (cur, _, _) = currentManifest(spark, root)
+    val cur = resolveCurrent(spark, root)
     require(cur != s"$root/${versionName(version)}",
       s"restoreVersion: version $version is already live")
     // "the table as it was" — schema, entries, DVs AND constraints come
@@ -2567,17 +2577,16 @@ object Layout {
     commit(spark, root, cur, "RESTORE")(_ => old)
   }
 
-  /** (live version path, version name, manifest) of a versioned root —
-    * the preamble every reader and writer shares, and the ONE check that
-    * `root` is a table: a root without a pointer, or whose live version
-    * has no manifest, fails here with an IllegalArgumentException naming
-    * it ([[resolveCurrent]], [[ManifestIndex.read]]).
+  /** (live version path, manifest) of a versioned root — the preamble
+    * every reader and writer shares, and the ONE check that `root` is a
+    * table: a root without a pointer, or whose live version has no
+    * manifest, fails here with an IllegalArgumentException naming it
+    * ([[resolveCurrent]], [[ManifestIndex.read]]).
     */
-  private def currentManifest(spark: SparkSession, root: String)
-      : (String, String, ManifestIndex.TableManifest) = {
+  def currentManifest(spark: SparkSession, root: String)
+      : (String, ManifestIndex.TableManifest) = {
     val cur = resolveCurrent(spark, root)
-    val ver = cur.substring(cur.lastIndexOf('/') + 1)
-    (cur, ver, ManifestIndex.read(spark, root, ver))
+    (cur, ManifestIndex.read(spark, root, cur.substring(cur.lastIndexOf('/') + 1)))
   }
 
   /** Shared maintenance rewrite: materialize `leaves` of the live manifest
@@ -2649,7 +2658,7 @@ object Layout {
         more.foldLeft(when(c0, v0)) { case (w, (c, v)) => w.when(c, v) }
           .otherwise(rest)
     }
-    writeEntries(spark, root, version, man.dataSchema, pcols,
+    writeEntries(spark, root, version, man, pcols,
       data.repartitionById(offsets.last + respecTasks, bucket))
   }
 
@@ -2666,7 +2675,7 @@ object Layout {
     */
   def rehomeClone(spark: SparkSession, root: String,
                   targetBytes: Long = 128L << 20): (String, Int) = {
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     def foreign(p: String) = p.startsWith("/") || p.contains("://")
     val alien = man.byLeaf.filter(_._2.exists(e =>
       foreign(e.path) || e.dv.exists(d => foreign(d.path))))
@@ -2688,7 +2697,7 @@ object Layout {
     */
   def purgeDeletedRows(spark: SparkSession, root: String,
                        targetBytes: Long = 128L << 20): (String, Int) = graft.util.DmlTimer.timed {
-    val (cur, _, man) = currentManifest(spark, root)
+    val (cur, man) = currentManifest(spark, root)
     val dvLeaves = man.byLeaf.filter(_._2.exists(_.dv.isDefined))
     if (dvLeaves.isEmpty) return (cur, 0)
     (rewriteLeaves(spark, root, cur, man, dvLeaves.keySet, targetBytes, "PURGE"),
@@ -2797,17 +2806,20 @@ object Layout {
     * stats attached. With `leaf`, `rows` (partition columns dropped) are
     * added into that one leaf dir instead of replacing the version dir
     * (the z-ordered compaction's per-leaf range sort; the unpartitioned
-    * leaf `""` is the version dir itself). Every manifest data writer —
+    * leaf `""` is the version dir itself). `man` is the manifest the
+    * files will belong to: its data schema names them and its declared
+    * bloom columns get per-file blooms. Every manifest data writer —
     * [[publishVersion]] included — funnels through here, so physical
     * naming and stats never fork.
     */
   private def writeEntries(spark: SparkSession, root: String, version: String,
-                           dataSchema: StructType, pcols: Seq[String],
+                           man: ManifestIndex.TableManifest, pcols: Seq[String],
                            rows: DataFrame,
                            leaf: Option[String] = None): Seq[ManifestIndex.Entry] = {
+    val dataSchema = man.dataSchema
     val physical = ManifestIndex.toPhysical(rows, dataSchema)
     val tracker = ManifestIndex.statsTracker(spark, dataSchema,
-      ManifestIndex.bloomColumns(spark, root),
+      man.bloomColumns,
       StructType(physical.schema.filterNot(f => pcols.contains(f.name))),
       pcols.size)
     val sub = leaf.filter(_.nonEmpty)
@@ -3048,19 +3060,18 @@ object Layout {
     * GENERATED markers, the identity high-water (generated ids continue
     * above it — no replay collision on the clone), txn and ingest ledgers
     * (a streaming producer or COPY INTO source resuming against the clone
-    * stays exactly-once), bloom and cluster declarations. After this,
-    * nothing the source does — vacuum, drop, rewrite — can touch the
-    * clone.
+    * stays exactly-once), bloom and cluster declarations — all as they
+    * stood at the cloned version. After this, nothing the source does —
+    * vacuum, drop, rewrite — can touch the clone.
     *
     * What deliberately does NOT carry: version HISTORY (a backup of one
     * snapshot, not the timeline) and dropped-column tombstones (the clone
     * rewrites data, so no old footer exists to resurrect a name from).
     *
     * Cost: one full write of the LIVE rows (the honest minimum for
-    * self-containment) + O(1) metadata; the clone lands z-placed if the
-    * source declared clustering (the declaration copies first in spirit —
-    * the init write itself is placed by the carried declaration only for
-    * subsequent writes, and OPTIMIZE re-clusters).
+    * self-containment) + O(1) metadata. The init write itself is not
+    * z-placed: the carried clustering places subsequent writes, and
+    * OPTIMIZE re-clusters.
     */
   def deepClone(spark: SparkSession, root: String, newRoot: String,
                 version: Option[Int] = None): String = graft.util.DmlTimer.timed {
@@ -3071,19 +3082,14 @@ object Layout {
     val snap = readVersion(spark, root, v)
     // declared state carries WHOLESALE: every marker family lives in the
     // manifest properties, so one copy moves constraints, markers,
-    // identity high-water and both ledgers together (a field-by-field
-    // copy would silently drop the next marker family added). The carry
-    // rides the v00000 commit itself — the clone root is never
-    // observable with a missing or propertyless manifest (ADVICE r14:
-    // the old delete-then-rewrite left a crash window whose half-clone
-    // refused both reads and retries)
+    // identity high-water, both ledgers and the bloom and cluster
+    // declarations together (a field-by-field copy would silently drop
+    // the next marker family added). The carry rides the v00000 commit
+    // itself — the clone root is never observable with a missing or
+    // propertyless manifest (ADVICE r14: the old delete-then-rewrite left
+    // a crash window whose half-clone refused both reads and retries)
     initVersionedManifest(snap, newRoot,
-      man.partitionSchema.fieldNames.toSeq,
-      ManifestIndex.bloomColumns(spark, root),
-      Some(man.properties))
-    val cl = ManifestIndex.clusterColumns(spark, root)
-    if (cl.nonEmpty) ManifestIndex.setClusterColumns(spark, newRoot, cl)
-    resolveCurrent(spark, newRoot)
+      man.partitionSchema.fieldNames.toSeq, initProperties = Some(man.properties))
   }
 
   /** Zero-copy (SHALLOW) clone: materialize `version` of `root` as version
@@ -3107,7 +3113,6 @@ object Layout {
       path = absolutize(e.path),
       dv = e.dv.map(d => d.copy(path = absolutize(d.path))))))
     val v0 = versionName(0)
-    ManifestIndex.writeFormatMarker(spark, newRoot)
     fsOf(spark, newRoot).mkdirs(new Path(newRoot, v0))
     ManifestIndex.write(spark, newRoot, v0, abs)
     writePointer(spark, newRoot, v0)

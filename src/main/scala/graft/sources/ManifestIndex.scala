@@ -36,7 +36,6 @@ import org.json4s.jackson.JsonMethods
   */
 object ManifestIndex {
 
-  val FormatFile = "_format"
   val FormatTag = "graft-manifest-v1"
   /** v2 = v1 plus one properties-JSON line between the tag and the
     * schemas (table properties: the per-commit operation, CHECK
@@ -214,6 +213,22 @@ object ManifestIndex {
       case (k, v) if k.startsWith(UniquePrefix) =>
         k.substring(UniquePrefix.length) -> v.split(",").toSeq
     }
+    /** Columns that get per-file Bloom filters on every commit's new
+      * files (see [[BloomKey]]); empty when none are declared.
+      */
+    def bloomColumns: Seq[String] = columnList(properties, BloomKey)
+    /** The declared write-time clustering (see [[ClusterKey]]); empty
+      * when none is declared.
+      */
+    def clusterColumns: Seq[String] = columnList(properties, ClusterKey)
+    /** This manifest with the column list under `key` set to `cols`, or
+      * removed when `cols` is empty.
+      */
+    def withColumnList(key: String, cols: Seq[String]): TableManifest =
+      copy(properties =
+        if (cols.isEmpty) properties - key
+        else properties + (key -> JsonMethods.compact(
+          JArray(cols.map(c => JString(c): JValue).toList))))
   }
 
   /** Property-key prefix under which CHECK constraints live. */
@@ -276,6 +291,39 @@ object ManifestIndex {
     * publish, so a key holds exactly what that version's publish wrote.
     */
   val PublishPrefix = "publish."
+
+  /** Property naming the columns whose per-file Bloom filters every
+    * commit's NEW files record (a JSON array of logical names, so any
+    * name round-trips exactly). Files written before the declaration
+    * keep no bloom — absent blooms never prune, so the table stays
+    * correct and tightens as it rewrites.
+    */
+  val BloomKey = "bloom.columns"
+
+  /** Property naming the declared write-time clustering (S80; a JSON
+    * array of logical names): once declared, EVERY image-appending write
+    * (append, replace, upsert, merge) range-places its fresh batch on the
+    * z-value of these columns before landing, so per-file min/max
+    * envelopes stay tight without waiting for an OPTIMIZE ZORDER pass,
+    * and OPTIMIZE without an explicit list re-clusters to them. Explicit
+    * `zOrderCols` arguments on append/replace/compact override the
+    * declaration for that call.
+    */
+  val ClusterKey = "cluster.columns"
+
+  private def columnList(properties: Map[String, String],
+                         key: String): Seq[String] =
+    properties.get(key).fold(Seq.empty[String]) { v =>
+      JsonMethods.parse(v) match {
+        case JArray(names) => names.map {
+          case JString(n) => n
+          case other => throw new IllegalArgumentException(
+            s"malformed $key property: $other")
+        }
+        case other => throw new IllegalArgumentException(
+          s"malformed $key property: $other")
+      }
+    }
 
   // ------------------------------------------------------------- file format
 
@@ -381,16 +429,6 @@ object ManifestIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Tag the root's format (`_format`, written at init before anything
-    * else) for tools that inspect a root without opening a manifest.
-    */
-  def writeFormatMarker(spark: SparkSession, root: String): Unit = {
-    val p = new Path(root, FormatFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(FormatTag.getBytes("UTF-8")) finally out.close()
-  }
-
   // -------------------------------------------------------- per-file stats
 
   /** Stats are collected for at most this many leading eligible data
@@ -415,29 +453,6 @@ object ManifestIndex {
     */
   val BloomBits = 16384
   val BloomHashes = 4
-  val BloomFile = "_bloom"
-
-  /** Declare which columns get per-file Bloom filters on FUTURE commits of
-    * `root` (one column name per line in `root/_bloom`). Files written
-    * before the declaration keep no bloom — absent blooms never prune, so
-    * the table stays correct and tightens as it rewrites.
-    */
-  def setBloomColumns(spark: SparkSession, root: String,
-                      cols: Seq[String]): Unit = {
-    val p = new Path(root, BloomFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // validate against the newest manifest when one exists — a misspelled
-    // or ineligible declaration would otherwise be silently ignored by
-    // every future commit (the user believes the index exists)
-    fs.listStatus(new Path(root)).map(_.getPath.getName)
-      .filter(_.matches("v\\d{5}\\.manifest")).sorted.lastOption
-      .foreach { mf =>
-        validateBloomColumns(cols,
-          read(spark, root, mf.stripSuffix(".manifest")).dataSchema)
-      }
-    val out = fs.create(p, true)
-    try out.write(cols.mkString("\n").getBytes("UTF-8")) finally out.close()
-  }
 
   /** Every declared bloom column must be stats-indexed: exist (actively),
     * carry an eligible type, and fall within the first [[MaxStatsCols]]
@@ -452,44 +467,6 @@ object ManifestIndex {
       s"bloom column '$c' is not stats-indexed (must exist, have an " +
         s"eligible type, and be within the first $MaxStatsCols eligible " +
         s"columns); indexable: ${eligible.toSeq.sorted.mkString(",")}"))
-  }
-
-  def bloomColumns(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(root, BloomFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    text.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
-  /** Declared write-time clustering (S80) — the sidecar twin of
-    * [[BloomFile]]: once declared, EVERY image-appending write (append,
-    * replace, upsert, merge) range-places its fresh batch on the z-value
-    * of these columns before landing, so per-file min/max envelopes stay
-    * tight without waiting for an OPTIMIZE ZORDER pass. Explicit
-    * `zOrderCols` arguments on append/replace override the declaration
-    * for that call.
-    */
-  val ClusterFile = "_cluster"
-
-  def setClusterColumns(spark: SparkSession, root: String,
-                        cols: Seq[String]): Unit = {
-    require(cols.nonEmpty, "setClusterColumns: empty column list")
-    val p = new Path(root, ClusterFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // validate against the newest manifest — same loud-at-declaration
-    // contract as setBloomColumns; a path that is no table at all refuses
-    // (the declaration would silently do nothing forever)
-    val mf = fs.listStatus(new Path(root)).map(_.getPath.getName)
-      .filter(_.matches("v\\d{5}\\.manifest")).sorted.lastOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"setClusterColumns: $root holds no manifest — not a manifest root"))
-    val m = read(spark, root, mf.stripSuffix(".manifest"))
-    validateClusterColumns(cols, m.dataSchema, m.partitionSchema)
-    val out = fs.create(p, true)
-    try out.write(cols.mkString("\n").getBytes("UTF-8")) finally out.close()
   }
 
   /** Cluster columns must be active NUMERIC data columns: the z-value
@@ -508,26 +485,6 @@ object ManifestIndex {
         s"cluster column '$c' must be an active numeric data column; " +
           s"eligible: ${numeric.toSeq.sorted.mkString(",")}")
     }
-  }
-
-  /** Drop the clustering declaration (`CLUSTER BY NONE`) — future writes
-    * land unplaced; existing file layout is untouched (OPTIMIZE rewrites).
-    */
-  def dropClusterColumns(spark: SparkSession, root: String): Unit = {
-    val p = new Path(root, ClusterFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, false)
-    ()
-  }
-
-  def clusterColumns(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(root, ClusterFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
-    text.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
   }
 
   /** Kirsch–Mitzenmacher positions of one xxhash64 value — the ONE

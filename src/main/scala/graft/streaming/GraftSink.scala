@@ -160,8 +160,7 @@ private[streaming] class GraftSink(root: String, keys: Option[Seq[String]],
           // like the other misconfiguration guards (ADVICE r11). Checked
           // per batch against the LIVE schema — evolution can introduce
           // the collision mid-stream.
-          val man = ManifestIndex.read(batch.sparkSession, root,
-            f"v${Layout.currentVersionNumber(batch.sparkSession, root)}%05d")
+          val man = Layout.currentManifest(batch.sparkSession, root)._2
           val tableCols = (ManifestIndex.activeSchema(man.dataSchema) ++
             man.partitionSchema).map(_.name)
           Seq("opCol" -> opCol, "seqCol" -> seqCol).foreach { case (opt, c) =>

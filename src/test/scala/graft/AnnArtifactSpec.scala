@@ -469,8 +469,8 @@ class AnnArtifactSpec extends SparkSpec {
       Quantize.encode(emb, "embedding", cb), "vec_id", booksVersion = 0)
     AnnIndex.publishRefineCorpus(spark, root + "/floats", emb,
       "vec_id", "embedding", files = 64)
-    assert(graft.sources.ManifestIndex.bloomColumns(spark,
-      root + "/floats") == Seq("vec_id"))
+    assert(graft.sources.Layout.currentManifest(spark,
+      root + "/floats")._2.bloomColumns == Seq("vec_id"))
     // twin: identical floats, identical 64-file range layout, NO manifest
     val rawDir = root + "/raw"
     emb.select($"vec_id", $"embedding")

@@ -18,6 +18,18 @@ class EntrySmokeSpec extends SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("the staging queries read only roots this run created under java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath
+    Seq("q71_csv_roundtrip", "q77_json_roundtrip", "q78_orc_roundtrip").foreach { q =>
+      val files = SparkEntry.queries(q)(spark, sf()).inputFiles
+      assert(files.nonEmpty, q)
+      files.foreach { f =>
+        val p = new java.io.File(new java.net.URI(f)).getCanonicalPath
+        assert(p.startsWith(tmp + "/"), s"$q reads $p")
+      }
+    }
+  }
+
   test("oracle keys are a subset of query keys") {
     val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(extra.isEmpty, s"oracle without query: $extra")

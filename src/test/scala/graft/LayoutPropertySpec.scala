@@ -38,7 +38,7 @@ class LayoutPropertySpec extends SparkSpec {
     * constraint: merges/upserts key on id, appends/COPY INTO use
     * guaranteed-fresh ids, updates never SET id — the gates must
     * therefore never fire, which is exactly the property), 18 = declared
-    * CLUSTER BY toggle on v (r15 — a sidecar write, NO version commit;
+    * CLUSTER BY toggle on v (r15 — one metadata commit either way;
     * while declared, EVERY subsequent write front places its images on
     * the z-value, and the property is that placement NEVER changes
     * content) (full-op runs only).
@@ -234,13 +234,13 @@ class LayoutPropertySpec extends SparkSpec {
           else Layout.addUniqueConstraint(spark, root, "uid", Seq("id"))
           vUnique = !vUnique
         case 18 =>
-          // r15 declared-clustering toggle: a sidecar write, no version;
-          // placement-only — content equality after every later op IS
-          // the property
-          if (graft.sources.ManifestIndex.clusterColumns(spark, root).nonEmpty)
-            graft.sources.ManifestIndex.dropClusterColumns(spark, root)
-          else graft.sources.ManifestIndex.setClusterColumns(spark, root, Seq("v"))
-          committed = false
+          // r15 declared-clustering toggle: a metadata commit either way
+          // (CLUSTER BY / CLUSTER BY NONE); placement-only — the new
+          // version reads as the unchanged model, and content equality
+          // after every later op IS the property
+          if (Layout.currentManifest(spark, root)._2.clusterColumns.nonEmpty)
+            Layout.setClusterColumns(spark, root, Nil)
+          else Layout.setClusterColumns(spark, root, Seq("v"))
         case 10 =>
           val r = Layout.maintain(spark, root,
             Layout.MaintenancePolicy(keepVersions = 100000))

@@ -615,6 +615,12 @@ class ManifestLayoutSpec extends SparkSpec {
       ("dropColumn", "DROP COLUMN", () => Layout.dropColumn(spark, root, "x")),
       ("repartitionTable", "REPARTITION",
         () => Layout.repartitionTable(spark, root, Seq("w"))),
+      ("setClusterColumns", "CLUSTER BY",
+        () => Layout.setClusterColumns(spark, root, Seq("v"))),
+      ("setClusterColumns(Nil)", "CLUSTER BY NONE",
+        () => Layout.setClusterColumns(spark, root, Nil)),
+      ("setBloomColumns", "SET BLOOM COLUMNS",
+        () => Layout.setBloomColumns(spark, root, Seq("id"))),
       ("restoreVersion", "RESTORE", () => Layout.restoreVersion(spark, root, 0)))
     calls.foreach { case (name, op, call) =>
       val before = Layout.currentVersionNumber(spark, root)

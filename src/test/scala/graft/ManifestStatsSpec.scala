@@ -297,10 +297,10 @@ class ManifestStatsSpec extends SparkSpec {
   test("misdeclared bloom columns are rejected at declaration, not silently ignored") {
     val root = rangedRoot()
     intercept[IllegalArgumentException] {
-      ManifestIndex.setBloomColumns(spark, root, Seq("not_a_column"))
+      Layout.setBloomColumns(spark, root, Seq("not_a_column"))
     }
     // eligible declaration still works
-    ManifestIndex.setBloomColumns(spark, root, Seq("id"))
+    Layout.setBloomColumns(spark, root, Seq("id"))
     // and the init-time variant validates against the incoming frame
     val bad = spark.range(10).select($"id", lit("p").as("part"))
     intercept[IllegalArgumentException] {
@@ -312,12 +312,12 @@ class ManifestStatsSpec extends SparkSpec {
 
   test("blooms declared late: new files get them, carried files stay conservative") {
     val root = interleavedRoot(bloom = false)
-    ManifestIndex.setBloomColumns(spark, root, Seq("id"))
+    Layout.setBloomColumns(spark, root, Seq("id"))
     // rewrite only p1 — its new files carry blooms; p2's carried entries
     // keep their bloom-less stats and are still (conservatively) planned
     Layout.mergeVersionedPartitioned(spark, root,
       Seq((1234L, "p1")).toDF("id", "part"), Seq("id"), "part")
-    val m = ManifestIndex.read(spark, root, "v00001")
+    val m = Layout.currentManifest(spark, root)._2
     val (p1e, p2e) = m.entries.partition(_.leaf == "part=p1")
     assert(p1e.nonEmpty && p1e.forall(_.stats.exists(
       _.cols.get("id").exists(_.bloom.isDefined))))
@@ -368,7 +368,7 @@ class ManifestStatsSpec extends SparkSpec {
       Layout.initVersionedManifest(
         spark.range(1).select($"id", ($"id" % 97).as("a"), ($"id" % 89).as("b"),
           lit("p1").as("part")), root, Seq("part"))
-      if (declare) ManifestIndex.setClusterColumns(spark, root, Seq("a", "b"))
+      if (declare) Layout.setClusterColumns(spark, root, Seq("a", "b"))
       // three merge batches of SHUFFLED fresh keys: every image is an
       // insert (ids disjoint from the seed), so this is exactly the
       // "hot upserted table" shape that used to decluster until OPTIMIZE
@@ -409,20 +409,20 @@ class ManifestStatsSpec extends SparkSpec {
     assert(a == c)
     // declaration validates loudly: partition and non-numeric columns refuse
     intercept[IllegalArgumentException] {
-      ManifestIndex.setClusterColumns(spark, clustered, Seq("part"))
+      Layout.setClusterColumns(spark, clustered, Seq("part"))
     }
     intercept[IllegalArgumentException] {
-      ManifestIndex.setClusterColumns(spark, clustered, Seq("nope"))
+      Layout.setClusterColumns(spark, clustered, Seq("nope"))
     }
     // SQL face: CLUSTER BY redeclares, NONE drops; OPTIMIZE with no
     // explicit ZORDER list re-clusters to the declaration
     spark.sql(s"ALTER TABLE graft.`$plain` CLUSTER BY (a, b)")
-    assert(graft.sources.ManifestIndex.clusterColumns(spark, plain) ==
+    assert(Layout.currentManifest(spark, plain)._2.clusterColumns ==
       Seq("a", "b"))
     spark.sql(s"ALTER TABLE graft.`$plain` CLUSTER BY NONE")
-    assert(graft.sources.ManifestIndex.clusterColumns(spark, plain).isEmpty)
+    assert(Layout.currentManifest(spark, plain)._2.clusterColumns.isEmpty)
     // rename/drop of a declared cluster column refuses loudly — the
-    // sidecar rides logical names, silent drift would brick future writes
+    // declaration names logical columns; silent drift would brick writes
     val e1 = intercept[IllegalArgumentException] {
       Layout.renameColumn(spark, clustered, "a", "a2")
     }
@@ -646,7 +646,7 @@ class ManifestStatsSpec extends SparkSpec {
     val m = ManifestIndex.read(spark, root, v)
     val fresh = m.entries.filter(_.path.startsWith(v + "/"))
     assert(fresh.nonEmpty, s"$what wrote no files")
-    val bloomPhys = ManifestIndex.bloomColumns(spark, root).map(n =>
+    val bloomPhys = m.bloomColumns.map(n =>
       m.dataSchema.find(_.name == n).map(ManifestIndex.physicalName).getOrElse(n))
     val ref = graft.sources.ReferenceStats(spark, root, v, fresh,
       m.dataSchema, bloomPhys)

@@ -254,7 +254,7 @@ class SqlDdlSpec extends SparkSpec {
       spark.sql(s"INSERT INTO graft.`$dst` VALUES (999, -1, 'p0')")
     }
     assert(e.getMessage.contains("v_pos") || e.getMessage.contains("CHECK"))
-    assert(graft.sources.ManifestIndex.clusterColumns(spark, dst) == Seq("v"))
+    assert(Layout.currentManifest(spark, dst)._2.clusterColumns == Seq("v"))
     // SELF-CONTAINED: drop the source wholesale; the clone still reads
     spark.sql(s"DROP TABLE graft.`$root`")
     assert(Layout.readCurrent(spark, dst).count() == 19)
@@ -273,6 +273,98 @@ class SqlDdlSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Layout.deepClone(spark, root2, dst2)
     }
+  }
+
+  private def clustering(root: String): String =
+    spark.sql(s"DESCRIBE DETAIL graft.`$root`").head().getString(7)
+
+  test("RESTORE takes the clustering of the restored version: appends " +
+      "keep working after restoring past ADD COLUMN + CLUSTER BY") {
+    val root = tmp("restorecl") + "/t"
+    spark.sql(s"CREATE TABLE graft.`$root` (id BIGINT, v BIGINT, part STRING) " +
+      "PARTITIONED BY (part)")                                          // v0
+    Layout.addColumn(spark, root, "z", org.apache.spark.sql.types.LongType) // v1
+    spark.sql(s"ALTER TABLE graft.`$root` CLUSTER BY (z)")              // v2
+    spark.sql(s"RESTORE TABLE graft.`$root` TO VERSION AS OF 0")        // v3
+    assert(clustering(root) == "")
+    spark.sql(s"INSERT INTO graft.`$root` VALUES (1, 10, 'a'), (2, 20, 'b')")
+    assert(Layout.readCurrent(spark, root).count() == 2)
+    // restoring the version that declared it brings the clustering back
+    spark.sql(s"RESTORE TABLE graft.`$root` TO VERSION AS OF 2")
+    assert(clustering(root) == "z")
+  }
+
+  test("SHALLOW CLONE carries the bloom and cluster declarations") {
+    val root = tmp("shallowdecl") + "/t"
+    Layout.initVersionedManifest(
+      Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("id", "v", "part"), root,
+      Seq("part"), Seq("id"))
+    spark.sql(s"ALTER TABLE graft.`$root` CLUSTER BY (v)")
+    val dst = tmp("shallowdecldst") + "/c"
+    spark.sql(s"CREATE TABLE graft.`$dst` SHALLOW CLONE graft.`$root`")
+    assert(clustering(dst) == "v")
+    // the clone's own commits record per-file blooms on the declared id
+    spark.sql(s"INSERT INTO graft.`$dst` VALUES (3, 30, 'a')")
+    val fresh = graft.sources.ManifestIndex.read(spark, dst, "v00001")
+      .entries.filter(_.path.startsWith("v00001/"))
+    assert(fresh.nonEmpty && fresh.forall(_.stats.exists(
+      _.cols.get("id").exists(_.bloom.isDefined))), fresh.mkString("\n"))
+  }
+
+  test("CLUSTER BY validates against the live manifest, not one left " +
+      "ahead of the pointer") {
+    val root = tmp("aheadcl") + "/t"
+    spark.sql(s"CREATE TABLE graft.`$root` (id BIGINT, v BIGINT, part STRING) " +
+      "PARTITIONED BY (part)")
+    // a crashed writer's manifest ahead of the pointer, with a column z
+    // the live table does not have
+    val live = graft.sources.ManifestIndex.read(spark, root, "v00000")
+    graft.sources.ManifestIndex.write(spark, root, "v00001",
+      live.copy(dataSchema = live.dataSchema.add("z", "bigint")))
+    val e = intercept[Exception] {
+      spark.sql(s"ALTER TABLE graft.`$root` CLUSTER BY (z)")
+    }
+    assert(e.getMessage.contains("'z'"), e.getMessage)
+    assert(clustering(root) == "")
+    new org.apache.hadoop.fs.Path(root, "v00001.manifest")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(root, "v00001.manifest"), false)
+    spark.sql(s"INSERT INTO graft.`$root` VALUES (1, 10, 'a')")
+    assert(Layout.readCurrent(spark, root).count() == 1)
+  }
+
+  test("a DEEP CLONE VERSION AS OF n takes the declarations of version n") {
+    val root = tmp("deepdecl") + "/t"
+    spark.sql(s"CREATE TABLE graft.`$root` (id BIGINT, v BIGINT, part STRING) " +
+      "PARTITIONED BY (part)")                                          // v0
+    spark.sql(s"ALTER TABLE graft.`$root` CLUSTER BY (v)")              // v1
+    spark.sql(s"ALTER TABLE graft.`$root` CLUSTER BY NONE")             // v2
+    val at1 = tmp("deepdecl1") + "/c"
+    spark.sql(s"CREATE TABLE graft.`$at1` DEEP CLONE graft.`$root` VERSION AS OF 1")
+    assert(clustering(at1) == "v")
+    val live = tmp("deepdecl2") + "/c"
+    spark.sql(s"CREATE TABLE graft.`$live` DEEP CLONE graft.`$root`")
+    assert(clustering(live) == "")
+  }
+
+  test("declared column names round-trip exactly, a backquoted comma included") {
+    val root = tmp("commaname") + "/t"
+    Layout.initVersionedManifest(
+      Seq((1L, 10L, "a")).toDF("a,b", "v", "part"), root, Seq("part"),
+      Seq("a,b"))
+    spark.sql(s"ALTER TABLE graft.`$root` CLUSTER BY (`a,b`, v)")
+    val man = Layout.currentManifest(spark, root)._2
+    assert(man.bloomColumns == Seq("a,b"))
+    assert(man.clusterColumns == Seq("a,b", "v"))
+    // the writers act on them: a clustered append lands with its bloom
+    Layout.appendVersionedRows(spark, root,
+      Seq((2L, 20L, "a"), (3L, 30L, "a")).toDF("a,b", "v", "part"))
+    val (live, after) = Layout.currentManifest(spark, root)
+    val v = live.substring(live.lastIndexOf('/') + 1)
+    val fresh = after.entries.filter(_.path.startsWith(v + "/"))
+    assert(fresh.nonEmpty && fresh.forall(_.stats.exists(
+      _.cols.get("a,b").exists(_.bloom.isDefined))), fresh.mkString("\n"))
+    assert(Layout.readCurrent(spark, root).count() == 3)
   }
 
   test("tables address by NAME through spark.graft.warehouse") {
